@@ -1,6 +1,6 @@
 """kgforge benchmark: one workload per run, warm ops only, pinned heap.
 
-    python3 kgbench/run.py --workload web_build --seed 1 --seconds 15 --trace 0
+    python3 kgbench/run.py --workload web_build --seed 1 --seconds 12 --trace 0
 
 Run from the root of a kgforge checkout. The run starts one Spark
 session on local[2] with a fixed-size, pre-touched driver heap, builds
@@ -28,8 +28,8 @@ MASTER = "local[2]"
 HEAP = "1g"  # spark.driver.memory, and -Xms: the heap is committed and touched at start
 
 #: input sizes per workload; SMOKE is the tiny variant for --smoke
-WEB = {"pages": 1000, "hub_frac": 0.05, "rows_per_file": 125, "buckets": 8}
-CSV = {"rows": 2000, "tiny_rows": 25, "buckets": 8}
+WEB = {"pages": 10000, "hub_frac": 0.05, "rows_per_file": 1250, "buckets": 8}
+CSV = {"rows": 10000, "tiny_rows": 25, "buckets": 8}
 SIZES = {
     "web_build": WEB,
     "csv_map": CSV,
@@ -47,6 +47,15 @@ SMOKE = {
 #: warm-up ops before timing: the cold first op, then warm ones (one full
 #: block of the query mix for sparql_query)
 WARMUP = {"web_build": 2, "csv_map": 3, "sparql_query": 13, "doc_dedup": 3}
+#: fewest ops a run times, whatever --seconds says: untraced ones in a
+#: measured run, traced ones in a traced run (which times at least 2
+#: untraced ones besides, for the tracing overhead)
+MIN_OPS = 3
+#: a traced run of the key's workload also traces the value's ops (a
+#: workload not in BENCHMARK.json), after its own, so every layer is
+#: measured: one warm-up op, then traced and untraced ops alternating
+COMPANION = {"web_build": "doc_dedup", "sparql_query": "csv_map"}
+COMPANION_OP0 = 1_000_000  # op ids of companion ops start here
 
 END_TO_END = {
     "setup_s": "s", "op_p50_ms": "ms", "op_p90_ms": "ms", "items_per_s": "items/s",
@@ -68,7 +77,8 @@ EXTRA_UNITS = {
        ("point", "join", "optional", "aggregate", "path", "ask", "describe")},
     **{f"textops.{t}.{k}": u for t in ("minhash", "simhash", "ngram")
        for k, u in (("candidates", "pairs"), ("useful_ratio", "ratio"))},
-    "session.start_s": "s", "session.warmup_s": "s", "trace.overhead_ms": "ms",
+    "session.start_s": "s", "session.warmup_s": "s",
+    **{f"trace.{w}.overhead_ms": "ms" for w in ("web_build", "csv_map", "sparql_query", "doc_dedup")},
 }
 PER_LAYER = {f"{layer}.{k}": u for layer in LAYERS for k, u in FIELD_UNITS.items()} | EXTRA_UNITS
 
@@ -162,77 +172,89 @@ def main(argv=None) -> int:
     try:
         spark = _session(work, bool(args.trace))
         session_s = procs.process_age_s()
-        size = (SMOKE if args.smoke else SIZES)[args.workload]
-        wl = WORKLOADS[args.workload](spark, args.seed, size, work)
+        sizes = SMOKE if args.smoke else SIZES
+        wl = WORKLOADS[args.workload](spark, args.seed, sizes[args.workload], work)
+        wl.setup()
         tracer = Tracer(spark) if args.trace else None
-        if tracer is None:
-            wl.setup()
-        else:  # layers a workload's setup runs are traced as op -1
-            with tracer.op(-1):
-                wl.setup(tracer)
 
-        failed = attempted = 0
-        totals = [0, 0, 0]  # correct, produced, expected
+        failed = attempted = 0  # over every op, warm-up included
+        scores: list[tuple[int, int, int]] = []  # (correct, produced, expected) per timed op of wl
+        cpu_s: list[float] = []
 
-        def run_op(i: int, tracer, timed: bool):
+        def run_op(w, i: int, tracer, timed: bool) -> float:
+            """Run op i of workload w and check it; return its wall seconds.
+            An op that raises or answers wrong counts as failed."""
             nonlocal failed, attempted
             cpu0, t0 = procs.tree_cpu_s(), time.perf_counter()
             try:
-                out = wl.op(i, tracer)
-            except Exception:  # an op that raises counts as failed; the run goes on
+                out = w.op(i, tracer)
+            except Exception:  # the run goes on
                 traceback.print_exc()
                 wall, ok = time.perf_counter() - t0, False
             else:
                 wall, cpu = time.perf_counter() - t0, procs.tree_cpu_s() - cpu0
-                good, made, want = wl.check(out)
-                ok = wl.acceptable(good, made, want)
-                if timed:
-                    for k, v in enumerate((good, made, want)):
-                        totals[k] += v
+                if tracer.enabled:
+                    w.after(out, tracer)
+                score = w.check(out)
+                ok = w.acceptable(*score)
+                if timed and w is wl:
+                    scores.append(score)
                     cpu_s.append(cpu)
-            if timed:
-                attempted += 1
-                failed += not ok
-            elif not ok:
-                raise RuntimeError(f"warm-up op {i} of {args.workload} gave a wrong answer")
-            shutil.rmtree(wl.out_path(i), ignore_errors=True)
+            attempted += 1
+            failed += not ok
+            shutil.rmtree(w.out_path(i), ignore_errors=True)
             return wall
 
-        cpu_s: list[float] = []
-        t_warm, n_warm = time.perf_counter(), 0
-        while n_warm < WARMUP[args.workload]:
-            run_op(n_warm, NoTrace(), timed=False)
-            n_warm += 1
+        def timed_ops(w, i: int, t_end: float) -> tuple[list[float], list[float]]:
+            """Time ops of w from op i on until t_end and MIN_OPS are
+            done; a traced run alternates traced and untraced ops,
+            traced first. Returns (untraced walls, traced walls)."""
+            walls, traced = [], []
+            while (time.perf_counter() < t_end
+                   or len(walls) < (MIN_OPS if tracer is None else 2)
+                   or (tracer is not None and len(traced) < MIN_OPS)):
+                if tracer is not None and len(traced) <= len(walls):
+                    with tracer.op(i):
+                        traced.append(run_op(w, i, tracer, timed=True))
+                else:
+                    walls.append(run_op(w, i, NoTrace(), timed=True))
+                i += 1
+            return walls, traced
+
+        t_warm = time.perf_counter()
+        for i in range(WARMUP[args.workload]):
+            run_op(wl, i, NoTrace(), timed=False)
         warmup_s = time.perf_counter() - t_warm
         setup_s = procs.process_age_s()
 
-        walls: list[float] = []
-        traced_walls: list[float] = []
         sampler = _RssSampler(procs)
         sampler.start()
-        i, t_end = n_warm, time.perf_counter() + args.seconds
-        while time.perf_counter() < t_end or len(walls) < 2:
-            if tracer is not None and i % 2:
-                with tracer.op(i):
-                    traced_walls.append(run_op(i, tracer, timed=True))
-            else:
-                walls.append(run_op(i, NoTrace(), timed=True))
-            i += 1
+        walls, traced_walls = timed_ops(wl, WARMUP[args.workload], time.perf_counter() + args.seconds)
         peak_rss = sampler.stop()
+        overhead_ms = {}
+        if tracer is not None:
+            overhead_ms[args.workload] = (statistics.median(traced_walls) - statistics.median(walls)) * 1e3
+            if args.workload in COMPANION:
+                name = COMPANION[args.workload]
+                comp = WORKLOADS[name](spark, args.seed, sizes[name], os.path.join(work, name))
+                comp.setup()
+                run_op(comp, COMPANION_OP0, NoTrace(), timed=False)
+                u, t = timed_ops(comp, COMPANION_OP0 + 1, 0.0)
+                overhead_ms[name] = (statistics.median(t) - statistics.median(u)) * 1e3
         host1 = (procs.steal_ticks(), procs.loadavg(), procs.cpu_ticks())
 
-        n_items = wl.items_per_op * len(cpu_s)
-        good, made, want = totals
+        good, made, want = (sum(col) for col in zip(*scores)) if scores else (0, 0, 0)
         nbytes = sum(b for b, _ in wl.written)
         rows = sum(r for _, r in wl.written)
         detail = {
             "workload": args.workload, "seed": args.seed, "trace": args.trace,
             "master": MASTER, "heap": HEAP, "items_per_op": wl.items_per_op,
-            "warmup_ops": n_warm, "timed_ops": len(walls), "traced_ops": len(traced_walls),
+            "warmup_ops": WARMUP[args.workload], "timed_ops": len(walls), "traced_ops": len(traced_walls),
             "op_ms": [round(w * 1e3, 1) for w in walls],
-            "samples_beyond_p90": sum(w > _quantile(walls, 0.9) for w in walls) if len(walls) > 1 else 0,
+            "samples_beyond_p90": sum(w > _quantile(walls, 0.9) for w in walls),
             "op_error_rate": failed / attempted,
             "bytes_per_triple": nbytes / rows if rows else None,
+            "companion": COMPANION.get(args.workload) if tracer is not None else None,
             "host": {
                 "steal_ticks": host1[0] - host0[0],
                 "steal_share": (host1[0] - host0[0]) / max(host1[2] - host0[2], 1),
@@ -245,7 +267,7 @@ def main(argv=None) -> int:
                 "op_p50_ms": statistics.median(walls) * 1e3,
                 "op_p90_ms": _quantile(walls, 0.9) * 1e3,
                 "items_per_s": wl.items_per_op * len(walls) / sum(walls),
-                "items_per_cpu_s": n_items / sum(cpu_s),
+                "items_per_cpu_s": wl.items_per_op * len(cpu_s) / sum(cpu_s),
                 "peak_rss_mb": peak_rss,
                 "output_precision": good / max(made, 1),
                 "output_recall": good / max(want, 1),
@@ -253,12 +275,8 @@ def main(argv=None) -> int:
             units = END_TO_END
         else:
             values = dict.fromkeys(PER_LAYER, 0.0) | tracer.layer_metrics(LAYERS)
-            values |= {
-                "lineage.bytes_per_triple": detail["bytes_per_triple"] or 0.0,
-                "session.start_s": session_s,
-                "session.warmup_s": warmup_s,
-                "trace.overhead_ms": (statistics.median(traced_walls) - statistics.median(walls)) * 1e3,
-            }
+            values |= {f"trace.{name}.overhead_ms": ms for name, ms in overhead_ms.items()}
+            values |= {"session.start_s": session_s, "session.warmup_s": warmup_s}
             unknown = set(values) - set(PER_LAYER)
             if unknown:
                 raise RuntimeError(f"unlisted per-layer metrics {sorted(unknown)}")

@@ -11,7 +11,7 @@ from __future__ import annotations
 import statistics
 import time
 from collections import defaultdict
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 
 class NoTrace:
@@ -20,21 +20,10 @@ class NoTrace:
     enabled = False
 
     def span(self, name, rows=None):
-        return _NULL
+        return nullcontext()
 
     def count(self, name, value):
         pass
-
-
-class _NullSpan:
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        return False
-
-
-_NULL = _NullSpan()
 
 
 class Tracer(NoTrace):
