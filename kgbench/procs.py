@@ -25,8 +25,8 @@ def _stat_fields(pid: int) -> list[str] | None:
     return raw[raw.rindex(")") + 2 :].split()
 
 
-def _tree(root: int) -> list[list[str]]:
-    """stat fields (from field 3 on) of `root` and all its descendants."""
+def _tree(root: int) -> dict[int, list[str]]:
+    """{pid: stat fields (from field 3 on)} of `root` and all its descendants."""
     stats: dict[int, list[str]] = {}
     for name in os.listdir("/proc"):
         if name.isdigit():
@@ -36,11 +36,11 @@ def _tree(root: int) -> list[list[str]]:
     children: dict[int, list[int]] = {}
     for pid, fields in stats.items():
         children.setdefault(int(fields[1]), []).append(pid)
-    out, todo = [], [root]
+    out, todo = {}, [root]
     while todo:
         pid = todo.pop()
         if pid in stats:
-            out.append(stats[pid])
+            out[pid] = stats[pid]
         todo.extend(children.get(pid, ()))
     return out
 
@@ -49,14 +49,20 @@ def tree_cpu_s() -> float:
     """CPU seconds (user+system, reaped children included) of this
     process's tree."""
     # fields 14-17 of /proc/<pid>/stat, counted from the one after comm
-    ticks = sum(sum(int(v) for v in f[11:15]) for f in _tree(os.getpid()))
+    ticks = sum(sum(int(v) for v in f[11:15]) for f in _tree(os.getpid()).values())
     return ticks / _TICK
 
 
-def tree_rss_mb() -> float:
-    """Summed resident set size of this process's tree, in MB."""
-    pages = sum(int(f[21]) for f in _tree(os.getpid()))
-    return pages * _PAGE / 1e6
+def tree_rss() -> tuple[float, int]:
+    """(summed resident set size in MB, number of processes) of this
+    process's tree."""
+    tree = _tree(os.getpid())
+    # A child the JVM spawns (posix_spawn uses vfork) shares the JVM's
+    # memory until it execs, and its stat shows the JVM's vsize and rss
+    # meanwhile; count such a child once, with its parent.
+    own = [f for f in tree.values()
+           if int(f[1]) not in tree or tree[int(f[1])][20:22] != f[20:22]]
+    return sum(int(f[21]) for f in own) * _PAGE / 1e6, len(own)
 
 
 def steal_ticks() -> int:

@@ -44,9 +44,11 @@ SMOKE = {
     "sparql_query": {"web": WEB_SMOKE, "csv": CSV_SMOKE, "queries": 30},
     "doc_dedup": {"docs": 80},
 }
-#: warm-up ops before timing: the cold first op, then warm ones (one full
-#: block of the query mix for sparql_query)
-WARMUP = {"web_build": 2, "csv_map": 3, "sparql_query": 13, "doc_dedup": 3}
+#: warm-up ops before timing: the cold first op, then warm ones (two full
+#: blocks of the query mix for sparql_query). A fresh JVM is still
+#: compiling hot code for several ops after the cold one, so timed ops
+#: start past the steep part of that curve (see WORKLOADS.md)
+WARMUP = {"web_build": 2, "csv_map": 3, "sparql_query": 26, "doc_dedup": 3}
 #: fewest ops a run times, whatever --seconds says: untraced ones in a
 #: measured run, traced ones in a traced run (which times at least 2
 #: untraced ones besides, for the tracing overhead)
@@ -96,9 +98,12 @@ def _session(work: str, trace: bool):
     os.environ["KGFORGE_DRIVER_MEM"] = HEAP
     from kgforge.session import get_spark
 
+    # A serial collector: under G1, host CPU steal inflated CPU per op
+    # too, most likely G1's parallel GC workers spinning while they wait
+    # for a peer whose vCPU the host descheduled (see WORKLOADS.md).
     conf = {
         "spark.driver.extraJavaOptions":
-            f"-Xms{HEAP} -XX:+AlwaysPreTouch -Djava.io.tmpdir={work}",
+            f"-Xms{HEAP} -XX:+AlwaysPreTouch -XX:+UseSerialGC -Djava.io.tmpdir={work}",
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -128,17 +133,24 @@ class _RssSampler(threading.Thread):
     def __init__(self, procs, period: float = 0.25):
         super().__init__(daemon=True)
         self.procs, self.period = procs, period
-        self.peak = procs.tree_rss_mb()
+        self.peak, self.peak_procs = 0.0, 0
+        self.sample()
         self.halt = threading.Event()
+
+    def sample(self) -> None:
+        mb, n = self.procs.tree_rss()
+        if mb > self.peak:
+            self.peak, self.peak_procs = mb, n
 
     def run(self) -> None:
         while not self.halt.wait(self.period):
-            self.peak = max(self.peak, self.procs.tree_rss_mb())
+            self.sample()
 
     def stop(self) -> float:
         self.halt.set()
         self.join()
-        return max(self.peak, self.procs.tree_rss_mb())
+        self.sample()
+        return self.peak
 
 
 def _quantile(values, q: float) -> float:
@@ -251,6 +263,7 @@ def main(argv=None) -> int:
             "master": MASTER, "heap": HEAP, "items_per_op": wl.items_per_op,
             "warmup_ops": WARMUP[args.workload], "timed_ops": len(walls), "traced_ops": len(traced_walls),
             "op_ms": [round(w * 1e3, 1) for w in walls],
+            "peak_rss_procs": sampler.peak_procs,
             "samples_beyond_p90": sum(w > _quantile(walls, 0.9) for w in walls),
             "op_error_rate": failed / attempted,
             "bytes_per_triple": nbytes / rows if rows else None,
