@@ -298,17 +298,17 @@ def q_emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAFE profile: census guard with oversize='join' — identical pair
     set, bounded per-task memory."""
     from kgforge.profile import SAFE
-    from kgforge.textops.similarity import embedding_near_dups
+    from kgforge.textops.similarity import embedding_near_dups, vector_dim
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # dim probed on the plain scan (one-row take, ~0.13 s) instead of
     # letting the library probe the union-of-scans plan (~1.7 s cold)
-    row = emb.select("embedding").first()
-    if row is None:
+    dim = vector_dim(emb)
+    if dim is None:
         return spark.createDataFrame([], "a bigint, b bigint, score double")
     clone = emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
     return embedding_near_dups(
-        emb.unionByName(clone), threshold=0.999, profile=SAFE, dim=len(row[0])
+        emb.unionByName(clone), threshold=0.999, profile=SAFE, dim=dim
     ).select(
         F.col("a").cast("bigint").alias("a"),
         F.col("b").cast("bigint").alias("b"),

@@ -10,15 +10,19 @@ Scale notes:
 * exact dedup: one shuffle on the content hash; the map-side partial
   aggregate collapses most duplicates before the exchange.
 * minhash-lsh: signatures are per-document aggregates over shingles
-  (narrow), candidate generation is a self-join on (band, band_key)
-  — only documents sharing a band bucket ever meet, which is the
-  whole point at 10^12 docs.
+  (narrow), candidate pairs come from (band, key) buckets — only
+  documents sharing a band bucket ever meet, which is the whole point
+  at 10^12 docs.
+* the near-dup family shares three helpers: `_collapse_exact` (pairs
+  are decided between exact-duplicate group representatives),
+  `_bucket_pairs` (banded-bucket pairs under the hot-bucket guard)
+  and `_expand_pairs` (group results back to member pairs).
 * ngram-jaccard: exact verification join for candidate pairs; the
   shingle-share join prunes by rarity first (a shingle shared by >maxdf
   docs is dropped as a join key — stopword-shingle explosion guard).
-* simhash: 60-bit signature via explode + 60 conditional-sum bit
+* simhash: 60-bit signature via explode + packed-lane bit-count
   aggregates, pure JVM (no Python in the path); near-dup = hamming
-  distance ≤ k via banded equality join on 15-bit chunks.
+  distance ≤ k among docs sharing one of four 15-bit chunks.
 """
 
 from __future__ import annotations
@@ -137,11 +141,155 @@ def minhash_signatures_agg(
     )
 
 
-def _in_array_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
+def _collapse_exact(
+    df: DataFrame, id_col: str, val_col: str, val_as: str = "text"
+) -> tuple[DataFrame, DataFrame]:
+    """Exact-duplicate group collapse shared by the near-dup family
+    (proofs in ngram_jaccard_pairs): rows are grouped by md5 of the
+    value rendered to string (an identity cast for text; for vectors
+    the rendering `dataset_fingerprint` also uses).
+
+    Returns `(groups, mem)`: groups = (th, gid = min id, <val_as> =
+    the group's value, gsize), scalar aggregates only; mem = (gid, id)
+    member rows, th-partitioned on both join sides so the join reuses
+    the groupBy exchange — never a collected membership array, so a
+    10⁸-doc pile of one value cannot form a hub row."""
+    hashed = df.select(
+        F.md5(F.col(val_col).cast("string")).alias("th"),
+        F.col(id_col).alias("id"),
+        F.col(val_col).alias(val_as),
+    )
+    groups = hashed.groupBy("th").agg(
+        F.min("id").alias("gid"),
+        F.first(val_as).alias(val_as),
+        F.count(F.lit(1)).alias("gsize"),
+    )
+    mem = hashed.select("th", "id").join(
+        groups.select("th", "gid"), "th"
+    ).select("gid", "id")
+    return groups, mem
+
+
+def _expand_pairs(rep: DataFrame, intra: DataFrame, mem: DataFrame) -> DataFrame:
+    """Group-level results → member pairs (a, b, *vals) with a < b.
+
+    `rep` = (a, b, *vals) pairs of group representatives, expanded to
+    every member cross-pair; `intra` = (gid, *vals) groups whose
+    members all pair with each other (an exact duplicate scores like a
+    self-pair). Join-based over the (gid, id) row table of
+    `_collapse_exact` — one member row at a time, no hub arrays."""
+    vals = [c for c in rep.columns if c not in ("a", "b")]
+    cross = (
+        rep.join(mem.selectExpr("gid AS a", "id AS x"), "a")
+        .join(mem.selectExpr("gid AS b", "id AS y"), "b")
+        .selectExpr("least(x, y) AS a", "greatest(x, y) AS b", *vals)
+        .filter("a < b")
+    )
+    inner = (
+        intra.join(mem.selectExpr("gid", "id AS x"), "gid")
+        .join(mem.selectExpr("gid", "id AS y"), "gid")
+        .filter("x < y")
+        .selectExpr("x AS a", "y AS b", *vals)
+    )
+    return cross.unionByName(inner)
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    groups: DataFrame,
+    max_bucket: int | None,
+    oversize: str,
+    carry: tuple[str, ...] = (),
+    verify: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Banded-bucket pair generation between group representatives,
+    with the hot-bucket guard every banded near-dup operator shares.
+
+    `banded` = (gid, gsize, *keys, *carry): one row per (group, band
+    bucket); `groups` = (gid, gsize) of every group that was banded.
+    Returns `(rep, intra_src)`: rep = distinct (a, b, *[c_a, c_b for c
+    in carry]) rep pairs with a < b sharing a bucket (and passing
+    `verify`, a row predicate over those columns, applied BEFORE the
+    distinct so it shuffles only survivors); intra_src = (gid) of the
+    multi-member groups whose members pair with each other.
+
+    max_bucket=None: groupBy(keys) + collect_list + in-array pair
+    explosion, one shuffle. Exactly the oracle's pair set, but an
+    adversarial bucket (10⁶ boilerplate docs with one band signature)
+    materializes its whole membership — and the C(n,2) pair array — in
+    ONE row/task: an executor OOM, so at scale always set max_bucket.
+
+    max_bucket=N: a window census in DOC units (Σ gsize, so the cap
+    keeps its doc-count meaning under the group collapse) tags every
+    banded row with its bucket size in ONE shuffle by the bucket key,
+    which the collect's groupBy reuses — an aggregate-then-join census
+    would plan the banded subtree twice with no exchange reuse
+    (measured +55% on the sf0.1 minhash contract query). Oversized
+    groups buffer linearly in the window (spill-backed), never a pair
+    explosion. Buckets ≤ N pair in-array (arrays bounded by N);
+    oversized buckets follow `oversize`:
+      * "join" — a streaming equi-self-join on the keys: the same
+        quadratic pair COUNT, row-at-a-time, never one giant row
+        (output identical to max_bucket=None). Parallelism is bounded
+        by the number of oversized KEYS (one hot key = one task —
+        measured 188 s on one task for a planted 10k-doc bucket), so
+        "join" buys OOM immunity, not speed: at scale prefer "drop";
+      * "drop" — skip them (semantics change: near-dups sharing ONLY a
+        saturated bucket are lost; a bucket hotter than a reasonable
+        N carries boilerplate, not signal). A group then keeps its
+        intra pairs only while it still has a surviving bucket — the
+        condition under which its members would have been paired
+        without the collapse."""
+    if oversize not in ("join", "drop"):
+        raise ValueError(f"unknown oversize policy {oversize!r}")
+    intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
+    elem = F.struct("gid", *carry) if carry else F.col("gid")
+    big = None
+    if max_bucket is None:
+        small = (
+            banded.groupBy(*keys)
+            .agg(F.collect_list(elem).alias("ids"))
+            .filter(F.size("ids") >= 2)
+        )
+    else:
+        tagged = banded.withColumn(
+            "sz", F.sum("gsize").over(Window.partitionBy(*keys))
+        ).filter(F.col("sz") >= 2)
+        fits = F.col("sz") <= max_bucket
+        small = tagged.filter(fits).groupBy(*keys).agg(F.collect_list(elem).alias("ids"))
+        if oversize == "join":
+            big = tagged.filter(~fits)
+        else:
+            # every bucket of a group holds ≥ gsize docs, so the sz ≥ 2
+            # census filter never hides a multi-member group's bucket
+            intra_src = tagged.filter(fits & (F.col("gsize") >= 2)).select("gid").distinct()
+    pairs = _in_array_pairs(small, carry=carry)
+    if big is not None:
+        on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        on.append(F.col("l.gid") < F.col("r.gid"))
+        sides = [("l", "a"), ("r", "b")]
+        pairs = pairs.unionByName(
+            big.alias("l").join(big.alias("r"), on).select(
+                *[F.col(f"{t}.gid").alias(s) for t, s in sides],
+                *[F.col(f"{t}.{c}").alias(f"{c}_{s}") for c in carry for t, s in sides],
+            )
+        )
+    if verify is not None:
+        pairs = pairs.filter(verify)
+    return pairs.distinct(), intra_src
+
+
+def _in_array_pairs(
+    buckets: DataFrame, ids_col: str = "ids", carry: tuple[str, ...] = ()
+) -> DataFrame:
     """(…, ids: array) → (a, b) with a < b: all unordered pairs from
     each row's array, via a lambda index + slice (arg2 of a 2-arg HOF
     lambda is the element INDEX). Caller guarantees the arrays are
-    size-bounded — this explodes C(n,2) structs from ONE row.
+    size-bounded — this explodes C(n,2) structs from ONE row. With
+    `carry`, the elements are structs (gid, *carry) and each pair also
+    gets both sides' carried fields as c_a, c_b (gid is field 1, so
+    sorting still orders pairs a < b).
 
     The explicit round-robin repartition exists because the groupBy
     feeding this is BYTE-small (one row per bucket), so AQE coalesces
@@ -161,12 +309,14 @@ def _in_array_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
     # this nested lambda costs dozens of py4j round trips per plan
     # construction (measured ~1.5-2 s of bench time per dedup query
     # across such sites)
+    fields = ["x.gid AS a", "y.gid AS b"] if carry else ["x AS a", "y AS b"]
+    fields += [f"{v}.{c} AS {c}_{s}" for c in carry for v, s in (("x", "a"), ("y", "b"))]
     pair_structs = F.expr(
         "flatten(transform(__ids, (x, i) -> "
         "transform(slice(__ids, i + 2, size(__ids)), "
-        "y -> struct(x AS a, y AS b))))"
+        f"y -> struct({', '.join(fields)}))))"
     )
-    return buckets.select(F.explode(pair_structs).alias("p")).select("p.a", "p.b")
+    return buckets.select(F.explode(pair_structs).alias("p")).select("p.*")
 
 
 def minhash_lsh_candidates(
@@ -191,29 +341,8 @@ def minhash_lsh_candidates(
     profile=kgforge.profile.PARITY (or max_bucket=None) for the raw
     unguarded single-shuffle path.
 
-    max_bucket=None: single-shuffle bucket pair generation —
-    groupBy(band, key) + collect_list + in-array pair explosion.
-    Exactly the oracle's pair set, but an adversarial band bucket
-    (boilerplate-heavy shard: 10⁶ docs with identical band signatures)
-    materializes its whole membership — and the C(n,2) pair array — in
-    ONE row/task. That is an executor OOM, not mere slowness, so at
-    scale always set `max_bucket`.
-
-    max_bucket=N: a size census (groupBy count — tiny rows) splits the
-    banded table BEFORE any membership is collected. Buckets ≤ N take
-    the in-array path (arrays bounded by N); oversized buckets are
-    handled per `oversize`:
-      * "join" — the streaming self-join formulation: the same
-        quadratic pair COUNT, but produced row-at-a-time, never one
-        giant row (output semantics identical to default). Parallelism
-        is bounded by the number of oversized KEYS (an equi-join
-        co-partitions by key; one hot key = one task — measured 188s
-        on one task for a planted 10k-doc bucket), so "join" buys OOM
-        immunity, not speed: at scale prefer "drop";
-      * "drop" — skip them (semantics change: near-dups that share
-        ONLY a saturated bucket are lost; a bucket hotter than N under
-        a reasonable N carries boilerplate, not signal — same policy
-        as ngram_jaccard's max_df guard).
+    max_bucket/oversize semantics (the hot-bucket guard shared with
+    simhash and embedding near-dups) are documented on `_bucket_pairs`.
 
     Round-7 reformulation, OUTPUT-IDENTICAL (same lossless group
     collapse as the rest of the dedup family, proofs in
@@ -228,24 +357,8 @@ def minhash_lsh_candidates(
     """
     if profile is not None:
         max_bucket, oversize = profile.max_bucket, profile.oversize
-    if oversize not in ("join", "drop"):
-        raise ValueError(f"unknown oversize policy {oversize!r}")
     rows = num_hashes // bands
-
-    # -- collapse exact-duplicate texts ---------------------------------
-    hashed = df.select(
-        F.md5(F.col(text_col)).alias("th"),
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("text"),
-    )
-    groups = hashed.groupBy("th").agg(
-        F.min("id").alias("gid"),
-        F.first("text").alias("text"),
-        F.count(F.lit(1)).alias("gsize"),
-    )
-    mem = hashed.select("th", "id").join(
-        groups.select("th", "gid"), "th"
-    ).select("gid", "id")
+    groups, mem = _collapse_exact(df, id_col, text_col)
 
     # signatures per distinct text, with gsize riding the shingle
     # explode + signature aggregate as a first() — no second join
@@ -266,7 +379,7 @@ def minhash_lsh_candidates(
             for i in range(num_hashes)
         ],
         F.first("gsize").alias("gsize"),
-    ).withColumnRenamed("gid", "id")
+    )
     band_arr = ", ".join(
         "struct({b} AS band, concat_ws('|', {hs}) AS key)".format(
             b=b, hs=", ".join(f"h{b * rows + r}" for r in range(rows))
@@ -274,81 +387,11 @@ def minhash_lsh_candidates(
         for b in range(bands)
     )
     banded = sig.select(
-        F.col("id").alias("gid"),
-        "gsize",
-        F.explode(F.expr(f"array({band_arr})")).alias("bk"),
+        "gid", "gsize", F.explode(F.expr(f"array({band_arr})")).alias("bk")
     ).select("gid", "gsize", "bk.band", "bk.key")
 
-    if max_bucket is None:
-        buckets = (
-            banded.groupBy("band", "key")
-            .agg(F.collect_list("gid").alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
-        rep = _in_array_pairs(buckets).distinct()
-        intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
-    else:
-        # window-count census in DOC units (Σ gsize): ONE shuffle of
-        # the banded table (by the bucket key — the downstream groupBy
-        # reuses the partitioning), vs the aggregate-then-join census
-        # which plans the expensive banded subtree TWICE with no
-        # exchange reuse (measured +55% on the sf0.1 contract query).
-        # Oversized groups buffer linearly in the window (spill-backed)
-        # — never a pair explosion.
-        tagged = banded.withColumn(
-            "sz", F.sum("gsize").over(Window.partitionBy("band", "key"))
-        ).filter(F.col("sz") >= 2)
-        small = (
-            tagged.filter(F.col("sz") <= max_bucket)
-            .groupBy("band", "key")
-            .agg(F.collect_list("gid").alias("ids"))
-        )
-        pairs = _in_array_pairs(small)
-        if oversize == "join":
-            big = tagged.filter(F.col("sz") > max_bucket).select("gid", "band", "key")
-            big_pairs = (
-                big.alias("l")
-                .join(
-                    big.alias("r"),
-                    (F.col("l.band") == F.col("r.band"))
-                    & (F.col("l.key") == F.col("r.key"))
-                    & (F.col("l.gid") < F.col("r.gid")),
-                )
-                .select(F.col("l.gid").alias("a"), F.col("r.gid").alias("b"))
-            )
-            pairs = pairs.unionByName(big_pairs)
-            intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
-        else:
-            intra_src = (
-                tagged.filter(F.col("sz") <= max_bucket)
-                .join(
-                    groups.filter(F.col("gsize") >= 2).select("gid"),
-                    "gid",
-                    "left_semi",
-                )
-                .select("gid")
-                .distinct()
-            )
-        rep = pairs.distinct()
-
-    # -- expand rep pairs to member pairs (join-based, no hub arrays) ---
-    mx = mem.selectExpr("gid AS a", "id AS x")
-    my = mem.selectExpr("gid AS b", "id AS y")
-    cross = (
-        rep.join(mx, "a")
-        .join(my, "b")
-        .selectExpr("least(x, y) AS a", "greatest(x, y) AS b")
-        .filter("a < b")
-    )
-    mg = mem.selectExpr("gid", "id AS x")
-    mh = mem.selectExpr("gid", "id AS y")
-    intra = (
-        intra_src.join(mg, "gid")
-        .join(mh, "gid")
-        .filter("x < y")
-        .selectExpr("x AS a", "y AS b")
-    )
-    return cross.unionByName(intra)
+    rep, intra_src = _bucket_pairs(banded, ["band", "key"], groups, max_bucket, oversize)
+    return _expand_pairs(rep, intra_src, mem)
 
 
 def ngram_jaccard_pairs(
@@ -461,23 +504,8 @@ def ngram_jaccard_pairs(
         max_df = max(2, int(n_docs * max_df_frac))
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    # -- 1. collapse exact-duplicate texts (scalar aggregates only — no
-    # membership arrays; members stay a row table) ----------------------
-    hashed = df.select(
-        F.md5(F.col(text_col)).alias("th"),
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("text"),
-    )
-    groups = hashed.groupBy("th").agg(
-        F.min("id").alias("gid"),
-        F.first("text").alias("text"),
-        F.count(F.lit(1)).alias("gsize"),
-    )
-    # (gid, id) member rows — th-partitioned on both sides, so the join
-    # reuses the groupBy exchange
-    mem = hashed.select("th", "id").join(
-        groups.select("th", "gid"), "th"
-    ).select("gid", "id")
+    # -- 1. collapse exact-duplicate texts ------------------------------
+    groups, mem = _collapse_exact(df, id_col, text_col)
 
     # -- shingles once per distinct text, split-once + spread ----------
     t = groups.select("gid", "gsize", "text").repartition(n_part).select(
@@ -687,17 +715,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
 
-    # -- expand rep pairs to member cross-products (join-based — one
-    # member row at a time, no hub arrays) ------------------------------
-    mx = mem.selectExpr("gid AS a", "id AS x")
-    my = mem.selectExpr("gid AS b", "id AS y")
-    cross = (
-        scored.join(mx, "a")
-        .join(my, "b")
-        .selectExpr("least(x, y) AS a", "greatest(x, y) AS b", "jaccard")
-        .filter("a < b")
-    )
-
     # -- intra-group pairs: inter = n_rare, sizes equal -----------------
     gi = rsets.select("gid", "n", "n_rare")
     intra = (
@@ -712,15 +729,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("gid", "jaccard")
     )
-    mg = mem.selectExpr("gid", "id AS x")
-    mh = mem.selectExpr("gid", "id AS y")
-    intra_pairs = (
-        intra.join(mg, "gid")
-        .join(mh, "gid")
-        .filter("x < y")
-        .selectExpr("x AS a", "y AS b", "jaccard")
-    )
-    return cross.unionByName(intra_pairs)
+    return _expand_pairs(scored, intra, mem)
 
 
 # --------------------------------------------------------------- SimHash
@@ -841,15 +850,11 @@ def simhash_near_dups(
       mutual duplication is EXACT (empty == empty) and belongs to
       `dedup_exact`, not a similarity join. Semantics-changing (pairs
       among empty docs are no longer reported here).
-    * `max_bucket=N` runs a size census on the (chunk, ck) buckets
-      BEFORE pair generation. Buckets ≤ N generate pairs via bounded
-      collect_list + in-array explosion (ONE shuffle, arrays capped at
-      N); oversized buckets follow `oversize`: "join" keeps the
-      streaming self-join for them (identical output, row-at-a-time —
-      still quadratic OUTPUT for that bucket), "drop" skips them (a
-      band bucket hotter than a reasonable N is boilerplate, and any
-      true near-dup pair inside it almost surely shares one of its
-      three other, colder chunk keys).
+    * `max_bucket=N` + `oversize` — the census guard shared with
+      minhash and embedding near-dups (`_bucket_pairs`) on the
+      (chunk, ck) buckets. Under "drop", any true near-dup pair inside
+      a hot bucket almost surely shares one of its three other,
+      colder chunk keys.
 
     Defaults since round 5 are the SAFE profile's guard values
     (max_bucket=1024, oversize="join" — output-identical, memory-
@@ -882,24 +887,7 @@ def simhash_near_dups(
         max_bucket = profile.max_bucket
         oversize = profile.oversize
         drop_zero = profile.simhash_drop_zero
-    if oversize not in ("join", "drop"):
-        raise ValueError(f"unknown oversize policy {oversize!r}")
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    # -- collapse exact-duplicate texts ---------------------------------
-    hashed = df.select(
-        F.md5(F.col(text_col)).alias("th"),
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("text"),
-    )
-    groups = hashed.groupBy("th").agg(
-        F.min("id").alias("gid"),
-        F.first("text").alias("text"),
-        F.count(F.lit(1)).alias("gsize"),
-    )
-    mem = hashed.select("th", "id").join(
-        groups.select("th", "gid"), "th"
-    ).select("gid", "id")
+    groups, mem = _collapse_exact(df, id_col, text_col)
 
     # -- signatures per distinct text -----------------------------------
     # gids are unique (min-id per text hash), so the empty-doc
@@ -928,93 +916,14 @@ def simhash_near_dups(
         F.explode(F.expr(f"array({chunk_arr})")).alias("b"),
     ).select("gid", "simhash", "gsize", "b.chunk", "b.ck")
 
-    def _self_join(rows: DataFrame) -> DataFrame:
-        return (
-            rows.alias("l")
-            .join(
-                rows.alias("r"),
-                (F.col("l.chunk") == F.col("r.chunk"))
-                & (F.col("l.ck") == F.col("r.ck"))
-                & (F.col("l.gid") < F.col("r.gid")),
-            )
-            .select(
-                F.col("l.gid").alias("a"),
-                F.col("r.gid").alias("b"),
-                F.col("l.simhash").alias("ha"),
-                F.col("r.simhash").alias("hb"),
-            )
-        )
-
-    ham_ok = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) <= max_hamming
-
-    if max_bucket is None:
-        rep = _self_join(chunks).filter(ham_ok).distinct()
-        intra_src = gsig.filter(F.col("gsize") >= 2).select("gid")
-    else:
-        # window-count census in DOC units (Σ gsize): sizes are known
-        # BEFORE any membership array is collected, in the same single
-        # shuffle the pair groupBy needs anyway, and the guard
-        # thresholds keep their original doc-count meaning
-        tagged = chunks.withColumn(
-            "sz", F.sum("gsize").over(Window.partitionBy("chunk", "ck"))
-        ).filter(F.col("sz") >= 2)
-        small = (
-            tagged.filter(F.col("sz") <= max_bucket)
-            .groupBy("chunk", "ck")
-            .agg(F.collect_list(F.struct("gid", "simhash")).alias("mem0"))
-            # sort below the exchange, not inside the pair lambdas
-            # (no CSE across lambda bodies); gid is field 1 → a < b
-            .select(F.array_sort("mem0").alias("mem"))
-        )
-        # spread before the C(n,2) explosion (see _in_array_pairs)
-        small = small.repartition(n_part)
-        pair_structs = F.expr(
-            "flatten(transform(mem, (x, i) -> "
-            "transform(slice(mem, i + 2, size(mem)), "
-            "y -> struct(x.gid AS a, y.gid AS b, "
-            "x.simhash AS ha, y.simhash AS hb))))"
-        )
-        cand = (
-            small.select(F.explode(pair_structs).alias("p"))
-            .select("p.a", "p.b", "p.ha", "p.hb")
-            .filter(ham_ok)
-        )
-        if oversize == "join":
-            big = tagged.filter(F.col("sz") > max_bucket).select(
-                "gid", "simhash", "chunk", "ck"
-            )
-            cand = cand.unionByName(_self_join(big).filter(ham_ok))
-            intra_src = gsig.filter(F.col("gsize") >= 2).select("gid")
-        else:
-            # drop: a group keeps its intra pairs only while it still
-            # has a surviving (≤ max_bucket) bucket — the round-6
-            # condition for those pairs to be generated at all
-            intra_src = (
-                tagged.filter(F.col("sz") <= max_bucket)
-                .join(gsig.filter(F.col("gsize") >= 2).select("gid"), "gid", "left_semi")
-                .select("gid")
-                .distinct()
-            )
-        rep = cand.distinct()
-
-    # -- expand rep pairs to member pairs (join-based) ------------------
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    rep = rep.select("a", "b", ham.alias("hamming"))
-    mx = mem.selectExpr("gid AS a", "id AS x")
-    my = mem.selectExpr("gid AS b", "id AS y")
-    cross = (
-        rep.join(mx, "a")
-        .join(my, "b")
-        .selectExpr("least(x, y) AS a", "greatest(x, y) AS b", "hamming")
-        .filter("a < b")
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    rep, intra_src = _bucket_pairs(
+        chunks, ["chunk", "ck"], gsig, max_bucket, oversize,
+        carry=("simhash",), verify=ham <= max_hamming,
     )
-    mg = mem.selectExpr("gid", "id AS x")
-    mh = mem.selectExpr("gid", "id AS y")
-    intra = (
-        intra_src.join(mg, "gid")
-        .join(mh, "gid")
-        .filter("x < y")
-        .selectExpr("x AS a", "y AS b", "CAST(0 AS INT) AS hamming")
+    out = _expand_pairs(
+        rep.select("a", "b", ham.alias("hamming")),
+        intra_src.select("gid", F.lit(0).alias("hamming")),
+        mem,
     )
-    out = cross.unionByName(intra)
     return out.filter(F.col("hamming") <= max_hamming)

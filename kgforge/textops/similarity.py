@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.profile import SAFE, ScaleProfile
+from kgforge.textops.dedup import _bucket_pairs, _collapse_exact, _expand_pairs
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
@@ -37,6 +38,13 @@ def cosine_expr(a: Column, b: Column) -> Column:
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def vector_dim(df: DataFrame, vec_col: str = "embedding") -> int | None:
+    """Length of the first non-NULL vector in `vec_col` (one take(1)
+    job), or None when the column holds no vector at all."""
+    row = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    return None if row is None else len(row[0])
 
 
 def brute_force_topk(
@@ -194,11 +202,10 @@ def embedding_near_dups(
     embeddings from boilerplate pages) pile into ONE bucket, which is
     what the guard is for:
 
-    `max_bucket=N` runs a size census on (tbl, bucket) before any pair
-    generation; buckets ≤ N pair via bounded collect_list + in-array
-    explosion, oversized buckets follow `oversize` ("join" = identical
-    output streamed row-at-a-time, "drop" = skip — an over-full sign
-    bucket at a sane cap is a degenerate pile, not near-dup signal).
+    `max_bucket=N` + `oversize` — the census guard shared with minhash
+    and simhash near-dups (`kgforge.textops.dedup._bucket_pairs`) on
+    the (tbl, bucket) buckets; under "drop" an over-full sign bucket
+    at a sane cap is a degenerate pile, not near-dup signal.
     Defaults since round 5 are the SAFE profile's guard values
     (max_bucket=1024, oversize="join" — output-identical, memory-
     bounded); pass profile=kgforge.profile.PARITY (or max_bucket=None)
@@ -219,93 +226,29 @@ def embedding_near_dups(
     has a surviving bucket, exactly the round-6 condition."""
     if profile is not None:
         max_bucket, oversize = profile.max_bucket, profile.oversize
-    if oversize not in ("join", "drop"):
-        raise ValueError(f"unknown oversize policy {oversize!r}")
     if dim is None:
         # dim probe = a driver take(1) job over the full input plan;
         # callers that know the dimension (or can probe a cheaper
         # subset of the input) should pass `dim` — measured 1.7 s cold
         # for a union-of-scans plan vs 0.13 s for the plain base scan
-        first = df.select(F.col(vec_col)).first()
-        if first is None:
+        dim = vector_dim(df, vec_col)
+        if dim is None:
             return df.sparkSession.createDataFrame(
                 [], "a long, b long, score double"
             )
-        dim = len(first[0])
-    vec = _as_double(F.col(vec_col))
-    base = df.select(F.col(id_col).alias("id"), vec.alias("v"))
+    base = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+    groups, mem = _collapse_exact(base, "id", "v", "v")
 
-    # -- collapse exact-duplicate vectors -------------------------------
-    hashed = base.select(F.md5(F.col("v").cast("string")).alias("th"), "id", "v")
-    groups = hashed.groupBy("th").agg(
-        F.min("id").alias("gid"),
-        F.first("v").alias("v"),
-        F.count(F.lit(1)).alias("gsize"),
-    )
-    mem = hashed.select("th", "id").join(
-        groups.select("th", "gid"), "th"
-    ).select("gid", "id")
-
-    # one vectorized bucket pass for all tables, then ONE self-join on
-    # (tbl, bucket) — the banded-rows formulation (same shape as the
-    # linking LSH) instead of n_tables separate joins
+    # one vectorized bucket pass for all tables, then ONE pair
+    # generation over (tbl, bucket) — the banded-rows formulation
+    # instead of n_tables separate passes
     udf = buckets_udf(
         [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     )
     banded = groups.select(
         "gid", "gsize", F.posexplode(udf(F.col("v"))).alias("tbl", "bucket")
     )
-
-    def _self_join(rows: DataFrame) -> DataFrame:
-        return (
-            rows.alias("l")
-            .join(
-                rows.alias("r"),
-                (F.col("l.tbl") == F.col("r.tbl"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l.gid") < F.col("r.gid")),
-            )
-            .select(F.col("l.gid").alias("a"), F.col("r.gid").alias("b"))
-        )
-
-    if max_bucket is None:
-        cand = _self_join(banded).distinct()
-        intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
-    else:
-        from pyspark.sql import Window
-
-        from kgforge.textops.dedup import _in_array_pairs
-
-        # window-count census in DOC units (Σ gsize): sizes known
-        # before any membership is collected, in one shuffle (same
-        # pattern + rationale as minhash_lsh_candidates)
-        tagged = banded.withColumn(
-            "sz", F.sum("gsize").over(Window.partitionBy("tbl", "bucket"))
-        ).filter(F.col("sz") >= 2)
-        small = (
-            tagged.filter(F.col("sz") <= max_bucket)
-            .groupBy("tbl", "bucket")
-            .agg(F.collect_list("gid").alias("ids"))
-        )
-        cand = _in_array_pairs(small)
-        if oversize == "join":
-            big = tagged.filter(F.col("sz") > max_bucket).select(
-                "gid", "tbl", "bucket"
-            )
-            cand = cand.unionByName(_self_join(big))
-            intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
-        else:
-            intra_src = (
-                tagged.filter(F.col("sz") <= max_bucket)
-                .join(
-                    groups.filter(F.col("gsize") >= 2).select("gid"),
-                    "gid",
-                    "left_semi",
-                )
-                .select("gid")
-                .distinct()
-            )
-        cand = cand.distinct()
+    cand, intra_src = _bucket_pairs(banded, ["tbl", "bucket"], groups, max_bucket, oversize)
 
     # -- exact-cosine verify at rep level, then expand ------------------
     # Per-VECTOR quantities are computed once per group and attached to
@@ -356,30 +299,14 @@ def embedding_near_dups(
         paired.select("a", "b", F.round(cos, 6).alias("score"))
         .filter(F.col("score") >= threshold)
     )
-    mx = mem.selectExpr("gid AS a", "id AS x")
-    my = mem.selectExpr("gid AS b", "id AS y")
-    cross = (
-        rep.join(mx, "a")
-        .join(my, "b")
-        .selectExpr("least(x, y) AS a", "greatest(x, y) AS b", "score")
-        .filter("a < b")
-    )
-    intra_scored = (
+    intra = (
         intra_src.join(groups.select("gid", "v"), "gid")
         .select(
             "gid", F.round(cosine_expr(F.col("v"), F.col("v")), 6).alias("score")
         )
         .filter(F.col("score") >= threshold)
     )
-    mg = mem.selectExpr("gid", "id AS x")
-    mh = mem.selectExpr("gid", "id AS y")
-    intra = (
-        intra_scored.join(mg, "gid")
-        .join(mh, "gid")
-        .filter("x < y")
-        .selectExpr("x AS a", "y AS b", "score")
-    )
-    return cross.unionByName(intra)
+    return _expand_pairs(rep, intra, mem)
 
 
 # ----------------------------------------------------------- ANN index
@@ -477,10 +404,9 @@ def build_ann_index(
 
     from kgforge.io.fs import write_text
 
-    first = df.select(F.col(vec_col)).first()
-    if first is None:
+    dim = vector_dim(df, vec_col)
+    if dim is None:
         raise ValueError("cannot index an empty vector table")
-    dim = len(first[0])
     n_rows = df.count()
     if partition_bits is None:
         partition_bits = _auto_partition_bits(n_rows, n_planes)
@@ -708,10 +634,9 @@ def build_ivf_index(
 
     from kgforge.io.fs import write_text
 
-    first = df.select(F.col(vec_col)).first()
-    if first is None:
+    dim = vector_dim(df, vec_col)
+    if dim is None:
         raise ValueError("cannot index an empty vector table")
-    dim = len(first[0])
     if centroids is None:
         centroids = train_ivf_centroids(df, k, sample, iters, seed, vec_col)
     udf = ivf_assign_udf(centroids)

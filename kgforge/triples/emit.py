@@ -387,17 +387,6 @@ def rule_tagged_array(rule: Rule, df_cols: dict[str, Column], base: int) -> Colu
     return F.when(guard, arr).otherwise(F.array().cast(T.ArrayType(_TAGGED_SCHEMA)))
 
 
-def _conf_bytes(v: str) -> int:
-    """Parse a Spark size conf value ('8m', '1g', '134217728')."""
-    v = v.strip().lower()
-    for suf, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if v.endswith(suf):
-            return int(float(v[:-1]) * mult)
-    if v.endswith("b"):
-        return int(v[:-1])
-    return int(v)
-
-
 def _spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the source scan cannot fill the
     session's parallelism even at ideal split sizing.
@@ -435,7 +424,11 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
         except OSError:
             return df
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    max_pb = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    # Spark's own size parser: accepts every form the conf does
+    # ('134217728', '128m', '128MB', '1g', '64kb', '1t')
+    max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    )
     if total >= n_part * max_pb:
         return df
     return df.repartition(n_part)

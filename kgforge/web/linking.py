@@ -6,11 +6,10 @@ orders of magnitude smaller than the mention stream, and the expensive
 pairwise work happens only inside LSH buckets.
 
 Pipeline:
-  distinct surfaces → lower → char-3-gram shingles (JVM expression)
-  → HashingTF sparse vectors → MinHashLSH approxSimilarityJoin
-  (candidate blocking at a loose Jaccard threshold; exact Jaccard is
-  evaluated per candidate pair, so blocking is also a first filter)
-  → cosine scoring:
+  distinct surfaces → exact case-fold tier → char-3-gram shingles (JVM
+  expression) → banded MinHash blocking over the case-fold
+  representatives (`candidate_pairs_minhash`, oversized buckets
+  dropped) → cosine scoring:
       * 'set'   — Otsuka–Ochiai set cosine |A∩B|/sqrt(|A||B|), fully
                   JVM-columnar (array_intersect), the default
       * 'tfidf' — TF-IDF-weighted cosine, fully columnar with the
@@ -33,57 +32,6 @@ def char_ngrams(col, n: int = 3):
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1))),
         lambda i: F.substring(s, i, n),
-    )
-
-
-def candidate_pairs(
-    surfaces: DataFrame,
-    surface_col: str = "surface",
-    jaccard_max_dist: float = 0.6,
-    num_hash_tables: int = 5,
-    tf_features: int = 1 << 18,
-) -> DataFrame:
-    """Distinct surfaces → candidate pairs (a, b, grams_a, grams_b,
-    jaccard) with a < b, via MinHashLSH self-join.
-
-    Blocking threshold: 0.6 Jaccard distance (≥0.4 similarity). Looser
-    thresholds admit every syllable-sharing pair and the candidate set
-    explodes quadratically — observed 117s → ~20s on 10k surfaces when
-    tightening 0.8→0.6. True variants (case-folds are handled EXACTLY
-    upstream in link_surfaces, never here) sit well above 0.4."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = (
-        surfaces.select(F.col(surface_col).alias("surface"))
-        .distinct()
-        .withColumn("grams", char_ngrams(F.col("surface")))
-        .filter(F.size("grams") > 0)
-    )
-    tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=tf_features)
-    # persist: approxSimilarityJoin consumes feat twice (both sides) and
-    # the model fit once more — without this the gram/TF pipeline is
-    # recomputed three times
-    feat = tf.transform(base).persist()
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(feat)
-    joined = model.approxSimilarityJoin(feat, feat, jaccard_max_dist, distCol="jdist")
-    # carry ONLY the surface strings through the join output — the
-    # feature vectors/hashes/gram arrays the LSH join schleps along are
-    # dead weight downstream; scorers recompute grams from the strings
-    # (a cheap expression) instead of shuffling arrays
-    pairs = joined.select(
-        F.col("datasetA.surface").alias("a"),
-        F.col("datasetB.surface").alias("b"),
-        (F.lit(1.0) - F.col("jdist")).alias("jaccard"),
-    ).filter(F.col("a") < F.col("b"))
-    # materialize before unpersisting feat: the candidate set is small
-    # (post-blocking), while leaving feat cached would leak a vector
-    # block per call into the session (repeated link_surfaces calls
-    # accumulate)
-    pairs = pairs.localCheckpoint(eager=True)
-    feat.unpersist()
-    return pairs.withColumn("grams_a", char_ngrams(F.col("a"))).withColumn(
-        "grams_b", char_ngrams(F.col("b"))
     )
 
 
@@ -192,7 +140,6 @@ def candidate_pairs_minhash(
     num_hashes: int = 24,
     rows_per_band: int = 3,
     max_bucket: int = 64,
-    pair_gen: str = "bucket",
     prune_threshold: float | None = None,
     profile=None,
 ) -> DataFrame:
@@ -215,12 +162,10 @@ def candidate_pairs_minhash(
     guard): a bucket with thousands of members carries no linkage
     signal and only produces quadratic garbage pairs.
 
-    pair_gen='bucket' (default): groupBy(band, key) + bounded
-    collect_list + in-array pair explosion — ONE shuffle of the banded
-    rows. The collected member array is bounded by `max_bucket`, so no
-    hub row can form. pair_gen='join' keeps the round-1 self-join
-    formulation (bucket-size census join + equi-self-join = three
-    shuffles of the banded rows) for A/B measurement.
+    Pairs come from groupBy(band, key) + bounded collect_list +
+    in-array pair explosion — ONE shuffle of the banded rows. The
+    collected member array is bounded by `max_bucket`, so no hub row
+    can form.
 
     `prune_threshold`: when the caller scores with max(set-cosine,
     normalized Levenshtein) ≥ t, pairs that CANNOT reach t are dropped
@@ -269,9 +214,42 @@ def candidate_pairs_minhash(
         for b in range(bands)
     ]
 
-    def _prune(pairs: DataFrame) -> DataFrame:
-        if prune_threshold is None:
-            return pairs
+    banded = sig.select(
+        F.struct("surface", "ng").alias("m"),
+        F.explode(F.array(*band_structs)).alias("bk"),
+    ).select("m", "bk.band", "bk.key")
+    grouped = (
+        banded.groupBy("band", "key")
+        .agg(F.collect_list("m").alias("mem"))
+        .filter((F.size("mem") >= 2) & (F.size("mem") <= max_bucket))
+    )
+    # spread before the C(n,2) explosion: the grouped table is
+    # byte-small (one row per bucket) so AQE coalesces it, which
+    # strands the quadratic pair explode on a couple of tasks
+    # (same fix as textops.dedup._in_array_pairs)
+    grouped = grouped.repartition(
+        int(surfaces.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    )
+    m = F.array_sort(F.col("mem"))
+    pair_structs = F.flatten(
+        F.transform(
+            m,
+            lambda x, i: F.transform(
+                F.slice(m, i + F.lit(2), F.size(m)),
+                lambda y: F.struct(
+                    x["surface"].alias("a"),
+                    y["surface"].alias("b"),
+                    x["ng"].alias("ng_a"),
+                    y["ng"].alias("ng_b"),
+                ),
+            ),
+        )
+    )
+    pairs = (
+        grouped.select(F.explode(pair_structs).alias("p"))
+        .select("p.a", "p.b", "p.ng_a", "p.ng_b")
+    )
+    if prune_threshold is not None:
         t = float(prune_threshold)
         la, lb = F.length("a").cast("double"), F.length("b").cast("double")
         ub_lev = F.lit(1.0) - F.abs(la - lb) / F.greatest(la, lb)
@@ -279,74 +257,8 @@ def candidate_pairs_minhash(
             F.least("ng_a", "ng_b").cast("double")
             / F.greatest("ng_a", "ng_b").cast("double")
         )
-        return pairs.filter((ub_cos >= t) | (ub_lev >= t))
-
-    if pair_gen == "bucket":
-        banded = sig.select(
-            F.struct("surface", "ng").alias("m"),
-            F.explode(F.array(*band_structs)).alias("bk"),
-        ).select("m", "bk.band", "bk.key")
-        grouped = (
-            banded.groupBy("band", "key")
-            .agg(F.collect_list("m").alias("mem"))
-            .filter((F.size("mem") >= 2) & (F.size("mem") <= max_bucket))
-        )
-        # spread before the C(n,2) explosion: the grouped table is
-        # byte-small (one row per bucket) so AQE coalesces it, which
-        # strands the quadratic pair explode on a couple of tasks
-        # (same fix as textops.dedup._in_array_pairs)
-        grouped = grouped.repartition(
-            int(surfaces.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
-        m = F.array_sort(F.col("mem"))
-        pair_structs = F.flatten(
-            F.transform(
-                m,
-                lambda x, i: F.transform(
-                    F.slice(m, i + F.lit(2), F.size(m)),
-                    lambda y: F.struct(
-                        x["surface"].alias("a"),
-                        y["surface"].alias("b"),
-                        x["ng"].alias("ng_a"),
-                        y["ng"].alias("ng_b"),
-                    ),
-                ),
-            )
-        )
-        pairs = (
-            grouped.select(F.explode(pair_structs).alias("p"))
-            .select("p.a", "p.b", "p.ng_a", "p.ng_b")
-        )
-        pairs = _prune(pairs).select("a", "b").distinct()
-    elif pair_gen == "join":
-        banded = sig.select(
-            "surface",
-            "ng",
-            F.explode(F.array(*band_structs)).alias("bk"),
-        ).select("surface", "ng", "bk.band", "bk.key")
-        sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("sz"))
-        pruned = banded.join(
-            sizes.filter(F.col("sz") <= max_bucket).select("band", "key"),
-            ["band", "key"],
-        )
-        l, r = pruned.alias("l"), pruned.alias("r")
-        pairs = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l.surface") < F.col("r.surface")),
-            )
-            .select(
-                F.col("l.surface").alias("a"),
-                F.col("r.surface").alias("b"),
-                F.col("l.ng").alias("ng_a"),
-                F.col("r.ng").alias("ng_b"),
-            )
-        )
-        pairs = _prune(pairs).select("a", "b").distinct()
-    else:
-        raise ValueError(f"unknown pair_gen {pair_gen!r}")
+        pairs = pairs.filter((ub_cos >= t) | (ub_lev >= t))
+    pairs = pairs.select("a", "b").distinct()
     return pairs.withColumn("grams_a", char_ngrams(F.col("a"))).withColumn(
         "grams_b", char_ngrams(F.col("b"))
     )
@@ -357,8 +269,6 @@ def link_surfaces(
     surface_col: str = "surface",
     threshold: float = 0.78,
     scorer: str = "set",
-    jaccard_max_dist: float = 0.8,
-    blocking: str = "minhash",
     profile=None,
 ) -> DataFrame:
     """→ sameAs edges (a, b, score), a < b, score ≥ threshold.
@@ -385,17 +295,14 @@ def link_surfaces(
 
     # similarity tier on representatives only
     reps = rep.select(F.col("rep").alias("surface"))
-    if blocking == "ml":
-        pairs = candidate_pairs(reps, "surface", jaccard_max_dist)
-    else:
-        # the upper-bound prune is only sound for the 'set' scorer
-        # (max of set-cosine and normalized Levenshtein)
-        pairs = candidate_pairs_minhash(
-            reps,
-            "surface",
-            prune_threshold=threshold if scorer == "set" else None,
-            profile=profile,
-        )
+    # the upper-bound prune is only sound for the 'set' scorer (max of
+    # set-cosine and normalized Levenshtein)
+    pairs = candidate_pairs_minhash(
+        reps,
+        "surface",
+        prune_threshold=threshold if scorer == "set" else None,
+        profile=profile,
+    )
     if scorer == "tfidf":
         scored = score_tfidf_cosine(pairs, compute_idf_df(rep.select(F.col("rep").alias("surface"))))
     else:

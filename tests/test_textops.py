@@ -61,19 +61,6 @@ def test_minhash_candidates_find_planted(spark):
     assert (1, 2000) in pairs  # near dup shares most shingles
 
 
-def test_minhash_max_bucket_join_parity(spark):
-    """oversize='join' routes saturated buckets through the streaming
-    self-join — the PAIR SET is identical to the unbounded default even
-    when max_bucket is small enough to divert nearly every bucket."""
-    df = _docs(spark)
-    base = {(r.a, r.b) for r in minhash_lsh_candidates(df).collect()}
-    bounded = {
-        (r.a, r.b)
-        for r in minhash_lsh_candidates(df, max_bucket=2, oversize="join").collect()
-    }
-    assert bounded == base
-
-
 def test_minhash_max_bucket_drop_planted_mega_bucket(spark):
     """A planted 10k-member bucket (identical texts → identical band
     signatures) with oversize='drop': the saturated bucket is excluded
@@ -90,40 +77,6 @@ def test_minhash_max_bucket_drop_planted_mega_bucket(spark):
     assert not any(a >= 100000 or b >= 100000 for a, b in pairs)
     # planted exact clones from the normal corpus still found
     assert (0, 1000) in pairs and (0, 1001) in pairs
-
-
-def test_minhash_max_bucket_capped_memory():
-    """The 10k-member planted bucket completes in a memory-capped JVM
-    (the unbounded collect_list formulation would build the C(10k,2) ≈
-    5·10⁷-struct pair array inside ONE row — >1.5 GB in a single task).
-    Fresh subprocess because driver memory is fixed at JVM start."""
-    import subprocess
-    import sys
-
-    script = """
-from kgforge.session import get_spark
-from kgforge.textops.dedup import minhash_lsh_candidates
-spark = get_spark(app_name="capped", master="local[2]", shuffle_partitions=4,
-                  extra_conf={"spark.driver.memory": "700m"})
-rows = [(i, "spam boilerplate footer navigation copyright notice") for i in range(10000)]
-rows += [(20000, "unique alpha beta gamma delta epsilon zeta eta theta"),
-         (20001, "unique alpha beta gamma delta epsilon zeta eta theta")]
-df = spark.createDataFrame(rows, "doc_id long, text string")
-out = minhash_lsh_candidates(df, max_bucket=64, oversize="drop").collect()
-pairs = {(r.a, r.b) for r in out}
-assert pairs == {(20000, 20001)}, pairs
-print("CAPPED_OK")
-spark.stop()
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "CAPPED_OK" in proc.stdout
 
 
 def test_ngram_jaccard(spark):
@@ -200,21 +153,6 @@ def test_simhash_properties(spark):
     assert simhash(empty).first().simhash == 0
 
 
-def test_simhash_guard_join_parity(spark):
-    """max_bucket + oversize='join': identical pair set to the
-    unbounded default even when the cap diverts nearly every bucket
-    through the streaming join."""
-    df = _docs(spark)
-    base = {(r.a, r.b, r.hamming) for r in simhash_near_dups(df, max_hamming=8).collect()}
-    bounded = {
-        (r.a, r.b, r.hamming)
-        for r in simhash_near_dups(
-            df, max_hamming=8, max_bucket=2, oversize="join"
-        ).collect()
-    }
-    assert bounded == base
-
-
 def test_simhash_guard_drop_and_drop_zero(spark):
     """Planted empty-doc shard: every empty doc hashes to simhash 0 and
     shares all four (chunk, 0) keys. Both guards neutralize it —
@@ -234,41 +172,6 @@ def test_simhash_guard_drop_and_drop_zero(spark):
         }
         assert not any(a >= 50000 or b >= 50000 for a, b in pairs), kwargs
         assert (0, 1000) in pairs and (1000, 1001) in pairs, kwargs
-
-
-def test_simhash_guard_capped_memory():
-    """10⁵ planted empty docs (the round-3 verdict's hot-chunk corpus:
-    C(10⁵,2) ≈ 5·10⁹ garbage pairs unguarded) complete in a
-    memory-capped JVM with the census guard on; the real clone pair is
-    still emitted. Fresh subprocess — driver memory is fixed at JVM
-    start."""
-    import subprocess
-    import sys
-
-    script = """
-from kgforge.session import get_spark
-from kgforge.textops.dedup import simhash_near_dups
-spark = get_spark(app_name="capped", master="local[2]", shuffle_partitions=4,
-                  extra_conf={"spark.driver.memory": "700m"})
-rows = [(i, "") for i in range(100000)]
-rows += [(200000, "unique alpha beta gamma delta epsilon zeta eta theta"),
-         (200001, "unique alpha beta gamma delta epsilon zeta eta theta")]
-df = spark.createDataFrame(rows, "doc_id long, text string")
-out = simhash_near_dups(df, max_bucket=64, oversize="drop").collect()
-pairs = {(r.a, r.b) for r in out}
-assert pairs == {(200000, 200001)}, sorted(pairs)[:10]
-print("CAPPED_OK")
-spark.stop()
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=300,
-        cwd="/root/repo",
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "CAPPED_OK" in proc.stdout
 
 
 def _embeddings(spark, n=200, dim=16, seed=7):
@@ -306,22 +209,6 @@ def test_embedding_near_dups(spark):
     assert all(s >= 0.95 for s in out.values())
 
 
-def test_embedding_guard_join_parity(spark):
-    """max_bucket + oversize='join' reproduces the unbounded pair set
-    exactly, even with a cap small enough to divert every bucket."""
-    df = _embeddings(spark)
-    base = {
-        (r.a, r.b) for r in embedding_near_dups(df, threshold=0.95).collect()
-    }
-    bounded = {
-        (r.a, r.b)
-        for r in embedding_near_dups(
-            df, threshold=0.95, max_bucket=2, oversize="join"
-        ).collect()
-    }
-    assert bounded == base
-
-
 def test_embedding_guard_drop_planted_pile(spark):
     """A planted pile of identical vectors (boilerplate-page
     embeddings) saturates ONE bucket per table; with 'drop' the census
@@ -339,18 +226,71 @@ def test_embedding_guard_drop_planted_pile(spark):
     assert (3, 9000) in pairs and (5, 9001) in pairs
 
 
-def test_embedding_guard_capped_memory():
-    """20k duplicate vectors (C(20k,2) ≈ 2·10⁸ pairs unguarded)
-    complete in a memory-capped JVM with the census guard; the planted
-    true near-dup pair elsewhere is still found."""
-    import subprocess
-    import sys
+# The three banded near-dup operators share one hot-bucket guard
+# (kgforge.textops.dedup._bucket_pairs); each case is one operator's
+# fixture, extra arguments and compared output columns.
+_GUARD_CASES = {
+    "minhash": (_docs, minhash_lsh_candidates, {}, ("a", "b")),
+    "simhash": (_docs, simhash_near_dups, {"max_hamming": 8}, ("a", "b", "hamming")),
+    "embedding": (_embeddings, embedding_near_dups, {"threshold": 0.95}, ("a", "b")),
+}
 
-    script = """
-from kgforge.session import get_spark
+
+def _guard_pairs(df, op, **guard):
+    _, fn, kwargs, cols = _GUARD_CASES[op]
+    return {tuple(r[c] for c in cols) for r in fn(df, **kwargs, **guard).collect()}
+
+
+@pytest.mark.parametrize("op", list(_GUARD_CASES))
+def test_guard_join_parity(spark, op):
+    """oversize='join' routes saturated buckets through the streaming
+    self-join — the pair set is identical to the default even when
+    max_bucket is small enough to divert nearly every bucket."""
+    df = _GUARD_CASES[op][0](spark)
+    assert _guard_pairs(df, op, max_bucket=2, oversize="join") == _guard_pairs(df, op)
+
+
+def test_unguarded_matches_guarded(spark):
+    """max_bucket=None (one in-array formulation for all three
+    operators) emits the same pair set as the SAFE default."""
+    for op, case in _GUARD_CASES.items():
+        df = case[0](spark)
+        assert _guard_pairs(df, op, max_bucket=None) == _guard_pairs(df, op), op
+
+
+# Planted hot buckets that complete in a memory-capped JVM with the
+# census guard on (oversize='drop'), while the real near-dup pair
+# elsewhere is still emitted. Fresh subprocess because driver memory
+# is fixed at JVM start.
+_CAPPED_SCRIPTS = {
+    # 10k-member planted bucket: the unbounded collect_list formulation
+    # would build the C(10k,2) ≈ 5·10⁷-struct pair array inside ONE row
+    # — >1.5 GB in a single task
+    "minhash": """
+from kgforge.textops.dedup import minhash_lsh_candidates
+rows = [(i, "spam boilerplate footer navigation copyright notice") for i in range(10000)]
+rows += [(20000, "unique alpha beta gamma delta epsilon zeta eta theta"),
+         (20001, "unique alpha beta gamma delta epsilon zeta eta theta")]
+df = spark.createDataFrame(rows, "doc_id long, text string")
+out = minhash_lsh_candidates(df, max_bucket=64, oversize="drop").collect()
+pairs = {(r.a, r.b) for r in out}
+assert pairs == {(20000, 20001)}, pairs
+""",
+    # 10⁵ planted empty docs (the hot-chunk corpus: C(10⁵,2) ≈ 5·10⁹
+    # garbage pairs unguarded)
+    "simhash": """
+from kgforge.textops.dedup import simhash_near_dups
+rows = [(i, "") for i in range(100000)]
+rows += [(200000, "unique alpha beta gamma delta epsilon zeta eta theta"),
+         (200001, "unique alpha beta gamma delta epsilon zeta eta theta")]
+df = spark.createDataFrame(rows, "doc_id long, text string")
+out = simhash_near_dups(df, max_bucket=64, oversize="drop").collect()
+pairs = {(r.a, r.b) for r in out}
+assert pairs == {(200000, 200001)}, sorted(pairs)[:10]
+""",
+    # 20k duplicate vectors (C(20k,2) ≈ 2·10⁸ pairs unguarded)
+    "embedding": """
 from kgforge.textops.similarity import embedding_near_dups
-spark = get_spark(app_name="capped", master="local[2]", shuffle_partitions=4,
-                  extra_conf={"spark.driver.memory": "700m"})
 pile = [(i, [1.0, 0.5, -0.25, 0.125] * 4) for i in range(20000)]
 pile += [(50000, [float(j) for j in range(16)]),
          (50001, [float(j) + 0.001 for j in range(16)])]
@@ -358,15 +298,34 @@ df = spark.createDataFrame(pile, "vec_id long, embedding array<double>")
 out = embedding_near_dups(df, threshold=0.999, max_bucket=64, oversize="drop").collect()
 pairs = {(r.a, r.b) for r in out}
 assert pairs == {(50000, 50001)}, sorted(pairs)[:10]
+""",
+}
+
+
+@pytest.mark.parametrize("op", list(_CAPPED_SCRIPTS))
+def test_guard_capped_memory(op):
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        """
+from kgforge.session import get_spark
+spark = get_spark(app_name="capped", master="local[2]", shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "700m"})
+"""
+        + _CAPPED_SCRIPTS[op]
+        + """
 print("CAPPED_OK")
 spark.stop()
 """
+    )
     proc = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "CAPPED_OK" in proc.stdout
@@ -801,3 +760,32 @@ def test_spread_small_scan(spark, tmp_path):
 
     local = spark.createDataFrame([(1, "a")], "k long, v string")
     assert _spread_small_scan(local) is local
+
+    # a Spark size string with a two-letter unit parses (JVM byte-string
+    # parser) instead of crashing the guard
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128MB")
+    try:
+        assert _spread_small_scan(df).rdd.getNumPartitions() == n_part
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_vector_dim_skips_null_first_row(spark, tmp_path):
+    """The dimension probe reads the first NON-NULL vector; a table
+    with no vector keeps each caller's empty-table behaviour."""
+    from kgforge.textops.similarity import build_ann_index, build_ivf_index, vector_dim
+
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame([(0, None), (1, [1.0, 2.0, 3.0])], schema).coalesce(1)
+    assert df.select("embedding").first()[0] is None  # the first row is NULL
+    assert vector_dim(df) == 3
+
+    nulls = spark.createDataFrame([(0, None)], schema)
+    assert vector_dim(nulls) is None
+    assert embedding_near_dups(nulls).count() == 0
+    with pytest.raises(ValueError, match="empty vector table"):
+        build_ann_index(nulls, str(tmp_path / "lsh"))
+    with pytest.raises(ValueError, match="empty vector table"):
+        build_ivf_index(nulls, str(tmp_path / "ivf"))
