@@ -71,20 +71,26 @@ def closure_pairs(edges: list[tuple], reflexive_on_cycle: bool = False) -> list[
             adj.setdefault(s, set()).add(d)
     out: list[tuple] = []
     for s in sorted(adj):
-        seen: set = set()
-        stack = list(adj[s])
-        while stack:
-            d = stack.pop()
-            if d in seen:
-                continue
-            seen.add(d)
-            nxt = adj.get(d)
-            if nxt:
-                stack.extend(nxt)
+        seen = _reach(adj, [s])
         if not reflexive_on_cycle:
             seen.discard(s)
         out.extend((s, d) for d in sorted(seen))
     return out
+
+
+def _reach(adj: dict, starts) -> set:
+    """Nodes reachable from `starts` by >=1 step over the adjacency
+    map (DFS). A start is in the result only when it is re-reached —
+    by a self-edge or a cycle."""
+    seen: set = set()
+    stack = [d for s in starts for d in adj.get(s, ())]
+    while stack:
+        d = stack.pop()
+        if d in seen:
+            continue
+        seen.add(d)
+        stack.extend(adj.get(d, ()))
+    return seen
 
 
 def transitive_closure(
@@ -227,14 +233,7 @@ def seeded_reachable(
         adj: dict = {}
         for r in probe:
             adj.setdefault(r.src, set()).add(r.dst)
-        seen: set = set()
-        stack = [d for s in set(seeds) for d in adj.get(s, ())]
-        while stack:
-            d = stack.pop()
-            if d in seen:
-                continue
-            seen.add(d)
-            stack.extend(adj.get(d, ()))
+        seen = _reach(adj, set(seeds))
         return local_df(spark, [(n,) for n in sorted(seen)], "node string")
     frontier: list[str] = sorted(set(seeds))
     reached: set[str] = set()

@@ -97,10 +97,11 @@ straight to Catalyst plans:
             equality reaches the parquet scan as PushedFilters) and the
             variable positions projected to the variable name; patterns
             chain with equi-joins on their shared variables. Patterns
-            whose predicate is a schema predicate (rdfs:subClassOf /
-            subPropertyOf / domain / range) are broadcast — the schema
-            side is grammar-sized, so e.g. the version-resolution
-            query's inference join never shuffles the schema side.
+            whose predicates are all schema predicates (rdfs:subClassOf
+            / subPropertyOf / domain / range) are broadcast where they
+            meet a join — the schema side is grammar-sized, so e.g. the
+            version-resolution query's inference join never shuffles
+            the schema side.
             MINUS compiles to LEFT ANTI on the shared variables
             (SPARQL-correct: no shared variables -> no-op); FILTER
             [NOT] EXISTS compiles to LEFT SEMI / LEFT ANTI on the
@@ -557,11 +558,6 @@ def _subquery_certain(sq: "Query") -> set[str]:
     return out
 
 
-def _maybe_binds(g: Group) -> set[str]:
-    """Variables the group may bind but may also leave unbound."""
-    return _group_binds(g) - _certain_binds(g)
-
-
 def _subquery_vars(sq: "Query") -> list[str]:
     """The variables a `{ SELECT ... }` subquery projects into the
     enclosing group."""
@@ -660,15 +656,8 @@ class _Parser:
         WHERE group; constant-only DESCRIBE takes none."""
         self.next()  # DESCRIBE
         targets: list = []
-        while True:
-            if self.at("var"):
-                targets.append(Var(self.next()[1]))
-            elif self.at("iri"):
-                targets.append(Iri(self.next()[1]))
-            elif self.at("pname"):
-                targets.append(Iri(self._expand(self.next()[1])))
-            else:
-                break
+        while self.at("var") or self.at("iri") or self.at("pname"):
+            targets.append(self._read_term("DESCRIBE target"))
         if not targets:
             raise ValueError("DESCRIBE needs at least one ?var or IRI")
         has_vars = any(isinstance(t, Var) for t in targets)
@@ -1091,6 +1080,13 @@ class _Parser:
             # predicate position: a property-path expression (a bare
             # IRI/pname/`a` is the trivial path and comes back as Iri)
             return self._path()
+        return self._read_term("term")
+
+    def _read_term(self, what: str, num=None):
+        """One RDF term: ?var, <iri>, pname, or "lex" with an optional
+        `^^<dt>` / `^^pname` datatype. A bare number goes to `num` —
+        each caller maps it its own way (a typed Lit, a FILTER float)
+        or, with no `num`, rejects it like any other token."""
         k, v = self.next()
         if k == "var":
             return Var(v)
@@ -1099,16 +1095,18 @@ class _Parser:
         if k == "pname":
             return Iri(self._expand(v))
         if k == "lit":
-            if self.at("op", "^^"):
-                self.next()
-                dk, dv = self.next()
-                if dk == "iri":
-                    return Lit(v, dv)
-                if dk == "pname":
-                    return Lit(v, self._expand(dv))
-                raise ValueError(f"bad datatype token {dk}:{dv!r}")
-            return Lit(v)
-        raise ValueError(f"bad term {k}:{v!r}")
+            if not self.at("op", "^^"):
+                return Lit(v)
+            self.next()
+            dk, dv = self.next()
+            if dk == "iri":
+                return Lit(v, dv)
+            if dk == "pname":
+                return Lit(v, self._expand(dv))
+            raise ValueError(f"bad datatype token {dk}:{dv!r}")
+        if k == "num" and num is not None:
+            return num(v)
+        raise ValueError(f"bad {what} {k}:{v!r}")
 
     def _expand(self, pname: str) -> str:
         pfx, _, local = pname.partition(":")
@@ -1156,28 +1154,13 @@ class _Parser:
         self.next()
         return vars_, rows
 
-    def _values_term(self) -> Term:
-        k, v = self.next()
-        if k == "iri":
-            return Iri(v)
-        if k == "pname":
-            return Iri(self._expand(v))
-        if k == "lit":
-            if self.at("op", "^^"):
-                self.next()
-                dk, dv = self.next()
-                if dk == "iri":
-                    return Lit(v, dv)
-                if dk == "pname":
-                    return Lit(v, self._expand(dv))
-                raise ValueError(f"bad datatype token {dk}:{dv!r}")
-            return Lit(v)
-        if k == "num":
-            dt = "integer" if re.fullmatch(r"[+-]?\d+", v) else "decimal"
-            return Lit(v, _XSD_NS + dt)
-        if k == "word" and v.lower() == "undef":
+    def _values_term(self) -> Term | None:
+        if self.at("word") and self.peek()[1].lower() == "undef":
+            self.next()
             return None  # unbound in this row (round 6)
-        raise ValueError(f"bad VALUES term {k}:{v!r}")
+        if self.at("var"):
+            raise ValueError(f"bad VALUES term var:{self.peek()[1]!r}")
+        return self._read_term("VALUES term", _num_lit)
 
     # -- value expressions (BIND / SELECT expressions) -----------------
     #   valexpr := mul (('+'|'-') mul)*
@@ -1215,8 +1198,7 @@ class _Parser:
                 # it back into operator + operand, then let a `*`/`/`
                 # suffix bind tighter as usual
                 v = self.next()[1]
-                dt = "integer" if re.fullmatch(r"[+-]?\d+", v) else "decimal"
-                rhs = self._val_mul_tail(Lit(v[1:], _XSD_NS + dt))
+                rhs = self._val_mul_tail(_num_lit(v[1:]))
                 e = Arith(v[0], e, rhs)
             else:
                 return e
@@ -1263,29 +1245,7 @@ class _Parser:
                 if len(args) == 4 and not isinstance(args[3], Lit):
                     raise ValueError("REPLACE flags must be a literal")
             return FnCall(fn, tuple(args))
-        k, v = self.next()
-        if k == "var":
-            return Var(v)
-        if k == "iri":
-            return Iri(v)
-        if k == "pname":
-            return Iri(self._expand(v))
-        if k == "lit":
-            if self.at("op", "^^"):
-                self.next()
-                dk, dv = self.next()
-                if dk == "iri":
-                    return Lit(v, dv)
-                if dk == "pname":
-                    return Lit(v, self._expand(dv))
-                raise ValueError(f"bad datatype token {dk}:{dv!r}")
-            return Lit(v)
-        if k == "num":
-            # bare numbers carry xsd:integer / xsd:decimal (the spec's
-            # numeric-literal mapping, same as VALUES terms)
-            dt = "integer" if re.fullmatch(r"[+-]?\d+", v) else "decimal"
-            return Lit(v, _XSD_NS + dt)
-        raise ValueError(f"bad value-expression operand {k}:{v!r}")
+        return self._read_term("value-expression operand", _num_lit)
 
     # -- property paths ------------------------------------------------
     # SPARQL Path grammar, the constant-predicate subset:
@@ -1341,14 +1301,7 @@ class _Parser:
             else:
                 preds = [self._nps_iri()]
             return PathNeg(tuple(sorted(set(preds))))
-        k, v = self.next()
-        if k == "iri":
-            return Iri(v)
-        if k == "pname":
-            return Iri(self._expand(v))
-        if k == "kw" and v == "a":
-            return Iri(RDF_TYPE)
-        raise ValueError(f"bad path element {k}:{v!r}")
+        return Iri(self._pred_iri("path element"))
 
     def _nps_iri(self) -> str:
         """One member of a negated property set — IRI/pname/`a` only
@@ -1358,6 +1311,10 @@ class _Parser:
                 "inverse members in a negated property set (!^p) are "
                 "out of subset"
             )
+        return self._pred_iri("negated-property-set member")
+
+    def _pred_iri(self, what: str) -> str:
+        """A constant predicate: <iri>, pname or `a` (rdf:type)."""
         k, v = self.next()
         if k == "iri":
             return v
@@ -1365,7 +1322,7 @@ class _Parser:
             return self._expand(v)
         if k == "kw" and v == "a":
             return RDF_TYPE
-        raise ValueError(f"bad negated-property-set member {k}:{v!r}")
+        raise ValueError(f"bad {what} {k}:{v!r}")
 
     # -- filter expressions --------------------------------------------
     def _expr(self) -> Expr:
@@ -1464,26 +1421,14 @@ class _Parser:
             # FILTER(STRLEN(?x) > 6) and friends — compiled via the
             # valexpr machinery, numericity from its result datatype
             return self._val_prim()
-        k, v = self.next()
-        if k == "var":
-            return Var(v)
-        if k == "iri":
-            return Iri(v)
-        if k == "pname":
-            return Iri(self._expand(v))
-        if k == "lit":
-            if self.at("op", "^^"):  # typed literal, same as _term
-                self.next()
-                dk, dv = self.next()
-                if dk == "iri":
-                    return Lit(v, dv)
-                if dk == "pname":
-                    return Lit(v, self._expand(dv))
-                raise ValueError(f"bad datatype token {dk}:{dv!r}")
-            return Lit(v)
-        if k == "num":
-            return float(v)
-        raise ValueError(f"bad filter operand {k}:{v!r}")
+        return self._read_term("filter operand", float)
+
+
+def _num_lit(v: str) -> Lit:
+    """A bare number as a VALUES / value-expression term: xsd:integer
+    or xsd:decimal, the spec's numeric-literal mapping."""
+    dt = "integer" if re.fullmatch(r"[+-]?\d+", v) else "decimal"
+    return Lit(v, _XSD_NS + dt)
 
 
 def parse(query: str) -> Query:
@@ -1678,16 +1623,6 @@ def _seeded_path_df(
     null_dt = F.lit(None).cast("string")
     from kgforge.session import local_df
 
-    def _identity(node: str) -> DataFrame:
-        # `*`'s zero-length solution for a constant endpoint — present
-        # even when the node is absent from the graph (spec: a
-        # zero-length path matches the term itself)
-        return local_df(
-            triples.sparkSession,
-            [(node, node, None)],
-            "src string, dst string, dst_dt string",
-        )
-
     if s_const is not None:
         reached = seeded_reachable(iri_e, [s_const])
         if reached is None:
@@ -1714,7 +1649,7 @@ def _seeded_path_df(
         )
         out = out.unionByName(lit_tails).distinct()
         if isinstance(p, PathStar):
-            out = out.unionByName(_identity(s_const)).distinct()
+            out = out.unionByName(_identity_df(triples, [s_const])).distinct()
         return out
     # object-constant IRI, variable subject: inverse BFS. A path to an
     # IRI endpoint is IRI-steps throughout (a literal ends a path), so
@@ -1729,8 +1664,21 @@ def _seeded_path_df(
         null_dt.alias("dst_dt"),
     )
     if isinstance(p, PathStar):
-        out = out.unionByName(_identity(o_const)).distinct()
+        out = out.unionByName(_identity_df(triples, [o_const])).distinct()
     return out
+
+
+def _identity_df(triples: DataFrame, nodes: list[str]) -> DataFrame:
+    """Zero-length path solutions (n, n, NULL) for constant endpoints
+    — present even when n is absent from the graph (spec: a
+    zero-length path matches the term itself)."""
+    from kgforge.session import local_df
+
+    return local_df(
+        triples.sparkSession,
+        [(n, n, None) for n in nodes],
+        "src string, dst string, dst_dt string",
+    )
 
 
 def _compile_path_pattern(
@@ -1740,86 +1688,34 @@ def _compile_path_pattern(
 ) -> DataFrame:
     """`s PATH o` — the path's solution pair set bound like an
     ordinary pattern. Object vars carry the final step's datatype as
-    their shadow (a path CAN end at a literal); subject-position
-    literals never match (RDF has no literal subjects). For a
-    top-level `*` or `?`, a constant endpoint contributes its
-    zero-length (X, X) solution even when X is absent from the graph
-    (spec: zero-length paths match the term itself) — and for `?` the
-    constant case skips the node-domain enumeration entirely;
-    constant endpoints absent from the graph under a star NESTED in a
-    longer path are out of subset (the nested star's identity ranges
-    over the graph node domain only)."""
+    their shadow (a path CAN end at a literal). For a top-level `*` or
+    `?`, a constant endpoint contributes its zero-length (X, X)
+    solution even when X is absent from the graph (spec: zero-length
+    paths match the term itself) — and for `?` the constant case skips
+    the node-domain enumeration entirely; constant endpoints absent
+    from the graph under a star NESTED in a longer path are out of
+    subset (the nested star's identity ranges over the graph node
+    domain only)."""
     s, p, o = pat
     df = None
+    consts = sorted({t.value for t in (s, o) if isinstance(t, Iri)})
     if isinstance(p, (PathPlus, PathStar)):
         # constant-endpoint pushdown (round-5 verdict #1): evaluate
         # seed-first when a const IRI endpoint bounds the closure
         df = _seeded_path_df(triples, p, s, o)
-    if df is None and isinstance(p, PathOpt) and (
-        isinstance(s, Iri) or isinstance(o, Iri)
-    ):
+    if df is None and isinstance(p, PathOpt) and consts:
         # zero-or-one with a constant IRI endpoint (round 6): the
         # zero-length solution is the constant itself — skip the
         # table-wide node-domain distinct entirely; the single-step
-        # side is one pushed-down scan, filtered by bind() below
-        from kgforge.session import local_df
-
-        consts = sorted({t.value for t in (s, o) if isinstance(t, Iri)})
-        identity = local_df(
-            triples.sparkSession,
-            [(v, v, None) for v in consts],
-            "src string, dst string, dst_dt string",
-        )
-        df = _path_df(triples, p.elt).unionByName(identity).distinct()
+        # side is one pushed-down scan, filtered by the binder
+        df = _path_df(triples, p.elt).unionByName(
+            _identity_df(triples, consts)
+        ).distinct()
     if df is None:
         df = _path_df(triples, p)
-        if isinstance(p, PathStar):
-            consts = sorted({t.value for t in (s, o) if isinstance(t, Iri)})
-            if consts:
-                from kgforge.session import local_df
-
-                extra = local_df(
-                    triples.sparkSession,
-                    [(v, v, None) for v in consts],
-                    "src string, dst string, dst_dt string",
-                )
-                df = df.unionByName(extra).distinct()
-    proj: dict[str, F.Column] = {}
-
-    def bind(term: Term, col: str, is_obj: bool) -> None:
-        nonlocal df
-        if isinstance(term, Var):
-            if term.name in proj:
-                df = df.filter(F.col(col) == proj[term.name])
-                if is_obj and term.name in iri_only:
-                    df = df.filter(F.col("dst_dt").isNull())
-                return
-            proj[term.name] = F.col(col)
-            if is_obj:
-                if term.name in iri_only:
-                    df = df.filter(F.col("dst_dt").isNull())
-                else:
-                    proj[_dt_shadow(term.name)] = F.col("dst_dt")
-        elif isinstance(term, Iri):
-            df = df.filter(F.col(col) == term.value)
-            if is_obj:
-                df = df.filter(F.col("dst_dt").isNull())
-        else:  # Lit — meaningful at the object end only
-            if is_obj:
-                df = df.filter(
-                    (F.col(col) == term.value)
-                    & (F.col("dst_dt") == (term.dt if term.dt else ""))
-                )
-            else:  # RDF has no literal subjects
-                df = df.filter(F.lit(False))
-
-    bind(s, "src", False)
-    bind(o, "dst", True)
-    out = df.select([expr.alias(name) for name, expr in proj.items()])
-    preds = _path_preds(p)
-    if preds and preds <= SCHEMA_PREDS:
-        out = broadcast(out)
-    return out
+        if isinstance(p, PathStar) and consts:
+            df = df.unionByName(_identity_df(triples, consts)).distinct()
+    return _bind_pattern(df, [(s, "src"), (o, "dst")], "dst_dt", iri_only)
 
 
 def _compile_pattern(
@@ -1830,11 +1726,30 @@ def _compile_pattern(
     s, p, o = pat
     if isinstance(p, PATH_TYPES):
         return _compile_path_pattern(triples, pat, iri_only)
-    df = triples.select(*TRIPLE_FIELDS)
-    proj: dict[str, F.Column] = {}
+    return _bind_pattern(
+        triples.select(*TRIPLE_FIELDS),
+        [(s, "subj"), (p, "pred"), (o, "obj")],
+        "obj_dt",
+        iri_only,
+    )
 
-    def bind(term: Term, col: str, is_obj: bool) -> None:
-        nonlocal df
+
+def _bind_pattern(
+    df: DataFrame, slots: list[tuple[Term, str]], dt_col: str,
+    iri_only: set[str],
+) -> DataFrame:
+    """Bind a pattern's terms against the value columns of its match
+    relation — (subj, pred, obj) rows or (src, dst) path pairs; the
+    LAST slot is the object end, whose datatype is `dt_col`. Constants
+    become filters (pushed to the scan), a var repeated within the
+    pattern becomes an equality filter, and each var projects to its
+    name, an object var with its `__dt_` shadow unless it is IRI-only
+    in the group. A literal matches only at the object end: RDF has
+    no literal subjects."""
+    proj: dict[str, F.Column] = {}
+    obj_col = slots[-1][1]
+    for term, col in slots:
+        is_obj = col == obj_col
         if isinstance(term, Var):
             if term.name in proj:  # repeated var inside one pattern
                 df = df.filter(F.col(col) == proj[term.name])
@@ -1842,30 +1757,32 @@ def _compile_pattern(
                 # IRI-only constraint (the var was just bound in a
                 # subject/predicate slot of this very pattern)
                 if is_obj and term.name in iri_only:
-                    df = df.filter(F.col("obj_dt").isNull())
-                return
+                    df = df.filter(F.col(dt_col).isNull())
+                continue
             proj[term.name] = F.col(col)
             if is_obj:
                 if term.name in iri_only:
-                    df = df.filter(F.col("obj_dt").isNull())
+                    df = df.filter(F.col(dt_col).isNull())
                 else:
-                    proj[_dt_shadow(term.name)] = F.col("obj_dt")
+                    proj[_dt_shadow(term.name)] = F.col(dt_col)
         elif isinstance(term, Iri):
             df = df.filter(F.col(col) == term.value)
             if is_obj:
-                df = df.filter(F.col("obj_dt").isNull())
-        else:  # Lit — only meaningful in object position
+                df = df.filter(F.col(dt_col).isNull())
+        elif is_obj:  # Lit
             df = df.filter(F.col(col) == term.value)
-            if is_obj:
-                df = df.filter(F.col("obj_dt") == (term.dt if term.dt else ""))
+            df = df.filter(F.col(dt_col) == (term.dt if term.dt else ""))
+        else:
+            df = df.filter(F.lit(False))
+    return df.select([expr.alias(name) for name, expr in proj.items()])
 
-    bind(s, "subj", False)
-    bind(p, "pred", False)
-    bind(o, "obj", True)
-    out = df.select([expr.alias(name) for name, expr in proj.items()])
-    if isinstance(p, Iri) and p.value in SCHEMA_PREDS:
-        out = broadcast(out)
-    return out
+
+def _schema_pattern(p) -> bool:
+    """A pattern whose predicate — or every predicate its path touches
+    — is a schema predicate matches a grammar-sized triple set, safe to
+    broadcast where it meets a join."""
+    preds = set() if isinstance(p, Var) else _path_preds(p)
+    return bool(preds) and preds <= SCHEMA_PREDS
 
 
 def _compat_cond(
@@ -1875,12 +1792,13 @@ def _compat_cond(
     """Join condition between two binding sets (_l, _r) under SPARQL
     solution COMPATIBILITY (round 6): a var that may be UNBOUND (NULL)
     on either side matches anything when unbound — `l IS NULL OR r IS
-    NULL OR l = r (term-equal incl. datatype)`. Certainly-bound vars
-    keep the fast null-safe equality of _boundary_cond, so the common
-    all-bound join still plans as a hash join on every key; only the
-    genuinely maybe-unbound vars fall out of the equi-key set (Catalyst
-    keeps the equality keys for the hash join and evaluates the
-    OR-NULL residual as a post-join condition)."""
+    NULL OR l = r (term-equal incl. datatype)`. A side that bound the
+    var IRI-only (no shadow) forces the other side's shadow NULL —
+    only IRI terms match. Certainly-bound vars keep fast null-safe
+    equality, so the common all-bound join still plans as a hash join
+    on every key; only the genuinely maybe-unbound vars fall out of
+    the equi-key set (Catalyst keeps the equality keys for the hash
+    join and evaluates the OR-NULL residual as a post-join condition)."""
     cond = F.lit(True)
     for v in shared:
         l, r = F.col(f"_l.{v}"), F.col(f"_r.{v}")
@@ -1976,28 +1894,6 @@ def _compat_join(
     )
 
 
-def _boundary_cond(
-    l_cols: list[str], r_cols: list[str], shared: list[str]
-) -> F.Column:
-    """Null-safe, datatype-reconciled match condition between an
-    accumulated binding set (_l) and a sub-group's (_r): shared vars
-    compare null-safely, dt shadows join when both sides carry them,
-    and a side that bound the var IRI-only (no shadow) forces the
-    other side's shadow NULL — only IRI terms match."""
-    cond = F.lit(True)
-    for v in shared:
-        cond = cond & F.col(f"_l.{v}").eqNullSafe(F.col(f"_r.{v}"))
-        sh = _dt_shadow(v)
-        l_sh, r_sh = sh in l_cols, sh in r_cols
-        if l_sh and r_sh:  # both sides carry the term's datatype
-            cond = cond & F.col(f"_l.{sh}").eqNullSafe(F.col(f"_r.{sh}"))
-        elif l_sh:  # sub-group bound v as an IRI — only IRI
-            cond = cond & F.col(f"_l.{sh}").isNull()  # terms match
-        elif r_sh:  # outer side bound v as an IRI
-            cond = cond & F.col(f"_r.{sh}").isNull()
-    return cond
-
-
 def _compile_union(
     triples: DataFrame, alts: list[Group]
 ) -> tuple[DataFrame, set[str]]:
@@ -2073,7 +1969,7 @@ _BINDING_MEMBERS = frozenset(("pattern", "union", "values", "bind", "subquery"))
 
 
 def _compile_group_ex(
-    triples: DataFrame, g: Group
+    triples: DataFrame, g: Group, side: bool = False
 ) -> tuple[DataFrame, set[str]]:
     """Compile a group graph pattern IN WRITTEN MEMBER ORDER — the
     spec's sequential TranslateGroupGraphPattern: each member Joins /
@@ -2086,8 +1982,15 @@ def _compile_group_ex(
     may leave NULL — drives the compatibility-join conditions: unbound
     matches anything and the merged solution takes the bound side.
     Certainly-bound vars keep null-safe equality, so the common
-    all-bound query still plans hash joins on every key."""
-    if not any(k in _BINDING_MEMBERS for k, _ in g.members):
+    all-bound query still plans hash joins on every key.
+
+    Schema patterns are broadcast only where they meet a join: another
+    binding member of this group, or — `side` — the group's solutions
+    are themselves a join operand (an OPTIONAL / MINUS / EXISTS side,
+    or a subquery joined into its group). A hint on a lone pattern of
+    a top-level group or a UNION branch would never attach."""
+    n_binding = sum(k in _BINDING_MEMBERS for k, _ in g.members)
+    if not n_binding:
         raise ValueError("empty group graph pattern")
     from kgforge.session import local_df
 
@@ -2103,8 +2006,11 @@ def _compile_group_ex(
         return local_df(spark, [(True,)], "__dt_mu0 boolean")
 
     for kind, i in g.members:
+        joined = side or n_binding > 1 or acc is not None
         if kind == "pattern":
             pdf = _compile_pattern(triples, g.patterns[i], iri_only)
+            if joined and _schema_pattern(g.patterns[i][1]):
+                pdf = broadcast(pdf)
             acc, maybe = _compat_join(acc, pdf, maybe, set())
         elif kind == "union":
             udf, umaybe = _compile_union(triples, g.unions[i])
@@ -2120,7 +2026,7 @@ def _compile_group_ex(
             # so the restriction join never shuffles the instance side
             acc, maybe = _compat_join(acc, broadcast(vdf), maybe, vmaybe)
         elif kind == "subquery":
-            sdf, smaybe = _compile_subquery(triples, g.subqueries[i])
+            sdf, smaybe = _compile_subquery(triples, g.subqueries[i], joined)
             acc, maybe = _compat_join(acc, sdf, maybe, smaybe)
         elif kind == "bind":
             var, ex = g.binds[i]
@@ -2139,7 +2045,7 @@ def _compile_group_ex(
             # optional side computes its OWN iri-only set (an
             # occurrence inside OPTIONAL must not restrict the outer
             # group's bindings)
-            odf, omaybe = _compile_group_ex(triples, g.optionals[i])
+            odf, omaybe = _compile_group_ex(triples, g.optionals[i], True)
             l_vars = {c for c in acc.columns if not c.startswith("__dt_")}
             r_vars = {c for c in odf.columns if not c.startswith("__dt_")}
             shared = sorted(l_vars & r_vars)
@@ -2159,7 +2065,7 @@ def _compile_group_ex(
                 # Minus(μ0, A): μ0's domain is empty — no overlap, μ0
                 # survives; nothing to do until a binding member lands
                 continue
-            mdf, mmaybe = _compile_group_ex(triples, g.minuses[i])
+            mdf, mmaybe = _compile_group_ex(triples, g.minuses[i], True)
             acc = _minus_join(acc, mdf, g.minuses[i], maybe, mmaybe)
         else:  # pragma: no cover — parser emits only the kinds above
             raise ValueError(f"unknown group member kind {kind!r}")
@@ -2181,32 +2087,38 @@ def _compile_group_ex(
         # (the compat condition's NULL-matches-anything arm); bound
         # vars substitute term-exactly. All-certain correlation keeps
         # the pure null-safe equi-join plan.
-        edf, emaybe = _compile_group_ex(triples, eg)
-        shared = sorted(
-            c
-            for c in set(acc.columns) & set(edf.columns)
-            if not c.startswith("__dt_")
-        )
-        if shared:
-            keep = shared + [
-                _dt_shadow(v) for v in shared if _dt_shadow(v) in edf.columns
-            ]
-            if any(v in maybe or v in emaybe for v in shared):
-                cond = _compat_cond(
-                    acc.columns, edf.columns, shared, maybe, emaybe
-                )
-            else:
-                cond = _boundary_cond(acc.columns, edf.columns, shared)
-            side = broadcast_if_schema_only(eg, edf.select(keep))
-        else:
-            cond = F.lit(True)
-            side = edf.limit(1)  # pure existence probe — one row suffices
+        edf, emaybe = _compile_group_ex(triples, eg, True)
+        _shared, rhs, cond = _correlate(acc, edf, eg, maybe, emaybe)
         acc = acc.alias("_l").join(
-            side.alias("_r"), cond, "left_anti" if negated else "left_semi"
+            rhs.alias("_r"), cond, "left_anti" if negated else "left_semi"
         )
     for f_expr in g.filters:
         acc = acc.filter(_compile_expr(f_expr, set(acc.columns)))
     return acc, maybe
+
+
+def _correlate(
+    acc: DataFrame, sdf: DataFrame, sg: Group,
+    l_maybe: set[str], r_maybe: set[str],
+) -> tuple[list[str], DataFrame, F.Column]:
+    """The correlation step shared by MINUS and FILTER [NOT] EXISTS:
+    (shared vars, the sub-group side cut to the shared vars and their
+    shadows — broadcast when schema-only — and the compatibility
+    condition). With no shared var the condition is TRUE and the side
+    a one-row existence probe."""
+    shared = sorted(
+        c
+        for c in set(acc.columns) & set(sdf.columns)
+        if not c.startswith("__dt_")
+    )
+    if not shared:
+        return shared, sdf.limit(1), F.lit(True)
+    keep = shared + [
+        _dt_shadow(v) for v in shared if _dt_shadow(v) in sdf.columns
+    ]
+    side = broadcast_if_schema_only(sg, sdf.select(keep))
+    cond = _compat_cond(acc.columns, sdf.columns, shared, l_maybe, r_maybe)
+    return shared, side, cond
 
 
 def _minus_join(
@@ -2220,31 +2132,18 @@ def _minus_join(
     side), the spec's definition applies exactly: remove μ1 when some
     μ2 is COMPATIBLE (unbound matches anything) AND the domains
     overlap on at least one var bound in both (dom-overlap guard —
-    without it a μ2 sharing no bound var would wipe the row)."""
-    shared = sorted(
-        c
-        for c in set(acc.columns) & set(mdf.columns)
-        if not c.startswith("__dt_")
-    )
+    without it a μ2 sharing no bound var would wipe the row; a var
+    certainly bound on both sides overlaps by itself)."""
+    shared, side, cond = _correlate(acc, mdf, mg, l_maybe, r_maybe)
     if not shared:  # SPARQL MINUS with disjoint domains is a no-op
         return acc
-    keep = shared + [
-        _dt_shadow(v) for v in shared if _dt_shadow(v) in mdf.columns
-    ]
-    side = broadcast_if_schema_only(mg, mdf.select(keep))
-    if any(v in l_maybe or v in r_maybe for v in shared):
-        compat = _compat_cond(acc.columns, mdf.columns, shared, l_maybe, r_maybe)
+    if all(v in l_maybe or v in r_maybe for v in shared):
         overlap = F.lit(False)
         for v in shared:
-            if v not in l_maybe and v not in r_maybe:
-                overlap = F.lit(True)
-                break
             overlap = overlap | (
                 F.col(f"_l.{v}").isNotNull() & F.col(f"_r.{v}").isNotNull()
             )
-        cond = compat & overlap
-    else:
-        cond = _boundary_cond(acc.columns, mdf.columns, shared)
+        cond = cond & overlap
     return acc.alias("_l").join(side.alias("_r"), cond, "left_anti")
 
 
@@ -2545,7 +2444,7 @@ def _apply_valexpr(df: DataFrame, var: str, ex) -> DataFrame:
 
 
 def _compile_subquery(
-    triples: DataFrame, sq: "Query"
+    triples: DataFrame, sq: "Query", side: bool = False
 ) -> tuple[DataFrame, set[str]]:
     """A `{ SELECT ... }` subquery member: evaluated independently
     (bottom-up, per the spec — the enclosing group's bindings do not
@@ -2556,8 +2455,9 @@ def _compile_subquery(
     GROUP_CONCAT → plain literal); MIN/MAX/SAMPLE preserve the winning
     member's own datatype via a struct-agg over (value, dt). Returns
     (bindings, maybe-unbound vars) — AVG/MIN/MAX/SAMPLE aliases and
-    inner maybe-unbound projections can be NULL."""
-    bound, inner_maybe = _compile_group_ex(triples, sq.group)
+    inner maybe-unbound projections can be NULL. `side`: the projection
+    meets a join in the enclosing group (see _compile_group_ex)."""
+    bound, inner_maybe = _compile_group_ex(triples, sq.group, side)
     out_vars = _subquery_vars(sq)
     if sq.aggs or sq.group_by is not None:
         df = _select_aggregate(sq, bound, keep_shadows=True)
@@ -2579,20 +2479,7 @@ def _compile_subquery(
     out = bound.select(*out_vars, *shadows)
     if sq.distinct:
         out = out.distinct()  # shadows participate: term-distinct
-    if sq.order:
-        miss = [v for v, _ in sq.order if v not in out.columns]
-        if miss:
-            raise ValueError(
-                f"subquery ORDER BY on unavailable variable(s) {miss}"
-            )
-        out = out.orderBy(
-            *[F.col(v).desc() if d else F.col(v).asc() for v, d in sq.order]
-        )
-    if sq.offset:
-        out = out.offset(sq.offset)
-    if sq.limit is not None:
-        out = out.limit(sq.limit)
-    return out, {v for v in out_vars if v in inner_maybe}
+    return _modify(out, sq), {v for v in out_vars if v in inner_maybe}
 
 
 def _select_aggregate(
@@ -2725,19 +2612,34 @@ def _select_aggregate(
         out_cols = out_cols + [
             _dt_shadow(c) for c in out_cols if _dt_shadow(c) in grouped.columns
         ]
+    return _modify(grouped, q, out_cols)
+
+
+def _modify(
+    df: DataFrame, q: Query, project: list[str] | None = None
+) -> DataFrame:
+    """The solution modifiers: ORDER BY, then the optional projection
+    (a projection preserves sort order, so keys need not be
+    projected), then OFFSET and LIMIT. With an ORDER BY a LIMIT plans
+    as TakeOrderedAndProject — no global sort materialization."""
     if q.order:
-        missing = [v for v, _ in q.order if v not in grouped.columns]
+        missing = [v for v, _ in q.order if v not in df.columns]
         if missing:
-            raise ValueError(f"ORDER BY on unavailable variable(s) {missing}")
-        grouped = grouped.orderBy(
+            raise ValueError(
+                f"ORDER BY on unavailable variable(s) {missing}"
+                + (" (DISTINCT restricts sort keys to projected vars)"
+                   if q.distinct else "")
+            )
+        df = df.orderBy(
             *[F.col(v).desc() if d else F.col(v).asc() for v, d in q.order]
         )
-    out = grouped.select(*out_cols)
+    if project is not None:
+        df = df.select(*project)
     if q.offset:
-        out = out.offset(q.offset)
+        df = df.offset(q.offset)
     if q.limit is not None:
-        out = out.limit(q.limit)
-    return out
+        df = df.limit(q.limit)
+    return df
 
 
 # --------------------------------------------------------------------
@@ -2795,39 +2697,17 @@ def sparql(triples: DataFrame, query: str) -> DataFrame:
         missing = [v for v in out_vars if v not in bound.columns]
         if missing:
             raise ValueError(f"SELECT of unbound variable(s) {missing}")
-        def _order(df: DataFrame) -> DataFrame:
-            missing = [v for v, _ in q.order if v not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"ORDER BY on unavailable variable(s) {missing}"
-                    + (" (DISTINCT restricts sort keys to projected vars)"
-                       if q.distinct else "")
-                )
-            return df.orderBy(
-                *[F.col(v).desc() if d else F.col(v).asc() for v, d in q.order]
-            )
-
-        if q.distinct:
-            # spec: DISTINCT applies to the projected SOLUTIONS — terms,
-            # not lexical forms: the dt shadows participate in the
-            # distinct then drop ("5" plain vs "5"^^xsd:integer stay
-            # two rows). ORDER BY may then only use projected variables.
-            shadows = [
-                _dt_shadow(v) for v in out_vars if _dt_shadow(v) in bound.columns
-            ]
-            out = bound.select(*out_vars, *shadows).distinct().select(*out_vars)
-            if q.order:
-                out = _order(out)
-        else:
-            out = _order(bound) if q.order else bound
-            out = out.select(*out_vars)  # projection preserves sort order
-        if q.offset:
-            out = out.offset(q.offset)
-        if q.limit is not None:
-            # with an ORDER BY this plans as TakeOrderedAndProject —
-            # no global sort materialization, same shape as top-k
-            out = out.limit(q.limit)
-        return out
+        if not q.distinct:
+            return _modify(bound, q, out_vars)
+        # spec: DISTINCT applies to the projected SOLUTIONS — terms,
+        # not lexical forms: the dt shadows participate in the
+        # distinct then drop ("5" plain vs "5"^^xsd:integer stay two
+        # rows). ORDER BY may then only use projected variables.
+        shadows = [
+            _dt_shadow(v) for v in out_vars if _dt_shadow(v) in bound.columns
+        ]
+        out = bound.select(*out_vars, *shadows).distinct().select(*out_vars)
+        return _modify(out, q)
 
     # CONSTRUCT: instantiate the template per binding row, union, dedup
     assert q.template, "CONSTRUCT requires a template"
@@ -2838,17 +2718,7 @@ def sparql(triples: DataFrame, query: str) -> DataFrame:
             )
     # solution modifiers act on the binding sequence BEFORE template
     # instantiation (the instantiated graph is still a set)
-    if q.order:
-        missing = [v for v, _ in q.order if v not in bound.columns]
-        if missing:
-            raise ValueError(f"ORDER BY on unavailable variable(s) {missing}")
-        bound = bound.orderBy(
-            *[F.col(v).desc() if d else F.col(v).asc() for v, d in q.order]
-        )
-    if q.offset:
-        bound = bound.offset(q.offset)
-    if q.limit is not None:
-        bound = bound.limit(q.limit)
+    bound = _modify(bound, q)
     null_dt = F.lit(None).cast("string")
     parts: list[DataFrame] = []
     for s, p, o in q.template:

@@ -104,19 +104,6 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_k: int = 5) -> Column:
-    """MinHash signature as array<string>: element i is
-    min(md5(i || shingle)) over the document's shingles. md5-seeded so
-    the same signature is computable in any engine."""
-    sh = F.array_distinct(word_shingles(text, shingle_k))
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, lambda s, i=i: F.md5(F.concat(F.lit(f"seed{i}:"), s))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures_agg(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -127,11 +127,6 @@ def _zipf_cum(n: int, a: float = 1.3) -> list[float]:
     return out
 
 
-def _zipf_pick(rng: random.Random, items: list, a: float = 1.3):
-    """Zipf-ish pick: rank r with weight 1/r^a (head-entity skew)."""
-    return rng.choices(items, cum_weights=_zipf_cum(len(items), a), k=1)[0]
-
-
 _HTML_HEAD = (
     "<html><head><title>{title}</title>"
     "<style>body {{ font: 14px sans-serif; }}</style>"

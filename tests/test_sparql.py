@@ -214,6 +214,23 @@ def test_repeated_var_within_one_pattern(spark):
     assert {r.x for r in got.collect()} == {"a"}
 
 
+def test_literal_subject_matches_nothing(spark):
+    """RDF has no literal subjects: a literal in subject position never
+    matches, even when its lexical form equals an IRI subject — the
+    same answer from a triple pattern, an ASK and a path pattern."""
+    rows = [
+        ("http://ex/a", "http://ex/p", "http://ex/b", None),
+        ("http://ex/a", "http://ex/q", "x", ""),
+    ]
+    df = _triples(spark, rows)
+    got = sparql(df, 'SELECT ?p ?o WHERE { "http://ex/a" ?p ?o }')
+    assert got.collect() == []
+    ask = sparql(df, 'ASK { "http://ex/a" <http://ex/p> <http://ex/b> }')
+    assert ask.collect()[0].ask is False
+    path = sparql(df, 'SELECT ?o WHERE { "http://ex/a" <http://ex/p>+ ?o }')
+    assert path.collect() == []
+
+
 def test_pname_trailing_dot_is_triple_terminator(spark):
     """`?v a ns1:Variant.` (no space before the dot) — PN_LOCAL may
     contain dots but not end with one; the dot terminates the triple."""
