@@ -14,7 +14,9 @@ Fixture: a corpus where ONE canonical entity appears as subject on
 Analysis: per-task records/time skew (bench.task_skew) for the
 rewrite-join, full-row-dedup, and bucketed-write stages. Pass = every
 stage's max/median per-task records within ~2× in the salted run,
-while the unsalted write shows the hub straggler.
+while the unsalted write shows the hub straggler. The closing summary
+(also `evidence` in skew_results.json) gives each variant's data-file
+count, its bucketed-write stage's max/median records and its audit.
 
     python bench/skew_demo.py --pages 4000000 --cores 32 \
         --workdir /tmp/kgforge_skew
@@ -124,6 +126,15 @@ def _only_eventlog(d: str) -> str:
     return os.path.join(d, files[0])
 
 
+def _data_files(table: str) -> int:
+    """Parquet data files under a bucketed table's subj_bucket= dirs."""
+    return sum(
+        f.startswith("part-")
+        for d in os.listdir(table) if d.startswith("subj_bucket=")
+        for f in os.listdir(os.path.join(table, d))
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=4_000_000)
@@ -163,20 +174,31 @@ def main() -> None:
     from task_skew import stage_skew
 
     results = {"pages": args.pages, "hub_frac": args.hub_frac, "cores": args.cores}
+    evidence = {}
     for name, salt in (("unsalted", "None"), ("salted", "32")):
         elog = f"{args.workdir}/elog_{name}"
         shutil.rmtree(elog, ignore_errors=True)
         os.makedirs(elog, exist_ok=True)
-        _run(
+        out = _run(
             _PHASE_B.format(
                 repo=REPO, cores=args.cores, work=args.workdir,
                 elog="file://" + elog, name=name, salt=salt,
             ),
             name,
         )
-        stages = [
-            s for s in stage_skew(_only_eventlog(elog)) if s["n_tasks"] >= 8
-        ]
+        all_stages = stage_skew(_only_eventlog(elog))
+        # the bucketed write is the stage that writes the table's rows
+        # (the ledger commit writes a handful on one task)
+        write = max(all_stages, key=lambda s: s["output_records"])
+        evidence[name] = {
+            "data_files": _data_files(f"{args.workdir}/triples_{name}"),
+            "write_stage_id": write["stage_id"],
+            "write_records_median": write["records_median"],
+            "write_records_max": write["records_max"],
+            "write_records_ratio": write["records_ratio"],
+            "audit": "AUDIT True" in out,
+        }
+        stages = [s for s in all_stages if s["n_tasks"] >= 8]
         results[name] = stages
         print(f"\n== {name}: per-task skew (stages with ≥8 tasks) ==")
         for s in stages:
@@ -187,6 +209,15 @@ def main() -> None:
                 f"ms med/max={s['ms_median']:.0f}/{s['ms_max']} "
                 f"(ratio {s['ms_ratio']}) {s['name'][:60]}"
             )
+
+    results["evidence"] = evidence
+    print("\n== bucketed write: data files, write-stage records max/median ==")
+    for name, e in evidence.items():
+        print(
+            f"  {name:>8}: files={e['data_files']} "
+            f"rec med/max={e['write_records_median']:.0f}/{e['write_records_max']} "
+            f"(ratio {e['write_records_ratio']}) AUDIT {e['audit']}"
+        )
 
     with open(f"{args.workdir}/skew_results.json", "w") as f:
         json.dump(results, f, indent=1)

@@ -45,19 +45,20 @@ def stage_skew(path: str) -> list[dict]:
             si = ev["Stage Info"]
             st = stages.setdefault(
                 (si["Stage ID"], si["Stage Attempt ID"]),
-                {"records": [], "bytes": [], "ms": [], "wrecords": []},
+                {"records": [], "bytes": [], "ms": [], "wrecords": [], "orecords": []},
             )
             st["name"] = si["Stage Name"].split("\n")[0][:80]
             st["n_tasks"] = si.get("Number of Tasks")
         elif kind == "SparkListenerTaskEnd":
             st = stages.setdefault(
                 (ev["Stage ID"], ev["Stage Attempt ID"]),
-                {"records": [], "bytes": [], "ms": [], "wrecords": []},
+                {"records": [], "bytes": [], "ms": [], "wrecords": [], "orecords": []},
             )
             tm = ev.get("Task Metrics") or {}
             inp = tm.get("Input Metrics") or {}
             shr = tm.get("Shuffle Read Metrics") or {}
             shw = tm.get("Shuffle Write Metrics") or {}
+            outm = tm.get("Output Metrics") or {}
             recs = (inp.get("Records Read") or 0) + (
                 shr.get("Total Records Read") or 0
             )
@@ -70,6 +71,7 @@ def stage_skew(path: str) -> list[dict]:
             ti = ev.get("Task Info") or {}
             st["records"].append(recs)
             st["wrecords"].append(wrecs)
+            st["orecords"].append(outm.get("Records Written") or 0)
             st["bytes"].append(byts)
             st["ms"].append(
                 (ti.get("Finish Time") or 0) - (ti.get("Launch Time") or 0)
@@ -99,6 +101,8 @@ def stage_skew(path: str) -> list[dict]:
                 "wrecords_median": med_w,
                 "wrecords_max": max(wrecs),
                 "wrecords_ratio": round(max(wrecs) / med_w, 2) if med_w else None,
+                # records written to the output table (a file-writing stage)
+                "output_records": sum(st["orecords"]),
                 "bytes_median": med_b,
                 "bytes_max": max(st["bytes"]),
                 "ms_median": med_ms,

@@ -37,11 +37,20 @@ def _bucketed_repartition(
     head-entity skew guard (the north rule's "salted repartitioning"):
     a mega-hub subject puts ~all its rows in ONE subj_bucket, so
     hashing on the bucket alone makes one write task the straggler.
-    Salting by a hash of the non-subject columns splits a hot bucket
-    across up to `salt_partitions` tasks; partition routing still sends
-    every row to the right bucket (a bucket simply receives files from
-    several tasks), and within-file sort order is preserved so subj
-    min/max row-group pruning keeps working."""
+
+    Unsalted, rows are hash-partitioned on subj_bucket: one task, one
+    file per bucket. Salted, rows are RANGE-partitioned on
+    (subj_bucket, salt), where the salt is a hash of the non-subject
+    columns in [0, salt_partitions). Range bounds come from one small
+    sampling job, so a cold bucket lies inside one range or across one
+    boundary (at most 2 files; at most 2·n_buckets − 1 files per write
+    before maxRecordsPerFile splits), while a hot bucket spans several
+    ranges, split by its sampled row count rather than by hash
+    collisions. Hash-partitioning the salted key instead would scatter
+    every bucket over every task: n_buckets files per bucket, all of
+    which each later scan opens. Routing still sends every row to its
+    own bucket dir, and the caller's within-partition sort keeps subj
+    min/max row-group pruning working."""
     from pyspark.sql import functions as F
 
     if salt_partitions and salt_partitions > 1:
@@ -54,11 +63,13 @@ def _bucketed_repartition(
             F.lit(int(salt_partitions)),
         )
         keys = [F.col("subj_bucket"), salt.alias("salt")]
+        partition = df.repartitionByRange
     else:
         keys = [F.col("subj_bucket")]
+        partition = df.repartition
     if n_buckets is not None:
-        return df.repartition(n_buckets, *keys)
-    return df.repartition(*keys)
+        return partition(n_buckets, *keys)
+    return partition(*keys)
 
 
 class TripleSink(ABC):

@@ -120,9 +120,14 @@ def materialize_triples(
 
     `salt_partitions` spreads a hot subj_bucket (head-entity skew:
     one mega-hub subject ≈ one bucket ≈ one straggler write task)
-    across up to that many tasks by co-hashing a salt derived from the
-    non-subject columns. Layout, resume and audit semantics are
-    unchanged — only task balance differs."""
+    across several write tasks: rows are range-partitioned on
+    (subj_bucket, salt), the salt a hash of the non-subject columns in
+    [0, salt_partitions). A cold bucket lands in at most 2 files, a
+    hot bucket is split by its row count, and the range bounds cost
+    one small sampling job per write (see
+    kgforge.io.catalog._bucketed_repartition). Layout, resume and
+    audit semantics are unchanged — only task balance and file count
+    differ."""
     from kgforge.io.catalog import resolve_sink
 
     spark = triples.sparkSession

@@ -61,9 +61,11 @@ class ScaleProfile:
     #: entity-linking banded-bucket cap (candidate_pairs_minhash);
     #: linking always guards — this only tunes the cap.
     linking_max_bucket: int = 64
-    #: bucketed triple write: split a hot subj_bucket across this many
-    #: tasks (head-entity skew; kgforge.io.catalog.ParquetLedgerSink).
-    #: None = unsalted.
+    #: bucketed triple write: salt a hot subj_bucket this many ways and
+    #: range-partition on (subj_bucket, salt), so the hot bucket splits
+    #: across tasks by row count while a cold bucket stays in ≤ 2 files;
+    #: one sampling job per write (head-entity skew;
+    #: kgforge.io.catalog._bucketed_repartition). None = unsalted.
     salt_partitions: int | None = None
 
     def __post_init__(self) -> None:

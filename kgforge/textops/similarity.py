@@ -236,7 +236,11 @@ def embedding_near_dups(
             return df.sparkSession.createDataFrame(
                 [], "a long, b long, score double"
             )
-    base = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
+    # a NULL vector has no cosine, so it never pairs: drop it before
+    # the collapse and the bucket UDF (which cannot stack it)
+    base = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+    )
     groups, mem = _collapse_exact(base, "id", "v", "v")
 
     # one vectorized bucket pass for all tables, then ONE pair
@@ -404,6 +408,7 @@ def build_ann_index(
 
     from kgforge.io.fs import write_text
 
+    df = df.filter(F.col(vec_col).isNotNull())  # a NULL vector is not indexed
     dim = vector_dim(df, vec_col)
     if dim is None:
         raise ValueError("cannot index an empty vector table")
@@ -553,7 +558,12 @@ def train_ivf_centroids(
     (limit() pushdown, no full scan materialized)."""
     import numpy as np
 
-    rows = df.select(_as_double(F.col(vec_col)).alias("v")).limit(sample).collect()
+    rows = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(_as_double(F.col(vec_col)).alias("v"))
+        .limit(sample)
+        .collect()
+    )
     x = np.asarray([r.v for r in rows], dtype=np.float64)
     if len(x) < k:
         raise ValueError(f"sample of {len(x)} vectors cannot seed k={k} centroids")
@@ -634,6 +644,7 @@ def build_ivf_index(
 
     from kgforge.io.fs import write_text
 
+    df = df.filter(F.col(vec_col).isNotNull())  # a NULL vector is not indexed
     dim = vector_dim(df, vec_col)
     if dim is None:
         raise ValueError("cannot index an empty vector table")

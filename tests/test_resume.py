@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 import pytest
@@ -169,3 +170,54 @@ def test_salted_write_same_table_more_hub_files(spark, tmp_path):
         triples, salted, n_buckets=16, max_records_per_file=10**7, salt_partitions=8
     )
     assert m2["buckets_written"] == 0 and m2["buckets_skipped"] == 16
+
+
+def _data_files(base):
+    return [
+        os.path.join(d, f)
+        for d in os.listdir(base) if d.startswith("subj_bucket=")
+        for f in os.listdir(os.path.join(base, d)) if f.startswith("part-")
+    ]
+
+
+def test_salted_write_bounds_file_count(spark, tmp_path):
+    """Range partitioning on (subj_bucket, salt) keeps each cold bucket
+    in at most two write tasks, so a salted write of uniform triples
+    makes at most 2·n_buckets − 1 files (hashing the salted key over
+    n_buckets tasks puts every bucket in every task: ~n_buckets² files),
+    with the same rows and a passing audit."""
+    triples = spark.range(4000).select(
+        F.concat(F.lit("urn:s"), (F.col("id") % 400).cast("string")).alias("subj"),
+        F.lit("urn:p").alias("pred"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("obj"),
+        F.lit(None).cast("string").alias("obj_dt"),
+    )
+    plain, salted = str(tmp_path / "plain"), str(tmp_path / "salted")
+    materialize_triples(triples, plain, n_buckets=8)
+    m = materialize_triples(triples, salted, n_buckets=8, salt_partitions=32)
+    assert m["buckets_written"] == 8 and m["rows_written"] == 4000
+    assert verify_lineage(spark, salted)
+    assert len(_data_files(salted)) <= 2 * 8 - 1
+
+    a = sorted(tuple(r) for r in spark.read.parquet(plain).collect())
+    b = sorted(tuple(r) for r in spark.read.parquet(salted).collect())
+    assert a == b
+
+
+@pytest.mark.parametrize("salt", [None, 32])
+def test_null_subject_write_fails_clean(spark, tmp_path, salt):
+    """A NULL subj would land in __HIVE_DEFAULT_PARTITION__ and wedge
+    every later resume: the write raises (from the range sampling job
+    when salted, from the write job otherwise) and leaves no bucket
+    dir and no ledger behind."""
+    null_row = spark.createDataFrame(
+        [(None, "urn:p", "v", None)],
+        "subj string, pred string, obj string, obj_dt string",
+    )
+    path = str(tmp_path / "nulls")
+    with pytest.raises(SparkRuntimeException, match="NULL subj is not writable"):
+        materialize_triples(
+            _triples(spark).unionByName(null_row), path, n_buckets=8, salt_partitions=salt
+        )
+    left = os.listdir(path) if os.path.exists(path) else []
+    assert not [d for d in left if d.startswith("subj_bucket=") or d == "_lineage"]

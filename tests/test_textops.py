@@ -789,3 +789,32 @@ def test_vector_dim_skips_null_first_row(spark, tmp_path):
         build_ann_index(nulls, str(tmp_path / "lsh"))
     with pytest.raises(ValueError, match="empty vector table"):
         build_ivf_index(nulls, str(tmp_path / "ivf"))
+
+
+def test_null_vectors_are_skipped(spark, tmp_path):
+    """A NULL vector has no cosine: it never pairs and is not indexed.
+    Near-dups with NULL rows equal near-dups without them, and both
+    index builders return the same index as on the NULL-free table."""
+    from kgforge.textops.similarity import build_ann_index, build_ivf_index
+
+    schema = "vec_id long, embedding array<double>"
+    clean = _embeddings(spark)
+    rows = [tuple(r) for r in clean.collect()]
+    nulls = spark.createDataFrame(rows + [(7000, None), (7001, None)], schema)
+
+    def pairs(df):
+        return sorted(tuple(r) for r in embedding_near_dups(df, threshold=0.95).collect())
+
+    assert pairs(nulls) == pairs(clean)
+    assert (3, 9000) in {(a, b) for a, b, _ in pairs(nulls)}
+
+    def index_rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).drop("v").collect())
+
+    build_ann_index(clean, str(tmp_path / "lsh_clean"))
+    build_ann_index(nulls, str(tmp_path / "lsh_nulls"))
+    assert index_rows(str(tmp_path / "lsh_nulls")) == index_rows(str(tmp_path / "lsh_clean"))
+
+    cents = build_ivf_index(clean, str(tmp_path / "ivf_clean"), k=8, seed=42)
+    assert build_ivf_index(nulls, str(tmp_path / "ivf_nulls"), k=8, seed=42) == cents
+    assert index_rows(str(tmp_path / "ivf_nulls")) == index_rows(str(tmp_path / "ivf_clean"))
