@@ -79,7 +79,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="kgforge-cli", master=args.master)
 
     if args.sparql:
-        from kgforge.sparql import TRIPLE_FIELDS, parse, sparql
+        from kgforge.sparql import parse, sparql
+        from kgforge.triples.emit import TRIPLE_FIELDS
 
         with open(args.sparql, encoding="utf-8") as f:
             qtext = f.read()

@@ -19,10 +19,21 @@ canonical (sorted) so diffs are reproducible.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-TRIPLE_KEY = ["subj", "pred", "obj", "obj_dt"]
+
+def subj_bucket(n_buckets: int) -> Column:
+    """`pmod(xxhash64(subj), n_buckets)` as int — the bucket column of
+    every bucketed triple layout (write_triples and
+    kgforge.lineage.materialize_triples). A NULL subject would land in
+    __HIVE_DEFAULT_PARTITION__ and wedge every later resume, so it fails
+    the job instead (in-plan check, no extra pass)."""
+    subj = F.when(
+        F.col("subj").isNull(),
+        F.raise_error(F.lit("bucketed triple write: NULL subj is not writable")),
+    ).otherwise(F.col("subj"))
+    return F.pmod(F.xxhash64(subj), F.lit(n_buckets)).cast("int")
 
 
 def write_triples(
@@ -34,9 +45,7 @@ def write_triples(
 ) -> None:
     """Bucketed parquet write. `subj_bucket` is a stable uniform hash
     so downstream subject-keyed reads prune and parallelize evenly."""
-    out = df.withColumn(
-        "subj_bucket", F.pmod(F.xxhash64(F.col("subj")), F.lit(n_buckets))
-    )
+    out = df.withColumn("subj_bucket", subj_bucket(n_buckets))
     (
         out.repartition(n_buckets, "subj_bucket")
         .sortWithinPartitions("subj", "pred", "obj")

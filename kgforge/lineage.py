@@ -42,8 +42,8 @@ from pyspark.sql import functions as F
 
 from kgforge.io.fs import hadoop_fs as _hadoop_fs
 from kgforge.io.fs import path_exists as _path_exists
-
-TRIPLE_KEY = ["subj", "pred", "obj", "obj_dt"]
+from kgforge.io.write import subj_bucket
+from kgforge.triples.emit import TRIPLE_FIELDS
 
 _BUCKET_PREFIX = "subj_bucket="
 
@@ -103,6 +103,16 @@ def _repair_torn_buckets(spark: SparkSession, path: str, done: set[int]) -> list
     return sorted(torn)
 
 
+def _bucket_stats(table: DataFrame) -> DataFrame:
+    """(subj_bucket, row_count, checksum) per bucket, checksum =
+    bit_xor(xxhash64(triple)): the figures the ledger records and the
+    audit recomputes."""
+    row_hash = F.xxhash64(*[F.coalesce(F.col(c), F.lit("\x00")) for c in TRIPLE_FIELDS])
+    return table.groupBy("subj_bucket").agg(
+        F.count(F.lit(1)).alias("row_count"), F.bit_xor(row_hash).alias("checksum")
+    )
+
+
 def materialize_triples(
     triples: DataFrame,
     path: str,
@@ -135,16 +145,7 @@ def materialize_triples(
     done = sink.completed(stage)
     torn = sink.repair(done)
 
-    # a NULL subject would land in __HIVE_DEFAULT_PARTITION__ and wedge
-    # every later resume — fail the write instead of corrupting the
-    # layout (in-plan check, no extra pass)
-    subj_checked = F.when(
-        F.col("subj").isNull(),
-        F.raise_error(F.lit("materialize_triples: NULL subj is not writable")),
-    ).otherwise(F.col("subj"))
-    df = triples.withColumn(
-        "subj_bucket", F.pmod(F.xxhash64(subj_checked), F.lit(n_buckets)).cast("int")
-    )
+    df = triples.withColumn("subj_bucket", subj_bucket(n_buckets))
     if done:
         df = df.filter(~F.col("subj_bucket").isin(*sorted(done)))
 
@@ -156,18 +157,7 @@ def materialize_triples(
     todo = sorted(sink.bucket_census() - done)
     rows_written = 0
     if todo:
-        written = sink.read_buckets(todo)
-        row_hash = F.xxhash64(
-            *[F.coalesce(F.col(c), F.lit("\x00")) for c in TRIPLE_KEY]
-        )
-        stats = (
-            written.groupBy("subj_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.bit_xor(row_hash).alias("checksum"),
-            )
-            .collect()
-        )
+        stats = _bucket_stats(sink.read_buckets(todo)).collect()
         lineage_rows = [
             (stage, int(r.subj_bucket), int(r.row_count), int(r.checksum), run_id)
             for r in stats
@@ -191,11 +181,7 @@ def verify_lineage(spark: SparkSession, path: str, stage: str = "materialize") -
     lin = read_lineage(spark, path)
     if lin is None:
         return False
-    table = spark.read.parquet(path)
-    row_hash = F.xxhash64(*[F.coalesce(F.col(c), F.lit("\x00")) for c in TRIPLE_KEY])
-    actual = table.groupBy("subj_bucket").agg(
-        F.count(F.lit(1)).alias("row_count"), F.bit_xor(row_hash).alias("checksum")
-    )
+    actual = _bucket_stats(spark.read.parquet(path))
     ledger = (
         lin.filter(F.col("stage") == stage)
         .groupBy("bucket")
@@ -205,13 +191,9 @@ def verify_lineage(spark: SparkSession, path: str, stage: str = "materialize") -
         )
         .withColumnRenamed("bucket", "subj_bucket")
     )
+    # a bucket on one side only meets NULLs on the other: a mismatch
     diff = actual.join(ledger, "subj_bucket", "full").filter(
-        F.coalesce(F.col("row_count"), F.lit(-1))
-        != F.coalesce(F.col("ledger_rows"), F.lit(-2))
-    ).union(
-        actual.join(ledger, "subj_bucket", "full").filter(
-            F.coalesce(F.col("checksum"), F.lit(-1))
-            != F.coalesce(F.col("ledger_sum"), F.lit(-2))
-        )
+        ~F.col("row_count").eqNullSafe(F.col("ledger_rows"))
+        | ~F.col("checksum").eqNullSafe(F.col("ledger_sum"))
     )
     return diff.isEmpty()

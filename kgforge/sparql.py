@@ -190,6 +190,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from kgforge.triples.emit import TRIPLE_FIELDS
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 RDF_TYPE = RDF_NS + "type"
@@ -199,8 +201,6 @@ RDF_TYPE = RDF_NS + "type"
 SCHEMA_PREDS = frozenset(
     RDFS_NS + local for local in ("subClassOf", "subPropertyOf", "domain", "range")
 )
-
-TRIPLE_FIELDS = ["subj", "pred", "obj", "obj_dt"]
 
 
 # --------------------------------------------------------------------

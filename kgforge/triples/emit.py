@@ -29,8 +29,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -249,142 +247,72 @@ def constant_template_terms(spec: MappingSpec) -> list[tuple[str, str | None]] |
     return out
 
 
-def rule_triples_array(rule: Rule, df_cols: dict[str, Column]) -> Column:
-    """Build `array<struct<subj,pred,obj,obj_dt>>` for one rule.
+def _rule_cells(
+    rule: Rule, cols: dict[str, Column]
+) -> tuple[Column | None, Column | None, Column]:
+    """(raw, new, guard) for one rule: the NULL-coalesced, pre-sanitized
+    cell, its transform, and the rule's guard. Under a strict profile
+    (v2/v3) `new` halts on a lookup miss (csv2rdf-v2.py:330-332) IN-PLAN:
+    a fired rule whose lookup missed fails the job instead of silently
+    emitting NULL terms. Guard-false rows never evaluate that branch, so
+    blank/FORGET cells cannot trip it."""
+    raw: Column | None = None
+    new: Column | None = None
+    if rule.column is not None:
+        raw = F.coalesce(cols[rule.column], F.lit(""))
+        if rule.pre_sanitize is not None:
+            raw = sanitize_expr(raw, rule.pre_sanitize)
+        new = transform_expr(raw, rule.transform)
+    guard = guard_expr(rule, raw)
+    m = miss_expr(raw, rule.transform) if rule.transform.miss == "error" else None
+    if m is not None:
+        msg = F.lit(f"map lookup miss (strict policy, rule {rule.rule_id}): ")
+        new = F.when(guard & m, F.raise_error(F.concat(msg, raw))).otherwise(new)
+    return raw, new, guard
+
+
+def _rule_array(rule: Rule, cols: dict[str, Column], base: int | None = None) -> Column:
+    """One rule's triples as an array of structs: the wide
+    `struct<subj,pred,obj,obj_dt>` when `base` is None, else the narrow
+    `struct<tidx,subj,obj>` used when every template's pred/obj_dt are
+    constants (constant_template_terms) — the constants are NOT
+    evaluated per row; `tidx` (= base + template offset, global template
+    order) stands in for them until after the dedup exchange.
 
     Empty array when the guard fails; per-token arrays are flattened for
     split rules (v1 subject2, csv2rdf.py:254-266).
     """
-    raw: Column | None = None
-    new: Column | None = None
-    if rule.column is not None:
-        raw = F.coalesce(df_cols[rule.column], F.lit(""))
-        if rule.pre_sanitize is not None:
-            raw = sanitize_expr(raw, rule.pre_sanitize)
-        new = transform_expr(raw, rule.transform)
-        if rule.transform.miss == "error":
-            # strict profiles (v2/v3) halt on a lookup miss
-            # (csv2rdf-v2.py:330-332). Enforce IN-PLAN: a fired rule
-            # whose lookup missed fails the job instead of silently
-            # emitting NULL terms. Guard-false rows never evaluate this
-            # branch, so blank/FORGET cells cannot trip it.
-            m = miss_expr(raw, rule.transform)
-            if m is not None:
-                new = F.when(
-                    guard_expr(rule, raw) & m,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                f"map lookup miss (strict policy, rule "
-                                f"{rule.rule_id}): "
-                            ),
-                            raw,
-                        )
-                    ),
-                ).otherwise(new)
-    pkey = df_cols.get("__pkey__")
-    rowindex = df_cols.get("__rowindex__")
+    raw, new, guard = _rule_cells(rule, cols)
+    terms = {
+        "raw": raw,
+        "new": new,
+        "pkey": cols.get("__pkey__"),
+        "rowindex": cols.get("__rowindex__"),
+    }
 
-    guard = guard_expr(rule, raw)
+    def structs(token: Column | None) -> Column:
+        out = []
+        for off, (s_t, p_t, o_t) in enumerate(rule.templates):
+            sv, _ = term_expr(s_t, token=token, **terms)
+            ov, dt = term_expr(o_t, token=token, **terms)
+            if base is None:
+                pv, _ = term_expr(p_t, token=token, **terms)
+                out.append(_triple_struct(sv, pv, ov, dt))
+            else:
+                out.append(
+                    F.struct(
+                        F.lit(base + off).alias("tidx"), sv.alias("subj"), ov.alias("obj")
+                    )
+                )
+        return F.array(*out)
 
     if rule.split_tokens:
         assert raw is not None
-
-        def per_token(tok: Column) -> Column:
-            structs = []
-            for s_t, p_t, o_t in rule.templates:
-                sv, _ = term_expr(
-                    s_t, raw=raw, new=new, pkey=pkey, token=tok, rowindex=rowindex
-                )
-                pv, _ = term_expr(
-                    p_t, raw=raw, new=new, pkey=pkey, token=tok, rowindex=rowindex
-                )
-                ov, dt = term_expr(
-                    o_t, raw=raw, new=new, pkey=pkey, token=tok, rowindex=rowindex
-                )
-                structs.append(_triple_struct(sv, pv, ov, dt))
-            return F.array(*structs)
-
-        arr = F.flatten(F.transform(F.split(raw, " "), per_token))
-        return F.when(guard, arr).otherwise(
-            F.array().cast(T.ArrayType(TRIPLE_SCHEMA))
-        )
-
-    structs = []
-    for s_t, p_t, o_t in rule.templates:
-        sv, _ = term_expr(s_t, raw=raw, new=new, pkey=pkey, rowindex=rowindex)
-        pv, _ = term_expr(p_t, raw=raw, new=new, pkey=pkey, rowindex=rowindex)
-        ov, dt = term_expr(o_t, raw=raw, new=new, pkey=pkey, rowindex=rowindex)
-        structs.append(_triple_struct(sv, pv, ov, dt))
-    arr = F.array(*structs)
-    return F.when(guard, arr).otherwise(F.array().cast(T.ArrayType(TRIPLE_SCHEMA)))
-
-
-def rule_tagged_array(rule: Rule, df_cols: dict[str, Column], base: int) -> Column:
-    """`array<struct<tidx,subj,obj>>` for one rule — the narrow form
-    used when every template's pred/obj_dt are constants
-    (constant_template_terms): the constants are NOT evaluated per row;
-    `tidx` (= base + template offset, global template order) stands in
-    for them until after the dedup exchange. Guard/split semantics
-    identical to rule_triples_array."""
-    raw: Column | None = None
-    new: Column | None = None
-    if rule.column is not None:
-        raw = F.coalesce(df_cols[rule.column], F.lit(""))
-        if rule.pre_sanitize is not None:
-            raw = sanitize_expr(raw, rule.pre_sanitize)
-        new = transform_expr(raw, rule.transform)
-        if rule.transform.miss == "error":
-            m = miss_expr(raw, rule.transform)
-            if m is not None:
-                new = F.when(
-                    guard_expr(rule, raw) & m,
-                    F.raise_error(
-                        F.concat(
-                            F.lit(
-                                f"map lookup miss (strict policy, rule "
-                                f"{rule.rule_id}): "
-                            ),
-                            raw,
-                        )
-                    ),
-                ).otherwise(new)
-    pkey = df_cols.get("__pkey__")
-    rowindex = df_cols.get("__rowindex__")
-    guard = guard_expr(rule, raw)
-
-    def tagged(s_t: Term, o_t: Term, off: int, token: Column | None) -> Column:
-        sv, _ = term_expr(
-            s_t, raw=raw, new=new, pkey=pkey, token=token, rowindex=rowindex
-        )
-        ov, _ = term_expr(
-            o_t, raw=raw, new=new, pkey=pkey, token=token, rowindex=rowindex
-        )
-        return F.struct(
-            F.lit(base + off).alias("tidx"), sv.alias("subj"), ov.alias("obj")
-        )
-
-    if rule.split_tokens:
-        assert raw is not None
-        arr = F.flatten(
-            F.transform(
-                F.split(raw, " "),
-                lambda tok: F.array(
-                    *[
-                        tagged(s_t, o_t, off, tok)
-                        for off, (s_t, _, o_t) in enumerate(rule.templates)
-                    ]
-                ),
-            )
-        )
+        arr = F.flatten(F.transform(F.split(raw, " "), structs))
     else:
-        arr = F.array(
-            *[
-                tagged(s_t, o_t, off, None)
-                for off, (s_t, _, o_t) in enumerate(rule.templates)
-            ]
-        )
-    return F.when(guard, arr).otherwise(F.array().cast(T.ArrayType(_TAGGED_SCHEMA)))
+        arr = structs(None)
+    schema = TRIPLE_SCHEMA if base is None else _TAGGED_SCHEMA
+    return F.when(guard, arr).otherwise(F.array().cast(T.ArrayType(schema)))
 
 
 def _spread_small_scan(df: DataFrame) -> DataFrame:
@@ -400,35 +328,31 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
     >= shuffle_partitions x maxPartitionBytes the scan parallelizes
     naturally and the extra exchange would shuffle a large table for
     nothing, so it is skipped — a cluster-scale input never pays.
-    Non-file sources and non-local schemes are left untouched (their
-    size cannot be cheaply known here)."""
+    The input size is the summed `sizeInBytes` statistic of the
+    optimized plan's file-relation leaves: the file index already
+    holds it (any scheme), so nothing is listed or stat()ed here.
+    Non-file sources pass through untouched, and so does `df` when
+    anything in the probe fails."""
     spark = df.sparkSession
     try:
-        files = df.inputFiles()
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        files = [
+            leaf
+            for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.nodeName() == "LogicalRelation"
+            and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        ]
+        if not files:
+            return df
+        total = sum(int(str(leaf.stats().sizeInBytes())) for leaf in files)
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        # Spark's own size parser: accepts every form the conf does
+        # ('134217728', '128m', '128MB', '1g', '64kb', '1t')
+        max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+        )
     except Exception:
         return df
-    if not files:
-        return df
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            path = f[len("file:") :]
-            while path.startswith("//"):
-                path = path[1:]
-        elif "://" not in f:
-            path = f
-        else:  # remote scheme — size unknown here, assume big
-            return df
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return df
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # Spark's own size parser: accepts every form the conf does
-    # ('134217728', '128m', '128MB', '1g', '64kb', '1t')
-    max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
     if total >= n_part * max_pb:
         return df
     return df.repartition(n_part)
@@ -481,7 +405,7 @@ def emit_triples(
         arrays = []
         base = 0
         for rule in spec.rules:
-            arrays.append(rule_tagged_array(rule, cols, base))
+            arrays.append(_rule_array(rule, cols, base))
             base += len(rule.templates)
         all_tagged = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
         narrow = (
@@ -501,7 +425,7 @@ def emit_triples(
             "subj", pred_expr.alias("pred"), "obj", dt_expr.alias("obj_dt")
         )
 
-    arrays = [rule_triples_array(rule, cols) for rule in spec.rules]
+    arrays = [_rule_array(rule, cols) for rule in spec.rules]
     all_triples = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
 
     keep = [F.col(c) for c in prov_cols]
@@ -530,14 +454,9 @@ def assert_no_map_miss(df: DataFrame, spec: MappingSpec) -> None:
     for rule in spec.rules:
         if rule.column is None or rule.transform.kind not in ("map_all", "map_part"):
             continue
-        cell = F.coalesce(F.col(rule.column), F.lit(""))
-        if rule.pre_sanitize is not None:
-            cell = sanitize_expr(cell, rule.pre_sanitize)
+        cell, _, fired = _rule_cells(rule, {rule.column: F.col(rule.column)})
         m = miss_expr(cell, rule.transform)
-        fired = guard_expr(rule, cell)
-        checks.append(
-            F.sum(F.when(fired & m, 1).otherwise(0)).alias(rule.rule_id)
-        )
+        checks.append(F.sum(F.when(fired & m, 1).otherwise(0)).alias(rule.rule_id))
     if not checks:
         return
     row = df.select(*checks).collect()[0]

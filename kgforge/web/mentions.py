@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.mapping.spec import RDFS_LABEL
-from kgforge.triples.emit import sanitize_expr
+from kgforge.triples.emit import _triple_struct, sanitize_expr
 from kgforge.web.corpus import DOMAIN, RELATIONS
 
 
@@ -49,11 +49,6 @@ def extract_mention_triples(
         F.explode(F.split(F.col(text_col), "\n")).alias("line"),
     )
 
-    def _mk(s, p, o, dt):
-        return F.struct(
-            s.alias("subj"), p.alias("pred"), o.alias("obj"), dt.alias("obj_dt")
-        )
-
     # ONE scan, ONE regex parse per (line, matching relation). The
     # parse results must be let-bound: naive formulations either
     # re-scan the table per relation (union-of-branches — measured flat
@@ -84,10 +79,11 @@ def extract_mention_triples(
         o_iri = _mention_iri_expr(p["o_surf"])
         ok = (p["s_surf"] != "") & (p["o_surf"] != "")
         null_dt = F.lit(None).cast("string")
-        structs = [F.when(ok, _mk(s_iri, p["pred"], o_iri, null_dt))]
+        structs = [F.when(ok, _triple_struct(s_iri, p["pred"], o_iri, null_dt))]
         if with_labels:
-            structs.append(F.when(ok, _mk(s_iri, F.lit(RDFS_LABEL), p["s_surf"], F.lit(""))))
-            structs.append(F.when(ok, _mk(o_iri, F.lit(RDFS_LABEL), p["o_surf"], F.lit(""))))
+            label = F.lit(RDFS_LABEL)
+            structs.append(F.when(ok, _triple_struct(s_iri, label, p["s_surf"], F.lit(""))))
+            structs.append(F.when(ok, _triple_struct(o_iri, label, p["o_surf"], F.lit(""))))
         return F.array(*structs)
 
     parsed_arr = F.array_compact(F.array(*branches))

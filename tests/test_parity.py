@@ -57,10 +57,14 @@ def test_v1_semantic_parity(spark):
 
 def test_v1_semantic_reference_grammar_parity(spark):
     """Against the reference's real 67-rule grammar, with synthesized
-    67-column data (the repo's own fixture CSVs are absent)."""
+    67-column data (the repo's own fixture CSVs are absent). Skipped
+    when the reference checkout holding that grammar is not present."""
     import random
 
-    grammar = G.reference_v1_grammar()
+    try:
+        grammar = G.reference_v1_grammar()
+    except FileNotFoundError as e:
+        pytest.skip(f"reference grammar not present: {e.filename}")
     rng = random.Random(42)
     header = [c for c, _ in grammar]
     rows = [header]

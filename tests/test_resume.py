@@ -103,6 +103,64 @@ def test_missing_buckets_resume(spark, tmp_path, catalog_of):
     assert verify_lineage(spark, path)
 
 
+def _bucket3_data_file(path):
+    bucket = os.path.join(path, "subj_bucket=3")
+    return os.path.join(bucket, sorted(f for f in os.listdir(bucket) if f.endswith(".parquet"))[0])
+
+
+def _delete_one_data_file(spark, path):
+    os.remove(_bucket3_data_file(path))
+
+
+def _rewrite_one_value(spark, path):
+    """Same row count, one object changed: only the checksum differs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    victim = _bucket3_data_file(path)
+    table = pq.ParquetFile(victim).read()
+    obj = ["tampered"] + table.column("obj").to_pylist()[1:]
+    i = table.schema.get_field_index("obj")
+    pq.write_table(table.set_column(i, "obj", pa.array(obj, pa.string())), victim)
+    # drop the Hadoop checksum sidecar, which no longer matches
+    head, name = os.path.split(victim)
+    os.remove(os.path.join(head, f".{name}.crc"))
+
+
+def _append_row_outside(spark, path):
+    from kgforge.io.write import subj_bucket
+
+    row = spark.createDataFrame(
+        [("urn:s1", "urn:p", "extra", None)],
+        "subj string, pred string, obj string, obj_dt string",
+    )
+    row.withColumn("subj_bucket", subj_bucket(8)).write.mode("append").partitionBy(
+        "subj_bucket"
+    ).parquet(path)
+
+
+@pytest.mark.parametrize(
+    "tamper, stage",
+    [
+        (_delete_one_data_file, "materialize"),
+        (_append_row_outside, "materialize"),
+        (_rewrite_one_value, "materialize"),
+        (None, "no_such_stage"),
+    ],
+    ids=["data_file_deleted", "row_appended", "value_rewritten", "stage_without_ledger"],
+)
+def test_audit_detects_mismatch(spark, tmp_path, tamper, stage):
+    """The audit fails when storage and ledger disagree: a bucket's data
+    file is gone, a row was written outside materialize_triples, a value
+    was rewritten in place, or the stage has no ledger rows at all."""
+    path = str(tmp_path / "tampered")
+    materialize_triples(_triples(spark), path, n_buckets=8)
+    assert verify_lineage(spark, path)
+    if tamper is not None:
+        tamper(spark, path)
+    assert verify_lineage(spark, path, stage=stage) is False
+
+
 def test_iceberg_sink_error_path(spark, tmp_path):
     """Without the Iceberg runtime jar the iceberg catalog must refuse
     cleanly BEFORE touching storage, with an actionable message."""

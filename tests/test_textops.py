@@ -3,6 +3,7 @@ multimodal plumbing — correctness on planted fixtures."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -742,12 +743,15 @@ def test_ngram_bitmap_prefilter_lossless(spark):
     assert (7000, 7001) not in out  # sub-threshold pair rejected
 
 
-def test_spread_small_scan(spark, tmp_path):
-    """_spread_small_scan: a small single-file scan is spread to the
-    session's shuffle parallelism; non-file sources pass through
-    untouched; triple output is unaffected either way."""
+def test_spread_small_scan(spark, tmp_path, monkeypatch):
+    """_spread_small_scan: a small file scan (one file or many) is
+    spread to the session's shuffle parallelism; an input of at least
+    shuffle.partitions x maxPartitionBytes and non-file sources pass
+    through untouched; triple output is unaffected either way. The size
+    comes from plan statistics, so no driver-side stat() is involved."""
     import pandas as pd
 
+    from kgforge.session import local_df
     from kgforge.triples.emit import _spread_small_scan
 
     p = str(tmp_path / "small.parquet")
@@ -758,15 +762,34 @@ def test_spread_small_scan(spark, tmp_path):
     assert spread.rdd.getNumPartitions() == n_part
     assert sorted(r.k for r in spread.collect()) == list(range(1000))
 
-    local = spark.createDataFrame([(1, "a")], "k long, v string")
-    assert _spread_small_scan(local) is local
+    many = str(tmp_path / "many")
+    spark.range(2000).repartition(200).write.parquet(many)
+    assert len([f for f in os.listdir(many) if f.endswith(".parquet")]) == 200
+    assert _spread_small_scan(spark.read.parquet(many)).rdd.getNumPartitions() == n_part
 
-    # a Spark size string with a two-letter unit parses (JVM byte-string
-    # parser) instead of crashing the guard
+    def no_stat(path):
+        raise OSError(f"stat of {path} is not allowed")
+
+    with monkeypatch.context() as m:
+        m.setattr(os.path, "getsize", no_stat)
+        assert _spread_small_scan(df).rdd.getNumPartitions() == n_part
+
+    for local in (
+        spark.createDataFrame([(1, "a")], "k long, v string"),
+        local_df(spark, [(1, "a")], "k long, v string"),
+    ):
+        assert _spread_small_scan(local) is local
+
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
-    spark.conf.set(key, "128MB")
     try:
+        # the file (~10 KB) is >= n_part x 1 KB: the scan already splits
+        assert os.path.getsize(p) >= n_part * 1024
+        spark.conf.set(key, "1k")
+        assert _spread_small_scan(df) is df
+        # a Spark size string with a two-letter unit parses (JVM
+        # byte-string parser) instead of crashing the guard
+        spark.conf.set(key, "128MB")
         assert _spread_small_scan(df).rdd.getNumPartitions() == n_part
     finally:
         spark.conf.set(key, old)
