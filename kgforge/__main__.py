@@ -72,7 +72,12 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of -c/--conf (convert) or --sparql (query) is required")
 
     from kgforge.io.fs import collapse_to_file
-    from kgforge.io.write import dump_turtle, to_ntriples_lines, write_triples
+    from kgforge.io.write import (
+        dump_ntriples,
+        dump_turtle,
+        to_ntriples_lines,
+        write_triples,
+    )
     from kgforge.orchestrate import run_config
     from kgforge.session import get_spark
 
@@ -114,9 +119,7 @@ def main(argv: list[str] | None = None) -> int:
             dump_turtle(triples, tmp)
             dest = os.path.join(args.out, base + ".ttl")
         else:
-            to_ntriples_lines(triples).sort("line").coalesce(1).write.mode(
-                "overwrite"
-            ).text(tmp)
+            dump_ntriples(triples, tmp)
             dest = os.path.join(args.out, base + ".nt")
         collapse_to_file(spark, tmp, dest)
         print(f"wrote {dest}")

@@ -1,19 +1,29 @@
-"""Sink/catalog protocol behind resumable triple materialization.
+"""Sink/catalog protocol behind resumable triple materialization, and
+the one owner of the bucketed triple-table layout.
 
 `kgforge.lineage.materialize_triples` talks to a `TripleSink`; the
 parquet+ledger sink is the local/sandbox default, and the Iceberg sink
 binds the SAME protocol to snapshot-based commits on a cluster that has
 the Iceberg runtime on the classpath (SURVEY.md §7.2/§7.4's
 ``catalog=iceberg|parquet`` switch). The protocol is deliberately
-minimal — exactly the operations resume needs:
+minimal — exactly the operations resume and audit need:
 
-    completed(stage)    buckets already durably committed
+    ledger(stage)       the stage's completion records (None if none yet)
     repair(done)        delete torn output from a crashed run
     append(df)          write new bucketed data (df carries subj_bucket)
     bucket_census()     buckets present in storage right now
-    read_buckets(b)     re-read the new buckets for checksum stats
+    read_buckets(b)     re-read buckets for checksum stats / the audit
     commit(stage, rows) durably record completion (ledger append /
                         snapshot commit)
+
+The parquet layout — `subj_bucket=N` dirs keyed by `subj_bucket()`, a
+`<path>/_lineage` ledger of LINEAGE_SCHEMA rows, and one bucketed write
+sorted on (subj_bucket, subj, pred, obj) — is known only here;
+`kgforge.io.write.write_triples` and `kgforge.lineage.verify_lineage`
+go through ParquetLedgerSink. All its IO goes through the Hadoop
+FileSystem API resolved from the path's scheme, so census and repair
+behave identically on file://, hdfs:// and s3a:// (driver-local
+os.listdir would silently see an empty directory on a remote store).
 
 The reference realizes durability as whole-file Turtle writes
 (csv2rdf/csv2rdf.py:275-290 writes one .ttl per source); at 10^12
@@ -25,9 +35,25 @@ from __future__ import annotations
 
 from abc import ABC, abstractmethod
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from kgforge.io.fs import delete_path, list_dir_names, path_exists
 from kgforge.session import local_df
+
+_BUCKET_PREFIX = "subj_bucket="
+
+
+def subj_bucket(n_buckets: int) -> Column:
+    """`pmod(xxhash64(subj), n_buckets)` as int — the bucket column of
+    the triple table. A NULL subject would land in
+    __HIVE_DEFAULT_PARTITION__ and wedge every later resume, so it fails
+    the job instead (in-plan check, no extra pass)."""
+    subj = F.when(
+        F.col("subj").isNull(),
+        F.raise_error(F.lit("bucketed triple write: NULL subj is not writable")),
+    ).otherwise(F.col("subj"))
+    return F.pmod(F.xxhash64(subj), F.lit(n_buckets)).cast("int")
 
 
 def _bucketed_repartition(
@@ -51,8 +77,6 @@ def _bucketed_repartition(
     which each later scan opens. Routing still sends every row to its
     own bucket dir, and the caller's within-partition sort keeps subj
     min/max row-group pruning working."""
-    from pyspark.sql import functions as F
-
     if salt_partitions and salt_partitions > 1:
         salt = F.pmod(
             F.xxhash64(
@@ -76,8 +100,9 @@ class TripleSink(ABC):
     """Minimal storage contract for resumable bucketed triple writes."""
 
     @abstractmethod
-    def completed(self, stage: str) -> set[int]:
-        """Buckets with a durable completion record for `stage`."""
+    def ledger(self, stage: str) -> DataFrame | None:
+        """`stage`'s durable completion records (LINEAGE_SCHEMA rows),
+        or None when nothing was ever committed."""
 
     @abstractmethod
     def repair(self, done: set[int]) -> list[int]:
@@ -93,8 +118,9 @@ class TripleSink(ABC):
         """Buckets physically present in storage."""
 
     @abstractmethod
-    def read_buckets(self, buckets: list[int]) -> DataFrame:
-        """Read back exactly `buckets` (for checksum/lineage stats)."""
+    def read_buckets(self, buckets: list[int] | None) -> DataFrame:
+        """Read back exactly `buckets`; None reads every stored row,
+        rows outside any bucket included (the audit must see them)."""
 
     @abstractmethod
     def commit(self, stage: str, lineage_rows: list[tuple]) -> None:
@@ -103,9 +129,8 @@ class TripleSink(ABC):
 
 
 class ParquetLedgerSink(TripleSink):
-    """Default sink: parquet partitioned by subj_bucket + a parquet
-    lineage ledger under <path>/_lineage. All IO through the Hadoop
-    FileSystem API (file://, hdfs://, s3a:// identical)."""
+    """Default sink: parquet partitioned into subj_bucket=N dirs + a
+    parquet lineage ledger under <path>/_lineage."""
 
     LINEAGE_SCHEMA = (
         "stage string, bucket int, row_count long, checksum long, run_id string"
@@ -122,45 +147,64 @@ class ParquetLedgerSink(TripleSink):
         self.path = path
         self.n_buckets = n_buckets
         self.salt_partitions = salt_partitions
+        self._ledger_path = path.rstrip("/") + "/_lineage"
 
-    def completed(self, stage: str) -> set[int]:
-        from kgforge import lineage
+    def ledger(self, stage: str) -> DataFrame | None:
+        if not path_exists(self.spark, self._ledger_path):
+            return None
+        return self.spark.read.parquet(self._ledger_path).filter(
+            F.col("stage") == stage
+        )
 
-        return lineage.completed_buckets(self.spark, self.path, stage)
+    def _bucket_dirs(self) -> dict[int, str]:
+        """{bucket -> dir name} for every subj_bucket=N child dir.
+
+        Non-integer partition dirs (e.g. __HIVE_DEFAULT_PARTITION__ from a
+        historical NULL-subject write) are skipped, not crashed on — repair
+        must never be wedged by one corrupt dir name."""
+        return {
+            int(name[len(_BUCKET_PREFIX):]): name
+            for name in list_dir_names(self.spark, self.path)
+            if name.startswith(_BUCKET_PREFIX) and name[len(_BUCKET_PREFIX):].isdigit()
+        }
 
     def repair(self, done: set[int]) -> list[int]:
-        from kgforge import lineage
-
-        return lineage._repair_torn_buckets(self.spark, self.path, done)
+        torn = {b: name for b, name in self._bucket_dirs().items() if b not in done}
+        for name in torn.values():
+            delete_path(self.spark, self.path.rstrip("/") + "/" + name)
+        return sorted(torn)
 
     def append(self, df: DataFrame, max_records_per_file: int) -> None:
+        self._write(df, max_records_per_file, "append")
+
+    def _write(self, df: DataFrame, max_records_per_file: int, mode: str) -> None:
+        """The one bucketed write. The sort leads with subj_bucket:
+        Spark's partitioned writer needs its rows ordered by the
+        partition column and otherwise replaces the caller's sort with
+        a subj_bucket-only sort, losing the subj order that min/max
+        row-group pruning relies on."""
         out = _bucketed_repartition(df, self.salt_partitions, self.n_buckets)
         (
             out.sortWithinPartitions("subj_bucket", "subj", "pred", "obj")
-            .write.mode("append")
+            .write.mode(mode)
             .option("maxRecordsPerFile", max_records_per_file)
             .partitionBy("subj_bucket")
             .parquet(self.path)
         )
 
     def bucket_census(self) -> set[int]:
-        from kgforge import lineage
+        return set(self._bucket_dirs())
 
-        return set(lineage._bucket_dirs_on_disk(self.spark, self.path))
-
-    def read_buckets(self, buckets: list[int]) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        return self.spark.read.parquet(self.path).filter(
-            F.col("subj_bucket").isin(buckets)
-        )
+    def read_buckets(self, buckets: list[int] | None) -> DataFrame:
+        table = self.spark.read.parquet(self.path)
+        if buckets is None:
+            return table
+        return table.filter(F.col("subj_bucket").isin(buckets))
 
     def commit(self, stage: str, lineage_rows: list[tuple]) -> None:
-        from kgforge import lineage
-
         local_df(self.spark, lineage_rows, self.LINEAGE_SCHEMA).coalesce(
             1
-        ).write.mode("append").parquet(lineage._lineage_path(self.path))
+        ).write.mode("append").parquet(self._ledger_path)
 
 
 def _iceberg_runtime_available(spark: SparkSession) -> bool:
@@ -186,7 +230,7 @@ class IcebergSnapshotSink(TripleSink):
       commit        writeTo(table + '_lineage').append() — the lineage
                     snapshot is the durability point, same as the
                     parquet ledger append
-      completed     scan of the lineage table
+      ledger        scan of the lineage table
       bucket_census the table's `.partitions` metadata table
       repair        DELETE WHERE subj_bucket IN (torn) — or, when the
                     torn write is the latest snapshot, a rollback via
@@ -234,8 +278,6 @@ class IcebergSnapshotSink(TripleSink):
         through the partition spec), hash distribution so each bucket's
         rows land in one write task, and the size-based file-rolling
         property standing in for the parquet sink's record cap."""
-        from pyspark.sql import functions as F
-
         writer = (
             df.writeTo(self.table)
             .partitionedBy(F.col("subj_bucket"))
@@ -247,18 +289,12 @@ class IcebergSnapshotSink(TripleSink):
             )
         writer.create()
 
-    def completed(self, stage: str) -> set[int]:
-        from pyspark.sql import functions as F
-
+    def ledger(self, stage: str) -> DataFrame | None:
         if not self.spark.catalog.tableExists(self._lineage_table):
-            return set()
-        return {
-            r.bucket
-            for r in self.spark.read.table(self._lineage_table)
-            .filter(F.col("stage") == stage)
-            .select("bucket")
-            .collect()
-        }
+            return None
+        return self.spark.read.table(self._lineage_table).filter(
+            F.col("stage") == stage
+        )
 
     def repair(self, done: set[int]) -> list[int]:
         torn = sorted(self.bucket_census() - done)
@@ -288,12 +324,11 @@ class IcebergSnapshotSink(TripleSink):
             for r in self.spark.read.table(self.table + ".partitions").collect()
         }
 
-    def read_buckets(self, buckets: list[int]) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        return self.spark.read.table(self.table).filter(
-            F.col("subj_bucket").isin(buckets)
-        )
+    def read_buckets(self, buckets: list[int] | None) -> DataFrame:
+        table = self.spark.read.table(self.table)
+        if buckets is None:
+            return table
+        return table.filter(F.col("subj_bucket").isin(buckets))
 
     def commit(self, stage: str, lineage_rows: list[tuple]) -> None:
         ldf = local_df(

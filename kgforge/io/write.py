@@ -19,21 +19,10 @@ canonical (sorted) so diffs are reproducible.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def subj_bucket(n_buckets: int) -> Column:
-    """`pmod(xxhash64(subj), n_buckets)` as int — the bucket column of
-    every bucketed triple layout (write_triples and
-    kgforge.lineage.materialize_triples). A NULL subject would land in
-    __HIVE_DEFAULT_PARTITION__ and wedge every later resume, so it fails
-    the job instead (in-plan check, no extra pass)."""
-    subj = F.when(
-        F.col("subj").isNull(),
-        F.raise_error(F.lit("bucketed triple write: NULL subj is not writable")),
-    ).otherwise(F.col("subj"))
-    return F.pmod(F.xxhash64(subj), F.lit(n_buckets)).cast("int")
+from kgforge.io.catalog import ParquetLedgerSink, subj_bucket
 
 
 def write_triples(
@@ -43,16 +32,13 @@ def write_triples(
     max_records_per_file: int = 20000,
     mode: str = "overwrite",
 ) -> None:
-    """Bucketed parquet write. `subj_bucket` is a stable uniform hash
-    so downstream subject-keyed reads prune and parallelize evenly."""
-    out = df.withColumn("subj_bucket", subj_bucket(n_buckets))
-    (
-        out.repartition(n_buckets, "subj_bucket")
-        .sortWithinPartitions("subj", "pred", "obj")
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("subj_bucket")
-        .parquet(path)
+    """Bucketed parquet write in the materialize_triples layout, without
+    the ledger. `subj_bucket` is a stable uniform hash so downstream
+    subject-keyed reads prune and parallelize evenly; each file is
+    sorted on (subj, pred, obj) for min/max row-group pruning."""
+    sink = ParquetLedgerSink(df.sparkSession, path, n_buckets)
+    sink._write(
+        df.withColumn("subj_bucket", subj_bucket(n_buckets)), max_records_per_file, mode
     )
 
 

@@ -3,9 +3,11 @@
 North-rule requirement: any stage resumes idempotently from
 checkpointed snapshots with per-partition lineage rows and metrics.
 
-Local/sandbox realization (no Iceberg runtime jar — SURVEY.md §7.1):
-the triple table is a parquet layout partitioned by `subj_bucket`
-(pmod(xxhash64(subj), N)); the lineage ledger is a parquet table of
+This module is the policy; the storage layout lives behind the sink
+protocol in kgforge.io.catalog (ledger, repair, append, bucket_census,
+read_buckets, commit). Local/sandbox realization (no Iceberg runtime
+jar — SURVEY.md §7.1): ParquetLedgerSink, a parquet table partitioned
+by `subj_bucket` (pmod(xxhash64(subj), N)) plus a parquet ledger of
 
     (stage, bucket, row_count, checksum, run_id)
 
@@ -20,17 +22,11 @@ one row per completed bucket. Resume contract:
     independent and overflow-free, so audits re-verify any bucket
     cheaply.
 
-ALL data-path IO goes through the Hadoop FileSystem API resolved from
-the path's scheme — the bucket census and torn-bucket repair behave
-identically on file://, hdfs:// and s3a:// (driver-local os.listdir
-would silently see an empty directory on any remote store).
-
-On a real cluster the same interface binds to Iceberg via the sink
-protocol in kgforge.io.catalog (`materialize_triples(...,
-catalog="iceberg")`): snapshot commit replaces the ledger append, and
-repair is a snapshot rollback / partition delete. The bucket filter
-and lineage schema are identical; the Iceberg sink refuses cleanly
-when the runtime jar is absent.
+On a real cluster the same protocol binds to Iceberg
+(`materialize_triples(..., catalog="iceberg")`): snapshot commit
+replaces the ledger append, and repair is a snapshot rollback /
+partition delete. The bucket filter and lineage schema are identical;
+the Iceberg sink refuses cleanly when the runtime jar is absent.
 """
 
 from __future__ import annotations
@@ -40,67 +36,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge.io.fs import hadoop_fs as _hadoop_fs
-from kgforge.io.fs import path_exists as _path_exists
-from kgforge.io.write import subj_bucket
+from kgforge.io.catalog import ParquetLedgerSink, resolve_sink, subj_bucket
 from kgforge.triples.emit import TRIPLE_FIELDS
-
-_BUCKET_PREFIX = "subj_bucket="
-
-
-def _bucket_dirs_on_disk(spark: SparkSession, path: str) -> dict[int, object]:
-    """{bucket -> hadoop Path} for every subj_bucket=N child dir.
-
-    Non-integer partition dirs (e.g. __HIVE_DEFAULT_PARTITION__ from a
-    historical NULL-subject write) are skipped, not crashed on — repair
-    must never be wedged by one corrupt dir name.
-    """
-    fs, jpath = _hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return {}
-    out: dict[int, object] = {}
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith(_BUCKET_PREFIX):
-            continue
-        val = name[len(_BUCKET_PREFIX):]
-        if not val.isdigit():
-            continue
-        out[int(val)] = status.getPath()
-    return out
-
-
-def _lineage_path(path: str) -> str:
-    return path.rstrip("/") + "/_lineage"
-
-
-def read_lineage(spark: SparkSession, path: str) -> DataFrame | None:
-    lp = _lineage_path(path)
-    if not _path_exists(spark, lp):
-        return None
-    return spark.read.parquet(lp)
-
-
-def completed_buckets(spark: SparkSession, path: str, stage: str) -> set[int]:
-    lin = read_lineage(spark, path)
-    if lin is None:
-        return set()
-    return {
-        r.bucket for r in lin.filter(F.col("stage") == stage).select("bucket").collect()
-    }
-
-
-def _repair_torn_buckets(spark: SparkSession, path: str, done: set[int]) -> list[int]:
-    """Delete bucket dirs that exist on disk without a lineage row
-    (partial output from a crashed run)."""
-    on_disk = _bucket_dirs_on_disk(spark, path)
-    fs, _ = _hadoop_fs(spark, path)
-    torn = []
-    for bucket, jpath in on_disk.items():
-        if bucket not in done:
-            fs.delete(jpath, True)
-            torn.append(bucket)
-    return sorted(torn)
 
 
 def _bucket_stats(table: DataFrame) -> DataFrame:
@@ -138,11 +75,12 @@ def materialize_triples(
     kgforge.io.catalog._bucketed_repartition). Layout, resume and
     audit semantics are unchanged — only task balance and file count
     differ."""
-    from kgforge.io.catalog import resolve_sink
-
     spark = triples.sparkSession
     sink = resolve_sink(spark, path, catalog, n_buckets, salt_partitions)
-    done = sink.completed(stage)
+    ledger = sink.ledger(stage)
+    done = set()
+    if ledger is not None:
+        done = {r.bucket for r in ledger.select("bucket").collect()}
     torn = sink.repair(done)
 
     df = triples.withColumn("subj_bucket", subj_bucket(n_buckets))
@@ -176,15 +114,15 @@ def materialize_triples(
 
 
 def verify_lineage(spark: SparkSession, path: str, stage: str = "materialize") -> bool:
-    """Audit: recompute per-bucket checksums from the table and compare
-    with the ledger."""
-    lin = read_lineage(spark, path)
+    """Audit: recompute per-bucket checksums from every stored row and
+    compare with the ledger."""
+    sink = ParquetLedgerSink(spark, path)
+    lin = sink.ledger(stage)
     if lin is None:
         return False
-    actual = _bucket_stats(spark.read.parquet(path))
+    actual = _bucket_stats(sink.read_buckets(None))
     ledger = (
-        lin.filter(F.col("stage") == stage)
-        .groupBy("bucket")
+        lin.groupBy("bucket")
         .agg(
             F.sum("row_count").alias("ledger_rows"),
             F.bit_xor("checksum").alias("ledger_sum"),

@@ -215,6 +215,27 @@ def test_cli_end_to_end_turtle(spark, v1_conf, tmp_path):
     assert_parity(_parse_turtle_min(ttl), expected)
 
 
+def test_cli_parquet_then_query(spark, v1_conf, tmp_path, capsys):
+    """`--format parquet` writes the bucketed triple table, and
+    `--sparql --triples` over it returns every converted triple."""
+    from kgforge.__main__ import _tsv_escape, main
+
+    conf, expected = v1_conf
+    outdir = str(tmp_path / "out_parquet")
+    args = ["-c", conf, "--mode", "shared", "--format", "parquet", "--out", outdir]
+    assert main(args) == 0
+    q = tmp_path / "all.rq"
+    q.write_text("SELECT ?s ?p ?o WHERE { ?s ?p ?o }")
+    capsys.readouterr()
+    tpath = os.path.join(outdir, "shared.triples")
+    assert main(["--sparql", str(q), "--triples", tpath]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[0] == "s\tp\to"
+    assert {tuple(ln.split("\t")) for ln in lines[1:]} == {
+        tuple(_tsv_escape(v) for v in t[:3]) for t in expected
+    }
+
+
 def test_turtle_rdflib_roundtrip(spark, v1_conf, tmp_path):
     """Same dump validated by a real Turtle parser (when available)."""
     rdflib = pytest.importorskip("rdflib")

@@ -12,12 +12,8 @@ from pyspark.sql import functions as F
 import pytest
 
 from kgforge.io.catalog import ParquetLedgerSink
-from kgforge.lineage import (
-    completed_buckets,
-    materialize_triples,
-    read_lineage,
-    verify_lineage,
-)
+from kgforge.io.write import write_triples
+from kgforge.lineage import materialize_triples, verify_lineage
 
 
 @pytest.fixture(params=["parquet", "sink"])
@@ -40,6 +36,21 @@ def _triples(spark, n=500):
         F.lit("urn:p").alias("pred"),
         F.concat(F.lit("v"), F.col("id").cast("string")).alias("obj"),
         F.lit(None).cast("string").alias("obj_dt"),
+    )
+
+
+def _drop_ledger_rows(spark, path, buckets):
+    """Rewrite the ledger without the `buckets`' rows, read through the
+    sink and written back in its schema."""
+    lin = (
+        ParquetLedgerSink(spark, path)
+        .ledger("materialize")
+        .filter(~F.col("bucket").isin(*buckets))
+        .collect()
+    )
+    shutil.rmtree(os.path.join(path, "_lineage"))
+    spark.createDataFrame(lin, ParquetLedgerSink.LINEAGE_SCHEMA).write.parquet(
+        os.path.join(path, "_lineage")
     )
 
 
@@ -67,19 +78,15 @@ def test_resume_repairs_torn_bucket(spark, tmp_path, catalog_of):
 
     # simulate a crash: bucket 3 written but its lineage row lost —
     # rewrite the ledger without bucket 3 (torn state)
-    lin = read_lineage(spark, path).filter(F.col("bucket") != 3).collect()
-    shutil.rmtree(os.path.join(path, "_lineage"))
-    spark.createDataFrame(
-        lin,
-        "stage string, bucket int, row_count long, checksum long, run_id string",
-    ).write.parquet(os.path.join(path, "_lineage"))
+    _drop_ledger_rows(spark, path, [3])
 
     m = materialize_triples(_triples(spark), path, n_buckets=8, catalog=catalog_of(path))
     assert m["buckets_repaired"] == [3]
     assert m["buckets_written"] == 1 and m["buckets_skipped"] == 7
     assert spark.read.parquet(path).count() == full  # no dupes, no loss
     assert verify_lineage(spark, path)
-    assert completed_buckets(spark, path, "materialize") == set(range(8))
+    ledger = ParquetLedgerSink(spark, path).ledger("materialize")
+    assert {r.bucket for r in ledger.collect()} == set(range(8))
 
 
 def test_missing_buckets_resume(spark, tmp_path, catalog_of):
@@ -90,17 +97,29 @@ def test_missing_buckets_resume(spark, tmp_path, catalog_of):
     full = spark.read.parquet(path).count()
     for b in (1, 5):
         shutil.rmtree(os.path.join(path, f"subj_bucket={b}"))
-    lin = read_lineage(spark, path).filter(~F.col("bucket").isin(1, 5)).collect()
-    shutil.rmtree(os.path.join(path, "_lineage"))
-    spark.createDataFrame(
-        lin,
-        "stage string, bucket int, row_count long, checksum long, run_id string",
-    ).write.parquet(os.path.join(path, "_lineage"))
+    _drop_ledger_rows(spark, path, [1, 5])
 
     m = materialize_triples(_triples(spark), path, n_buckets=8, catalog=catalog_of(path))
     assert m["buckets_written"] == 2 and m["buckets_skipped"] == 6
     assert spark.read.parquet(path).count() == full
     assert verify_lineage(spark, path)
+
+
+def test_stray_bucket_dir_survives_and_fails_audit(spark, tmp_path):
+    """A subj_bucket=__HIVE_DEFAULT_PARTITION__ dir (a historical
+    NULL-subject write) neither crashes the bucket census nor is
+    repaired away; its rows are in no ledger bucket, so the audit fails."""
+    path = str(tmp_path / "stray")
+    stray = os.path.join(path, "subj_bucket=__HIVE_DEFAULT_PARTITION__")
+    spark.createDataFrame(
+        [(f"urn:x{i}", "urn:p", "v", None) for i in range(3)],
+        "subj string, pred string, obj string, obj_dt string",
+    ).coalesce(1).write.parquet(stray)
+
+    m = materialize_triples(_triples(spark), path, n_buckets=8)
+    assert m["buckets_written"] == 8 and m["rows_written"] == 500
+    assert spark.read.parquet(stray).count() == 3
+    assert verify_lineage(spark, path) is False
 
 
 def _bucket3_data_file(path):
@@ -128,7 +147,7 @@ def _rewrite_one_value(spark, path):
 
 
 def _append_row_outside(spark, path):
-    from kgforge.io.write import subj_bucket
+    from kgforge.io.catalog import subj_bucket
 
     row = spark.createDataFrame(
         [("urn:s1", "urn:p", "extra", None)],
@@ -236,6 +255,38 @@ def _data_files(base):
         for d in os.listdir(base) if d.startswith("subj_bucket=")
         for f in os.listdir(os.path.join(base, d)) if f.startswith("part-")
     ]
+
+
+@pytest.mark.parametrize(
+    "write",
+    [
+        lambda df, path: write_triples(df, path, n_buckets=8),
+        lambda df, path: materialize_triples(df, path, n_buckets=8),
+        lambda df, path: materialize_triples(df, path, n_buckets=8, salt_partitions=4),
+    ],
+    ids=["write_triples", "materialize", "materialize_salted"],
+)
+def test_data_files_sorted(spark, tmp_path, write):
+    """Every data file of a bucketed write is sorted on (subj, pred,
+    obj), the order subject min/max row-group pruning relies on."""
+    import pyarrow.parquet as pq
+
+    triples = spark.range(2000).select(
+        F.concat(F.lit("urn:s"), (F.col("id") % 50).cast("string")).alias("subj"),
+        F.concat(F.lit("urn:p"), (F.col("id") % 3).cast("string")).alias("pred"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("obj"),
+        F.lit(None).cast("string").alias("obj_dt"),
+    )
+    path = str(tmp_path / "sorted")
+    write(triples, path)
+    files = _data_files(path)
+    assert files
+    for f in files:
+        cols = pq.read_table(
+            os.path.join(path, f), columns=["subj", "pred", "obj"]
+        ).to_pydict()
+        rows = list(zip(cols["subj"], cols["pred"], cols["obj"]))
+        assert rows == sorted(rows), f
 
 
 def test_salted_write_bounds_file_count(spark, tmp_path):
