@@ -2,10 +2,23 @@
 
 All engine entry points accept an externally built session; this module
 only centralizes the config we want everywhere: Arrow-backed pandas
-UDFs, AQE (runtime coalescing + skew-join splitting), and a shuffle
+UDFs, AQE (runtime coalescing + skew-join splitting), a shuffle
 partition count sized to the parallelism level instead of the 200
 default (which at local[8..32] just creates tiny-task overhead, and on
-a 1000-executor cluster is overridden by AQE coalescing anyway).
+a 1000-executor cluster is overridden by AQE coalescing anyway), and a
+generated-code cache sized to kgforge's plans.
+
+The codegen cache (``spark.sql.codegen.cache.maxEntries``) is Spark's
+LRU map from generated Java source to its Janino-compiled class; a plan
+whose source is already there skips the compile. Spark's default of 100
+entries is smaller than one web pipeline run (``run_pipeline`` +
+``materialize_triples``: about 135 classes), so every class is evicted
+before its next use and each warm run recompiles 110-114 of them; the
+dedup trio needs about 230, a csv mapping 34 and a SPARQL query 10-20.
+1000 holds all of them at once with headroom. It is a static conf, read
+once per JVM when Spark first generates code: it is ignored when
+``getOrCreate`` returns a live session, and a caller overrides it
+through ``extra_conf={"spark.sql.codegen.cache.maxEntries": ...}``.
 """
 
 from __future__ import annotations
@@ -30,11 +43,8 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        if master.startswith("local["):
-            inner = master[len("local[") : -1]
-            shuffle_partitions = 32 if inner == "*" else max(int(inner), 4)
-        else:
-            shuffle_partitions = 200
+        cores = _local_cores(master)
+        shuffle_partitions = 200 if cores is None else max(cores, 4)
 
     # Python workers (pandas UDF stages) don't inherit the driver's
     # sys.path — ship the package root via PYTHONPATH so launching from
@@ -53,6 +63,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # warm runs recompile every generated class when a run's working
+        # set (web pipeline ~135, dedup trio ~230) exceeds the default
+        # 100-entry LRU; see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # deterministic float behavior for oracle comparisons
@@ -65,6 +79,19 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _local_cores(master: str) -> int | None:
+    """Core count of a ``local`` master: ``local`` is 1, ``local[*]`` 32
+    (the width assumed when it is unknown), ``local[N]`` and
+    ``local[N,F]`` (N threads, F task failures) N. None for a cluster
+    master."""
+    if master == "local":
+        return 1
+    if not (master.startswith("local[") and master.endswith("]")):
+        return None
+    threads = master[len("local[") : -1].split(",")[0].strip()
+    return 32 if threads == "*" else int(threads)
 
 
 def local_df(spark, rows, schema):

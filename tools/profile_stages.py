@@ -1,7 +1,10 @@
 """Per-stage profiler for entry queries (no Spark UI in the sandbox).
 
 Runs each named query once warm + once timed with the event log on,
-then parses the log into a per-stage table: wall, summed task CPU /
+and prints the timed run's Janino compiles (count and milliseconds): a
+plan whose generated classes outgrow Spark's codegen cache recompiles
+on every warm run. It then parses the log into a per-stage table:
+wall, summed task CPU /
 run time, task count, shuffle bytes/records in and out, and the RDD
 scope names (Exchange / Window / Generate / ArrowEvalPython ...) that
 map the stage back to plan operators — the guide §7.1 empirical loop
@@ -24,6 +27,14 @@ import time
 from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _compiled(spark) -> tuple[int, float]:
+    """(Janino compiles, compile ms) so far in this JVM."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, ns / 1e6
 
 
 def main():
@@ -59,10 +70,12 @@ def main():
     marks = {}
     for qn in qnames:
         spark.sparkContext.setJobDescription(qn)
+        n0, ms0 = _compiled(spark)
         t0 = time.perf_counter()
         qs[qn](spark, sf_dir).count()
         marks[qn] = time.perf_counter() - t0
-        print(f"{qn}: {marks[qn]:.3f}", flush=True)
+        n1, ms1 = _compiled(spark)
+        print(f"{qn}: {marks[qn]:.3f}  compiles {n1 - n0} ({ms1 - ms0:.0f} ms)", flush=True)
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
