@@ -19,8 +19,9 @@ minimal — exactly the operations resume and audit need:
 The parquet layout — `subj_bucket=N` dirs keyed by `subj_bucket()`, a
 `<path>/_lineage` ledger of LINEAGE_SCHEMA rows, and one bucketed write
 sorted on (subj_bucket, subj, pred, obj) — is known only here;
-`kgforge.io.write.write_triples` and `kgforge.lineage.verify_lineage`
-go through ParquetLedgerSink. All its IO goes through the Hadoop
+`kgforge.io.write.write_triples` goes through ParquetLedgerSink, and
+`kgforge.lineage.verify_lineage` audits any sink through `resolve_sink`
+and the protocol alone. All its IO goes through the Hadoop
 FileSystem API resolved from the path's scheme, so census and repair
 behave identically on file://, hdfs:// and s3a:// (driver-local
 os.listdir would silently see an empty directory on a remote store).
@@ -39,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.io.fs import delete_path, list_dir_names, path_exists
-from kgforge.session import local_df
+from kgforge.session import local_df, sql_str
 
 _BUCKET_PREFIX = "subj_bucket="
 
@@ -49,11 +50,11 @@ def subj_bucket(n_buckets: int) -> Column:
     the triple table. A NULL subject would land in
     __HIVE_DEFAULT_PARTITION__ and wedge every later resume, so it fails
     the job instead (in-plan check, no extra pass)."""
-    subj = F.when(
-        F.col("subj").isNull(),
-        F.raise_error(F.lit("bucketed triple write: NULL subj is not writable")),
-    ).otherwise(F.col("subj"))
-    return F.pmod(F.xxhash64(subj), F.lit(n_buckets)).cast("int")
+    return F.expr(
+        "CAST(pmod(xxhash64(CASE WHEN subj IS NULL THEN raise_error("
+        "'bucketed triple write: NULL subj is not writable') ELSE subj END), "
+        f"{int(n_buckets)}) AS INT)"
+    )
 
 
 def _bucketed_repartition(
@@ -78,15 +79,13 @@ def _bucketed_repartition(
     own bucket dir, and the caller's within-partition sort keeps subj
     min/max row-group pruning working."""
     if salt_partitions and salt_partitions > 1:
-        salt = F.pmod(
-            F.xxhash64(
-                *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-                  for c in df.columns
-                  if c not in ("subj_bucket", "subj")]
-            ),
-            F.lit(int(salt_partitions)),
+        hashed = ", ".join(
+            f"coalesce(CAST(`{c}` AS STRING), {sql_str(chr(0))})"
+            for c in df.columns
+            if c not in ("subj_bucket", "subj")
         )
-        keys = [F.col("subj_bucket"), salt.alias("salt")]
+        salt = F.expr(f"pmod(xxhash64({hashed}), {int(salt_partitions)}) AS salt")
+        keys = [F.col("subj_bucket"), salt]
         partition = df.repartitionByRange
     else:
         keys = [F.col("subj_bucket")]

@@ -36,7 +36,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge.io.catalog import ParquetLedgerSink, resolve_sink, subj_bucket
+from kgforge.io.catalog import resolve_sink, subj_bucket
+from kgforge.session import sql_str
 from kgforge.triples.emit import TRIPLE_FIELDS
 
 
@@ -44,9 +45,9 @@ def _bucket_stats(table: DataFrame) -> DataFrame:
     """(subj_bucket, row_count, checksum) per bucket, checksum =
     bit_xor(xxhash64(triple)): the figures the ledger records and the
     audit recomputes."""
-    row_hash = F.xxhash64(*[F.coalesce(F.col(c), F.lit("\x00")) for c in TRIPLE_FIELDS])
+    row_hash = ", ".join(f"coalesce({c}, {sql_str(chr(0))})" for c in TRIPLE_FIELDS)
     return table.groupBy("subj_bucket").agg(
-        F.count(F.lit(1)).alias("row_count"), F.bit_xor(row_hash).alias("checksum")
+        F.expr("count(1) AS row_count"), F.expr(f"bit_xor(xxhash64({row_hash})) AS checksum")
     )
 
 
@@ -113,10 +114,18 @@ def materialize_triples(
     }
 
 
-def verify_lineage(spark: SparkSession, path: str, stage: str = "materialize") -> bool:
+def verify_lineage(
+    spark: SparkSession,
+    path: str,
+    stage: str = "materialize",
+    catalog: str | object = "parquet",
+) -> bool:
     """Audit: recompute per-bucket checksums from every stored row and
-    compare with the ledger."""
-    sink = ParquetLedgerSink(spark, path)
+    compare with the ledger. `catalog` names the storage binding as in
+    `materialize_triples` ("parquet", "iceberg" or a
+    kgforge.io.catalog.TripleSink instance); the audit reads only
+    through the sink protocol (ledger, read_buckets)."""
+    sink = resolve_sink(spark, path, catalog)
     lin = sink.ledger(stage)
     if lin is None:
         return False

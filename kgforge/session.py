@@ -115,3 +115,10 @@ def local_df(spark, rows, schema):
     return spark.createDataFrame(
         pd.DataFrame(rows or None, columns=cols), schema
     )
+
+
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal, for expressions composed as
+    SQL text and parsed on the JVM in one call (`F.expr`/`selectExpr`)
+    instead of one py4j round trip per Column-API node."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -124,11 +124,7 @@ def connected_components(
     detects the size class and fetches the edges. Larger inputs run
     the iterative alternating-star algorithm, whose O(log n) rounds
     each cost a constant number of distributed jobs."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = edges.selectExpr(f"`{src}` AS src", f"`{dst}` AS dst").filter("src != dst").distinct()
     if driver_max_edges is not None:
         probe = e.limit(driver_max_edges + 1).toPandas()
         if len(probe) <= driver_max_edges:
@@ -163,11 +159,10 @@ def connected_components(
 def canonical_map(edges: DataFrame, all_nodes: DataFrame | None = None) -> DataFrame:
     """sameAs edges → (node, canon) with min-IRI election; nodes absent
     from any edge map to themselves when `all_nodes(node)` is given."""
-    cc = connected_components(edges, "a", "b")
-    cmap = cc.select(F.col("node"), F.col("component").alias("canon"))
+    cmap = connected_components(edges, "a", "b").selectExpr("node", "component AS canon")
     if all_nodes is not None:
         missing = all_nodes.select("node").distinct().join(cmap, "node", "left_anti")
-        cmap = cmap.union(missing.select("node", F.col("node").alias("canon")))
+        cmap = cmap.union(missing.selectExpr("node", "node AS canon"))
     return cmap
 
 
@@ -187,26 +182,22 @@ def rewrite_triples(
     keeps one row per mentioning page), so the bucketed writer's
     salted repartitioning (kgforge.lineage.materialize_triples
     salt_partitions) exists for exactly this output."""
-    sm = cmap.select(F.col("node").alias("subj"), F.col("canon").alias("subj_canon"))
-    om = cmap.select(F.col("node").alias("obj"), F.col("canon").alias("obj_canon"))
+    sm = cmap.selectExpr("node AS subj", "canon AS subj_canon")
+    om = cmap.selectExpr("node AS obj", "canon AS obj_canon")
+    prov = [c for c in triples.columns if c not in ("subj", "pred", "obj", "obj_dt")]
     out = (
         triples.join(sm, "subj", "left")
         .join(om, "obj", "left")
-        .select(
-            F.coalesce("subj_canon", "subj").alias("subj"),
-            F.col("pred"),
+        .selectExpr(
+            "coalesce(subj_canon, subj) AS subj",
+            "pred",
             # literals (obj_dt non-null) are never rewritten even if
             # their lexical form collides with a node IRI
-            F.when(
-                F.col("obj_dt").isNull(), F.coalesce("obj_canon", "obj")
-            )
-            .otherwise(F.col("obj"))
-            .alias("obj"),
-            F.col("obj_dt"),
-            *[c for c in triples.columns if c not in ("subj", "pred", "obj", "obj_dt")],
+            "CASE WHEN obj_dt IS NULL THEN coalesce(obj_canon, obj) ELSE obj END AS obj",
+            "obj_dt",
+            *[f"`{c}`" for c in prov],
         )
     )
-    prov = [c for c in out.columns if c not in ("subj", "pred", "obj", "obj_dt")]
     if not collapse_prov:
         # full-row dedup: the grouping key includes provenance, so a
         # hub subject's rows spread across the shuffle by (obj, prov)
@@ -214,6 +205,6 @@ def rewrite_triples(
         return out.dropDuplicates()
     if prov:
         return out.groupBy("subj", "pred", "obj", "obj_dt").agg(
-            *[F.min(c).alias(c) for c in prov]
+            *[F.expr(f"min(`{c}`) AS `{c}`") for c in prov]
         )
     return out.dropDuplicates(["subj", "pred", "obj", "obj_dt"])

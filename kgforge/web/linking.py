@@ -24,15 +24,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.textops.dedup import _in_array_pairs
 
-def char_ngrams(col, n: int = 3):
-    """Char n-grams as a JVM expression (no Python): substrings at
-    every offset of lower(col)."""
-    s = F.lower(col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1))),
-        lambda i: F.substring(s, i, n),
-    )
+# Hot expressions are composed as SQL text and parsed on the JVM in one
+# call each: the Column-API spelling of the 24 signature minima, the
+# band structs and the pair predicates cost one or two py4j round trips
+# per node, thousands per pipeline run.
+
+
+def char_ngrams(col: str, n: int = 3) -> str:
+    """Char n-grams of SQL expression `col` as SQL text (no Python):
+    substrings at every offset of lower(col)."""
+    s = f"lower({col})"
+    return f"transform(sequence(1, greatest(length({s}) - {n - 1}, 1)), i -> substring({s}, i, {n}))"
+
+
+# max of gram-set cosine and normalized Levenshtein similarity
+_SET_COSINE = (
+    "greatest("
+    "CAST(size(array_intersect(array_distinct(grams_a), array_distinct(grams_b))) AS DOUBLE)"
+    " / sqrt(CAST(size(array_distinct(grams_a)) AS DOUBLE)"
+    " * CAST(size(array_distinct(grams_b)) AS DOUBLE)), "
+    "1.0D - CAST(levenshtein(lower(a), lower(b)) AS DOUBLE)"
+    " / CAST(greatest(length(lower(a)), length(lower(b))) AS DOUBLE))"
+)
 
 
 def score_set_cosine(pairs: DataFrame) -> DataFrame:
@@ -43,16 +58,7 @@ def score_set_cosine(pairs: DataFrame) -> DataFrame:
         in short strings, where one edit kills 3 of ~8 grams).
     Casing is already normalized by the gram builder; levenshtein runs
     on lower()."""
-    ga = F.array_distinct("grams_a")
-    gb = F.array_distinct("grams_b")
-    inter = F.size(F.array_intersect(ga, gb)).cast("double")
-    denom = F.sqrt(F.size(ga).cast("double") * F.size(gb).cast("double"))
-    set_cos = inter / denom
-    la, lb = F.lower("a"), F.lower("b")
-    lev_sim = F.lit(1.0) - F.levenshtein(la, lb).cast("double") / F.greatest(
-        F.length(la), F.length(lb)
-    ).cast("double")
-    return pairs.withColumn("score", F.greatest(set_cos, lev_sim))
+    return pairs.selectExpr("*", f"{_SET_COSINE} AS score")
 
 
 def compute_idf_df(surfaces: DataFrame, surface_col: str = "surface") -> DataFrame:
@@ -68,7 +74,7 @@ def compute_idf_df(surfaces: DataFrame, surface_col: str = "surface") -> DataFra
     n_df = base.agg(F.count(F.lit(1)).cast("double").alias("_n"))
     return (
         base.select(
-            F.explode(F.array_distinct(char_ngrams(F.col("surface")))).alias("g")
+            F.expr(f"explode(array_distinct({char_ngrams('surface')})) AS g")
         )
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -163,7 +169,9 @@ def candidate_pairs_minhash(
     signal and only produces quadratic garbage pairs.
 
     Pairs come from groupBy(band, key) + bounded collect_list +
-    in-array pair explosion — ONE shuffle of the banded rows. The
+    the dedup family's in-array pair explosion
+    (`kgforge.textops.dedup._in_array_pairs`, members
+    `struct(surface, ng)`) — ONE shuffle of the banded rows. The
     collected member array is bounded by `max_bucket`, so no hub row
     can form.
 
@@ -179,7 +187,6 @@ def candidate_pairs_minhash(
     """
     if profile is not None:
         max_bucket = profile.linking_max_bucket
-    bands = num_hashes // rows_per_band
     # repartition BEFORE the heavy map work: the distinct/groupBy
     # feeding this is AQE-coalesced to a handful of partitions (it is
     # small), which would strand the gram-explode + signature
@@ -187,80 +194,46 @@ def candidate_pairs_minhash(
     # explicit exchange costs one tiny shuffle and restores full
     # width; the groupBy(surface) below then reuses its partitioning.
     base = (
-        surfaces.select(F.col(surface_col).alias("surface"))
+        surfaces.selectExpr(f"`{surface_col}` AS surface")
         .distinct()
-        .repartition(F.col("surface"))
-        .select("surface", F.explode(F.array_distinct(char_ngrams(F.col("surface")))).alias("g"))
+        .repartition("surface")
+        .selectExpr("surface", f"explode(array_distinct({char_ngrams('surface')})) AS g")
     )
     # xxhash64 (8-byte long, zero allocation) not md5 (64-char string):
     # the signature stage hashes ~24× per gram row — md5 strings were
     # the engine's largest allocation source and a measured GC/scaling
     # drag; banding needs uniformity, not a cross-engine hash (the
-    # linking contract is F1-gated, not SQL-oracled)
-    sig = base.groupBy("surface").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("g"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
-        F.count(F.lit(1)).alias("ng"),  # distinct-gram count (free here)
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-
-    banded = sig.select(
-        F.struct("surface", "ng").alias("m"),
-        F.explode(F.array(*band_structs)).alias("bk"),
-    ).select("m", "bk.band", "bk.key")
-    grouped = (
-        banded.groupBy("band", "key")
-        .agg(F.collect_list("m").alias("mem"))
-        .filter((F.size("mem") >= 2) & (F.size("mem") <= max_bucket))
-    )
-    # spread before the C(n,2) explosion: the grouped table is
-    # byte-small (one row per bucket) so AQE coalesces it, which
-    # strands the quadratic pair explode on a couple of tasks
-    # (same fix as textops.dedup._in_array_pairs)
-    grouped = grouped.repartition(
-        int(surfaces.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
-    m = F.array_sort(F.col("mem"))
-    pair_structs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + F.lit(2), F.size(m)),
-                lambda y: F.struct(
-                    x["surface"].alias("a"),
-                    y["surface"].alias("b"),
-                    x["ng"].alias("ng_a"),
-                    y["ng"].alias("ng_b"),
-                ),
+    # linking contract is F1-gated, not SQL-oracled). The band keys are
+    # built over the minima inside the aggregate's result expression.
+    bands = ", ".join(
+        "struct({b} AS band, xxhash64({mins}) AS key)".format(
+            b=b,
+            mins=", ".join(
+                f"min(xxhash64({b * rows_per_band + r}, g))" for r in range(rows_per_band)
             ),
         )
+        for b in range(num_hashes // rows_per_band)
     )
-    pairs = (
-        grouped.select(F.explode(pair_structs).alias("p"))
-        .select("p.a", "p.b", "p.ng_a", "p.ng_b")
+    sig = base.groupBy("surface").agg(
+        F.expr("count(1) AS ng"),  # distinct-gram count (free here)
+        F.expr(f"array({bands}) AS bks"),
     )
+    grouped = (
+        sig.selectExpr("struct(surface AS gid, ng) AS m", "inline(bks)")
+        .groupBy("band", "key")
+        .agg(F.expr("collect_list(m) AS ids"))
+        .filter(f"size(ids) BETWEEN 2 AND {int(max_bucket)}")
+    )
+    pairs = _in_array_pairs(grouped, carry=("ng",))
     if prune_threshold is not None:
-        t = float(prune_threshold)
-        la, lb = F.length("a").cast("double"), F.length("b").cast("double")
-        ub_lev = F.lit(1.0) - F.abs(la - lb) / F.greatest(la, lb)
-        ub_cos = F.sqrt(
-            F.least("ng_a", "ng_b").cast("double")
-            / F.greatest("ng_a", "ng_b").cast("double")
+        t = f"CAST({float(prune_threshold)!r} AS DOUBLE)"
+        la, lb = "CAST(length(a) AS DOUBLE)", "CAST(length(b) AS DOUBLE)"
+        pairs = pairs.filter(
+            f"sqrt(CAST(least(ng_a, ng_b) AS DOUBLE) / CAST(greatest(ng_a, ng_b) AS DOUBLE)) >= {t}"
+            f" OR 1.0D - abs({la} - {lb}) / greatest({la}, {lb}) >= {t}"
         )
-        pairs = pairs.filter((ub_cos >= t) | (ub_lev >= t))
-    pairs = pairs.select("a", "b").distinct()
-    return pairs.withColumn("grams_a", char_ngrams(F.col("a"))).withColumn(
-        "grams_b", char_ngrams(F.col("b"))
+    return pairs.select("a", "b").distinct().selectExpr(
+        "a", "b", f"{char_ngrams('a')} AS grams_a", f"{char_ngrams('b')} AS grams_b"
     )
 
 
@@ -277,24 +250,20 @@ def link_surfaces(
     most common variant — are linked EXACTLY via a lower() groupBy
     (one cheap shuffle, no pairwise work), and the quadratic LSH stage
     runs only on the case-normalized representatives."""
-    base = surfaces.select(F.col(surface_col).alias("surface")).distinct()
-    norm = base.withColumn("norm", F.lower(F.col("surface")))
-    rep = norm.groupBy("norm").agg(F.min("surface").alias("rep"))
+    base = surfaces.selectExpr(f"`{surface_col}` AS surface").distinct()
+    norm = base.selectExpr("surface", "lower(surface) AS norm")
+    rep = norm.groupBy("norm").agg(F.expr("min(surface) AS rep"))
     with_rep = norm.join(rep, "norm")
 
     # exact tier: every surface ↔ its case-fold representative
     exact = (
-        with_rep.filter(F.col("surface") != F.col("rep"))
-        .select(
-            F.least("surface", "rep").alias("a"),
-            F.greatest("surface", "rep").alias("b"),
-            F.lit(1.0).alias("score"),
-        )
+        with_rep.filter("surface != rep")
+        .selectExpr("least(surface, rep) AS a", "greatest(surface, rep) AS b", "1.0D AS score")
         .distinct()
     )
 
     # similarity tier on representatives only
-    reps = rep.select(F.col("rep").alias("surface"))
+    reps = rep.selectExpr("rep AS surface")
     # the upper-bound prune is only sound for the 'set' scorer (max of
     # set-cosine and normalized Levenshtein)
     pairs = candidate_pairs_minhash(
@@ -304,8 +273,8 @@ def link_surfaces(
         profile=profile,
     )
     if scorer == "tfidf":
-        scored = score_tfidf_cosine(pairs, compute_idf_df(rep.select(F.col("rep").alias("surface"))))
+        scored = score_tfidf_cosine(pairs, compute_idf_df(reps))
     else:
         scored = score_set_cosine(pairs)
-    fuzzy = scored.filter(F.col("score") >= threshold).select("a", "b", "score")
+    fuzzy = scored.filter(f"score >= CAST({float(threshold)!r} AS DOUBLE)").select("a", "b", "score")
     return exact.unionByName(fuzzy)

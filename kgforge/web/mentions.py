@@ -13,16 +13,22 @@ regexp runs inside whole-stage codegen next to the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.mapping.spec import RDFS_LABEL
-from kgforge.triples.emit import _triple_struct, sanitize_expr
+from kgforge.mapping.spec import RDFS_LABEL, SANITIZE_CHARSETS
+from kgforge.session import sql_str
 from kgforge.web.corpus import DOMAIN, RELATIONS
 
 
-def _mention_iri_expr(surface: Column) -> Column:
-    return F.concat(F.lit(DOMAIN + "m_"), sanitize_expr(surface, "v5"))
+def _mention_iri_sql(surface: str) -> str:
+    """SQL text of the mention IRI of SQL expression `surface`: the v5
+    sanitizer (kgforge.triples.emit.sanitize_expr) under the web domain."""
+    charset = SANITIZE_CHARSETS["v5"]
+    return (
+        f"concat({sql_str(DOMAIN + 'm_')}, "
+        f"translate({surface}, {sql_str(charset)}, {sql_str('_' * len(charset))}))"
+    )
 
 
 def relation_pattern(phrase: str) -> str:
@@ -43,10 +49,8 @@ def extract_mention_triples(
     Label triples (rdfs:label raw-surface provenance, reference v5 G14)
     ride along so canonicalization can elect readable representatives.
     """
-    lines = pages.select(
-        F.col("url").alias("prov_url"),
-        F.col("warc_ts"),
-        F.explode(F.split(F.col(text_col), "\n")).alias("line"),
+    lines = pages.selectExpr(
+        "url AS prov_url", "warc_ts", f"explode(split(`{text_col}`, {sql_str(chr(10))})) AS line"
     )
 
     # ONE scan, ONE regex parse per (line, matching relation). The
@@ -62,38 +66,34 @@ def extract_mention_triples(
     # One entry PER matching relation (not a last-wins WHEN chain): a
     # line containing two relation phrases yields both mentions. The
     # cheap `contains` pre-check still keeps non-matching lines from
-    # running any regex.
+    # running any regex. The whole expression is SQL text, parsed on
+    # the JVM in one call.
     branches = []
     for rel, phrase in RELATIONS.items():
-        pat = relation_pattern(phrase)
-        cond = F.col("line").contains(f" {phrase} ")
-        branch = F.struct(
-            F.lit(DOMAIN + rel).alias("pred"),
-            F.regexp_extract(F.col("line"), pat, 1).alias("s_surf"),
-            F.regexp_extract(F.col("line"), pat, 2).alias("o_surf"),
+        pat = sql_str(relation_pattern(phrase))
+        branches.append(  # NULL when phrase absent
+            f"CASE WHEN contains(line, {sql_str(f' {phrase} ')}) THEN struct("
+            f"{sql_str(DOMAIN + rel)} AS pred, regexp_extract(line, {pat}, 1) AS s_surf, "
+            f"regexp_extract(line, {pat}, 2) AS o_surf) END"
         )
-        branches.append(F.when(cond, branch))  # NULL when phrase absent
 
-    def triples_of(p):
-        s_iri = _mention_iri_expr(p["s_surf"])
-        o_iri = _mention_iri_expr(p["o_surf"])
-        ok = (p["s_surf"] != "") & (p["o_surf"] != "")
-        null_dt = F.lit(None).cast("string")
-        structs = [F.when(ok, _triple_struct(s_iri, p["pred"], o_iri, null_dt))]
-        if with_labels:
-            label = F.lit(RDFS_LABEL)
-            structs.append(F.when(ok, _triple_struct(s_iri, label, p["s_surf"], F.lit(""))))
-            structs.append(F.when(ok, _triple_struct(o_iri, label, p["o_surf"], F.lit(""))))
-        return F.array(*structs)
-
-    parsed_arr = F.array_compact(F.array(*branches))
-    arr = F.array_compact(F.flatten(F.transform(parsed_arr, triples_of)))
-    out = lines.select(
-        F.explode(arr).alias("t"), "prov_url", "warc_ts"
-    ).select("t.subj", "t.pred", "t.obj", "t.obj_dt", "prov_url", "warc_ts")
+    s_iri, o_iri = _mention_iri_sql("p.s_surf"), _mention_iri_sql("p.o_surf")
+    structs = [(s_iri, "p.pred", o_iri, "CAST(NULL AS STRING)")]
+    if with_labels:
+        label = sql_str(RDFS_LABEL)
+        structs += [(s_iri, label, "p.s_surf", "''"), (o_iri, label, "p.o_surf", "''")]
+    triples_of = ", ".join(
+        f"CASE WHEN p.s_surf != '' AND p.o_surf != '' THEN struct("
+        f"{s} AS subj, {pr} AS pred, {o} AS obj, {dt} AS obj_dt) END"
+        for s, pr, o, dt in structs
+    )
+    arr = (
+        f"array_compact(flatten(transform(array_compact(array({', '.join(branches)})), "
+        f"p -> array({triples_of}))))"
+    )
+    out = lines.selectExpr(f"inline({arr})", "prov_url", "warc_ts")
     if dedup:
         out = out.groupBy("subj", "pred", "obj", "obj_dt").agg(
-            F.min("prov_url").alias("prov_url"),
-            F.min("warc_ts").alias("warc_ts"),
+            F.expr("min(prov_url) AS prov_url"), F.expr("min(warc_ts) AS warc_ts")
         )
     return out

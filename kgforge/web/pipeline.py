@@ -15,14 +15,20 @@ kgforge.lineage). Shuffle inventory at scale:
   3. CC iterations (edge list is cluster-sized, tiny vs corpus)
   4. canonical-map joins + final dedup
 Everything else is narrow. html never crosses a shuffle.
+
+No stage runs Python per row: extraction is a Catalyst regex chain
+(kgforge.web.extract) that fuses into the mention stage's generated
+code, so a run starts no Python worker. The hot expressions are
+composed as SQL text and parsed on the JVM in one call each, which
+keeps plan construction to about a thousand py4j round trips per run.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kgforge.mapping.spec import RDFS_LABEL
+from kgforge.session import sql_str
 from kgforge.web.canon import canonical_map, rewrite_triples
 from kgforge.web.extract import extract_text
 from kgforge.web.linking import link_surfaces
@@ -32,8 +38,8 @@ from kgforge.web.mentions import extract_mention_triples
 def surfaces_of(mention_triples: DataFrame) -> DataFrame:
     """Distinct (iri, surface) pairs from the label triples."""
     return (
-        mention_triples.filter(F.col("pred") == RDFS_LABEL)
-        .select(F.col("subj").alias("iri"), F.col("obj").alias("surface"))
+        mention_triples.filter(f"pred = {sql_str(RDFS_LABEL)}")
+        .selectExpr("subj AS iri", "obj AS surface")
         .distinct()
     )
 
@@ -59,9 +65,8 @@ def run_pipeline(
     guards; hand its salt_partitions to materialize_triples for the
     write stage."""
     if text_from_html:
-        extracted = extract_text(pages, "html", "text_extracted")
-        pages_txt = extracted.select(
-            "url", "warc_ts", F.col("text_extracted").alias("text"), "lang"
+        pages_txt = extract_text(pages, "html", "text_extracted").selectExpr(
+            "url", "warc_ts", "text_extracted AS text", "lang"
         )
     else:
         pages_txt = pages.select("url", "warc_ts", "text", "lang")
@@ -74,21 +79,17 @@ def run_pipeline(
     if persist_intermediate:
         surfaces = surfaces.persist()
     same_as = link_surfaces(
-        surfaces.select(F.col("surface")),
+        surfaces.select("surface"),
         threshold=link_threshold,
         scorer=scorer,
         profile=profile,
     )
     # sameAs edges between surface IRIs (join back surface → iri)
-    s1 = surfaces.select(F.col("surface").alias("a"), F.col("iri").alias("iri_a"))
-    s2 = surfaces.select(F.col("surface").alias("b"), F.col("iri").alias("iri_b"))
-    edges = (
-        same_as.join(s1, "a").join(s2, "b").select(
-            F.col("iri_a").alias("a"), F.col("iri_b").alias("b"), "score"
-        )
-    )
+    s1 = surfaces.selectExpr("surface AS a", "iri AS iri_a")
+    s2 = surfaces.selectExpr("surface AS b", "iri AS iri_b")
+    edges = same_as.join(s1, "a").join(s2, "b").selectExpr("iri_a AS a", "iri_b AS b", "score")
 
-    all_nodes = surfaces.select(F.col("iri").alias("node"))
+    all_nodes = surfaces.selectExpr("iri AS node")
     cmap = canonical_map(edges, all_nodes)
     canonical = rewrite_triples(mention_triples, cmap)
 

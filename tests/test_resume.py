@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 import pytest
 
-from kgforge.io.catalog import ParquetLedgerSink
+from kgforge.io.catalog import ParquetLedgerSink, TripleSink
 from kgforge.io.write import write_triples
 from kgforge.lineage import materialize_triples, verify_lineage
 
@@ -330,3 +330,64 @@ def test_null_subject_write_fails_clean(spark, tmp_path, salt):
         )
     left = os.listdir(path) if os.path.exists(path) else []
     assert not [d for d in left if d.startswith("subj_bucket=") or d == "_lineage"]
+
+
+class _OrcSink(TripleSink):
+    """A sink with another layout: ORC data under <root>/data and a JSON
+    ledger under <root>/ledger. Nothing at <root> reads as parquet, so
+    only an audit that goes through the sink protocol can check it."""
+
+    def __init__(self, spark, root):
+        self.spark, self.data, self.led = spark, os.path.join(root, "data"), os.path.join(root, "ledger")
+
+    def ledger(self, stage):
+        if not os.path.exists(self.led):
+            return None
+        return (
+            self.spark.read.schema(ParquetLedgerSink.LINEAGE_SCHEMA)
+            .json(self.led)
+            .filter(F.col("stage") == stage)
+        )
+
+    def repair(self, done):
+        torn = sorted(self.bucket_census() - done)
+        for b in torn:
+            shutil.rmtree(os.path.join(self.data, f"subj_bucket={b}"))
+        return torn
+
+    def append(self, df, max_records_per_file):
+        df.write.mode("append").partitionBy("subj_bucket").orc(self.data)
+
+    def bucket_census(self):
+        if not os.path.exists(self.data):
+            return set()
+        return {int(n.split("=")[1]) for n in os.listdir(self.data) if n.startswith("subj_bucket=")}
+
+    def read_buckets(self, buckets):
+        table = self.spark.read.orc(self.data)
+        return table if buckets is None else table.filter(F.col("subj_bucket").isin(buckets))
+
+    def commit(self, stage, lineage_rows):
+        self.spark.createDataFrame(lineage_rows, ParquetLedgerSink.LINEAGE_SCHEMA).write.mode(
+            "append"
+        ).json(self.led)
+
+
+def test_audit_through_sink_instance(spark, tmp_path):
+    """verify_lineage takes the same catalog= as materialize_triples and
+    audits a non-parquet TripleSink through the protocol: it passes on
+    the written table and fails once a row lands outside the ledger."""
+    root = str(tmp_path / "orc")
+    sink = _OrcSink(spark, root)
+    m = materialize_triples(_triples(spark), root, n_buckets=8, catalog=sink)
+    assert m["buckets_written"] == 8 and m["rows_written"] == 500
+    assert verify_lineage(spark, root, catalog=sink)
+    assert verify_lineage(spark, root, stage="other", catalog=sink) is False
+
+    from kgforge.io.catalog import subj_bucket
+
+    sink.append(_triples(spark, 1).withColumn("subj_bucket", subj_bucket(8)), 0)
+    assert verify_lineage(spark, root, catalog=sink) is False
+    # the iceberg binding refuses cleanly when its runtime jar is absent
+    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
+        verify_lineage(spark, root, catalog="iceberg")

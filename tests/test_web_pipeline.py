@@ -27,8 +27,10 @@ def pages(spark, corpus):
 
 # ------------------------------------------------------------- extraction
 def test_extract_byte_identity_single_node(corpus):
-    """The pinned extractor reproduces ground-truth text byte-for-byte."""
-    for url, ts, html, text, lang in corpus.pages[:50]:
+    """The pinned extractor reproduces ground-truth text byte-for-byte
+    (and with it test_extract_byte_identity_spark pins the Catalyst
+    extractor to the reference on the whole fixture corpus)."""
+    for url, ts, html, text, lang in corpus.pages:
         assert extract_text_py(html) == text, url
 
 
@@ -284,11 +286,112 @@ def test_tfidf_large_vocabulary_no_driver_state(spark):
     pairs = spark.createDataFrame(
         [(dup, dup + " ", None, None), (surfaces[1], surfaces[2], None, None)],
         "a string, b string, grams_a array<string>, grams_b array<string>",
-    ).select(
-        "a", "b",
-        char_ngrams(F.col("a")).alias("grams_a"),
-        char_ngrams(F.col("b")).alias("grams_b"),
-    )
+    ).selectExpr("a", "b", f"{char_ngrams('a')} AS grams_a", f"{char_ngrams('b')} AS grams_b")
     got = {r.a: r.score for r in score_tfidf_cosine(pairs, idf).collect()}
     assert got[dup] > 0.9  # near-duplicate scores high
     assert 0.0 <= got[surfaces[1]] < 0.5  # unrelated noise scores low
+
+
+# ------------------------------------------------------------- no Python
+def test_pipeline_plan_runs_no_python(spark, pages):
+    """The executed plan of the canonical triples holds the extraction
+    chain and no Python-evaluation node: no Python worker is started."""
+    canonical = run_pipeline(pages, text_from_html=True)["canonical_triples"]
+    canonical.collect()
+    plan = canonical._jdf.queryExecution().executedPlan().toString()
+    assert "<(head|script|style|nav|header|footer)" in plan  # the extraction chain
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+
+
+def test_pipeline_null_html_page(spark, corpus):
+    """A page with NULL html extracts to NULL text and yields no
+    triples; the rest of the run is unaffected."""
+    from pyspark.sql import types as T
+
+    from kgforge.session import local_df
+
+    null_url = "https://null.example.org/page"
+    rows = corpus.pages + [(null_url, corpus.pages[0][1], None, "", "en")]
+    schema = T.StructType(
+        [T.StructField(n, t, True) for n, t in (
+            ("url", T.StringType()), ("warc_ts", T.TimestampType()), ("html", T.BinaryType()),
+            ("text", T.StringType()), ("lang", T.StringType()),
+        )]
+    )
+    out = run_pipeline(local_df(spark, rows, schema).repartition(8), text_from_html=True)
+    texts = out["pages_text"].filter(F.col("url") == null_url).collect()
+    assert [r.text for r in texts] == [None]
+    triples = out["canonical_triples"].collect()
+    assert null_url not in {r.prov_url for r in triples}
+    got = {(r.subj, r.pred, r.obj) for r in triples if r.obj_dt is None}
+    want = C.true_canonical_triples(corpus)
+    tp = len(got & want)
+    assert tp / len(got) >= 0.95 and tp / len(want) >= 0.95
+
+
+# ------------------------------------------------------------- LSH pairs
+@pytest.mark.parametrize("prune", [None, 0.78])
+def test_candidate_pairs_minhash_brute_force(spark, prune):
+    """candidate_pairs_minhash equals a Python enumeration: pairs of
+    surfaces sharing a band key (the band's tuple of minima) in a bucket
+    of 2..max_bucket members that pass the prune bounds. Only the hash
+    primitive xxhash64(i, gram) comes from Spark."""
+    import math
+    import random
+
+    from kgforge.web.linking import candidate_pairs_minhash
+
+    rng = random.Random(11)
+    words = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 7))) for _ in range(30)]
+    surfaces = {f"{rng.choice(words)} {rng.choice(words)}" for _ in range(120)}
+    # planted families: typo variants, and one 9-member family larger
+    # than max_bucket that shares most grams
+    for w in words[:10]:
+        surfaces |= {f"{w} corp", f"{w} corp.", f"{w}s corp", f"The {w} Corp"}
+    surfaces |= {f"kelvin station {i}" for i in range(9)}
+    surfaces = sorted(surfaces)
+    num_hashes, rows, max_bucket = 24, 3, 6
+
+    def grams(s):
+        s = s.lower()
+        return {s[i:i + 3] for i in range(max(len(s) - 2, 1))}
+
+    all_grams = sorted(set().union(*map(grams, surfaces)))
+    hashed = spark.createDataFrame([(g,) for g in all_grams], "g string").selectExpr(
+        "g", *[f"xxhash64({i}, g) AS h{i}" for i in range(num_hashes)]
+    )
+    h = {r.g: [r[f"h{i}"] for i in range(num_hashes)] for r in hashed.collect()}
+
+    buckets: dict = {}
+    for s in surfaces:
+        sig = [min(h[g][i] for g in grams(s)) for i in range(num_hashes)]
+        for b in range(num_hashes // rows):
+            buckets.setdefault((b, tuple(sig[b * rows:(b + 1) * rows])), []).append(s)
+
+    def passes(a, b):
+        if prune is None:
+            return True
+        na, nb = len(grams(a)), len(grams(b))
+        la, lb = len(a), len(b)
+        return (
+            math.sqrt(min(na, nb) / max(na, nb)) >= prune
+            or 1.0 - abs(la - lb) / max(la, lb) >= prune
+        )
+
+    want = {
+        (a, b)
+        for mem in buckets.values()
+        if 2 <= len(mem) <= max_bucket
+        for i, a in enumerate(sorted(mem))
+        for b in sorted(mem)[i + 1:]
+        if passes(a, b)
+    }
+    assert any(len(m) > max_bucket for m in buckets.values())  # the guard fires
+    df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    got = candidate_pairs_minhash(
+        df, num_hashes=num_hashes, rows_per_band=rows, max_bucket=max_bucket, prune_threshold=prune
+    ).select("a", "b").collect()
+    assert len(got) == len({tuple(r) for r in got})  # distinct
+    assert {tuple(r) for r in got} == want
+    assert want  # non-vacuous

@@ -1,8 +1,10 @@
 """Per-stage profiler for entry queries (no Spark UI in the sandbox).
 
 Runs each named query once warm + once timed with the event log on,
-and prints the timed run's Janino compiles (count and milliseconds): a
-plan whose generated classes outgrow Spark's codegen cache recompiles
+and prints the timed run's py4j round trips (driver→JVM calls and
+object releases: the cost of building a plan through the Column API,
+one or two per node) and its Janino compiles (count and milliseconds):
+a plan whose generated classes outgrow Spark's codegen cache recompiles
 on every warm run. It then parses the log into a per-stage table:
 wall, summed task CPU /
 run time, task count, shuffle bytes/records in and out, and the RDD
@@ -37,6 +39,21 @@ def _compiled(spark) -> tuple[int, float]:
     return count, ns / 1e6
 
 
+def _py4j_counter(spark) -> dict:
+    """Count every py4j round trip from here on: wraps the gateway
+    client's send_command, which both calls and releases go through."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = {"n": 0}
+    send = client.send_command
+
+    def counted(*args, **kwargs):
+        sent["n"] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    return sent
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sf1.0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -61,6 +78,7 @@ def main():
             "spark.eventLog.rolling.enabled": "false",
         },
     )
+    py4j = _py4j_counter(spark)
     qs = entry.queries()
     # warm
     next(iter(qs.values()))(spark, sf_dir).count()
@@ -71,11 +89,16 @@ def main():
     for qn in qnames:
         spark.sparkContext.setJobDescription(qn)
         n0, ms0 = _compiled(spark)
+        calls0 = py4j["n"]
         t0 = time.perf_counter()
         qs[qn](spark, sf_dir).count()
         marks[qn] = time.perf_counter() - t0
+        calls = py4j["n"] - calls0
         n1, ms1 = _compiled(spark)
-        print(f"{qn}: {marks[qn]:.3f}  compiles {n1 - n0} ({ms1 - ms0:.0f} ms)", flush=True)
+        print(
+            f"{qn}: {marks[qn]:.3f}  py4j {calls}  compiles {n1 - n0} ({ms1 - ms0:.0f} ms)",
+            flush=True,
+        )
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
