@@ -8,7 +8,8 @@ Extensions over the reference CLI (documented, all optional):
   --mode shared        v1 shared-store accumulation (one deduped dump,
                        csv2rdf.py:275-290) instead of per-source files
   --format             turtle (default) | ntriples | parquet (the
-                       bucketed triple-table layout, kgforge.io.write)
+                       bucketed triple-table layout, kgforge.io.write;
+                       its bucket count is sized from the input)
   --out DIR            output directory (default: cwd)
   --master URL         Spark master (default: local[$SPARK_GRAFT_CPUS])
   --sparql FILE --triples PATH
@@ -43,6 +44,21 @@ def _tsv_escape(v) -> str:
         .replace("\n", "\\n")
         .replace("\r", "\\r")
     )
+
+
+def _n_buckets(triples) -> int:
+    """Bucket count of a `--format parquet` table, sized from its input:
+    one bucket per `spark.sql.files.maxPartitionBytes` of scanned
+    bytes (`kgforge.triples.emit.scan_bytes`), clamped to [1, 64], so
+    a small CSV is not spread over one tiny file per subject bucket.
+    64, the write's default, when the plan reads no files."""
+    from kgforge.triples.emit import scan_bytes
+
+    sized = scan_bytes(triples)
+    if sized is None:
+        return 64
+    total, split = sized
+    return max(1, min(64, -(-total // split)))
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -111,7 +127,9 @@ def main(argv: list[str] | None = None) -> int:
     for name, triples in results.items():
         base = "shared" if name == "__shared__" else name
         if args.format == "parquet":
-            write_triples(triples, os.path.join(args.out, base + ".triples"))
+            write_triples(
+                triples, os.path.join(args.out, base + ".triples"), _n_buckets(triples)
+            )
             print(f"wrote {os.path.join(args.out, base + '.triples')}/")
             continue
         tmp = os.path.join(args.out, f".{base}._tmp")

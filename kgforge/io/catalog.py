@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from kgforge.io.fs import delete_path, list_dir_names, path_exists
 from kgforge.session import local_df, sql_str
+from kgforge.triples.emit import TRIPLE_FIELDS
 
 _BUCKET_PREFIX = "subj_bucket="
 
@@ -129,11 +130,17 @@ class TripleSink(ABC):
 
 class ParquetLedgerSink(TripleSink):
     """Default sink: parquet partitioned into subj_bucket=N dirs + a
-    parquet lineage ledger under <path>/_lineage."""
+    parquet lineage ledger under <path>/_lineage.
+
+    Both are opened with the schema the sink owns (TABLE_SCHEMA,
+    LINEAGE_SCHEMA) instead of one Spark job per open that infers it
+    from a data file. Columns a caller wrote beyond the triple (e.g.
+    provenance) are not part of the sink's reads."""
 
     LINEAGE_SCHEMA = (
         "stage string, bucket int, row_count long, checksum long, run_id string"
     )
+    TABLE_SCHEMA = ", ".join(f"{c} string" for c in TRIPLE_FIELDS) + ", subj_bucket int"
 
     def __init__(
         self,
@@ -151,7 +158,7 @@ class ParquetLedgerSink(TripleSink):
     def ledger(self, stage: str) -> DataFrame | None:
         if not path_exists(self.spark, self._ledger_path):
             return None
-        return self.spark.read.parquet(self._ledger_path).filter(
+        return self.spark.read.schema(self.LINEAGE_SCHEMA).parquet(self._ledger_path).filter(
             F.col("stage") == stage
         )
 
@@ -195,7 +202,7 @@ class ParquetLedgerSink(TripleSink):
         return set(self._bucket_dirs())
 
     def read_buckets(self, buckets: list[int] | None) -> DataFrame:
-        table = self.spark.read.parquet(self.path)
+        table = self.spark.read.schema(self.TABLE_SCHEMA).parquet(self.path)
         if buckets is None:
             return table
         return table.filter(F.col("subj_bucket").isin(buckets))

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from kgforge.session import local_df
+from kgforge.session import arrow_rows, bounded_arrow, local_df
 from kgforge.triples.emit import TRIPLE_FIELDS
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -108,10 +108,10 @@ def transitive_closure(
 
     Fast path: schema hierarchies are grammar-sized by construction
     (module docstring), so when the deduped edge count is within
-    `max_driver_edges` the closure is computed on the driver (one
-    collect + per-source DFS) — one job instead of ~4 jobs per
-    doubling round. Same bounded-with-distributed-fallback pattern as
-    web.canon's union-find fast path.
+    `max_driver_edges` the closure is computed on the driver from one
+    `kgforge.session.bounded_arrow` probe (per-source DFS) instead of
+    ~4 jobs per doubling round. Same bounded-with-distributed-fallback
+    pattern as web.canon's union-find fast path.
 
     Fallback (edge count above the bound, or `max_driver_edges=0`):
     CANONICAL path doubling with min-length strata (round-5 rewrite).
@@ -135,18 +135,10 @@ def transitive_closure(
         # (x, x) pairs never loses strict reachability: shortest paths
         # are simple, so no canonical split ever needs a self pair.
         e = e.filter(F.col("src") != F.col("dst"))
-    e = e.distinct().localCheckpoint()
-
-    n_edges = e.count()
-    if n_edges == 0:
-        # empty hierarchy (the common case: no schema triples) — the
-        # loop below would still cost a probe job + a join per
-        # iteration before discovering there is nothing to close
-        return e
-    if n_edges <= max_driver_edges:
-        out = closure_pairs(
-            [(r.src, r.dst) for r in e.collect()], reflexive_on_cycle
-        )
+    e = e.distinct()
+    probe = bounded_arrow(e, max_driver_edges)
+    if probe is not None:
+        out = closure_pairs(arrow_rows(probe, "src", "dst"), reflexive_on_cycle)
         return local_df(e.sparkSession, out, "src string, dst string")
     # canonical doubling over min-length strata (docstring): `acc`
     # carries (src, dst, len = minimum path length found so far);
@@ -193,13 +185,14 @@ def seeded_reachable(
     edges: DataFrame,
     seeds: list[str],
     max_iter: int = 128,
-    max_driver_edges: int = 200_000,
     max_driver_nodes: int = 2_000_000,
     isin_frontier: int = 1024,
 ) -> DataFrame | None:
     """Nodes reachable from `seeds` by >=1 step over (src, dst) edges
     — the seed-constrained counterpart of `transitive_closure` for
-    constant-endpoint property paths (`:x p+ ?y`).
+    constant-endpoint property paths (`:x p+ ?y`) whose step relation
+    is too large to walk on the driver (the caller's bounded probe
+    decided that; kgforge.sparql._seeded_path_df).
 
     Returns a 1-column DataFrame `node`. A seed appears in the output
     only when it is RE-reached (self-edge or cycle) — SPARQL
@@ -220,20 +213,10 @@ def seeded_reachable(
     Dedup happens driver-side: no per-round distinct shuffle, no
     checkpoint chain, no convergence-probe job. The full-closure route
     this replaces materializes all-pairs reachability first and
-    filters after (round-5 verdict #1). Small-graph fast path: a
-    bounded limit-probe collects edge sets under `max_driver_edges`
-    whole and walks them with one DFS (grammar-sized hierarchies — one
-    job total, same pattern as transitive_closure).
+    filters after (round-5 verdict #1).
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst")
-    probe = e.limit(max_driver_edges + 1).collect()
-    if len(probe) <= max_driver_edges:
-        adj: dict = {}
-        for r in probe:
-            adj.setdefault(r.src, set()).add(r.dst)
-        seen = _reach(adj, set(seeds))
-        return local_df(spark, [(n,) for n in sorted(seen)], "node string")
     frontier: list[str] = sorted(set(seeds))
     reached: set[str] = set()
     for _ in range(max_iter):
@@ -273,14 +256,14 @@ def rdfs_closure(
     321-340) that license exactly these. Output carries the core
     (subj, pred, obj, obj_dt) columns, deduped.
 
-    Execution shape: ONE bounded job collects all four schema edge
-    sets (they are grammar-sized by construction; `max_driver_edges`
-    guards the bound and falls back to fully-distributed filters +
-    iterative doubling beyond it); hierarchies close on the driver
-    and come back as local relations, so every inference join is a
-    broadcast of a local relation — no corpus scan is ever re-executed
-    just to build a broadcast side, and rdfs2+rdfs3 share one fused
-    join pass.
+    Execution shape: one `kgforge.session.bounded_arrow` probe fetches
+    all four schema edge sets (they are grammar-sized by construction;
+    `max_driver_edges` guards the bound and falls back to
+    fully-distributed filters + iterative doubling beyond it);
+    hierarchies close on the driver and come back as local relations,
+    so every inference join is a broadcast of a local relation — no
+    corpus scan is ever re-executed just to build a broadcast side,
+    and rdfs2+rdfs3 share one fused join pass.
     """
     base = triples.select(*TRIPLE_FIELDS)
     spark = base.sparkSession
@@ -290,17 +273,16 @@ def rdfs_closure(
     schema_edges = base.filter(F.col("pred").isin(*SCHEMA_PREDS)).select(
         "subj", "pred", "obj"
     )
-    # ONE scan job: collect up to bound+1 rows — if the limit is hit,
-    # the schema exceeds the driver bound and we go distributed
-    rows = schema_edges.limit(max_driver_edges + 1).collect()
-    if len(rows) <= max_driver_edges:
+    probe = bounded_arrow(schema_edges, max_driver_edges)
+    if probe is not None:
+        rows = arrow_rows(probe, "subj", "pred", "obj")
 
         def _local(pred: str, close: bool) -> DataFrame:
-            pairs = [(r.subj, r.obj) for r in rows if r.pred == pred]
+            pairs = [(s, o) for s, p, o in rows if p == pred]
             if close:
                 pairs = closure_pairs(pairs)
             else:
-                pairs = sorted({(s, d) for s, d in pairs})
+                pairs = sorted(set(pairs))
             return local_df(spark, pairs, edge_schema)
 
         sco = _local(RDFS_SUBCLASSOF, close=True)

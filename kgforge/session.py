@@ -117,6 +117,41 @@ def local_df(spark, rows, schema):
     )
 
 
+def bounded_arrow(df, n: int):
+    """The rows of `df` as a `pyarrow.Table`, or None when it has more
+    than `n` — the bounded probe behind every driver-sized fast path
+    (closures, reachability, union-find): it both decides the size
+    class and fetches the rows.
+
+    `limit(n + 1).toArrow()` is ONE Spark job over a scan: Arrow
+    collection runs the limited plan over every partition at once
+    (each stops after n + 1 rows, one task gathers them); a shuffle
+    below the limit adds its own stage's job. `limit(n + 1).collect()`
+    is Spark's incremental take instead — one partition, then 4x as
+    many, then the rest, each round its own job — so it fired 2-3 jobs
+    on a multi-partition scan for the same rows. A plan the optimizer
+    folds to a local relation (driver-built rows, filtered) is the one
+    case `collect()` serves with no job at all, where Arrow collection
+    would still launch one."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    lim = df.limit(n + 1)
+    plan = lim._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        table = pa.Table.from_pylist(
+            [r.asDict() for r in lim.collect()], schema=to_arrow_schema(lim.schema)
+        )
+    else:
+        table = lim.toArrow()
+    return None if table.num_rows > n else table
+
+
+def arrow_rows(table, *cols: str) -> list[tuple]:
+    """`cols` of a `bounded_arrow` table as row tuples."""
+    return list(zip(*(table.column(c).to_pylist() for c in cols)))
+
+
 def sql_str(s: str) -> str:
     """`s` as a Spark SQL string literal, for expressions composed as
     SQL text and parsed on the JVM in one call (`F.expr`/`selectExpr`)

@@ -1594,15 +1594,28 @@ def _path_df(triples: DataFrame, path) -> DataFrame:
 
 
 def _seeded_path_df(
-    triples: DataFrame, p: PathPlus | PathStar, s: Term, o: Term
+    triples: DataFrame,
+    p: PathPlus | PathStar,
+    s: Term,
+    o: Term,
+    max_driver_edges: int = 200_000,
 ) -> DataFrame | None:
     """Constant-endpoint pushdown for top-level `+`/`*` paths (round-5
     verdict #1): `:x p+ ?y` / `?x p+ :y` evaluate as seed-constrained
-    reachability — a frontier BFS over the step relation from the
-    constant side — instead of materializing the FULL predicate
-    closure and filtering it afterwards. Touched rows are proportional
-    to the reachable subgraph, the plan a seeded path query needs at
-    crawl scale (BENCH/path_closure seeded legs).
+    reachability from the constant side instead of materializing the
+    FULL predicate closure and filtering it afterwards.
+
+    Driver route: one `kgforge.session.bounded_arrow` probe fetches the
+    step relation (src, dst, dst_dt) when it holds at most
+    `max_driver_edges` rows; the driver walks its IRI edges from the
+    seed (`kgforge.rdfs._reach`), adds the literal tails and the `*`
+    identity row, and returns the answer as one local relation — so
+    executing the query scans, joins and dedups nothing. Above the
+    bound, a frontier BFS over the step relation
+    (`kgforge.rdfs.seeded_reachable`) whose touched rows are
+    proportional to the reachable subgraph — the plan a seeded path
+    query needs at crawl scale (BENCH/path_closure seeded legs) — plus
+    a literal-tail join.
 
     Applies when either endpoint is a constant IRI. Returns None (the
     caller falls back to `_path_df`, the full closure — identical
@@ -1612,16 +1625,46 @@ def _seeded_path_df(
     not drain within its round budget (pathological depth). Literal-
     object steps re-enter as FINAL steps only, same rule as _plus_df.
     """
-    from kgforge.rdfs import seeded_reachable
+    from kgforge.rdfs import _reach, seeded_reachable
+    from kgforge.session import arrow_rows, bounded_arrow, local_df
 
     s_const = s.value if isinstance(s, Iri) else None
     o_const = o.value if isinstance(o, Iri) else None
     if s_const is None and o_const is None:
         return None
+    seed = s_const if s_const is not None else o_const
     e = _path_df(triples, p.elt)
+    probe = bounded_arrow(e, max_driver_edges)
+    if probe is not None:
+        # forward from a subject seed, backward (over IRI edges only: a
+        # path to an IRI endpoint never steps through a literal) from an
+        # object seed; literal tails hang off the seed and every
+        # reached node, forward only
+        adj: dict = {}
+        lits: dict = {}
+        for src, dst, dt in arrow_rows(probe, "src", "dst", "dst_dt"):
+            if dt is not None:
+                lits.setdefault(src, set()).add((dst, dt))
+            elif s_const is not None:
+                adj.setdefault(src, set()).add(dst)
+            else:
+                adj.setdefault(dst, set()).add(src)
+        reached = _reach(adj, [seed])
+        if s_const is not None:
+            rows = {(seed, n, None) for n in reached} | {
+                (seed, d, dt) for n in reached | {seed} for d, dt in lits.get(n, ())
+            }
+        else:
+            rows = {(n, seed, None) for n in reached}
+        if isinstance(p, PathStar):
+            rows.add((seed, seed, None))
+        return local_df(
+            triples.sparkSession,
+            sorted(rows, key=lambda r: (r[0], r[1], r[2] is not None, r[2] or "")),
+            "src string, dst string, dst_dt string",
+        )
     iri_e = e.filter(F.col("dst_dt").isNull()).select("src", "dst")
     null_dt = F.lit(None).cast("string")
-    from kgforge.session import local_df
 
     if s_const is not None:
         reached = seeded_reachable(iri_e, [s_const])

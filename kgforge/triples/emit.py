@@ -315,24 +315,14 @@ def _rule_array(rule: Rule, cols: dict[str, Column], base: int | None = None) ->
     return F.when(guard, arr).otherwise(F.array().cast(T.ArrayType(schema)))
 
 
-def _spread_small_scan(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the source scan cannot fill the
-    session's parallelism even at ideal split sizing.
-
-    A single-row-group parquet file (or an unsplittable multiLine CSV)
-    reads on 1-2 tasks no matter what `maxPartitionBytes` says, and the
-    per-row triple-build work (sanitize regexes, template concats,
-    map-side dedup) then serializes behind it — measured 1.5 s on 2
-    tasks for a 200k-row melt at the sf1.0 bench, 0.2 s spread.
-    The guard is byte-based and scale-adaptive: when total input size
-    >= shuffle_partitions x maxPartitionBytes the scan parallelizes
-    naturally and the extra exchange would shuffle a large table for
-    nothing, so it is skipped — a cluster-scale input never pays.
-    The input size is the summed `sizeInBytes` statistic of the
-    optimized plan's file-relation leaves: the file index already
-    holds it (any scheme), so nothing is listed or stat()ed here.
-    Non-file sources pass through untouched, and so does `df` when
-    anything in the probe fails."""
+def scan_bytes(df: DataFrame) -> tuple[int, int] | None:
+    """(input bytes, split bytes) of `df`'s file scans: the summed
+    `sizeInBytes` statistic of the optimized plan's file-relation
+    leaves — the file index already holds it (any scheme), so nothing
+    is listed or stat()ed here — and `spark.sql.files.maxPartitionBytes`
+    through Spark's own size parser (it accepts every form the conf
+    does: '134217728', '128m', '128MB', '1g', '64kb', '1t'). None when
+    the plan reads no files or anything in the probe fails."""
     spark = df.sparkSession
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
@@ -343,17 +333,37 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
             and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
         ]
         if not files:
-            return df
+            return None
         total = sum(int(str(leaf.stats().sizeInBytes())) for leaf in files)
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        # Spark's own size parser: accepts every form the conf does
-        # ('134217728', '128m', '128MB', '1g', '64kb', '1t')
-        max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        split = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
     except Exception:
+        return None
+    return total, int(split)
+
+
+def _spread_small_scan(df: DataFrame) -> DataFrame:
+    """Round-robin repartition when the source scan cannot fill the
+    session's parallelism even at ideal split sizing.
+
+    A single-row-group parquet file (or an unsplittable multiLine CSV)
+    reads on 1-2 tasks no matter what `maxPartitionBytes` says, and the
+    per-row triple-build work (sanitize regexes, template concats,
+    map-side dedup) then serializes behind it — measured 1.5 s on 2
+    tasks for a 200k-row melt at the sf1.0 bench, 0.2 s spread.
+    The guard is byte-based and scale-adaptive (`scan_bytes`): when
+    total input size >= shuffle_partitions x maxPartitionBytes the
+    scan parallelizes naturally and the extra exchange would shuffle a
+    large table for nothing, so it is skipped — a cluster-scale input
+    never pays. Non-file sources pass through untouched, and so does
+    `df` when anything in the probe fails."""
+    sized = scan_bytes(df)
+    if sized is None:
         return df
-    if total >= n_part * max_pb:
+    total, split = sized
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    if total >= n_part * split:
         return df
     return df.repartition(n_part)
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.session import arrow_rows, bounded_arrow
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
@@ -52,9 +54,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _cc_driver(pdf, spark, node_type=None) -> DataFrame:
-    """Exact union-find on the driver for SMALL edge lists (pdf is the
-    already-fetched pandas edge frame).
+def _cc_driver(edges: list[tuple], spark, node_type=None) -> DataFrame:
+    """Exact union-find on the driver for SMALL edge lists (`edges` is
+    the already-fetched (src, dst) list).
 
     The star loop costs ~2 Spark jobs per iteration; on a cluster-map
     sized edge list (tens of MB) that is pure fixed overhead — measured
@@ -63,9 +65,9 @@ def _cc_driver(pdf, spark, node_type=None) -> DataFrame:
     an explicit row-count threshold (see connected_components), so
     this is a bounded-by-construction collect, not a hot-path one.
 
-    Arrow on both hops (toPandas / createDataFrame-from-pandas): the
-    Row-object collect + pickle-per-tuple parallelize were themselves
-    a multi-second serial cost at ~0.5M edges."""
+    Arrow on both hops (the bounded_arrow probe / createDataFrame-from-
+    pandas): the Row-object collect + pickle-per-tuple parallelize were
+    themselves a multi-second serial cost at ~0.5M edges."""
     import pandas as pd
 
     parent: dict[str, str] = {}
@@ -78,7 +80,7 @@ def _cc_driver(pdf, spark, node_type=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for a0, b0 in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
+    for a0, b0 in edges:
         a, b = find(a0), find(b0)
         if a != b:
             # union by min so the root IS the component min
@@ -120,15 +122,17 @@ def connected_components(
     Adaptive strategy: edge lists at or under `driver_max_edges` rows
     (~100 MB of IRI pairs — sameAs graphs over DISTINCT surfaces are
     orders of magnitude smaller than the corpus) run exact union-find
-    on the driver — ONE job: a limit(N+1).toPandas() probe that both
-    detects the size class and fetches the edges. Larger inputs run
+    on the driver over one `kgforge.session.bounded_arrow` probe that
+    both detects the size class and fetches the edges. Larger inputs run
     the iterative alternating-star algorithm, whose O(log n) rounds
     each cost a constant number of distributed jobs."""
     e = edges.selectExpr(f"`{src}` AS src", f"`{dst}` AS dst").filter("src != dst").distinct()
     if driver_max_edges is not None:
-        probe = e.limit(driver_max_edges + 1).toPandas()
-        if len(probe) <= driver_max_edges:
-            return _cc_driver(probe, e.sparkSession, e.schema["src"].dataType)
+        probe = bounded_arrow(e, driver_max_edges)
+        if probe is not None:
+            return _cc_driver(
+                arrow_rows(probe, "src", "dst"), e.sparkSession, e.schema["src"].dataType
+            )
     e = e.localCheckpoint()
 
     def _sig(df: DataFrame) -> tuple:

@@ -216,8 +216,11 @@ def test_cli_end_to_end_turtle(spark, v1_conf, tmp_path):
 
 
 def test_cli_parquet_then_query(spark, v1_conf, tmp_path, capsys):
-    """`--format parquet` writes the bucketed triple table, and
-    `--sparql --triples` over it returns every converted triple."""
+    """`--format parquet` writes the bucketed triple table, with its
+    bucket count sized from the input (two small CSVs are far below
+    one maxPartitionBytes split: one bucket, not the write's default
+    64), and `--sparql --triples` over it returns every converted
+    triple."""
     from kgforge.__main__ import _tsv_escape, main
 
     conf, expected = v1_conf
@@ -228,6 +231,7 @@ def test_cli_parquet_then_query(spark, v1_conf, tmp_path, capsys):
     q.write_text("SELECT ?s ?p ?o WHERE { ?s ?p ?o }")
     capsys.readouterr()
     tpath = os.path.join(outdir, "shared.triples")
+    assert [d for d in os.listdir(tpath) if d.startswith("subj_bucket=")] == ["subj_bucket=0"]
     assert main(["--sparql", str(q), "--triples", tpath]) == 0
     lines = capsys.readouterr().out.splitlines()
     assert lines[0] == "s\tp\to"

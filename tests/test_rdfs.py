@@ -212,9 +212,10 @@ def test_transitive_closure_distributed_deep_chain(spark):
 
 def test_seeded_reachable_driver_and_distributed(spark):
     """Constant-endpoint path pushdown machinery: reachable-node set
-    from a seed, driver fast path vs distributed frontier BFS vs the
-    not-converged None fallback."""
-    from kgforge.rdfs import seeded_reachable
+    from a seed, the driver walk (`_reach`, what a path under its probe
+    bound runs) vs the distributed frontier BFS vs the not-converged
+    None fallback."""
+    from kgforge.rdfs import _reach, seeded_reachable
     from kgforge.session import local_df
 
     edges = [
@@ -222,23 +223,48 @@ def test_seeded_reachable_driver_and_distributed(spark):
         ("c", "d"),
         ("x", "y"),  # disconnected component
     ]
+    adj: dict = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
     e = local_df(spark, edges, "src string, dst string")
-    # driver fast path: cycle re-reaches the seed
+    # driver walk: the cycle re-reaches the seed
+    assert _reach(adj, ["a"]) == {"a", "b", "c", "d"}
+    # distributed frontier BFS gives the same set
     got = {r.node for r in seeded_reachable(e, ["a"]).collect()}
-    assert got == {"a", "b", "c", "d"}
-    # distributed frontier BFS (force it with max_driver_edges=0)
-    got2 = {
-        r.node
-        for r in seeded_reachable(e, ["a"], max_driver_edges=0).collect()
-    }
-    assert got2 == got
+    assert got == _reach(adj, ["a"])
     # seed with no outgoing edges: empty (not even the seed itself)
-    assert seeded_reachable(e, ["d"]).count() == 0
+    assert seeded_reachable(e, ["d"]).count() == 0 and not _reach(adj, ["d"])
     # acyclic seed is NOT re-reached
     got3 = {r.node for r in seeded_reachable(e, ["x"]).collect()}
-    assert got3 == {"y"}
+    assert got3 == _reach(adj, ["x"]) == {"y"}
     # round budget exhausted -> None (caller falls back to closure)
-    assert seeded_reachable(e, ["a"], max_iter=2, max_driver_edges=0) is None
+    assert seeded_reachable(e, ["a"], max_iter=2) is None
     # multi-seed union
     got4 = {r.node for r in seeded_reachable(e, ["x", "c"]).collect()}
-    assert got4 == {"y", "a", "b", "c", "d"}
+    assert got4 == _reach(adj, ["x", "c"]) == {"y", "a", "b", "c", "d"}
+
+
+def test_closure_probes_job_counts(spark, count_jobs):
+    """The driver-sized closures fetch their edges with one bounded
+    Arrow probe: `transitive_closure` fires 2 jobs on a small input
+    (the dedup's shuffle stage and the probe; it fired 5 with
+    checkpoint + count + collect) and `rdfs_closure` builds with 1
+    (its incremental-take probe fired 2)."""
+    edges = spark.createDataFrame(
+        [("A", "B"), ("B", "C"), ("C", "D"), ("X", "Y"), ("Y", "X")],
+        "src string, dst string",
+    )
+    jobs, closed = count_jobs(lambda: transitive_closure(edges))
+    assert jobs <= 2
+    assert {(r.src, r.dst) for r in closed.collect()} == {
+        ("A", "B"), ("A", "C"), ("A", "D"), ("B", "C"), ("B", "D"), ("C", "D"),
+        ("X", "Y"), ("Y", "X"),
+    }
+    rows = [
+        ("c:A", RDFS_SUBCLASSOF, "c:B", None),
+        ("c:B", RDFS_SUBCLASSOF, "c:C", None),
+        ("i:1", RDF_TYPE, "c:A", None),
+    ]
+    jobs, out = count_jobs(lambda: rdfs_closure(_triples_df(spark, rows)))
+    assert jobs <= 1
+    assert ("i:1", RDF_TYPE, "c:C", None) in tset(out)

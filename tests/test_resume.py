@@ -62,6 +62,19 @@ def test_materialize_and_audit(spark, tmp_path, catalog_of):
     assert spark.read.parquet(path).count() == 500
 
 
+def test_sink_opens_without_a_job(spark, tmp_path, count_jobs):
+    """The sink opens its table and ledger with the schemas it owns: no
+    schema-inference job per open, and the same rows and types."""
+    path = str(tmp_path / "open")
+    materialize_triples(_triples(spark), path, n_buckets=8)
+    sink = ParquetLedgerSink(spark, path)
+    jobs, (table, ledger) = count_jobs(lambda: (sink.read_buckets(None), sink.ledger("materialize")))
+    assert jobs == 0
+    assert table.schema == spark.read.parquet(path).schema
+    assert ledger.schema.simpleString() == spark.read.parquet(f"{path}/_lineage").schema.simpleString()
+    assert table.count() == 500 and ledger.count() == 8
+
+
 def test_resume_is_noop_when_complete(spark, tmp_path, catalog_of):
     path = str(tmp_path / "t2")
     materialize_triples(_triples(spark), path, n_buckets=8, catalog=catalog_of(path))

@@ -54,3 +54,29 @@ def test_warm_pipeline_runs_reuse_generated_classes(spark, tmp_path):
 ])
 def test_local_cores(master, cores):
     assert _local_cores(master) == cores
+
+
+def test_bounded_arrow_one_job(spark, tmp_path, count_jobs):
+    """`bounded_arrow` fetches a 4-partition scan in ONE job, where the
+    same rows through `limit(n + 1).collect()` take Spark's incremental
+    take (a job per round), and driver-local rows in none; it returns
+    the rows at or under `n` and None above."""
+    from kgforge.session import arrow_rows, bounded_arrow, local_df
+
+    path = str(tmp_path / "scan")
+    spark.range(400).selectExpr("CAST(id AS STRING) AS k").repartition(4).write.parquet(path)
+    df = spark.read.schema("k string").parquet(path)
+    assert df.rdd.getNumPartitions() == 4
+    jobs, table = count_jobs(lambda: bounded_arrow(df, 400))
+    assert jobs == 1
+    assert sorted(int(k) for (k,) in arrow_rows(table, "k")) == list(range(400))
+    assert count_jobs(lambda: df.limit(401).collect())[0] >= 2
+    assert count_jobs(lambda: bounded_arrow(df, 399)) == (1, None)
+    empty = bounded_arrow(df.filter("k = 'none'"), 0)
+    assert empty is not None and empty.num_rows == 0
+
+    local = local_df(spark, [("a", 1), ("b", None), ("c", 3)], "k string, v long")
+    jobs, table = count_jobs(lambda: bounded_arrow(local.filter("k != 'c'"), 2))
+    assert jobs == 0 and arrow_rows(table, "k", "v") == [("a", 1), ("b", None)]
+    assert table.schema.field("v").type == "int64"
+    assert count_jobs(lambda: bounded_arrow(local, 2)) == (0, None)

@@ -1178,6 +1178,86 @@ def test_path_constant_pushdown_matches_full_closure(spark):
         assert seeded_o == {(a, b) for a, b in full if b == seed}
 
 
+#: a 3-cycle a→b→c→a with an exit c→d, a self-edge s→s, a disconnected
+#: x→y, and literal tails off a (plain), off b (plain, same lexical form
+#: as the IRI c) and off d (typed)
+_DT = "http://www.w3.org/2001/XMLSchema#integer"
+_SEEDED_ROWS = [
+    ("a", "p", "b", None), ("b", "p", "c", None), ("c", "p", "a", None),
+    ("c", "p", "d", None), ("s", "p", "s", None), ("x", "p", "y", None),
+    ("a", "p", "la", ""), ("b", "p", "c", ""), ("d", "p", "7", _DT),
+    ("a", "q", "x", None),  # another predicate: never a step
+]
+
+
+def _endpoint_rows(df, s, o) -> set:
+    """Path pairs (src, dst, dst_dt) matching the constant endpoints."""
+    out = set()
+    for r in df.collect():
+        if isinstance(s, Iri) and r.src != s.value:
+            continue
+        if isinstance(o, Iri) and (r.dst != o.value or r.dst_dt is not None):
+            continue
+        if isinstance(o, Lit) and (r.dst != o.value or r.dst_dt != (o.dt or "")):
+            continue
+        out.add((r.src, r.dst, r.dst_dt))
+    return out
+
+
+@pytest.mark.parametrize("path_type", ["plus", "star"])
+@pytest.mark.parametrize(
+    "s, o",
+    [
+        (Iri("a"), Var("y")), (Iri("s"), Var("y")), (Iri("d"), Var("y")),
+        (Iri("nope"), Var("y")),
+        (Var("x"), Iri("a")), (Var("x"), Iri("s")), (Var("x"), Iri("y")),
+        (Var("x"), Iri("nope")),
+        (Iri("a"), Iri("d")), (Iri("a"), Iri("x")), (Iri("a"), Lit("7", _DT)),
+        (Iri("b"), Lit("c")),
+    ],
+    ids=lambda t: f"{type(t).__name__}:{getattr(t, 'value', getattr(t, 'name', ''))}",
+)
+def test_seeded_path_driver_matches_distributed(spark, path_type, s, o):
+    """The seeded path's driver answer (one bounded probe of the step
+    relation, walked on the driver) equals the forced distributed
+    route (frontier BFS + literal-tail join, `max_driver_edges=0`) and
+    the full closure filtered to the constant endpoints, with the
+    constant's zero-length row under `*`: cycles, self-edges, literal
+    tails off the seed and off reached nodes, a seed absent from the
+    graph, constant subject, object or both."""
+    from kgforge.sparql import PathPlus, PathStar, _path_df, _seeded_path_df
+
+    df = _triples(spark, _SEEDED_ROWS)
+    path = (PathPlus if path_type == "plus" else PathStar)(Iri("p"))
+    driver = _endpoint_rows(_seeded_path_df(df, path, s, o), s, o)
+    dist = _endpoint_rows(_seeded_path_df(df, path, s, o, max_driver_edges=0), s, o)
+    full = _path_df(df, path)
+    consts = sorted({t.value for t in (s, o) if isinstance(t, Iri)})
+    if path_type == "star":
+        full = full.unionByName(
+            _triples(spark, [(c, c, None, None) for c in consts]).selectExpr(
+                "subj AS src", "pred AS dst", "obj_dt AS dst_dt"
+            )
+        )
+    assert driver == dist == _endpoint_rows(full, s, o)
+
+
+def test_seeded_path_query_fires_one_job(spark, tmp_path, count_jobs):
+    """`<s> p+ ?y` over an opened multi-file table is one Spark job from
+    build to collect: the bounded probe of the step relation. The
+    answer comes back as a local relation, so collecting it scans,
+    joins and dedups nothing."""
+    path = str(tmp_path / "kg")
+    _triples(spark, _SEEDED_ROWS).repartition(4).write.parquet(path)
+    table = spark.read.parquet(path)
+    jobs, got = count_jobs(
+        lambda: sparql(table, "SELECT ?y WHERE { <a> <p>+ ?y }").collect()
+    )
+    assert jobs == 1
+    # the IRI c and the plain literal "c" are two solutions
+    assert sorted(r.y for r in got) == ["7", "a", "b", "c", "c", "d", "la"]
+
+
 def test_bind_arithmetic_and_typing(spark):
     """BIND (round-6): integer arithmetic stays xsd:integer, any
     double operand promotes to xsd:double, non-numeric operands make

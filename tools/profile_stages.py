@@ -1,11 +1,15 @@
 """Per-stage profiler for entry queries (no Spark UI in the sandbox).
 
 Runs each named query once warm + once timed with the event log on,
-and prints the timed run's py4j round trips (driver→JVM calls and
-object releases: the cost of building a plan through the Column API,
-one or two per node) and its Janino compiles (count and milliseconds):
-a plan whose generated classes outgrow Spark's codegen cache recompiles
-on every warm run. It then parses the log into a per-stage table:
+and prints the timed run's layer split — driver build (the query
+function: plan construction plus any eager jobs it fires) and
+execution (`.count()`), each with its wall time and Spark job count
+read from the status tracker — then its py4j round trips (driver→JVM
+calls and object releases: the cost of building a plan through the
+Column API, one or two per node) and its Janino compiles (count and
+milliseconds): a plan whose generated classes outgrow Spark's codegen
+cache recompiles on every warm run. It then parses the log into a
+per-stage table:
 wall, summed task CPU /
 run time, task count, shuffle bytes/records in and out, and the RDD
 scope names (Exchange / Window / Generate / ArrowEvalPython ...) that
@@ -79,24 +83,37 @@ def main():
         },
     )
     py4j = _py4j_counter(spark)
+    sc = spark.sparkContext
     qs = entry.queries()
     # warm
     next(iter(qs.values()))(spark, sf_dir).count()
     for qn in qnames:
-        spark.sparkContext.setJobDescription(f"warm:{qn}")
+        sc.setJobGroup(f"warm:{qn}", f"warm:{qn}")
         qs[qn](spark, sf_dir).count()
     marks = {}
     for qn in qnames:
-        spark.sparkContext.setJobDescription(qn)
         n0, ms0 = _compiled(spark)
         calls0 = py4j["n"]
         t0 = time.perf_counter()
-        qs[qn](spark, sf_dir).count()
+        # one job group per layer; both carry the query's name as the
+        # job description the stage table below filters on
+        sc.setJobGroup(f"{qn}:build", qn)
+        df = qs[qn](spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setJobGroup(f"{qn}:exec", qn)
+        df.count()
         marks[qn] = time.perf_counter() - t0
         calls = py4j["n"] - calls0
         n1, ms1 = _compiled(spark)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        build, run = (
+            len(sc.statusTracker().getJobIdsForGroup(f"{qn}:{layer}"))
+            for layer in ("build", "exec")
+        )
         print(
-            f"{qn}: {marks[qn]:.3f}  py4j {calls}  compiles {n1 - n0} ({ms1 - ms0:.0f} ms)",
+            f"{qn}: {marks[qn]:.3f}  build {t1 - t0:.3f} s {build} jobs"
+            f"  exec {marks[qn] - (t1 - t0):.3f} s {run} jobs"
+            f"  py4j {calls}  compiles {n1 - n0} ({ms1 - ms0:.0f} ms)",
             flush=True,
         )
     app_id = spark.sparkContext.applicationId
