@@ -132,10 +132,15 @@ def bounded_arrow(df, n: int):
     on a multi-partition scan for the same rows. A plan the optimizer
     folds to a local relation (driver-built rows, filtered) is the one
     case `collect()` serves with no job at all, where Arrow collection
-    would still launch one."""
+    would still launch one. A DataFrame with no columns (an all-constant
+    SPARQL pattern) comes back as one boolean column `_`."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if not df.columns:
+        # Arrow batches with no columns carry no row count (toArrow
+        # reports 0 rows for any input), so count a constant column
+        df = df.selectExpr("true AS _")
     lim = df.limit(n + 1)
     plan = lim._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() == "LocalRelation":

@@ -24,7 +24,8 @@ straight to Catalyst plans:
             CONSTRUCT { template } WHERE { group }
             INSERT { template } WHERE { group }       (same as CONSTRUCT)
             ASK [WHERE] { group }   -> one (ask: boolean) row; probes
-              with limit(1), never materializing the solution set
+              for one solution in one job, never materializing the
+              solution set
             DESCRIBE (?v | iri)+ [WHERE { group }]  -> the deduped
               OUTGOING triples of every described node (IRI bindings
               of the vars + the constant targets; the subset's concise
@@ -2704,12 +2705,12 @@ def sparql(triples: DataFrame, query: str) -> DataFrame:
     bound = _compile_group(triples, q.group)
 
     if q.form == "ask":
-        from kgforge.session import local_df
+        from kgforge.session import bounded_arrow, local_df
 
-        # one row, one boolean column; limit(1) keeps the probe from
-        # materializing the full solution set (same shape as the
-        # uncorrelated EXISTS probe)
-        probe = bound.limit(1).count() > 0
+        # one row, one boolean column; the bounded probe fetches at most
+        # one solution in one job (None: more than 0 rows, so true),
+        # where limit(1).count() fired two
+        probe = bounded_arrow(bound, 0) is None
         return local_df(triples.sparkSession, [(probe,)], "ask boolean")
 
     if q.form == "select" and (q.aggs or q.group_by is not None):

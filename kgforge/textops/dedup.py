@@ -27,6 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -267,6 +268,25 @@ def _bucket_pairs(
     return pairs.distinct(), intra_src
 
 
+def _spread(df: DataFrame, *partition_args) -> DataFrame:
+    """`df.repartition(*partition_args)`, unless `df` is already one
+    partition by construction: its plan reports `SinglePartition`, as a
+    plan whose inputs all pass through `coalesce(1)` does (the web
+    pipeline links a driver-sized surface table that way). Spark runs
+    such a region with no exchange under its aggregates, distincts and
+    shuffled joins; a spread would split it again, at one job and one
+    AQE stage per site. Any other plan, a one-file scan included,
+    reports another partitioning and is spread as before."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    try:
+        single = plan.outputPartitioning().toString() == "SinglePartition"
+    except IllegalArgumentException:
+        # a join whose children differ in partition count before the
+        # planner adds its exchanges: not one partition
+        single = False
+    return df if single else df.repartition(*partition_args)
+
+
 def _in_array_pairs(
     buckets: DataFrame, ids_col: str = "ids", carry: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -287,11 +307,10 @@ def _in_array_pairs(
     SORTED in its own projection BELOW the exchange — referenced
     inside the pair lambdas it would re-sort once per element
     (Catalyst does no CSE across lambda bodies; same hazard as the
-    tokenizer split, see _shingles_of_tokens)."""
+    tokenizer split, see _shingles_of_tokens). Buckets that are one
+    partition by construction stay unspread (see `_spread`)."""
     n_part = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    buckets = buckets.select(
-        F.array_sort(F.col(ids_col)).alias("__ids")
-    ).repartition(n_part)
+    buckets = _spread(buckets.select(F.array_sort(F.col(ids_col)).alias("__ids")), n_part)
     # one server-side-parsed expression: the Column-API spelling of
     # this nested lambda costs dozens of py4j round trips per plan
     # construction (measured ~1.5-2 s of bench time per dedup query

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.textops.dedup import _in_array_pairs
+from kgforge.textops.dedup import _in_array_pairs, _spread
 
 # Hot expressions are composed as SQL text and parsed on the JVM in one
 # call each: the Column-API spelling of the 24 signature minima, the
@@ -193,12 +193,11 @@ def candidate_pairs_minhash(
     # aggregation on ~10 tasks (measured par 4.3/8 at 8 cores). The
     # explicit exchange costs one tiny shuffle and restores full
     # width; the groupBy(surface) below then reuses its partitioning.
-    base = (
-        surfaces.selectExpr(f"`{surface_col}` AS surface")
-        .distinct()
-        .repartition("surface")
-        .selectExpr("surface", f"explode(array_distinct({char_ngrams('surface')})) AS g")
-    )
+    # A one-partition input (the pipeline's driver-sized route) stays
+    # one partition, so the whole stage plans with no exchange.
+    base = _spread(
+        surfaces.selectExpr(f"`{surface_col}` AS surface").distinct(), "surface"
+    ).selectExpr("surface", f"explode(array_distinct({char_ngrams('surface')})) AS g")
     # xxhash64 (8-byte long, zero allocation) not md5 (64-char string):
     # the signature stage hashes ~24× per gram row — md5 strings were
     # the engine's largest allocation source and a measured GC/scaling

@@ -74,6 +74,9 @@ def test_bounded_arrow_one_job(spark, tmp_path, count_jobs):
     assert count_jobs(lambda: bounded_arrow(df, 399)) == (1, None)
     empty = bounded_arrow(df.filter("k = 'none'"), 0)
     assert empty is not None and empty.num_rows == 0
+    # rows with no columns still count
+    assert bounded_arrow(df.select(), 400).num_rows == 400
+    assert bounded_arrow(df.select(), 399) is None
 
     local = local_df(spark, [("a", 1), ("b", None), ("c", 3)], "k string, v long")
     jobs, table = count_jobs(lambda: bounded_arrow(local.filter("k != 'c'"), 2))

@@ -1258,6 +1258,24 @@ def test_seeded_path_query_fires_one_job(spark, tmp_path, count_jobs):
     assert sorted(r.y for r in got) == ["7", "a", "b", "c", "c", "d", "la"]
 
 
+@pytest.mark.parametrize("query, answer", [
+    ("ASK { <a> <p> ?y }", True),
+    ("ASK { <a> <nope> ?y }", False),
+    ("ASK { <a> <p> <b> }", True),  # no variables: a zero-column probe
+    ("ASK { <a> <p> <d> }", False),
+])
+def test_ask_fires_one_job(spark, tmp_path, count_jobs, query, answer):
+    """ASK over an opened multi-file table is one Spark job, for a true
+    and a false answer alike: the bounded probe fetches at most one
+    solution, where `limit(1).count()` ran two jobs."""
+    path = str(tmp_path / "kg")
+    _triples(spark, _SEEDED_ROWS).repartition(4).write.parquet(path)
+    table = spark.read.parquet(path)
+    jobs, got = count_jobs(lambda: sparql(table, query).collect())
+    assert jobs == 1
+    assert [r.ask for r in got] == [answer]
+
+
 def test_bind_arithmetic_and_typing(spark):
     """BIND (round-6): integer arithmetic stays xsd:integer, any
     double operand promotes to xsd:double, non-numeric operands make

@@ -795,6 +795,29 @@ def test_spread_small_scan(spark, tmp_path, monkeypatch):
         spark.conf.set(key, old)
 
 
+def test_spread_skips_only_single_partition_input(spark, monkeypatch):
+    """`_spread` returns an input that is one partition by construction
+    (a plan over coalesce(1)) unspread, and spreads anything else. The
+    SAFE minhash operator plans exactly the round-robin exchanges of an
+    unconditional repartition, over a coalesce(1) input too, so the
+    dedup operators keep their spreads."""
+    from kgforge.profile import SAFE
+    from kgforge.textops import dedup
+
+    def round_robins(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("RoundRobinPartitioning")
+
+    one = _docs(spark).coalesce(1).groupBy("text").count()
+    assert dedup._spread(one, 4) is one
+    assert round_robins(dedup._spread(_docs(spark).groupBy("text").count(), 4)) == 1
+    for docs in (_docs(spark), _docs(spark).coalesce(1)):
+        got = round_robins(minhash_lsh_candidates(docs, profile=SAFE))
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_spread", lambda df, *args: df.repartition(*args))
+            want = round_robins(minhash_lsh_candidates(docs, profile=SAFE))
+        assert got == want >= 2
+
+
 def test_vector_dim_skips_null_first_row(spark, tmp_path):
     """The dimension probe reads the first NON-NULL vector; a table
     with no vector keeps each caller's empty-table behaviour."""

@@ -3,6 +3,7 @@ exactness, linking cluster quality, end-to-end canonical-triple P/R."""
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 
 import pytest
@@ -395,3 +396,88 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
     assert len(got) == len({tuple(r) for r in got})  # distinct
     assert {tuple(r) for r in got} == want
     assert want  # non-vacuous
+
+
+# ------------------------------------------------------------- linking route
+@pytest.fixture(scope="module")
+def family_pages(spark, corpus):
+    """The fixture corpus (case-fold, typo and `Inc` variants) plus 80
+    near-identical surfaces whose shared grams put them in LSH band
+    buckets larger than SCALE.linking_max_bucket."""
+    ts = corpus.pages[0][1]
+    extra = [
+        (f"https://family.example.org/{i}", ts, b"",
+         f"Kelvin Station Northfield {i:02d} is located in Norway.", "en")
+        for i in range(80)
+    ]
+    return C.pages_dataframe(spark, dataclasses.replace(corpus, pages=corpus.pages + extra))
+
+
+def _pipeline_sets(pages) -> dict:
+    """Row sets of the linking outputs of one persisted SCALE run."""
+    from kgforge.profile import SCALE
+    from kgforge.web.pipeline import unpersist_intermediates
+
+    out = run_pipeline(pages, text_from_html=False, persist_intermediate=True, profile=SCALE)
+    got = {k: {tuple(r) for r in out[k].collect()}
+           for k in ("same_as", "canonical_map", "canonical_triples")}
+    got["local"] = "Coalesce 1" in out["same_as"]._jdf.queryExecution().sparkPlan().toString()
+    unpersist_intermediates(out)
+    return got
+
+
+def test_pipeline_routes_give_identical_rows(spark, family_pages, monkeypatch):
+    """The one-partition local route for a driver-sized surface table and
+    the distributed route (bound forced to 0) give the same sameAs
+    edges, canonical map and canonical triples, with the LSH bucket
+    guard dropping the oversized family buckets on both."""
+    from kgforge.profile import SCALE
+    from kgforge.web import pipeline
+    from kgforge.web.linking import candidate_pairs_minhash
+
+    surfaces = surfaces_of(extract_mention_triples(family_pages))
+    reps = surfaces.groupBy(F.lower("surface")).agg(F.min("surface").alias("surface"))
+    capped = candidate_pairs_minhash(reps, prune_threshold=0.78, profile=SCALE).count()
+    uncapped = candidate_pairs_minhash(reps, prune_threshold=0.78, max_bucket=10**6).count()
+    assert uncapped > capped  # the guard fires on this fixture
+
+    local = _pipeline_sets(family_pages)
+    monkeypatch.setattr(pipeline, "LOCAL_SURFACES_MAX", 0)
+    dist = _pipeline_sets(family_pages)
+    assert local.pop("local") and not dist.pop("local")
+    assert local == dist
+    assert all(local.values())  # non-vacuous
+
+
+def test_canonical_map_probe_jobs(spark, family_pages, count_jobs, monkeypatch):
+    """Once the surfaces are probed, canonical_map's bounded probe runs
+    linking, the join-back and the CC fetch over the one-partition copy
+    in at most 3 Spark jobs; the distributed route runs one per exchange."""
+    from kgforge.web import canon
+
+    counted = []
+    cc = canon.connected_components
+
+    def counting(*args, **kwargs):
+        jobs, out = count_jobs(lambda: cc(*args, **kwargs))
+        counted.append(jobs)
+        return out
+
+    monkeypatch.setattr(canon, "connected_components", counting)
+    _pipeline_sets(family_pages)
+    assert len(counted) == 1 and counted[0] <= 3, counted
+
+
+def test_pipeline_leaves_no_cached_relation(spark, corpus):
+    """After a persisted run and unpersist_intermediates, the session
+    caches nothing: the local copy of the surfaces must not orphan the
+    persisted table (a stale cache entry would be silently reused by
+    the next run)."""
+    from kgforge.web.pipeline import unpersist_intermediates
+
+    spark.catalog.clearCache()  # start from an empty cache manager
+    out = run_pipeline(C.pages_dataframe(spark, corpus), text_from_html=False,
+                       persist_intermediate=True)
+    out["canonical_triples"].write.format("noop").mode("overwrite").save()
+    unpersist_intermediates(out)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
