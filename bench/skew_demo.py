@@ -1,5 +1,5 @@
-"""Head-entity skew demonstration (north rule: "salted repartitioning
-for head-entity skew").
+"""Head-entity skew demonstration (north rule: skew-safe bucketed
+writes for head-entity skew).
 
 Fixture: a corpus where ONE canonical entity appears as subject on
 ~hub_frac of all pages (default 30%). Protocol:
@@ -8,13 +8,19 @@ Fixture: a corpus where ONE canonical entity appears as subject on
                     all materialized to parquet (shared by both
                     variants; its event log shows the join stages)
   phase B (×2):     mentions + cmap → rewrite(collapse_prov=False) →
-                    materialize, unsalted vs salt_partitions=32, each
-                    in a fresh JVM with the Spark event log enabled
+                    materialize, each in a fresh JVM with the Spark
+                    event log enabled. The write rebalances on
+                    subj_bucket, and AQE splits a bucket larger than
+                    spark.sql.adaptive.advisoryPartitionSizeInBytes:
+                    variant "default" runs Spark's default size (64 MB),
+                    variant "small" the size given by --small-advisory,
+                    passed through get_spark's extra_conf.
 
 Analysis: per-task records/time skew (bench.task_skew) for the
-rewrite-join, full-row-dedup, and bucketed-write stages. Pass = every
-stage's max/median per-task records within ~2× in the salted run,
-while the unsalted write shows the hub straggler. The closing summary
+rewrite-join, full-row-dedup, and bucketed-write stages. Pass = the
+bucketed-write stage's max/median per-task records within ~2× in the
+"small" run, while the "default" write keeps the hub bucket in one
+straggler task when that bucket is under 64 MB. The closing summary
 (also `evidence` in skew_results.json) gives each variant's data-file
 count, its bucketed-write stage's max/median records and its audit.
 
@@ -89,15 +95,14 @@ spark = get_spark(app_name="skew-{name}", master="local[{cores}]",
                   extra_conf={{"spark.ui.showConsoleProgress": "false",
                               "spark.eventLog.enabled": "true",
                               "spark.eventLog.compress": "false",
-                              "spark.eventLog.dir": {elog!r}}})
+                              "spark.eventLog.dir": {elog!r}, **{conf!r}}})
 t0 = time.perf_counter()
 mentions = spark.read.parquet({work!r} + "/mentions")
 cmap = spark.read.parquet({work!r} + "/cmap")
 canonical = rewrite_triples(mentions, cmap, collapse_prov=False)
 out = {work!r} + "/triples_{name}"
 shutil.rmtree(out, ignore_errors=True)
-m = materialize_triples(canonical, out, n_buckets=64,
-                        salt_partitions={salt})
+m = materialize_triples(canonical, out, n_buckets=64)
 print("PHASE_B_SEC", round(time.perf_counter() - t0, 1),
       "ROWS", m["rows_written"], "AUDIT", verify_lineage(spark, out))
 spark.stop()
@@ -143,6 +148,8 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--workdir", default="/tmp/kgforge_skew")
     ap.add_argument("--skip-gen", action="store_true")
+    ap.add_argument("--small-advisory", default="1m",
+                    help="advisory partition size of the 'small' variant")
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
@@ -175,14 +182,15 @@ def main() -> None:
 
     results = {"pages": args.pages, "hub_frac": args.hub_frac, "cores": args.cores}
     evidence = {}
-    for name, salt in (("unsalted", "None"), ("salted", "32")):
+    small = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": args.small_advisory}
+    for name, conf in (("default", {}), ("small", small)):
         elog = f"{args.workdir}/elog_{name}"
         shutil.rmtree(elog, ignore_errors=True)
         os.makedirs(elog, exist_ok=True)
         out = _run(
             _PHASE_B.format(
                 repo=REPO, cores=args.cores, work=args.workdir,
-                elog="file://" + elog, name=name, salt=salt,
+                elog="file://" + elog, name=name, conf=conf,
             ),
             name,
         )

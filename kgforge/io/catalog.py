@@ -17,8 +17,9 @@ minimal — exactly the operations resume and audit need:
                         snapshot commit)
 
 The parquet layout — `subj_bucket=N` dirs keyed by `subj_bucket()`, a
-`<path>/_lineage` ledger of LINEAGE_SCHEMA rows, and one bucketed write
-sorted on (subj_bucket, subj, pred, obj) — is known only here;
+`<path>/_lineage` ledger of LINEAGE_SCHEMA rows, and one bucketed write,
+rebalanced on subj_bucket and sorted on (subj_bucket, subj, pred, obj)
+— is known only here;
 `kgforge.io.write.write_triples` goes through ParquetLedgerSink, and
 `kgforge.lineage.verify_lineage` audits any sink through `resolve_sink`
 and the protocol alone. All its IO goes through the Hadoop
@@ -40,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.io.fs import delete_path, list_dir_names, path_exists
-from kgforge.session import local_df, sql_str
+from kgforge.session import local_df
 from kgforge.triples.emit import TRIPLE_FIELDS
 
 _BUCKET_PREFIX = "subj_bucket="
@@ -58,42 +59,18 @@ def subj_bucket(n_buckets: int) -> Column:
     )
 
 
-def _bucketed_repartition(
-    df: DataFrame, salt_partitions: int | None, n_buckets: int | None = None
-) -> DataFrame:
-    """Exchange rows by subj_bucket, optionally salted — the
-    head-entity skew guard (the north rule's "salted repartitioning"):
-    a mega-hub subject puts ~all its rows in ONE subj_bucket, so
-    hashing on the bucket alone makes one write task the straggler.
-
-    Unsalted, rows are hash-partitioned on subj_bucket: one task, one
-    file per bucket. Salted, rows are RANGE-partitioned on
-    (subj_bucket, salt), where the salt is a hash of the non-subject
-    columns in [0, salt_partitions). Range bounds come from one small
-    sampling job, so a cold bucket lies inside one range or across one
-    boundary (at most 2 files; at most 2·n_buckets − 1 files per write
-    before maxRecordsPerFile splits), while a hot bucket spans several
-    ranges, split by its sampled row count rather than by hash
-    collisions. Hash-partitioning the salted key instead would scatter
-    every bucket over every task: n_buckets files per bucket, all of
-    which each later scan opens. Routing still sends every row to its
-    own bucket dir, and the caller's within-partition sort keeps subj
-    min/max row-group pruning working."""
-    if salt_partitions and salt_partitions > 1:
-        hashed = ", ".join(
-            f"coalesce(CAST(`{c}` AS STRING), {sql_str(chr(0))})"
-            for c in df.columns
-            if c not in ("subj_bucket", "subj")
-        )
-        salt = F.expr(f"pmod(xxhash64({hashed}), {int(salt_partitions)}) AS salt")
-        keys = [F.col("subj_bucket"), salt]
-        partition = df.repartitionByRange
-    else:
-        keys = [F.col("subj_bucket")]
-        partition = df.repartition
-    if n_buckets is not None:
-        return partition(n_buckets, *keys)
-    return partition(*keys)
+def _bucketed_repartition(df: DataFrame, n_buckets: int | None = None) -> DataFrame:
+    """Exchange rows by subj_bucket through Spark's REBALANCE, the
+    head-entity skew guard: AQE sizes the write by bytes, coalescing
+    small buckets into few tasks (a cold bucket stays in one file before
+    maxRecordsPerFile splits) and splitting a bucket whose shuffle
+    output exceeds `spark.sql.adaptive.advisoryPartitionSizeInBytes` at
+    map-output boundaries, so a mega-hub subject's bucket is no
+    straggler. A known count only sets the shuffle's initial width. The
+    caller's within-partition sort keeps subj min/max pruning working."""
+    if n_buckets is None:
+        return df.hint("rebalance", F.col("subj_bucket"))
+    return df.hint("rebalance", int(n_buckets), F.col("subj_bucket"))
 
 
 class TripleSink(ABC):
@@ -142,17 +119,10 @@ class ParquetLedgerSink(TripleSink):
     )
     TABLE_SCHEMA = ", ".join(f"{c} string" for c in TRIPLE_FIELDS) + ", subj_bucket int"
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = 64,
-        salt_partitions: int | None = None,
-    ):
+    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
-        self.salt_partitions = salt_partitions
         self._ledger_path = path.rstrip("/") + "/_lineage"
 
     def ledger(self, stage: str) -> DataFrame | None:
@@ -189,7 +159,7 @@ class ParquetLedgerSink(TripleSink):
         partition column and otherwise replaces the caller's sort with
         a subj_bucket-only sort, losing the subj order that min/max
         row-group pruning relies on."""
-        out = _bucketed_repartition(df, self.salt_partitions, self.n_buckets)
+        out = _bucketed_repartition(df, self.n_buckets)
         (
             out.sortWithinPartitions("subj_bucket", "subj", "pred", "obj")
             .write.mode(mode)
@@ -202,10 +172,25 @@ class ParquetLedgerSink(TripleSink):
         return set(self._bucket_dirs())
 
     def read_buckets(self, buckets: list[int] | None) -> DataFrame:
-        table = self.spark.read.schema(self.TABLE_SCHEMA).parquet(self.path)
+        table = self._open_table()
         if buckets is None:
             return table
         return table.filter(F.col("subj_bucket").isin(buckets))
+
+    def _open_table(self) -> DataFrame:
+        """The table, its bucket dirs listed on the driver: Spark lists
+        more than `parallelPartitionDiscovery.threshold` (32) dirs in a
+        job of its own (~220 ms per 64-bucket open at local[2], against
+        ~12 ms in place; the dirs passed with `basePath` still list in a
+        job), so the threshold is raised to the bucket count here."""
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        conf = self.spark.conf
+        saved = conf.get(key)
+        conf.set(key, str(max(int(saved), self.n_buckets)))
+        try:
+            return self.spark.read.schema(self.TABLE_SCHEMA).parquet(self.path)
+        finally:
+            conf.set(key, saved)
 
     def commit(self, stage: str, lineage_rows: list[tuple]) -> None:
         local_df(self.spark, lineage_rows, self.LINEAGE_SCHEMA).coalesce(
@@ -248,16 +233,14 @@ class IcebergSnapshotSink(TripleSink):
     sink's max_records_per_file knob has no Iceberg equivalent (the
     Spark-Iceberg writer rolls files by BYTES, not records): it maps
     to `target_file_size_bytes`, written as the
-    write.target-file-size-bytes table property at creation.
-    `salt_partitions` applies the same head-entity salting as the
-    parquet sink before the write exchange.
+    write.target-file-size-bytes table property at creation. The
+    write exchange is the parquet sink's rebalance.
     """
 
     def __init__(
         self,
         spark: SparkSession,
         table: str,
-        salt_partitions: int | None = None,
         target_file_size_bytes: int | None = None,
     ):
         if not _iceberg_runtime_available(spark):
@@ -271,7 +254,6 @@ class IcebergSnapshotSink(TripleSink):
             )
         self.spark = spark
         self.table = table
-        self.salt_partitions = salt_partitions
         self.target_file_size_bytes = target_file_size_bytes
 
     @property
@@ -314,7 +296,7 @@ class IcebergSnapshotSink(TripleSink):
     def append(self, df: DataFrame, max_records_per_file: int) -> None:
         # max_records_per_file is a parquet-sink knob; Iceberg rolls
         # files by bytes (see class docstring / target_file_size_bytes)
-        out = _bucketed_repartition(df, self.salt_partitions).sortWithinPartitions(
+        out = _bucketed_repartition(df).sortWithinPartitions(
             "subj_bucket", "subj", "pred", "obj"
         )
         if not self.spark.catalog.tableExists(self.table):
@@ -351,13 +333,12 @@ def resolve_sink(
     path: str,
     catalog: str | TripleSink = "parquet",
     n_buckets: int = 64,
-    salt_partitions: int | None = None,
 ) -> TripleSink:
     """catalog= flag → sink instance; a TripleSink passes through."""
     if isinstance(catalog, TripleSink):
         return catalog
     if catalog == "parquet":
-        return ParquetLedgerSink(spark, path, n_buckets, salt_partitions)
+        return ParquetLedgerSink(spark, path, n_buckets)
     if catalog == "iceberg":
-        return IcebergSnapshotSink(spark, path, salt_partitions=salt_partitions)
+        return IcebergSnapshotSink(spark, path)
     raise ValueError(f"unknown catalog {catalog!r} (expected parquet|iceberg)")

@@ -66,18 +66,14 @@ def materialize_triples(
     "iceberg" (requires the runtime jar — raises cleanly without it),
     or a kgforge.io.catalog.TripleSink instance.
 
-    `salt_partitions` spreads a hot subj_bucket (head-entity skew:
-    one mega-hub subject ≈ one bucket ≈ one straggler write task)
-    across several write tasks: rows are range-partitioned on
-    (subj_bucket, salt), the salt a hash of the non-subject columns in
-    [0, salt_partitions). A cold bucket lands in at most 2 files, a
-    hot bucket is split by its row count, and the range bounds cost
-    one small sampling job per write (see
-    kgforge.io.catalog._bucketed_repartition). Layout, resume and
-    audit semantics are unchanged — only task balance and file count
-    differ."""
+    The write is skew-safe without a knob: Spark's REBALANCE splits a
+    hot subj_bucket (one mega-hub subject ≈ one bucket) over several
+    write tasks by its shuffle bytes and keeps each cold bucket in one
+    file (kgforge.io.catalog._bucketed_repartition). `salt_partitions`
+    is accepted for existing callers and ignored: it no longer selects
+    a plan."""
     spark = triples.sparkSession
-    sink = resolve_sink(spark, path, catalog, n_buckets, salt_partitions)
+    sink = resolve_sink(spark, path, catalog, n_buckets)
     ledger = sink.ledger(stage)
     done = set()
     if ledger is not None:

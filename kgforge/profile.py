@@ -15,7 +15,6 @@ OVERRIDES its individual keyword arguments:
     simhash_near_dups(df, profile=SCALE)
     embedding_near_dups(emb, profile=SCALE)
     ngram_jaccard_pairs(df, profile=SCALE)
-    materialize_triples(..., salt_partitions=SCALE.salt_partitions)
 
 Three presets:
 
@@ -30,8 +29,8 @@ Three presets:
   operators).
 * `SCALE` — every guard on, including the semantics-changing ones
   (oversized buckets dropped as boilerplate, simhash-0 empty docs
-  pre-dropped, corpus-relative shingle df cap, salted bucketed
-  writes). The crawl-scale posture.
+  pre-dropped, corpus-relative shingle df cap). The crawl-scale
+  posture.
 """
 
 from __future__ import annotations
@@ -61,11 +60,9 @@ class ScaleProfile:
     #: entity-linking banded-bucket cap (candidate_pairs_minhash);
     #: linking always guards — this only tunes the cap.
     linking_max_bucket: int = 64
-    #: bucketed triple write: salt a hot subj_bucket this many ways and
-    #: range-partition on (subj_bucket, salt), so the hot bucket splits
-    #: across tasks by row count while a cold bucket stays in ≤ 2 files;
-    #: one sampling job per write (head-entity skew;
-    #: kgforge.io.catalog._bucketed_repartition). None = unsalted.
+    #: ignored: the bucketed triple write splits a hot subj_bucket by
+    #: its bytes through Spark's REBALANCE (kgforge.io.catalog). Kept so
+    #: `materialize_triples(salt_partitions=...)` callers still run.
     salt_partitions: int | None = None
 
     def __post_init__(self) -> None:
@@ -86,7 +83,7 @@ SAFE = ScaleProfile(max_bucket=1024, oversize="join")
 #: collect_list array at ~1k members; dropped buckets (oversize="drop")
 #: are boilerplate by construction at this cap; shingles shared by
 #: >0.1% of the corpus carry no near-dup signal; empty docs leave the
-#: simhash path entirely; bucketed writes salt 32-way.
+#: simhash path entirely; salt_partitions selects nothing.
 SCALE = ScaleProfile(
     max_bucket=1024,
     oversize="drop",

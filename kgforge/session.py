@@ -5,8 +5,10 @@ only centralizes the config we want everywhere: Arrow-backed pandas
 UDFs, AQE (runtime coalescing + skew-join splitting), a shuffle
 partition count sized to the parallelism level instead of the 200
 default (which at local[8..32] just creates tiny-task overhead, and on
-a 1000-executor cluster is overridden by AQE coalescing anyway), and a
-generated-code cache sized to kgforge's plans.
+a 1000-executor cluster is overridden by AQE coalescing anyway), AQE
+coalescing of persisted plans too (Spark otherwise keeps a cached plan's
+last stage, and every stage reading it, at ``shuffle.partitions``
+tasks), and a generated-code cache sized to kgforge's plans.
 
 The codegen cache (``spark.sql.codegen.cache.maxEntries``) is Spark's
 LRU map from generated Java source to its Janino-compiled class; a plan
@@ -67,6 +69,8 @@ def get_spark(
         # set (web pipeline ~135, dedup trio ~230) exceeds the default
         # 100-entry LRU; see the module docstring
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # let AQE coalesce the final stage of a persisted plan
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # deterministic float behavior for oracle comparisons
@@ -117,6 +121,13 @@ def local_df(spark, rows, schema):
     )
 
 
+def is_local(df) -> bool:
+    """True when the optimizer folds `df` to a LocalRelation: its rows
+    come back from `collect()` with no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
 def bounded_arrow(df, n: int):
     """The rows of `df` as a `pyarrow.Table`, or None when it has more
     than `n` — the bounded probe behind every driver-sized fast path
@@ -142,8 +153,7 @@ def bounded_arrow(df, n: int):
         # reports 0 rows for any input), so count a constant column
         df = df.selectExpr("true AS _")
     lim = df.limit(n + 1)
-    plan = lim._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "LocalRelation":
+    if is_local(lim):
         table = pa.Table.from_pylist(
             [r.asDict() for r in lim.collect()], schema=to_arrow_schema(lim.schema)
         )

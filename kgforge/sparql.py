@@ -1947,7 +1947,11 @@ def _compile_union(
     unbound (NULL value + NULL shadow) in that branch's solutions and
     joins the maybe-unbound set. Datatype shadows align across
     branches — a branch that bound the var IRI-only contributes NULL
-    shadows (NULL = the IRI tag). Returns (bag, maybe-unbound vars)."""
+    shadows (NULL = the IRI tag). Returns (bag, maybe-unbound vars).
+    Local branches (driver-answered seeded paths, VALUES) are unioned
+    on the driver: Spark folds no Union of local relations."""
+    from kgforge.session import is_local, local_df
+
     compiled = [_compile_group_ex(triples, a) for a in alts]
     dfs = [c[0] for c in compiled]
     varsets = [
@@ -1972,6 +1976,10 @@ def _compile_union(
     out = aligned[0]
     for d in aligned[1:]:
         out = out.unionByName(d)
+    # a union with no columns keeps its row count only as a Spark plan
+    if cols and all(is_local(d) for d in aligned):
+        rows = [tuple(r) for d in aligned for r in d.collect()]
+        out = local_df(out.sparkSession, rows, out.schema)
     return out, maybe
 
 

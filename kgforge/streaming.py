@@ -148,7 +148,6 @@ def compact_mentions(
     raw_path: str,
     table_root: str,
     n_buckets: int = 16,
-    salt_partitions: int | None = None,
     collapse_prov: bool = True,
 ):
     """Fold the streamed raw mention-triple feed into the deduped,
@@ -210,7 +209,6 @@ def compact_mentions(
         snap,
         stage="compact",
         n_buckets=n_buckets,
-        salt_partitions=salt_partitions,
     )
     write_text_atomic(spark, ptr, f"snap_{k}")
     return snap, metrics

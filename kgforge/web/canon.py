@@ -184,8 +184,9 @@ def rewrite_triples(
     deduped on the FULL row. This is the shape where a mega-hub
     subject really concentrates rows (a hub mentioned on 30% of pages
     keeps one row per mentioning page), so the bucketed writer's
-    salted repartitioning (kgforge.lineage.materialize_triples
-    salt_partitions) exists for exactly this output."""
+    rebalance, which splits a hot bucket by its bytes
+    (kgforge.io.catalog._bucketed_repartition), exists for exactly
+    this output."""
     sm = cmap.selectExpr("node AS subj", "canon AS subj_canon")
     om = cmap.selectExpr("node AS obj", "canon AS obj_canon")
     prov = [c for c in triples.columns if c not in ("subj", "pred", "obj", "obj_dt")]

@@ -83,8 +83,7 @@ def run_pipeline(
     storage anyway (the scaling/lineage path persists externally).
 
     `profile` (kgforge.profile.ScaleProfile) arms the linking-stage
-    guards; hand its salt_partitions to materialize_triples for the
-    write stage.
+    guards.
 
     A persisted run links a surface table of at most
     `LOCAL_SURFACES_MAX` rows in one Spark partition (see the module

@@ -75,6 +75,31 @@ def test_sink_opens_without_a_job(spark, tmp_path, count_jobs):
     assert table.count() == 500 and ledger.count() == 8
 
 
+def test_wide_table_opens_without_a_listing_job(spark, tmp_path, count_jobs):
+    """A 64-bucket table has more bucket dirs than Spark lists on the
+    driver by default (32), and Spark lists the rest in a job of its
+    own: the sink opens it with 0 jobs, whole or by bucket, and leaves
+    the session's listing threshold as it found it."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    path = str(tmp_path / "wide")
+    triples = spark.range(3000).select(
+        F.concat(F.lit("urn:s"), (F.col("id") % 997).cast("string")).alias("subj"),
+        F.lit("urn:p").alias("pred"),
+        F.col("id").cast("string").alias("obj"),
+        F.lit(None).cast("string").alias("obj_dt"),
+    )
+    materialize_triples(triples, path, n_buckets=64)
+    sink = ParquetLedgerSink(spark, path)
+    assert len(sink.bucket_census()) > 32
+    saved = spark.conf.get(key)
+    jobs, (table, some) = count_jobs(lambda: (sink.read_buckets(None), sink.read_buckets([0, 1])))
+    assert jobs == 0
+    assert spark.conf.get(key) == saved
+    assert table.count() == 3000
+    assert some.count() == table.filter(F.col("subj_bucket").isin(0, 1)).count() > 0
+    assert verify_lineage(spark, path)
+
+
 def test_resume_is_noop_when_complete(spark, tmp_path, catalog_of):
     path = str(tmp_path / "t2")
     materialize_triples(_triples(spark), path, n_buckets=8, catalog=catalog_of(path))
@@ -207,58 +232,59 @@ def test_iceberg_sink_error_path(spark, tmp_path):
         materialize_triples(_triples(spark), str(tmp_path / "bogus"), catalog="nope")
 
 
-def test_salted_write_same_table_more_hub_files(spark, tmp_path):
-    """Head-entity skew: with a mega-hub subject holding ~40% of rows,
-    salt_partitions must split the hot bucket across several write
-    tasks (≥2 files in its dir) while producing the IDENTICAL table
-    and a passing audit."""
-    from pyspark.sql import functions as F2
-
-    hub = spark.range(2000).select(
-        F2.lit("urn:hub").alias("subj"),
-        F2.lit("urn:partner_of").alias("pred"),
-        F2.concat(F2.lit("urn:o"), F2.col("id").cast("string")).alias("obj"),
-        F2.lit(None).cast("string").alias("obj_dt"),
-        F2.concat(F2.lit("https://ex/p"), F2.col("id").cast("string")).alias("prov_url"),
+def test_rebalanced_write_splits_hub_bucket(spark, tmp_path):
+    """Head-entity skew: a mega-hub subject puts ~87% of the rows in
+    one subj_bucket. With the advisory size (48 KB) below that bucket's
+    shuffle bytes (over 160 KB) and above every cold shuffle
+    partition's (under 16 KB, lz4-compressed, local[4]), the
+    rebalanced write splits the hot bucket over several write tasks
+    (≥ 2 files in its dir) and keeps each cold bucket in one file, with
+    the IDENTICAL table a default-size write makes, a passing audit and
+    unchanged resume semantics."""
+    hub = spark.range(20000).select(
+        F.lit("urn:hub").alias("subj"),
+        F.lit("urn:partner_of").alias("pred"),
+        F.concat(F.lit("urn:o"), F.col("id").cast("string")).alias("obj"),
+        F.lit(None).cast("string").alias("obj_dt"),
+        F.concat(F.lit("https://ex/p"), F.col("id").cast("string")).alias("prov_url"),
     )
     tail = spark.range(3000).select(
-        F2.concat(F2.lit("urn:s"), (F2.col("id") % 500).cast("string")).alias("subj"),
-        F2.lit("urn:p").alias("pred"),
-        F2.concat(F2.lit("urn:v"), F2.col("id").cast("string")).alias("obj"),
-        F2.lit(None).cast("string").alias("obj_dt"),
-        F2.concat(F2.lit("https://ex/q"), F2.col("id").cast("string")).alias("prov_url"),
+        F.concat(F.lit("urn:s"), (F.col("id") % 500).cast("string")).alias("subj"),
+        F.lit("urn:p").alias("pred"),
+        F.concat(F.lit("urn:v"), F.col("id").cast("string")).alias("obj"),
+        F.lit(None).cast("string").alias("obj_dt"),
+        F.concat(F.lit("https://ex/q"), F.col("id").cast("string")).alias("prov_url"),
     )
     triples = hub.unionByName(tail)
 
-    plain, salted = str(tmp_path / "plain"), str(tmp_path / "salted")
+    plain, split = str(tmp_path / "plain"), str(tmp_path / "split")
     # high max_records_per_file so file count reflects TASKS, not size
     materialize_triples(triples, plain, n_buckets=16, max_records_per_file=10**7)
-    m = materialize_triples(
-        triples, salted, n_buckets=16, max_records_per_file=10**7, salt_partitions=8
-    )
-    assert m["rows_written"] == 5000
-    assert verify_lineage(spark, salted)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "48KB")
+    try:
+        m = materialize_triples(triples, split, n_buckets=16, max_records_per_file=10**7)
+    finally:
+        spark.conf.set(key, saved)
+    assert m["rows_written"] == 23000
+    assert verify_lineage(spark, split)
 
     a = {tuple(r) for r in spark.read.parquet(plain).drop("subj_bucket").collect()}
-    b = {tuple(r) for r in spark.read.parquet(salted).drop("subj_bucket").collect()}
+    b = {tuple(r) for r in spark.read.parquet(split).drop("subj_bucket").collect()}
     assert a == b  # identical table either way
 
-    # locate the hub's bucket dir and compare file counts
-    hub_bucket = spark.read.parquet(salted).filter(
-        F2.col("subj") == "urn:hub"
+    hub_bucket = spark.read.parquet(split).filter(
+        F.col("subj") == "urn:hub"
     ).select("subj_bucket").first()[0]
+    files = {}
+    for f in _data_files(split):
+        files.setdefault(os.path.basename(os.path.dirname(f)), []).append(f)
+    assert len(files.pop(f"subj_bucket={hub_bucket}")) >= 2  # the hot bucket split
+    assert len(files) == 15 and all(len(v) == 1 for v in files.values()), files
 
-    def files_in(base):
-        d = os.path.join(base, f"subj_bucket={hub_bucket}")
-        return [f for f in os.listdir(d) if f.startswith("part-")]
-
-    assert len(files_in(plain)) == 1      # one straggler task wrote it all
-    assert len(files_in(salted)) >= 2     # salt split the hot bucket
-
-    # resume semantics unchanged under salt
-    m2 = materialize_triples(
-        triples, salted, n_buckets=16, max_records_per_file=10**7, salt_partitions=8
-    )
+    # resume semantics unchanged
+    m2 = materialize_triples(triples, split, n_buckets=16, max_records_per_file=10**7)
     assert m2["buckets_written"] == 0 and m2["buckets_skipped"] == 16
 
 
@@ -302,12 +328,11 @@ def test_data_files_sorted(spark, tmp_path, write):
         assert rows == sorted(rows), f
 
 
-def test_salted_write_bounds_file_count(spark, tmp_path):
-    """Range partitioning on (subj_bucket, salt) keeps each cold bucket
-    in at most two write tasks, so a salted write of uniform triples
-    makes at most 2·n_buckets − 1 files (hashing the salted key over
-    n_buckets tasks puts every bucket in every task: ~n_buckets² files),
-    with the same rows and a passing audit."""
+def test_rebalanced_write_one_file_per_bucket(spark, tmp_path):
+    """AQE coalesces the rebalanced write's small buckets into few
+    tasks without splitting any: a write of uniform triples makes
+    exactly one file per bucket, with or without the ignored
+    salt_partitions, the same rows and a passing audit."""
     triples = spark.range(4000).select(
         F.concat(F.lit("urn:s"), (F.col("id") % 400).cast("string")).alias("subj"),
         F.lit("urn:p").alias("pred"),
@@ -319,7 +344,8 @@ def test_salted_write_bounds_file_count(spark, tmp_path):
     m = materialize_triples(triples, salted, n_buckets=8, salt_partitions=32)
     assert m["buckets_written"] == 8 and m["rows_written"] == 4000
     assert verify_lineage(spark, salted)
-    assert len(_data_files(salted)) <= 2 * 8 - 1
+    for path in (plain, salted):
+        assert len(_data_files(path)) == 8
 
     a = sorted(tuple(r) for r in spark.read.parquet(plain).collect())
     b = sorted(tuple(r) for r in spark.read.parquet(salted).collect())
@@ -329,9 +355,8 @@ def test_salted_write_bounds_file_count(spark, tmp_path):
 @pytest.mark.parametrize("salt", [None, 32])
 def test_null_subject_write_fails_clean(spark, tmp_path, salt):
     """A NULL subj would land in __HIVE_DEFAULT_PARTITION__ and wedge
-    every later resume: the write raises (from the range sampling job
-    when salted, from the write job otherwise) and leaves no bucket
-    dir and no ledger behind."""
+    every later resume: the write job raises, whatever salt_partitions
+    says, and leaves no bucket dir and no ledger behind."""
     null_row = spark.createDataFrame(
         [(None, "urn:p", "v", None)],
         "subj string, pred string, obj string, obj_dt string",

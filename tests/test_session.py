@@ -83,3 +83,28 @@ def test_bounded_arrow_one_job(spark, tmp_path, count_jobs):
     assert jobs == 0 and arrow_rows(table, "k", "v") == [("a", 1), ("b", None)]
     assert table.schema.field("v").type == "int64"
     assert count_jobs(lambda: bounded_arrow(local, 2)) == (0, None)
+
+
+def test_cached_pipeline_tables_read_in_one_task(spark, tmp_path, stage_tasks):
+    """AQE coalesces the last stage of a persisted plan too: after a
+    persisted run_pipeline + materialize_triples run on a 300-page
+    corpus, every stage of a job over the cached mention or surface
+    table runs one task. Spark's default keeps a cached plan's
+    shuffle.partitions width (4 tasks here)."""
+    from kgforge.lineage import materialize_triples
+    from kgforge.profile import SCALE
+    from kgforge.web.corpus import corpus_to_parquet
+    from kgforge.web.pipeline import run_pipeline, unpersist_intermediates
+
+    pages_path = str(tmp_path / "pages")
+    corpus_to_parquet(pages_path, 300, seed=42, rows_per_file=100, hub_frac=0.05)
+    res = run_pipeline(spark.read.parquet(pages_path), text_from_html=True,
+                       persist_intermediate=True, profile=SCALE)
+    try:
+        m = materialize_triples(res["canonical_triples"], str(tmp_path / "out"), n_buckets=8)
+        assert m["rows_written"] > 0
+        for key in ("mention_triples", "surfaces"):
+            tasks = stage_tasks(res[key].count)
+            assert tasks and set(tasks) == {1}, (key, tasks)
+    finally:
+        unpersist_intermediates(res)

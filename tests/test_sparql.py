@@ -1258,6 +1258,48 @@ def test_seeded_path_query_fires_one_job(spark, tmp_path, count_jobs):
     assert sorted(r.y for r in got) == ["7", "a", "b", "c", "c", "d", "la"]
 
 
+def test_union_of_local_branches_runs_no_job(spark, tmp_path, count_jobs):
+    """A UNION of two driver-answered seeded paths is built on the
+    driver as one local relation: each branch's bounded probe is a job
+    at build time, and collecting the answer runs none (a Spark Union
+    of the two local relations ran jobs to scan and union them)."""
+    path = str(tmp_path / "kg")
+    _triples(spark, _SEEDED_ROWS).repartition(4).write.parquet(path)
+    table = spark.read.parquet(path)
+    q = "SELECT ?n WHERE { { <a> <p>+ ?n } UNION { ?n <p>+ <d> } }"
+    build, df = count_jobs(lambda: sparql(table, q))
+    assert build == 2
+    jobs, got = count_jobs(df.collect)
+    assert jobs == 0
+    assert sorted(r.n for r in got) == ["7", "a", "a", "b", "b", "c", "c", "c", "d", "la"]
+
+
+def test_local_union_equals_spark_union(spark, monkeypatch):
+    """The driver-built union of local branches has the rows and schema
+    of Spark's union: unbound vars (a var one branch does not bind, and
+    UNDEF), and datatype shadows (typed and plain literals next to IRIs
+    under one var), read back through DATATYPE()."""
+    import kgforge.session
+
+    df = _triples(spark, _SEEDED_ROWS)
+    q = f"""SELECT ?x ?y ?z ?t WHERE {{
+        {{ VALUES (?x ?y) {{ (<a> "1"^^<{_DT}>) (<b> UNDEF) ("lit" "2") }} }}
+        UNION {{ VALUES ?z {{ <c> "3"^^<{_DT}> }} }}
+        UNION {{ <a> <p>+ ?y }}
+        BIND(DATATYPE(?y) AS ?t)
+    }}"""
+    local = sparql(df, q)
+    assert kgforge.session.is_local(local)
+    with monkeypatch.context() as m:
+        m.setattr(kgforge.session, "is_local", lambda _df: False)
+        distributed = sparql(df, q)
+        assert not kgforge.session.is_local(distributed)
+    assert local.schema == distributed.schema
+    rows = sorted((tuple(r) for r in local.collect()), key=repr)
+    assert rows == sorted((tuple(r) for r in distributed.collect()), key=repr)
+    assert len(rows) == 12 and (None, None, "3", None) in rows
+
+
 @pytest.mark.parametrize("query, answer", [
     ("ASK { <a> <p> ?y }", True),
     ("ASK { <a> <nope> ?y }", False),

@@ -797,7 +797,8 @@ def test_spread_small_scan(spark, tmp_path, monkeypatch):
 
 def test_spread_skips_only_single_partition_input(spark, monkeypatch):
     """`_spread` returns an input that is one partition by construction
-    (a plan over coalesce(1)) unspread, and spreads anything else. The
+    (a plan over coalesce(1)) unspread, and spreads anything else, a
+    persisted input that AQE coalesced to one partition included. The
     SAFE minhash operator plans exactly the round-robin exchanges of an
     unconditional repartition, over a coalesce(1) input too, so the
     dedup operators keep their spreads."""
@@ -810,6 +811,17 @@ def test_spread_skips_only_single_partition_input(spark, monkeypatch):
     one = _docs(spark).coalesce(1).groupBy("text").count()
     assert dedup._spread(one, 4) is one
     assert round_robins(dedup._spread(_docs(spark).groupBy("text").count(), 4)) == 1
+    # a persisted plan that AQE coalesced to one partition still reports
+    # its coalesced hash partitioning, not SinglePartition: a cached
+    # surface table above LOCAL_SURFACES_MAX keeps its spreads
+    cached = _docs(spark).groupBy("text").count().persist()
+    try:
+        cached.count()
+        part = cached._jdf.queryExecution().sparkPlan().outputPartitioning().toString()
+        assert part.startswith("coalescedhashpartitioning"), part
+        assert round_robins(dedup._spread(cached, 4)) == 1
+    finally:
+        cached.unpersist()
     for docs in (_docs(spark), _docs(spark).coalesce(1)):
         got = round_robins(minhash_lsh_candidates(docs, profile=SAFE))
         with monkeypatch.context() as m:
