@@ -34,22 +34,13 @@ sys.path.insert(0, os.path.join(ROOT, "bench"))
 def _task_cpu_seconds(eventlog_dir: str) -> float | None:
     """Sum of per-task run times across all stages of the single app
     in `eventlog_dir` (core-seconds actually consumed by tasks)."""
-    from task_skew import _event_lines
+    from task_skew import stage_skew
 
     apps = [f for f in os.listdir(eventlog_dir) if not f.startswith(".")]
     if len(apps) != 1:
         return None
-    total_ms = 0.0
-    for line in _event_lines(os.path.join(eventlog_dir, apps[0])):
-        if '"SparkListenerTaskEnd"' not in line:
-            continue
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        ti = ev.get("Task Info") or {}
-        total_ms += (ti.get("Finish Time") or 0) - (ti.get("Launch Time") or 0)
-    return round(total_ms / 1000.0, 1)
+    stages = stage_skew(os.path.join(eventlog_dir, apps[0]))
+    return round(sum(s["task_s"] for s in stages), 1)
 
 
 def main() -> None:

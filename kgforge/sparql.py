@@ -2036,11 +2036,12 @@ def _compile_group_ex(
     Certainly-bound vars keep null-safe equality, so the common
     all-bound query still plans hash joins on every key.
 
-    Schema patterns are broadcast only where they meet a join: another
-    binding member of this group, or — `side` — the group's solutions
-    are themselves a join operand (an OPTIONAL / MINUS / EXISTS side,
-    or a subquery joined into its group). A hint on a lone pattern of
-    a top-level group or a UNION branch would never attach."""
+    Schema patterns and VALUES blocks are broadcast only where they
+    meet a join: another binding member of this group, or — `side` —
+    the group's solutions are themselves a join operand (an OPTIONAL /
+    MINUS / EXISTS side, or a subquery joined into its group). A hint
+    on a lone member of a top-level group or a UNION branch would
+    never attach."""
     n_binding = sum(k in _BINDING_MEMBERS for k, _ in g.members)
     if not n_binding:
         raise ValueError("empty group graph pattern")
@@ -2076,7 +2077,10 @@ def _compile_group_ex(
             }
             # inline data is row-count-tiny by construction — broadcast
             # so the restriction join never shuffles the instance side
-            acc, maybe = _compat_join(acc, broadcast(vdf), maybe, vmaybe)
+            # (only where it meets a join, like a schema pattern)
+            if joined:
+                vdf = broadcast(vdf)
+            acc, maybe = _compat_join(acc, vdf, maybe, vmaybe)
         elif kind == "subquery":
             sdf, smaybe = _compile_subquery(triples, g.subqueries[i], joined)
             acc, maybe = _compat_join(acc, sdf, maybe, smaybe)

@@ -35,18 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgforge.web.corpus import WEB_PAGES_SCHEMA
 from kgforge.web.extract import extract_text
 from kgforge.web.mentions import extract_mention_triples
-
-WEB_PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 EVENTS_SCHEMA = T.StructType(
     [

@@ -60,7 +60,9 @@ def word_shingles(text: Column, k: int = 5) -> Column:
 
 
 def tokenized(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, toks) with the `\\s+` split evaluated ONCE per document.
+    """(id, toks) with the `\\s+` split evaluated ONCE per document;
+    df's other columns ride along between the two (the near-dup
+    operators carry each text group's size this way).
 
     The round-robin repartition does two jobs: it is the projection
     barrier that stops CollapseProject from re-inlining the split into
@@ -71,8 +73,11 @@ def tokenized(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     of the tokenized text (same O(corpus) class as the dedup shuffle
     itself)."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    carry = [c for c in df.columns if c not in (id_col, text_col)]
     return df.repartition(n_part).select(
-        F.col(id_col).alias("id"), F.split(F.trim(F.col(text_col)), "\\s+").alias("toks")
+        F.col(id_col).alias("id"),
+        *carry,
+        F.split(F.trim(F.col(text_col)), "\\s+").alias("toks"),
     )
 
 
@@ -81,16 +86,14 @@ def shingle_rows(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    distinct: bool = True,
 ) -> DataFrame:
-    """(id, s) exploded k-shingles, split-once formulation (the scale
-    path for every shingle consumer; semantics identical to
-    `explode(array_distinct(word_shingles(text, k)))`)."""
+    """(id, s) exploded distinct k-shingles, split-once formulation (the
+    scale path for every shingle consumer; semantics identical to
+    `explode(array_distinct(word_shingles(text, k)))`). df's other
+    columns ride along, as in `tokenized`."""
     t = tokenized(df, id_col, text_col)
-    sh = _shingles_of_tokens(F.col("toks"), k)
-    if distinct:
-        sh = F.array_distinct(sh)
-    return t.select("id", F.explode(sh).alias("s"))
+    sh = F.array_distinct(_shingles_of_tokens(F.col("toks"), k))
+    return t.select(*[c for c in t.columns if c != "toks"], F.explode(sh).alias("s"))
 
 
 def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -102,30 +105,6 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).cast("bigint").alias("dup_count"),
         )
-    )
-
-
-def minhash_signatures_agg(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """(id, h0..h{n-1}) MinHash signatures via explode + hash-aggregate.
-
-    This is the scale formulation: shingles are computed ONCE per
-    document (the per-row array expression variant gets re-inlined by
-    projection collapse — the shingle build ends up evaluated
-    num_hashes× per row, and once more per join side; observed 20×
-    slower at sf0.1). The groupBy(id) min() has a map-side partial
-    aggregate, so the shuffle carries one row per document."""
-    sh = shingle_rows(df, id_col, text_col, shingle_k)
-    return sh.groupBy("id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"seed{i}:"), F.col("s")))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
     )
 
 
@@ -368,18 +347,9 @@ def minhash_lsh_candidates(
 
     # signatures per distinct text, with gsize riding the shingle
     # explode + signature aggregate as a first() — no second join
-    # against the groups subtree (same split-once/spread shape as
-    # shingle_rows, one extra carried int column)
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    t = groups.select("gid", "gsize", "text").repartition(n_part).select(
-        "gid", "gsize", F.split(F.trim(F.col("text")), "\\s+").alias("toks")
-    )
-    sh = t.select(
-        "gid",
-        "gsize",
-        F.explode(F.array_distinct(_shingles_of_tokens(F.col("toks"), 5))).alias("s"),
-    )
-    sig = sh.groupBy("gid").agg(
+    # against the groups subtree
+    sh = shingle_rows(groups.select("gid", "gsize", "text"), "gid", "text", 5)
+    sig = sh.groupBy(F.col("id").alias("gid")).agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"seed{i}:"), F.col("s")))).alias(f"h{i}")
             for i in range(num_hashes)
@@ -514,14 +484,9 @@ def ngram_jaccard_pairs(
     groups, mem = _collapse_exact(df, id_col, text_col)
 
     # -- shingles once per distinct text, split-once + spread ----------
-    t = groups.select("gid", "gsize", "text").repartition(n_part).select(
-        "gid", "gsize", F.split(F.trim(F.col("text")), "\\s+").alias("toks")
-    )
-    ex = t.select(
-        "gid",
-        "gsize",
-        F.explode(F.array_distinct(_shingles_of_tokens(F.col("toks"), shingle_k))).alias("s"),
-    )
+    ex = shingle_rows(
+        groups.select("gid", "gsize", "text"), "gid", "text", shingle_k
+    ).withColumnRenamed("id", "gid")
 
     # -- 2. doc-weighted df census in ONE pass by s (window), then ONE
     # groupBy(gid) aggregate for EVERYTHING per-group (round-7

@@ -3,8 +3,9 @@
 * brute-force cosine top-k — the exactness baseline; one narrow pass +
   a top-k aggregate (no shuffle of the full score set: TakeOrdered).
 * LSH-bucketed ANN — a scale path: random-hyperplane sign buckets
-  (driver-seeded, deterministic), search only the query's bucket
-  (optionally with multi-probe by flipping low-confidence bits).
+  (driver-seeded, deterministic) materialized as a partitioned index
+  (`build_ann_index`); a probe (`ann_index_topk`) scans only the
+  query's buckets, optionally with multi-probe by flipping bits.
   Recall is measured against the brute-force baseline in tests.
 * IVF ANN — the other scale path the pipeline brief names: a TRAINED
   coarse quantizer (sampled k-means) partitions vectors into cells
@@ -69,23 +70,6 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id (0..2^n_planes-1) as a JVM expression.
-
-    Fine for a few planes / one-shot probes; for BULK bucket
-    computation use `buckets_udf` — n_tables×n_planes interpreted
-    array-aggregates per row are ~10× slower than one Arrow-batched
-    numpy matmul (measured 20s vs 2s building the sf0.1 index)."""
-    acc = F.lit(0)
-    for j, h in enumerate(planes):
-        hcol = F.array(*[F.lit(float(x)) for x in h])
-        dot = F.aggregate(
-            F.zip_with(vec, hcol, lambda x, y: x * y), F.lit(0.0), lambda a, v: a + v
-        )
-        acc = acc + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return acc
-
-
 def buckets_udf(all_planes: list[list[list[float]]]):
     """Vectorized per-row bucket ids for EVERY table at once: one
     Arrow-batched matmul against the stacked (n_tables·n_planes, dim)
@@ -114,56 +98,6 @@ def buckets_udf(all_planes: list[list[list[float]]]):
         return pd.Series(list(ids))
 
     return _buckets
-
-
-def lsh_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe_bits: int = 1,
-) -> DataFrame:
-    """ANN top-k, multi-table random-hyperplane LSH — the INDEX-FREE
-    one-shot variant: a vector is a candidate if its sign bucket
-    matches the query's in ANY of the `n_tables` independent tables
-    (each probing buckets at hamming distance ≤ multiprobe_bits).
-    Exact cosine is computed only for candidates, but the bucket test
-    itself is a filter over the full table (n_tables×n_planes dot
-    products per row). Use build_ann_index + ann_index_topk for
-    repeated queries — the materialized (tbl, bucket)-partitioned
-    index prunes the scan itself. Recall/cost is tuned by (n_planes,
-    n_tables, multiprobe_bits)."""
-    qv = [float(x) for x in query_vec]
-    vec = _as_double(F.col(vec_col))
-    q = F.array(*[F.lit(x) for x in qv])
-
-    cond = F.lit(False)
-    base = df.select(F.col(id_col).alias("vec_id"), vec.alias("v"))
-    for t in range(n_tables):
-        planes = hyperplanes(len(qv), n_planes, seed + 1000 * t)
-        qb = 0
-        for j, h in enumerate(planes):
-            if sum(x * y for x, y in zip(qv, h)) >= 0:
-                qb |= 1 << j
-        probes = {qb}
-        if multiprobe_bits >= 1:
-            probes |= {qb ^ (1 << j) for j in range(n_planes)}
-        if multiprobe_bits >= 2:
-            probes |= {
-                qb ^ (1 << i) ^ (1 << j)
-                for i in range(n_planes)
-                for j in range(i + 1, n_planes)
-            }
-        cond = cond | bucket_expr(F.col("v"), planes).isin(*sorted(probes))
-
-    scored = base.filter(cond).select(
-        "vec_id", F.round(cosine_expr(F.col("v"), q), 6).alias("score")
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def embedding_near_dups(
@@ -384,9 +318,9 @@ def build_ann_index(
     """Materialize the LSH index: one vectorized pass computing each
     vector's per-table sign bucket (buckets_udf: single Arrow matmul),
     written as parquet PARTITIONED BY (tbl, bucket_p) and SORTED by
-    bucket within files. This is the scale path `lsh_topk`'s docstring
-    promises: the one-time index cost is amortized over all queries,
-    and a probe reads ONLY the probed partitions.
+    bucket within files: the one-time index cost is amortized over all
+    queries, and a probe (`ann_index_topk`) reads ONLY the probed
+    partitions.
 
     Two-level pruning: `bucket_p` = the top `partition_bits` bits of
     the bucket is the DIRECTORY key (partition pruning at the scan —

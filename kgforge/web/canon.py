@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from kgforge.session import arrow_rows, bounded_arrow
+from kgforge.session import arrow_rows, bounded_arrow, local_df
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -65,11 +66,9 @@ def _cc_driver(edges: list[tuple], spark, node_type=None) -> DataFrame:
     an explicit row-count threshold (see connected_components), so
     this is a bounded-by-construction collect, not a hot-path one.
 
-    Arrow on both hops (the bounded_arrow probe / createDataFrame-from-
-    pandas): the Row-object collect + pickle-per-tuple parallelize were
-    themselves a multi-second serial cost at ~0.5M edges."""
-    import pandas as pd
-
+    Arrow on both hops (the bounded_arrow probe / `local_df`): the
+    Row-object collect + pickle-per-tuple parallelize were themselves a
+    multi-second serial cost at ~0.5M edges."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -92,20 +91,14 @@ def _cc_driver(edges: list[tuple], spark, node_type=None) -> DataFrame:
         {(n, find(n)) for n in parent}
         | {(r, r) for r in {find(n) for n in parent}}
     )
-    out = pd.DataFrame(rows, columns=["node", "component"])
-    # schema pinned to the INPUT edge column type in both branches —
-    # inferring from pandas made the empty case come back as string
-    # while non-empty numeric ids came back as long (schema flipped by
-    # input size)
-    from pyspark.sql.types import StringType, StructField, StructType
-
+    # schema pinned to the INPUT edge column type — inferring it made
+    # the empty case come back as string while non-empty numeric ids
+    # came back as long (schema flipped by input size)
     dt = node_type if node_type is not None else StringType()
     schema = StructType(
         [StructField("node", dt, False), StructField("component", dt, False)]
     )
-    if len(out) == 0:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(out, schema)  # Arrow batch transfer
+    return local_df(spark, rows, schema)
 
 
 def connected_components(

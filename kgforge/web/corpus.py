@@ -21,9 +21,23 @@ import random
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
+from pyspark.sql import types as T
+
 from kgforge.mapping.spec import sanitize_py
 
 DOMAIN = "https://kg.example.org/web#"
+
+# The one `web_pages` schema: the in-memory DataFrame, the parquet
+# writers (as Arrow types) and the streaming reader all use it.
+WEB_PAGES_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("html", T.BinaryType(), False),
+        T.StructField("text", T.StringType(), False),
+        T.StructField("lang", T.StringType(), False),
+    ]
+)
 
 RELATIONS = {
     "works_for": "works for",
@@ -155,13 +169,17 @@ class Corpus:
     labels: set                 # (mention_iri, surface) rdfs:label pairs
 
 
-def make_corpus(
-    n_pages: int = 1000,
-    seed: int = 42,
+def _page_stream(
+    n_pages: int,
+    seed: int,
     facts_per_page: tuple[int, int] = (2, 6),
     hub_frac: float = 0.0,
-) -> Corpus:
-    """Entity universe scales with corpus size (floors keep small test
+):
+    """The one page generator: yields `(page, facts)` per page, page =
+    a `web_pages` row `(url, warc_ts, html, text, lang)`, facts = the
+    `(s_ent, rel, o_ent, s_surf, o_surf)` mentions planted on it.
+
+    Entity universe scales with corpus size (floors keep small test
     corpora byte-stable): a fixed fact base would make every
     downstream stage collapse to constant-size output under dedup,
     which misrepresents scaling — in a real crawl the entity/fact
@@ -205,11 +223,6 @@ def make_corpus(
                 raise AssertionError(f"surface collision: {v!r}")
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    pages: list[tuple] = []
-    mention_triples: set = set()
-    surface_entity: dict[str, str] = {}
-    labels: set = set()
-
     fact_cum = _zipf_cum(len(facts), a=1.1)  # hoisted: O(1) page loop
     hub = orgs[0]  # planted mega-hub (already the Zipf head org)
     for i in range(n_pages):
@@ -220,17 +233,13 @@ def make_corpus(
             # ~hub_frac of all pages, partnered with a random org —
             # the canonical hub IRI then dominates the subject column
             page_facts.append((hub, "partner_of", pick(orgs, org_cum)))
+        planted = []
         lines: list[str] = []
         for s_ent, rel, o_ent in page_facts:
             s_surf = rng.choice(s_ent.variants)
             o_surf = rng.choice(o_ent.variants)
             lines.append(f"{s_surf} {RELATIONS[rel]} {o_surf}.")
-            s_iri, o_iri = mention_iri(s_surf), mention_iri(o_surf)
-            mention_triples.add((s_iri, DOMAIN + rel, o_iri))
-            surface_entity[s_surf] = s_ent.eid
-            surface_entity[o_surf] = o_ent.eid
-            labels.add((s_iri, s_surf))
-            labels.add((o_iri, o_surf))
+            planted.append((s_ent, rel, o_ent, s_surf, o_surf))
         if rng.random() < 0.5:
             lines.append(rng.choice(_FILLERS))
         text = "\n".join(lines)
@@ -244,8 +253,29 @@ def make_corpus(
         lang = rng.choices(
             ["en", "es", "de", "fr", "zh"], weights=[70, 10, 8, 7, 5]
         )[0]
-        pages.append((url, t0 + timedelta(seconds=i), html.encode("utf-8"), text, lang))
+        yield (url, t0 + timedelta(seconds=i), html.encode("utf-8"), text, lang), planted
 
+
+def make_corpus(
+    n_pages: int = 1000,
+    seed: int = 42,
+    facts_per_page: tuple[int, int] = (2, 6),
+    hub_frac: float = 0.0,
+) -> Corpus:
+    """The pages of `_page_stream` in memory, with their ground truth."""
+    pages: list[tuple] = []
+    mention_triples: set = set()
+    surface_entity: dict[str, str] = {}
+    labels: set = set()
+    for page, planted in _page_stream(n_pages, seed, facts_per_page, hub_frac):
+        pages.append(page)
+        for s_ent, rel, o_ent, s_surf, o_surf in planted:
+            s_iri, o_iri = mention_iri(s_surf), mention_iri(o_surf)
+            mention_triples.add((s_iri, DOMAIN + rel, o_iri))
+            surface_entity[s_surf] = s_ent.eid
+            surface_entity[o_surf] = o_ent.eid
+            labels.add((s_iri, s_surf))
+            labels.add((o_iri, o_surf))
     return Corpus(pages, mention_triples, surface_entity, labels)
 
 
@@ -281,85 +311,37 @@ def corpus_to_parquet(
     pyarrow, STREAMING chunk by chunk (a multi-million-page corpus
     doesn't fit as one Python list; used by the scaling benchmark so
     corpus generation stays outside the timed window; ground-truth
-    tracking is skipped — benchmarks need bytes, not oracles).
+    tracking is skipped — benchmarks need bytes, not oracles). The
+    pages are `make_corpus`'s, byte for byte.
 
     One file per `rows_per_file` pages: a single small parquet file is
     ONE Spark input split regardless of core count — the 4N run would
     serialize on the scan. Many files ≡ the many objects a real
     100 TB Iceberg table has."""
+    import itertools
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rng = random.Random(seed * 7919 + 13)
-    ents = make_entities(
-        seed,
-        n_person=min(max(80, n_pages // 50), 250000),
-        n_org=min(max(60, n_pages // 80), 150000),
-        n_place=min(max(30, n_pages // 250), 50000),
-    )
-    persons = [e for e in ents if e.kind == "person"]
-    orgs = [e for e in ents if e.kind == "org"]
-    places = [e for e in ents if e.kind == "place"]
-    org_cum = _zipf_cum(len(orgs))
-    place_cum = _zipf_cum(len(places))
-
-    def pick(items, cum):
-        return rng.choices(items, cum_weights=cum, k=1)[0]
-
-    facts: list[tuple[Entity, str, Entity]] = []
-    for p in persons:
-        facts.append((p, "works_for", pick(orgs, org_cum)))
-        if rng.random() < 0.25:
-            facts.append((p, "founded", pick(orgs, org_cum)))
-    for o in orgs:
-        facts.append((o, "located_in", pick(places, place_cum)))
-        if rng.random() < 0.3:
-            facts.append((o, "partner_of", pick(orgs, org_cum)))
-    fact_cum = _zipf_cum(len(facts), a=1.1)
-    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
-
-    hub = orgs[0]  # planted mega-hub (see make_corpus)
+    pages = (page for page, _ in _page_stream(n_pages, seed, hub_frac=hub_frac))
     os.makedirs(path, exist_ok=True)
     for start in range(0, n_pages, rows_per_file):
-        urls, tss, htmls, texts, langs = [], [], [], [], []
-        for i in range(start, min(start + rows_per_file, n_pages)):
-            k = rng.randint(2, 6)
-            lines = []
-            page_facts = list(rng.choices(facts, cum_weights=fact_cum, k=k))
-            if hub_frac and rng.random() < hub_frac:
-                page_facts.append((hub, "partner_of", pick(orgs, org_cum)))
-            for s_ent, rel, o_ent in page_facts:
-                s_surf = rng.choice(s_ent.variants)
-                o_surf = rng.choice(o_ent.variants)
-                lines.append(f"{s_surf} {RELATIONS[rel]} {o_surf}.")
-            if rng.random() < 0.5:
-                lines.append(rng.choice(_FILLERS))
-            text = "\n".join(lines)
-            title = f"Report {i}"
-            html = (
-                _HTML_HEAD.format(title=title, page=i)
-                + "".join(f"<p>{_esc(ln)}</p>" for ln in lines)
-                + _HTML_FOOT
-            )
-            urls.append(f"https://ex{seed}.org/page/{i}")
-            tss.append(t0 + timedelta(seconds=i))
-            htmls.append(html.encode("utf-8"))
-            texts.append(text)
-            langs.append(
-                rng.choices(["en", "es", "de", "fr", "zh"], weights=[70, 10, 8, 7, 5])[0]
-            )
-        table = pa.table(
-            {
-                "url": pa.array(urls, pa.string()),
-                "warc_ts": pa.array(tss, pa.timestamp("us", tz="UTC")),
-                "html": pa.array(htmls, pa.binary()),
-                "text": pa.array(texts, pa.string()),
-                "lang": pa.array(langs, pa.string()),
-            }
-        )
-        pq.write_table(table, os.path.join(path, f"part-{start:09d}.parquet"))
+        chunk = list(itertools.islice(pages, rows_per_file))
+        pq.write_table(_pages_table(chunk), os.path.join(path, f"part-{start:09d}.parquet"))
+
+
+def _pages_table(pages: list[tuple]):
+    """`web_pages` rows → a `pyarrow.Table` typed by WEB_PAGES_SCHEMA
+    (Arrow fields stay nullable, as pyarrow writes them by default)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.table(
+        {
+            f.name: pa.array(col, to_arrow_type(f.dataType))
+            for f, col in zip(WEB_PAGES_SCHEMA.fields, zip(*pages))
+        }
+    )
 
 
 def pages_dataframe(spark, corpus: Corpus, num_partitions: int = 8):
@@ -368,20 +350,9 @@ def pages_dataframe(spark, corpus: Corpus, num_partitions: int = 8):
     (Arrow LocalRelation) then repartitions to `num_partitions` real
     partitions — createDataFrame(list) would plan 32 near-empty
     slices that every downstream pipeline stage inherits."""
-    from pyspark.sql import types as T
-
     from kgforge.session import local_df
 
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), False),
-            T.StructField("html", T.BinaryType(), False),
-            T.StructField("text", T.StringType(), False),
-            T.StructField("lang", T.StringType(), False),
-        ]
-    )
-    return local_df(spark, corpus.pages, schema).repartition(num_partitions)
+    return local_df(spark, corpus.pages, WEB_PAGES_SCHEMA).repartition(num_partitions)
 
 
 def contract_corpus_parquet(n_pages: int = 300, seed: int = 42) -> str:
@@ -394,23 +365,12 @@ def contract_corpus_parquet(n_pages: int = 300, seed: int = 42) -> str:
     without the oracle having to re-derive the generator."""
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = f"/tmp/kgforge_contract_corpus_{n_pages}_{seed}.parquet"
     if os.path.exists(path):
         return path
-    corpus = make_corpus(n_pages=n_pages, seed=seed)
-    urls, tss, htmls, texts, langs = zip(*corpus.pages)
-    table = pa.table(
-        {
-            "url": pa.array(urls, pa.string()),
-            "warc_ts": pa.array(tss, pa.timestamp("us", tz="UTC")),
-            "html": pa.array(htmls, pa.binary()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(langs, pa.string()),
-        }
-    )
+    table = _pages_table(make_corpus(n_pages=n_pages, seed=seed).pages)
     tmp = f"{path}.tmp.{os.getpid()}"
     pq.write_table(table, tmp)
     os.replace(tmp, path)

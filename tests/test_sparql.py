@@ -1300,6 +1300,26 @@ def test_local_union_equals_spark_union(spark, monkeypatch):
     assert len(rows) == 12 and (None, None, "3", None) in rows
 
 
+@pytest.mark.parametrize("query, rows, hints", [
+    ("SELECT ?x WHERE { VALUES ?x { <a> <b> } }", [("a",), ("b",)], 0),
+    (
+        "SELECT ?x ?y WHERE { { VALUES ?x { <a> } } UNION { ?x <q> ?y } }",
+        [("a", None), ("a", "x")],
+        0,
+    ),
+    ("SELECT ?x ?y WHERE { VALUES ?x { <a> } ?x <q> ?y }", [("a", "x")], 1),
+])
+def test_values_broadcast_only_at_a_join(spark, query, rows, hints):
+    """A VALUES block is broadcast only where it meets a join: alone in
+    its group or in a UNION branch the hint would attach to no join (and
+    Spark would log it as unattached on every analysis)."""
+    out = sparql(_triples(spark, _SEEDED_ROWS), query)
+    qe = out._jdf.queryExecution()
+    assert qe.analyzed().toString().count("ResolvedHint") == hints
+    assert qe.optimizedPlan().toString().count("strategy=broadcast") == hints
+    assert sorted((tuple(r) for r in out.collect()), key=repr) == sorted(rows, key=repr)
+
+
 @pytest.mark.parametrize("query, answer", [
     ("ASK { <a> <p> ?y }", True),
     ("ASK { <a> <nope> ?y }", False),

@@ -21,11 +21,7 @@ from kgforge.textops.multimodal import (
     decode_stub,
     payload_metadata,
 )
-from kgforge.textops.similarity import (
-    brute_force_topk,
-    embedding_near_dups,
-    lsh_topk,
-)
+from kgforge.textops.similarity import brute_force_topk, embedding_near_dups
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu nu xi".split()
 
@@ -190,14 +186,11 @@ def _embeddings(spark, n=200, dim=16, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_brute_force_topk_and_lsh_recall(spark):
+def test_brute_force_topk(spark):
     df = _embeddings(spark)
     q = df.filter(F.col("vec_id") == 3).first().embedding
     exact = [r.vec_id for r in brute_force_topk(df, q, k=10).collect()]
     assert exact[0] in (3, 9000) and set(exact[:2]) == {3, 9000}
-    approx = [r.vec_id for r in lsh_topk(df, q, k=10).collect()]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.8, f"recall@10={recall}"
 
 
 def test_embedding_near_dups(spark):

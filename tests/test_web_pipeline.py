@@ -26,6 +26,45 @@ def pages(spark, corpus):
     return C.pages_dataframe(spark, corpus).cache()
 
 
+# ------------------------------------------------------------- corpus
+def test_corpus_to_parquet_writes_make_corpus_pages(tmp_path):
+    """The streamed multi-file writer and the in-memory generator share
+    one page stream: the files hold make_corpus's pages byte for byte,
+    in order, hub pages included."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "pages")
+    C.corpus_to_parquet(path, 300, seed=5, rows_per_file=70, hub_frac=0.05)
+    files = sorted(os.listdir(path))
+    assert len(files) == 5
+    rows = [
+        tuple(r.values())
+        for f in files
+        for r in pq.read_table(os.path.join(path, f)).to_pylist()
+    ]
+    assert rows == C.make_corpus(300, seed=5, hub_frac=0.05).pages
+
+
+def test_one_web_pages_schema(spark, tmp_path, corpus):
+    """The in-memory DataFrame, the parquet writers and the streaming
+    reader type web_pages with the one WEB_PAGES_SCHEMA."""
+    from kgforge import streaming
+
+    def typed(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    path = str(tmp_path / "pages")
+    C.corpus_to_parquet(path, 20, seed=3, rows_per_file=10)
+    want = typed(C.WEB_PAGES_SCHEMA)
+    assert streaming.WEB_PAGES_SCHEMA is C.WEB_PAGES_SCHEMA
+    assert typed(C.pages_dataframe(spark, corpus).schema) == want
+    assert typed(spark.read.parquet(C.contract_corpus_parquet()).schema) == want
+    assert typed(spark.read.parquet(path).schema) == want
+    assert typed(spark.readStream.schema(streaming.WEB_PAGES_SCHEMA).parquet(path).schema) == want
+
+
 # ------------------------------------------------------------- extraction
 def test_extract_byte_identity_single_node(corpus):
     """The pinned extractor reproduces ground-truth text byte-for-byte

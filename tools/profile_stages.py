@@ -3,36 +3,41 @@
 Runs each named query once warm + once timed with the event log on,
 and prints the timed run's layer split — driver build (the query
 function: plan construction plus any eager jobs it fires) and
-execution (`.count()`), each with its wall time and Spark job count
+execution (the sink), each with its wall time and Spark job count
 read from the status tracker — then its py4j round trips (driver→JVM
 calls and object releases: the cost of building a plan through the
 Column API, one or two per node) and its Janino compiles (count and
 milliseconds): a plan whose generated classes outgrow Spark's codegen
-cache recompiles on every warm run. It then parses the log into a
-per-stage table:
-wall, summed task CPU /
+cache recompiles on every warm run. It then reads the log through
+`bench/task_skew.py` into a per-stage table: wall, summed task CPU /
 run time, task count, shuffle bytes/records in and out, and the RDD
 scope names (Exchange / Window / Generate / ArrowEvalPython ...) that
-map the stage back to plan operators — the guide §7.1 empirical loop
+map the stage back to plan operators — the empirical tuning loop
 driven from the event log instead of the UI. This is the instrument
 behind the round-7 Part III stage numbers (e.g. the 62.5 s-CPU ngram
 verify stage, the 3x window+aggregate re-executions, the 2-task melt
 scan).
 
     SPARK_GRAFT_SF_DIR=/tmp/sf1.0 python tools/profile_stages.py \
-        dedup_ngram_jaccard dedup_minhash
+        [--sink count|noop] dedup_ngram_jaccard dedup_minhash
+
+`--sink count` (the default) ends each query in `.count()` as
+`bench.py` does, which lets Catalyst prune columns no count needs;
+`--sink noop` writes every column to Spark's `noop` sink instead, so
+work a count would prune away is measured too.
 
 Not part of the driver contract; bench.py stays the frozen
 measurement."""
 from __future__ import annotations
 
-import json
+import argparse
 import os
 import sys
 import time
-from collections import defaultdict
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "bench"))
 
 
 def _compiled(spark) -> tuple[int, float]:
@@ -58,10 +63,21 @@ def _py4j_counter(spark) -> dict:
     return sent
 
 
+def _sink(kind: str):
+    if kind == "noop":
+        return lambda df: df.write.format("noop").mode("overwrite").save()
+    return lambda df: df.count()
+
+
 def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("queries", nargs="*", default=["dedup_ngram_jaccard"])
+    ap.add_argument("--sink", choices=("count", "noop"), default="count")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/sf1.0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    qnames = sys.argv[1:] or ["dedup_ngram_jaccard"]
+    qnames = args.queries
+    sink = _sink(args.sink)
     logdir = "/tmp/sparkevents_profile"
     os.makedirs(logdir, exist_ok=True)
 
@@ -86,10 +102,10 @@ def main():
     sc = spark.sparkContext
     qs = entry.queries()
     # warm
-    next(iter(qs.values()))(spark, sf_dir).count()
+    sink(next(iter(qs.values()))(spark, sf_dir))
     for qn in qnames:
         sc.setJobGroup(f"warm:{qn}", f"warm:{qn}")
-        qs[qn](spark, sf_dir).count()
+        sink(qs[qn](spark, sf_dir))
     marks = {}
     for qn in qnames:
         n0, ms0 = _compiled(spark)
@@ -101,7 +117,7 @@ def main():
         df = qs[qn](spark, sf_dir)
         t1 = time.perf_counter()
         sc.setJobGroup(f"{qn}:exec", qn)
-        df.count()
+        sink(df)
         marks[qn] = time.perf_counter() - t0
         calls = py4j["n"] - calls0
         n1, ms1 = _compiled(spark)
@@ -119,81 +135,26 @@ def main():
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    # parse (Spark 4 rolling layout: eventlog_v2_<app>/events_*)
+    from task_skew import stage_skew
+
+    # Spark 4 rolling layout: eventlog_v2_<app>/events_*
     path = os.path.join(logdir, app_id)
     if not os.path.exists(path):
-        d = os.path.join(logdir, f"eventlog_v2_{app_id}")
-        parts = sorted(
-            os.path.join(d, p) for p in os.listdir(d) if p.startswith("events")
-        )
-    else:
-        parts = [path]
-    stages = {}
-    stage_to_desc = {}
-    job_desc = {}
-    sql_by_stage = {}
-    def lines():
-        for p in parts:
-            with open(p) as f:
-                yield from f
-
-    for line in lines():
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get("spark.job.description", "")
-                for sid in ev.get("Stage IDs", []):
-                    stage_to_desc[sid] = desc
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                sub = si["Submission Time"]
-                comp = si["Completion Time"]
-                s = stages.setdefault(sid, defaultdict(float))
-                scopes = []
-                for ri in si.get("RDD Info", []):
-                    sc = ri.get("Scope")
-                    if sc:
-                        try:
-                            nm = json.loads(sc).get("name", "")
-                        except Exception:
-                            nm = ""
-                        if nm and nm not in scopes:
-                            scopes.append(nm)
-                s["name"] = ",".join(scopes[:6])[:110]
-                s["wall"] = (comp - sub) / 1000.0
-                s["tasks"] = si["Number of Tasks"]
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                tm = ev.get("Task Metrics") or {}
-                s = stages.setdefault(sid, defaultdict(float))
-                s["cpu"] = s.get("cpu", 0) + tm.get("Executor CPU Time", 0) / 1e9
-                s["runtime"] = s.get("runtime", 0) + tm.get("Executor Run Time", 0) / 1e3
-                sr = tm.get("Shuffle Read Metrics") or {}
-                sw = tm.get("Shuffle Write Metrics") or {}
-                s["srb"] += sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
-                s["srr"] += sr.get("Total Records Read", 0)
-                s["fetchwait"] = s.get("fetchwait", 0) + sr.get("Fetch Wait Time", 0) / 1e3
-                s["swb"] += sw.get("Shuffle Bytes Written", 0)
-                s["swr"] += sw.get("Shuffle Records Written", 0)
+        path = os.path.join(logdir, f"eventlog_v2_{app_id}")
+    stages = stage_skew(path)
 
     for qn in qnames:
         print(f"\n=== {qn} (wall {marks[qn]:.3f}s) — timed (non-warm) stages ===")
-        rows = [
-            (sid, s) for sid, s in sorted(stages.items())
-            if stage_to_desc.get(sid, "") == qn
-        ]
-        tot = sum(s["wall"] for _, s in rows)
+        rows = [s for s in stages if s["description"] == qn]
+        tot = sum(s["wall_s"] or 0 for s in rows)
         print(f"{'sid':>4} {'wall':>7} {'cpu':>8} {'run':>8} {'tasks':>5} "
               f"{'sw_MB':>8} {'sw_rec':>10} {'sr_MB':>8} {'sr_rec':>10}  name")
-        for sid, s in rows:
+        for s in rows:
             print(
-                f"{sid:>4} {s['wall']:>7.2f} {s['cpu']:>8.2f} {s['runtime']:>8.2f} "
-                f"{s['tasks']:>5} {s['swb']/1e6:>8.1f} {s['swr']:>10} "
-                f"{s['srb']/1e6:>8.1f} {s['srr']:>10}  {s['name']}"
+                f"{s['stage_id']:>4} {s['wall_s'] or 0:>7.2f} {s['cpu_s']:>8.2f} "
+                f"{s['run_s']:>8.2f} {s['n_tasks']:>5} {s['sw_bytes'] / 1e6:>8.1f} "
+                f"{s['sw_records']:>10.0f} {s['sr_bytes'] / 1e6:>8.1f} "
+                f"{s['sr_records']:>10.0f}  {s['scopes'][:110]}"
             )
         print(f"sum stage wall = {tot:.2f}s over {len(rows)} stages")
 
