@@ -5,20 +5,23 @@ at measurable scale:
 
   * documents: n_docs random texts + n_doc_pile EMPTY docs — every
     empty doc hashes to simhash 0, so all of them share all four
-    (chunk, 0) band keys: the unguarded banded self-join emits
+    (chunk, 0) band keys: a self-join of those keys emits
     4·C(pile, 2) rows from four keys.
   * vectors: n_vecs random 64-dim embeddings + n_vec_pile EXACT
-    duplicates — the pile lands in ONE sign bucket per table, so the
-    unguarded join emits n_tables·C(pile, 2) rows from three keys.
+    duplicates — the pile lands in ONE sign bucket per table, so a
+    self-join emits n_tables·C(pile, 2) rows from three keys.
 
 Protocol (same as bench/skew_demo.py): each leg runs in a fresh JVM
 with the Spark event log on; analysis reports wall seconds, output
 pair count, and per-task max/median records/time skew for the heavy
-stages (bench.task_skew). Guarded legs run the SCALE posture
-(max_bucket=1024, oversize='drop'; simhash also drop_zero). Pass =
-guarded legs complete flat (skew ratio near 1 on the pair stages,
-pile contributes nothing) while the unguarded legs show the
-quadratic hot keys in both records_max and wall time.
+stages (bench.task_skew). The "unguarded" legs call the operator with
+no profile, so since round 5 they run the SAFE default (max_bucket=1024,
+oversize='join'): the hot keys stream through the bounded-memory
+self-join and still emit their quadratic pairs. The guarded legs run
+the SCALE posture (max_bucket=1024, oversize='drop'; simhash also
+simhash_drop_zero). Pass = guarded legs complete flat (skew ratio near
+1 on the pair stages, pile contributes nothing) while the "unguarded"
+legs show the quadratic hot keys in both records_max and wall time.
 
     python bench/hot_bucket.py --cores 32 --workdir /tmp/kgforge_hotbucket
 """

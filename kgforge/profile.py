@@ -6,27 +6,25 @@ The engine's quadratic hazards are all the same class — a banded-LSH
 bucket self-join where one hot key (boilerplate band signature, empty
 text hashing to simhash 0, duplicate/zero embedding vectors, stopword
 shingles, a head-entity subject bucket) turns O(n) rows into C(n, 2)
-pairs. Each operator has its own guard knob; `ScaleProfile` carries
-them all, and every guarded operator accepts `profile=` which
-OVERRIDES its individual keyword arguments:
+pairs. `ScaleProfile` carries every guard knob, and `profile=` is the
+only guard argument of the guarded operators:
 
     from kgforge.profile import SCALE
     minhash_lsh_candidates(df, profile=SCALE)
     simhash_near_dups(df, profile=SCALE)
     embedding_near_dups(emb, profile=SCALE)
     ngram_jaccard_pairs(df, profile=SCALE)
+    candidate_pairs_minhash(surfaces, prune_threshold=t, profile=SCALE)
 
-Three presets:
+Two presets:
 
-* `PARITY` — no guards; exactly the DuckDB-oracle semantics. Opt-in
-  (`profile=PARITY` or explicit `max_bucket=None`) since round 5.
-* `SAFE` — only the guards that do NOT change result semantics:
-  `max_bucket` with `oversize="join"` bounds per-task memory (no
-  collect_list hub row can form) while producing the identical pair
-  set. Since round 5 this is the SIGNATURE DEFAULT of every guarded
-  bucket-pair operator — calling one with no arguments runs SAFE
+* `SAFE` = `ScaleProfile()` — only the guards that do NOT change
+  result semantics: `max_bucket` with `oversize="join"` bounds
+  per-task memory (no collect_list hub row can form) while producing
+  the pair set of a plain "every pair that shares a bucket key"
+  enumeration. It is the default `profile` of every guarded operator
   (asserted by test_profile.test_safe_is_the_default_for_guarded_
-  operators).
+  operators), and the contract oracles check it.
 * `SCALE` — every guard on, including the semantics-changing ones
   (oversized buckets dropped as boilerplate, simhash-0 empty docs
   pre-dropped, corpus-relative shingle df cap). The crawl-scale
@@ -40,12 +38,11 @@ from dataclasses import dataclass, fields
 
 @dataclass(frozen=True)
 class ScaleProfile:
-    #: cap on banded-LSH bucket membership before pair generation
-    #: (minhash / simhash / embedding near-dup self-joins). None = no
-    #: guard: an adversarial bucket materializes C(n,2) pairs.
-    max_bucket: int | None = None
+    #: cap on banded-LSH bucket membership, in documents, before pair
+    #: generation (minhash / simhash / embedding near-dup self-joins)
+    max_bucket: int = 1024
     #: policy for buckets over `max_bucket`: "join" streams their pairs
-    #: row-at-a-time (identical output, bounded memory, still quadratic
+    #: row-at-a-time (same pairs, bounded memory, still quadratic
     #: OUTPUT for that bucket); "drop" skips them (a bucket hotter than
     #: a reasonable cap carries boilerplate, not near-dup signal).
     oversize: str = "join"
@@ -70,14 +67,10 @@ class ScaleProfile:
             raise ValueError(f"unknown oversize policy {self.oversize!r}")
 
 
-#: oracle-parity semantics — no guards. NOT the implicit default since
-#: round 5: the guarded operators' signatures default to SAFE's values;
-#: pass profile=PARITY (or max_bucket=None) to run unguarded.
-PARITY = ScaleProfile()
-
 #: semantics-preserving guards only: bounded per-task memory with the
-#: exact same output pair set (safe under hash-checked oracles)
-SAFE = ScaleProfile(max_bucket=1024, oversize="join")
+#: exact same output pair set (safe under hash-checked oracles); the
+#: default `profile` of every guarded operator
+SAFE = ScaleProfile()
 
 #: every guard on — the 100-TB posture. max_bucket=1024 caps any
 #: collect_list array at ~1k members; dropped buckets (oversize="drop")

@@ -165,8 +165,7 @@ def _bucket_pairs(
     banded: DataFrame,
     keys: list[str],
     groups: DataFrame,
-    max_bucket: int | None,
-    oversize: str,
+    profile: ScaleProfile,
     carry: tuple[str, ...] = (),
     verify: Column | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -181,14 +180,12 @@ def _bucket_pairs(
     distinct so it shuffles only survivors); intra_src = (gid) of the
     multi-member groups whose members pair with each other.
 
-    max_bucket=None: groupBy(keys) + collect_list + in-array pair
-    explosion, one shuffle. Exactly the oracle's pair set, but an
-    adversarial bucket (10⁶ boilerplate docs with one band signature)
-    materializes its whole membership — and the C(n,2) pair array — in
-    ONE row/task: an executor OOM, so at scale always set max_bucket.
-
-    max_bucket=N: a window census in DOC units (Σ gsize, so the cap
-    keeps its doc-count meaning under the group collapse) tags every
+    The guard reads `profile.max_bucket` (N) and `profile.oversize`. A
+    plain groupBy(keys) + collect_list would materialize an adversarial
+    bucket's whole membership (10⁶ boilerplate docs with one band
+    signature) — and its C(n,2) pair array — in ONE row/task, an
+    executor OOM. Instead a window census in DOC units (Σ gsize, so the
+    cap keeps its doc-count meaning under the group collapse) tags every
     banded row with its bucket size in ONE shuffle by the bucket key,
     which the collect's groupBy reuses — an aggregate-then-join census
     would plan the banded subtree twice with no exchange reuse
@@ -197,8 +194,8 @@ def _bucket_pairs(
     explosion. Buckets ≤ N pair in-array (arrays bounded by N);
     oversized buckets follow `oversize`:
       * "join" — a streaming equi-self-join on the keys: the same
-        quadratic pair COUNT, row-at-a-time, never one giant row
-        (output identical to max_bucket=None). Parallelism is bounded
+        quadratic pair COUNT, row-at-a-time, never one giant row (output
+        = every pair that shares a bucket key). Parallelism is bounded
         by the number of oversized KEYS (one hot key = one task —
         measured 188 s on one task for a planted 10k-doc bucket), so
         "join" buys OOM immunity, not speed: at scale prefer "drop";
@@ -208,31 +205,15 @@ def _bucket_pairs(
         intra pairs only while it still has a surviving bucket — the
         condition under which its members would have been paired
         without the collapse."""
-    if oversize not in ("join", "drop"):
-        raise ValueError(f"unknown oversize policy {oversize!r}")
-    intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
     elem = F.struct("gid", *carry) if carry else F.col("gid")
-    big = None
-    if max_bucket is None:
-        small = (
-            banded.groupBy(*keys)
-            .agg(F.collect_list(elem).alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
-    else:
-        tagged = banded.withColumn(
-            "sz", F.sum("gsize").over(Window.partitionBy(*keys))
-        ).filter(F.col("sz") >= 2)
-        fits = F.col("sz") <= max_bucket
-        small = tagged.filter(fits).groupBy(*keys).agg(F.collect_list(elem).alias("ids"))
-        if oversize == "join":
-            big = tagged.filter(~fits)
-        else:
-            # every bucket of a group holds ≥ gsize docs, so the sz ≥ 2
-            # census filter never hides a multi-member group's bucket
-            intra_src = tagged.filter(fits & (F.col("gsize") >= 2)).select("gid").distinct()
+    tagged = banded.withColumn(
+        "sz", F.sum("gsize").over(Window.partitionBy(*keys))
+    ).filter(F.col("sz") >= 2)
+    fits = F.col("sz") <= profile.max_bucket
+    small = tagged.filter(fits).groupBy(*keys).agg(F.collect_list(elem).alias("ids"))
     pairs = _in_array_pairs(small, carry=carry)
-    if big is not None:
+    if profile.oversize == "join":
+        big = tagged.filter(~fits)
         on = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
         on.append(F.col("l.gid") < F.col("r.gid"))
         sides = [("l", "a"), ("r", "b")]
@@ -242,6 +223,11 @@ def _bucket_pairs(
                 *[F.col(f"{t}.{c}").alias(f"{c}_{s}") for c in carry for t, s in sides],
             )
         )
+        intra_src = groups.filter(F.col("gsize") >= 2).select("gid")
+    else:
+        # every bucket of a group holds ≥ gsize docs, so the sz ≥ 2
+        # census filter never hides a multi-member group's bucket
+        intra_src = tagged.filter(fits & (F.col("gsize") >= 2)).select("gid").distinct()
     if verify is not None:
         pairs = pairs.filter(verify)
     return pairs.distinct(), intra_src
@@ -310,24 +296,14 @@ def minhash_lsh_candidates(
     text_col: str = "text",
     num_hashes: int = 8,
     bands: int = 4,
-    max_bucket: int | None = SAFE.max_bucket,
-    oversize: str = SAFE.oversize,
-    profile: ScaleProfile | None = None,
+    profile: ScaleProfile = SAFE,
 ) -> DataFrame:
     """Near-dup candidate pairs (a, b) with a < b sharing ≥1 LSH band.
     rows_per_band = num_hashes // bands.
 
-    `profile` (kgforge.profile.ScaleProfile) overrides max_bucket and
-    oversize — the one-switch way to arm the guard.
-
-    Defaults since round 5 are the SAFE profile's guard values
-    (max_bucket=1024, oversize="join") — output-identical to the
-    unguarded formulation with per-task memory bounded; pass
-    profile=kgforge.profile.PARITY (or max_bucket=None) for the raw
-    unguarded single-shuffle path.
-
-    max_bucket/oversize semantics (the hot-bucket guard shared with
-    simhash and embedding near-dups) are documented on `_bucket_pairs`.
+    `profile` (kgforge.profile.ScaleProfile) arms the hot-bucket guard
+    shared with simhash and embedding near-dups: its max_bucket and
+    oversize, documented on `_bucket_pairs`.
 
     Round-7 reformulation, OUTPUT-IDENTICAL (same lossless group
     collapse as the rest of the dedup family, proofs in
@@ -340,8 +316,6 @@ def minhash_lsh_candidates(
     all bands; under oversize="drop" they survive exactly while the
     group still has a surviving bucket.
     """
-    if profile is not None:
-        max_bucket, oversize = profile.max_bucket, profile.oversize
     rows = num_hashes // bands
     groups, mem = _collapse_exact(df, id_col, text_col)
 
@@ -366,7 +340,7 @@ def minhash_lsh_candidates(
         "gid", "gsize", F.explode(F.expr(f"array({band_arr})")).alias("bk")
     ).select("gid", "gsize", "bk.band", "bk.key")
 
-    rep, intra_src = _bucket_pairs(banded, ["band", "key"], groups, max_bucket, oversize)
+    rep, intra_src = _bucket_pairs(banded, ["band", "key"], groups, profile)
     return _expand_pairs(rep, intra_src, mem)
 
 
@@ -377,8 +351,7 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
-    max_df_frac: float | None = None,
-    profile: ScaleProfile | None = None,
+    profile: ScaleProfile = SAFE,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs: (a, b, jaccard ≥ threshold).
     Candidate pairs via shared-shingle join, with shingles occurring in
@@ -389,15 +362,12 @@ def ngram_jaccard_pairs(
     max_df), 2) — bounded per-shingle regardless of how stopword-heavy
     the corpus is. At 100 TB an ABSOLUTE cap is the wrong knob (a
     1000-doc shingle in a 10^12-doc corpus is vanishingly rare yet
-    still yields ~500k pairs): set `max_df_frac` and the cap becomes
-    max(2, ⌈n_docs·frac⌉), i.e. "drop any shingle shared by more than
-    this fraction of the corpus" — it scales with the data and keeps
-    the guard meaningful at every size. A shingle shared by more than
-    a tiny fraction of documents carries no near-dup signal, only
-    quadratic join fan-out.
-
-    `profile` (kgforge.profile.ScaleProfile) overrides max_df_frac
-    when it carries one (ngram_max_df_frac).
+    still yields ~500k pairs): a `profile` whose ngram_max_df_frac is
+    set replaces `max_df` with max(2, ⌊n_docs·frac⌋), i.e. "drop any
+    shingle shared by more than this fraction of the corpus" — it
+    scales with the data and keeps the guard meaningful at every size.
+    A shingle shared by more than a tiny fraction of documents carries
+    no near-dup signal, only quadratic join fan-out.
 
     OUTPUT-IDENTICAL round-7 reformulation (the round-6 shape exploded
     Σ_s C(df_s, 2) candidate pairs — 5.1e8 at the sf1.0 bench, 110 s —
@@ -473,11 +443,9 @@ def ngram_jaccard_pairs(
     identical docs cannot form a hub row — the same bounded-memory
     posture as the banded-bucket guards. Assumes unique doc ids (as
     the whole dedup family does)."""
-    if profile is not None and profile.ngram_max_df_frac is not None:
-        max_df_frac = profile.ngram_max_df_frac
-    if max_df_frac is not None:
+    if profile.ngram_max_df_frac is not None:
         n_docs = df.count()  # one cheap aggregate, driver-side knob
-        max_df = max(2, int(n_docs * max_df_frac))
+        max_df = max(2, int(n_docs * profile.ngram_max_df_frac))
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
     # -- 1. collapse exact-duplicate texts ------------------------------
@@ -559,7 +527,6 @@ def ngram_jaccard_pairs(
         "w2",
         "w3",
     )
-    rsets = per  # per-group arrays/sizes — same columns the verify used
 
     # -- candidates: rep pairs sharing a PREFIX shingle (buckets are
     # bounded by df_s ≤ max_df, as before), each occurrence carrying
@@ -577,8 +544,6 @@ def ngram_jaccard_pairs(
         .filter(F.size("es0") >= 2)
         .select(F.array_sort("es0").alias("es"))  # gid is field 1 → a < b
     ).repartition(n_part)
-    es = F.col("es")
-    t_f = float(threshold)
     # positional filter applied PER OCCURRENCE, INSIDE the pair-array
     # construction (the lambda filters partners before the struct is
     # built, so the generate emits only the surviving structs instead
@@ -649,8 +614,8 @@ def ngram_jaccard_pairs(
     # threshold can be dropped exactly, and that is ~all of them. Long
     # arrays are ~2.5× narrower than the shingle strings and the
     # intersection compares 8-byte values.
-    ra = rsets.select(F.col("gid").alias("a"), F.col("hs").alias("ha"))
-    rb = rsets.select(F.col("gid").alias("b"), F.col("hs").alias("hb"))
+    ra = per.select(F.col("gid").alias("a"), F.col("hs").alias("ha"))
+    rb = per.select(F.col("gid").alias("b"), F.col("hs").alias("hb"))
     t1 = (
         cand.join(ra, "a")
         .join(rb, "b")
@@ -668,8 +633,8 @@ def ngram_jaccard_pairs(
     # for the t1 survivors and apply the identical jaccard expression.
     # t1 scales with the true near-dup rep pairs, so AQE broadcasts it
     # and the string arrays stream join-side without a wide shuffle.
-    sa = rsets.select(F.col("gid").alias("a"), F.col("ss").alias("sa"))
-    sb = rsets.select(F.col("gid").alias("b"), F.col("ss").alias("sb"))
+    sa = per.select(F.col("gid").alias("a"), F.col("ss").alias("sa"))
+    sb = per.select(F.col("gid").alias("b"), F.col("ss").alias("sb"))
     scored = (
         t1.join(sa, "a")
         .join(sb, "b")
@@ -687,7 +652,7 @@ def ngram_jaccard_pairs(
     )
 
     # -- intra-group pairs: inter = n_rare, sizes equal -----------------
-    gi = rsets.select("gid", "n", "n_rare")
+    gi = per.select("gid", "n", "n_rare")
     intra = (
         groups.filter(F.col("gsize") >= 2)
         .join(gi, "gid")
@@ -801,10 +766,7 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    max_bucket: int | None = SAFE.max_bucket,
-    oversize: str = SAFE.oversize,
-    drop_zero: bool = False,
-    profile: ScaleProfile | None = None,
+    profile: ScaleProfile = SAFE,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
     Candidates via banded equality (4×15-bit chunks: any pair within
@@ -815,23 +777,18 @@ def simhash_near_dups(
     empty/whitespace document hashes to simhash 0 (`simhash`
     docstring), so ALL of them share all four (chunk, 0) band keys —
     one crawl shard with 10⁶ empty-extraction pages makes one key emit
-    C(10⁶, 2) ≈ 5×10¹¹ garbage pairs. Two independent knobs:
+    C(10⁶, 2) ≈ 5×10¹¹ garbage pairs. `profile` arms two independent
+    guards:
 
-    * `drop_zero=True` pre-drops simhash-0 docs entirely — their
+    * `simhash_drop_zero` pre-drops simhash-0 docs entirely — their
       mutual duplication is EXACT (empty == empty) and belongs to
       `dedup_exact`, not a similarity join. Semantics-changing (pairs
-      among empty docs are no longer reported here).
-    * `max_bucket=N` + `oversize` — the census guard shared with
+      among empty docs are no longer reported here); off in SAFE.
+    * `max_bucket` + `oversize` — the census guard shared with
       minhash and embedding near-dups (`_bucket_pairs`) on the
       (chunk, ck) buckets. Under "drop", any true near-dup pair inside
       a hot bucket almost surely shares one of its three other,
       colder chunk keys.
-
-    Defaults since round 5 are the SAFE profile's guard values
-    (max_bucket=1024, oversize="join" — output-identical, memory-
-    bounded; drop_zero stays False: it changes semantics). Pass
-    profile=kgforge.profile.PARITY (or max_bucket=None) for the raw
-    unguarded path. `profile` overrides all three knobs.
 
     Round-7 reformulation, OUTPUT-IDENTICAL (same two lossless moves
     as `ngram_jaccard_pairs`, proofs there):
@@ -854,10 +811,6 @@ def simhash_near_dups(
       collision (1.12e8 candidate rows at the sf1.0 bench, ~2e5
       survivors — guide §2.3 "shuffle fewer bytes").
     """
-    if profile is not None:
-        max_bucket = profile.max_bucket
-        oversize = profile.oversize
-        drop_zero = profile.simhash_drop_zero
     groups, mem = _collapse_exact(df, id_col, text_col)
 
     # -- signatures per distinct text -----------------------------------
@@ -871,7 +824,7 @@ def simhash_near_dups(
     gsig = groups.select("gid", "gsize").join(core, "gid", "left").select(
         "gid", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash"), "gsize"
     )
-    if drop_zero:
+    if profile.simhash_drop_zero:
         gsig = gsig.filter(F.col("simhash") != 0)
 
     mask = (1 << _CHUNK_BITS) - 1
@@ -889,7 +842,7 @@ def simhash_near_dups(
 
     ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     rep, intra_src = _bucket_pairs(
-        chunks, ["chunk", "ck"], gsig, max_bucket, oversize,
+        chunks, ["chunk", "ck"], gsig, profile,
         carry=("simhash",), verify=ham <= max_hamming,
     )
     out = _expand_pairs(

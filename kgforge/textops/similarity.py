@@ -108,9 +108,7 @@ def embedding_near_dups(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int | None = SAFE.max_bucket,
-    oversize: str = SAFE.oversize,
-    profile: ScaleProfile | None = None,
+    profile: ScaleProfile = SAFE,
     dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a, b, score ≥ threshold):
@@ -136,14 +134,10 @@ def embedding_near_dups(
     embeddings from boilerplate pages) pile into ONE bucket, which is
     what the guard is for:
 
-    `max_bucket=N` + `oversize` — the census guard shared with minhash
-    and simhash near-dups (`kgforge.textops.dedup._bucket_pairs`) on
-    the (tbl, bucket) buckets; under "drop" an over-full sign bucket
+    `profile`'s max_bucket + oversize — the census guard shared with
+    minhash and simhash near-dups (`kgforge.textops.dedup._bucket_pairs`)
+    on the (tbl, bucket) buckets; under "drop" an over-full sign bucket
     at a sane cap is a degenerate pile, not near-dup signal.
-    Defaults since round 5 are the SAFE profile's guard values
-    (max_bucket=1024, oversize="join" — output-identical, memory-
-    bounded); pass profile=kgforge.profile.PARITY (or max_bucket=None)
-    for the raw unguarded path. `profile` overrides both knobs.
 
     Round-7 reformulation, OUTPUT-IDENTICAL (the same lossless group
     collapse as the text dedup family, proofs in
@@ -158,8 +152,6 @@ def embedding_near_dups(
     over a (gid, id) row table — no membership arrays. Under
     oversize="drop" a group keeps its intra pairs only while it still
     has a surviving bucket, exactly the round-6 condition."""
-    if profile is not None:
-        max_bucket, oversize = profile.max_bucket, profile.oversize
     if dim is None:
         # dim probe = a driver take(1) job over the full input plan;
         # callers that know the dimension (or can probe a cheaper
@@ -186,7 +178,7 @@ def embedding_near_dups(
     banded = groups.select(
         "gid", "gsize", F.posexplode(udf(F.col("v"))).alias("tbl", "bucket")
     )
-    cand, intra_src = _bucket_pairs(banded, ["tbl", "bucket"], groups, max_bucket, oversize)
+    cand, intra_src = _bucket_pairs(banded, ["tbl", "bucket"], groups, profile)
 
     # -- exact-cosine verify at rep level, then expand ------------------
     # Per-VECTOR quantities are computed once per group and attached to

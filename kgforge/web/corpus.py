@@ -362,15 +362,25 @@ def contract_corpus_parquet(n_pages: int = 300, seed: int = 42) -> str:
     correctness gate consume THIS file: the Spark contract query reads
     it with spark.read.parquet, and the DuckDB oracle reads it with
     read_parquet, so the two engines start from byte-identical input
-    without the oracle having to re-derive the generator."""
+    without the oracle having to re-derive the generator.
+
+    The pages are generated on every call (milliseconds at 300 pages)
+    and the file name carries a digest of the generated Arrow table, so
+    a file written by an older generator is never reused."""
+    import hashlib
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    path = f"/tmp/kgforge_contract_corpus_{n_pages}_{seed}.parquet"
+    table = _pages_table(make_corpus(n_pages=n_pages, seed=seed).pages)
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    digest = hashlib.sha256(sink.getvalue()).hexdigest()[:16]
+    path = f"/tmp/kgforge_contract_corpus_{n_pages}_{seed}_{digest}.parquet"
     if os.path.exists(path):
         return path
-    table = _pages_table(make_corpus(n_pages=n_pages, seed=seed).pages)
     tmp = f"{path}.tmp.{os.getpid()}"
     pq.write_table(table, tmp)
     os.replace(tmp, path)

@@ -9,13 +9,9 @@ Pipeline:
   distinct surfaces → exact case-fold tier → char-3-gram shingles (JVM
   expression) → banded MinHash blocking over the case-fold
   representatives (`candidate_pairs_minhash`, oversized buckets
-  dropped) → cosine scoring:
-      * 'set'   — Otsuka–Ochiai set cosine |A∩B|/sqrt(|A||B|), fully
-                  JVM-columnar (array_intersect), the default
-      * 'tfidf' — TF-IDF-weighted cosine, fully columnar with the
-                  (g, idf) weight table broadcast-joined (north-star
-                  scorer); IDF weights from the corpus, no
-                  vocabulary-sized driver state
+  dropped) → hybrid scoring, the max of the Otsuka–Ochiai set cosine
+  |A∩B|/sqrt(|A||B|) and normalized Levenshtein similarity, fully
+  JVM-columnar (`score_set_cosine`)
   → sameAs edges (a, b, score) with a < b above `threshold`.
 """
 
@@ -24,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.profile import SAFE, ScaleProfile
 from kgforge.textops.dedup import _in_array_pairs, _spread
+
+#: MinHash functions of the linking LSH and rows per band key: 8 bands
+#: of 3 (see candidate_pairs_minhash)
+_NUM_HASHES = 24
+_ROWS_PER_BAND = 3
 
 # Hot expressions are composed as SQL text and parsed on the JVM in one
 # call each: the Column-API spelling of the 24 signature minima, the
@@ -61,93 +63,12 @@ def score_set_cosine(pairs: DataFrame) -> DataFrame:
     return pairs.selectExpr("*", f"{_SET_COSINE} AS score")
 
 
-def compute_idf_df(surfaces: DataFrame, surface_col: str = "surface") -> DataFrame:
-    """(g, idf) gram weights over distinct surfaces — a DataFrame, not
-    a driver dict (round-3 verdict: over raw web unicode the char-3-gram
-    vocabulary reaches tens of millions of entries; NO driver state at
-    all since round 5 — the surface count n is a one-row aggregate
-    broadcast-cross-joined into the plan instead of an eager
-    `.count()` action, so the whole weight table stays lazy and the
-    surface scan runs once, when the scorer consumes it). Smoothed
-    idf = ln((n+1)/(df+1)) + 1, identical to the round-1 formula."""
-    base = surfaces.select(F.col(surface_col).alias("surface")).distinct()
-    n_df = base.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    return (
-        base.select(
-            F.expr(f"explode(array_distinct({char_ngrams('surface')})) AS g")
-        )
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_df))  # one row — broadcast nested loop
-        .select(
-            "g",
-            (
-                F.log((F.col("_n") + 1.0) / (F.col("df") + F.lit(1)).cast("double"))
-                + F.lit(1.0)
-            ).alias("idf"),
-        )
-    )
-
-
-def score_tfidf_cosine(pairs: DataFrame, idf: DataFrame) -> DataFrame:
-    """TF-IDF-weighted cosine, fully columnar: explode each pair's two
-    gram arrays with a side tag, aggregate term frequencies, join the
-    (g, idf) weight table (UN-hinted since round 5: over raw web
-    unicode the vocabulary reaches tens of millions of rows — too big
-    to force a broadcast; AQE demotes the join to broadcast at runtime
-    exactly when the table is actually small, and falls back to a
-    shuffle join when it is not, which a hard `F.broadcast` hint would
-    have turned into a driver OOM), then two key-local aggregations
-    produce dot product and norms. No Python in the path and no
-    vocabulary-sized driver state (replaces the round-1
-    closure-shipped dict, round-3 verdict watch item #3).
-
-    Grams absent from `idf` weigh 0.0 (same as the dict formulation's
-    `.get(g, 0.0)`). Appends `score` to `pairs`, preserving its other
-    columns AND its row cardinality: a pair with no grams on either
-    side (NULL/empty arrays) scores 0.0 instead of vanishing — the
-    aggregate join is a left join with the score coalesced (round-4
-    advice: the inner formulation silently dropped such rows)."""
-    keys = pairs.select("a", "b", "grams_a", "grams_b")
-    ea = keys.select("a", "b", F.lit("a").alias("side"), F.explode("grams_a").alias("g"))
-    eb = keys.select("a", "b", F.lit("b").alias("side"), F.explode("grams_b").alias("g"))
-    tf = (
-        ea.unionByName(eb)
-        .groupBy("a", "b", "side", "g")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    weighted = tf.join(idf, "g", "left").select(
-        "a", "b", "side", "g", (F.col("tf") * F.coalesce("idf", F.lit(0.0))).alias("w")
-    )
-    per_gram = weighted.groupBy("a", "b", "g").agg(
-        F.coalesce(F.sum(F.when(F.col("side") == "a", F.col("w"))), F.lit(0.0)).alias("wa"),
-        F.coalesce(F.sum(F.when(F.col("side") == "b", F.col("w"))), F.lit(0.0)).alias("wb"),
-    )
-    sums = per_gram.groupBy("a", "b").agg(
-        F.sum(F.col("wa") * F.col("wb")).alias("dot"),
-        F.sum(F.col("wa") * F.col("wa")).alias("na2"),
-        F.sum(F.col("wb") * F.col("wb")).alias("nb2"),
-    )
-    score = F.when(
-        (F.col("na2") > 0) & (F.col("nb2") > 0),
-        F.col("dot") / F.sqrt(F.col("na2") * F.col("nb2")),
-    ).otherwise(F.lit(0.0))
-    # left join + coalesce: a pair whose exploded gram stream is empty
-    # on both sides never reaches `sums`; it must come back scored 0.0,
-    # not disappear (cardinality-preserving contract)
-    return pairs.join(
-        sums.select("a", "b", score.alias("score")), ["a", "b"], "left"
-    ).withColumn("score", F.coalesce("score", F.lit(0.0)))
-
-
 def candidate_pairs_minhash(
     surfaces: DataFrame,
     surface_col: str = "surface",
-    num_hashes: int = 24,
-    rows_per_band: int = 3,
-    max_bucket: int = 64,
-    prune_threshold: float | None = None,
-    profile=None,
+    *,
+    prune_threshold: float,
+    profile: ScaleProfile = SAFE,
 ) -> DataFrame:
     """Candidate pairs via md5-banded MinHash over char-3-grams — the
     engine's own LSH (same primitive as kgforge.textops.dedup), pure
@@ -161,32 +82,27 @@ def candidate_pairs_minhash(
     b=8 per band-theory — but measured on a 770k-surface corpus r=3
     yields MORE edges than r=2 (448.2k vs 444.9k) at 0.76× the cost,
     because r=2's common band keys form oversized buckets that the
-    `max_bucket` guard then drops wholesale; r=3's buckets stay under
-    the guard, so fewer true pairs are sacrificed to skew.
+    bucket guard then drops wholesale; r=3's buckets stay under the
+    guard, so fewer true pairs are sacrificed to skew.
 
-    `max_bucket` drops oversized buckets outright (standard LSH skew
-    guard): a bucket with thousands of members carries no linkage
-    signal and only produces quadratic garbage pairs.
+    `profile.linking_max_bucket` drops oversized buckets outright
+    (standard LSH skew guard; linking always guards, the profile only
+    tunes the cap): a bucket with thousands of members carries no
+    linkage signal and only produces quadratic garbage pairs.
 
     Pairs come from groupBy(band, key) + bounded collect_list +
     the dedup family's in-array pair explosion
     (`kgforge.textops.dedup._in_array_pairs`, members
     `struct(surface, ng)`) — ONE shuffle of the banded rows. The
-    collected member array is bounded by `max_bucket`, so no hub row
-    can form.
+    collected member array is bounded by the cap, so no hub row can
+    form.
 
-    `prune_threshold`: when the caller scores with max(set-cosine,
-    normalized Levenshtein) ≥ t, pairs that CANNOT reach t are dropped
-    before the distinct shuffle using two sound upper bounds —
+    `prune_threshold` t: the caller scores with max(set-cosine,
+    normalized Levenshtein) ≥ t, so pairs that CANNOT reach t are
+    dropped before the distinct shuffle using two sound upper bounds —
     set_cos ≤ sqrt(min(ng)/max(ng)) (intersection ≤ smaller gram set)
     and lev_sim ≤ 1 − |len_a−len_b| / max(len) (lev ≥ length delta).
-
-    `profile` (kgforge.profile.ScaleProfile) overrides max_bucket with
-    its linking_max_bucket (linking always guards; the profile only
-    tunes the cap).
     """
-    if profile is not None:
-        max_bucket = profile.linking_max_bucket
     # repartition BEFORE the heavy map work: the distinct/groupBy
     # feeding this is AQE-coalesced to a handful of partitions (it is
     # small), which would strand the gram-explode + signature
@@ -208,10 +124,10 @@ def candidate_pairs_minhash(
         "struct({b} AS band, xxhash64({mins}) AS key)".format(
             b=b,
             mins=", ".join(
-                f"min(xxhash64({b * rows_per_band + r}, g))" for r in range(rows_per_band)
+                f"min(xxhash64({b * _ROWS_PER_BAND + r}, g))" for r in range(_ROWS_PER_BAND)
             ),
         )
-        for b in range(num_hashes // rows_per_band)
+        for b in range(_NUM_HASHES // _ROWS_PER_BAND)
     )
     sig = base.groupBy("surface").agg(
         F.expr("count(1) AS ng"),  # distinct-gram count (free here)
@@ -221,16 +137,14 @@ def candidate_pairs_minhash(
         sig.selectExpr("struct(surface AS gid, ng) AS m", "inline(bks)")
         .groupBy("band", "key")
         .agg(F.expr("collect_list(m) AS ids"))
-        .filter(f"size(ids) BETWEEN 2 AND {int(max_bucket)}")
+        .filter(f"size(ids) BETWEEN 2 AND {int(profile.linking_max_bucket)}")
     )
-    pairs = _in_array_pairs(grouped, carry=("ng",))
-    if prune_threshold is not None:
-        t = f"CAST({float(prune_threshold)!r} AS DOUBLE)"
-        la, lb = "CAST(length(a) AS DOUBLE)", "CAST(length(b) AS DOUBLE)"
-        pairs = pairs.filter(
-            f"sqrt(CAST(least(ng_a, ng_b) AS DOUBLE) / CAST(greatest(ng_a, ng_b) AS DOUBLE)) >= {t}"
-            f" OR 1.0D - abs({la} - {lb}) / greatest({la}, {lb}) >= {t}"
-        )
+    t = f"CAST({float(prune_threshold)!r} AS DOUBLE)"
+    la, lb = "CAST(length(a) AS DOUBLE)", "CAST(length(b) AS DOUBLE)"
+    pairs = _in_array_pairs(grouped, carry=("ng",)).filter(
+        f"sqrt(CAST(least(ng_a, ng_b) AS DOUBLE) / CAST(greatest(ng_a, ng_b) AS DOUBLE)) >= {t}"
+        f" OR 1.0D - abs({la} - {lb}) / greatest({la}, {lb}) >= {t}"
+    )
     return pairs.select("a", "b").distinct().selectExpr(
         "a", "b", f"{char_ngrams('a')} AS grams_a", f"{char_ngrams('b')} AS grams_b"
     )
@@ -241,14 +155,17 @@ def link_surfaces(
     surface_col: str = "surface",
     threshold: float = 0.78,
     scorer: str = "set",
-    profile=None,
+    profile: ScaleProfile = SAFE,
 ) -> DataFrame:
     """→ sameAs edges (a, b, score), a < b, score ≥ threshold.
 
     Two-tier design (scale lever): case-fold duplicates — by far the
     most common variant — are linked EXACTLY via a lower() groupBy
     (one cheap shuffle, no pairwise work), and the quadratic LSH stage
-    runs only on the case-normalized representatives."""
+    runs only on the case-normalized representatives, scored by
+    `score_set_cosine`. "set" is the only `scorer`."""
+    if scorer != "set":
+        raise ValueError(f"unknown scorer {scorer!r}")
     base = surfaces.selectExpr(f"`{surface_col}` AS surface").distinct()
     norm = base.selectExpr("surface", "lower(surface) AS norm")
     rep = norm.groupBy("norm").agg(F.expr("min(surface) AS rep"))
@@ -263,17 +180,7 @@ def link_surfaces(
 
     # similarity tier on representatives only
     reps = rep.selectExpr("rep AS surface")
-    # the upper-bound prune is only sound for the 'set' scorer (max of
-    # set-cosine and normalized Levenshtein)
-    pairs = candidate_pairs_minhash(
-        reps,
-        "surface",
-        prune_threshold=threshold if scorer == "set" else None,
-        profile=profile,
-    )
-    if scorer == "tfidf":
-        scored = score_tfidf_cosine(pairs, compute_idf_df(reps))
-    else:
-        scored = score_set_cosine(pairs)
+    pairs = candidate_pairs_minhash(reps, "surface", prune_threshold=threshold, profile=profile)
+    scored = score_set_cosine(pairs)
     fuzzy = scored.filter(f"score >= CAST({float(threshold)!r} AS DOUBLE)").select("a", "b", "score")
     return exact.unionByName(fuzzy)

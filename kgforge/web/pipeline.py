@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from kgforge.mapping.spec import RDFS_LABEL
+from kgforge.profile import SAFE, ScaleProfile
 from kgforge.session import arrow_rows, bounded_arrow, local_df, sql_str
 from kgforge.web.canon import canonical_map, rewrite_triples
 from kgforge.web.extract import extract_text
@@ -69,9 +70,8 @@ def run_pipeline(
     pages: DataFrame,
     text_from_html: bool = True,
     link_threshold: float = 0.78,
-    scorer: str = "set",
     persist_intermediate: bool = False,
-    profile=None,
+    profile: ScaleProfile = SAFE,
 ) -> dict[str, DataFrame]:
     """Returns every stage output keyed by name (callers materialize
     via kgforge.lineage.run_stage for resumability).
@@ -111,12 +111,7 @@ def run_pipeline(
         if probe is not None:
             rows = arrow_rows(probe, *surfaces.columns)
             linked = local_df(surfaces.sparkSession, rows, surfaces.schema).coalesce(1)
-    same_as = link_surfaces(
-        linked.select("surface"),
-        threshold=link_threshold,
-        scorer=scorer,
-        profile=profile,
-    )
+    same_as = link_surfaces(linked.select("surface"), threshold=link_threshold, profile=profile)
     # sameAs edges between surface IRIs (join back surface → iri)
     s1 = linked.selectExpr("surface AS a", "iri AS iri_a")
     s2 = linked.selectExpr("surface AS b", "iri AS iri_b")

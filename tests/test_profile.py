@@ -1,6 +1,7 @@
-"""ScaleProfile: the one-switch guard config — every guarded operator
-honors `profile=`, and the SCALE preset arms every knob (the round-3
-verdict's "each call site must remember" failure mode)."""
+"""ScaleProfile: the one-switch guard config — `profile=` is the only
+guard argument of every guarded operator, and the SCALE preset arms
+every knob (the round-3 verdict's "each call site must remember"
+failure mode)."""
 
 from __future__ import annotations
 
@@ -9,14 +10,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from kgforge.profile import PARITY, SAFE, SCALE, ScaleProfile, knob_names
+from kgforge.profile import SAFE, SCALE, ScaleProfile, knob_names
 from kgforge.textops.dedup import (
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
 from kgforge.textops.similarity import embedding_near_dups
-from kgforge.web.linking import link_surfaces
+from kgforge.web.linking import candidate_pairs_minhash, link_surfaces
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
 
@@ -48,10 +49,8 @@ def test_scale_preset_arms_every_knob():
     )
     for knob, check in armed.items():
         assert check(getattr(SCALE, knob)), f"SCALE does not arm {knob}"
-    # PARITY keeps every semantics-affecting guard off
-    assert PARITY.max_bucket is None and PARITY.ngram_max_df_frac is None
-    assert PARITY.simhash_drop_zero is False and PARITY.salt_partitions is None
-    # SAFE only uses the semantics-preserving pair
+    # SAFE is the field defaults, and only uses the semantics-preserving pair
+    assert SAFE == ScaleProfile()
     assert SAFE.max_bucket is not None and SAFE.oversize == "join"
     assert SAFE.ngram_max_df_frac is None and SAFE.simhash_drop_zero is False
 
@@ -62,26 +61,21 @@ def test_invalid_oversize_rejected():
 
 
 def test_profile_overrides_minhash(spark):
-    """profile= wins over the function's own keyword args: an armed
-    profile with a tiny cap + drop visibly changes the unguarded
-    result on a planted mega-bucket."""
+    """The profile arms the guard: a tiny cap + drop keeps the planted
+    mega-bucket out of the result."""
     mega = [(50000 + i, "same text every time") for i in range(200)]
     df = _docs(spark).unionByName(
         spark.createDataFrame(mega, "doc_id long, text string")
     )
     p = ScaleProfile(max_bucket=64, oversize="drop")
-    out = {
-        (r.a, r.b)
-        # explicit kwargs say unguarded — the profile must override
-        for r in minhash_lsh_candidates(
-            df, max_bucket=None, oversize="join", profile=p
-        ).collect()
-    }
+    out = {(r.a, r.b) for r in minhash_lsh_candidates(df, profile=p).collect()}
     assert not any(a >= 50000 or b >= 50000 for a, b in out)
     assert (0, 1000) in out
 
 
 def test_profile_overrides_simhash(spark):
+    """SCALE arms simhash's guards: the planted empty-doc shard pairs
+    with nothing."""
     empties = [(50000 + i, " ") for i in range(500)]
     df = _docs(spark).unionByName(
         spark.createDataFrame(empties, "doc_id long, text string")
@@ -95,8 +89,8 @@ def test_profile_overrides_simhash(spark):
 
 
 def test_profile_overrides_ngram(spark):
-    """SCALE's corpus-relative shingle cap overrides the absolute
-    default: with every doc sharing one boilerplate prefix, the common
+    """The profile's corpus-relative shingle cap replaces the absolute
+    max_df: with every doc sharing one boilerplate prefix, the common
     shingles stop being join keys."""
     rng = random.Random(9)
     common = "the cat sat"  # exactly one all-docs 3-shingle
@@ -114,6 +108,8 @@ def test_profile_overrides_ngram(spark):
 
 
 def test_profile_overrides_embedding(spark):
+    """The profile arms the embedding guard: the planted pile of
+    identical vectors pairs with nothing."""
     rng = random.Random(5)
     rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(100)]
     rows.append((9000, [x + rng.gauss(0, 0.001) for x in rows[3][1]]))
@@ -148,31 +144,19 @@ def test_profile_tunes_linking_bucket_cap(spark):
 
 def test_safe_is_the_default_for_guarded_operators():
     """Round-4 verdict item 6: calling a guarded operator WITHOUT a
-    profile must run under the SAFE guard values (output-identical to
-    unguarded, per-task memory bounded) — unguarded is now the
-    explicit opt-in (profile=PARITY / max_bucket=None), not the
-    default. Asserted on the signatures so a new operator (or a
-    regressed default) fails here."""
+    profile runs under SAFE (per-task memory bounded, pairs unchanged),
+    and `profile` is its only guard argument. Asserted on the
+    signatures so a new operator, a regressed default or a guard
+    keyword added back fails here."""
     import inspect
 
-    from kgforge.textops.dedup import minhash_lsh_candidates, simhash_near_dups
-    from kgforge.textops.similarity import embedding_near_dups
-
-    for fn in (minhash_lsh_candidates, simhash_near_dups, embedding_near_dups):
+    for fn in (
+        minhash_lsh_candidates,
+        simhash_near_dups,
+        ngram_jaccard_pairs,
+        embedding_near_dups,
+        candidate_pairs_minhash,
+    ):
         params = inspect.signature(fn).parameters
-        assert params["max_bucket"].default == SAFE.max_bucket, fn.__name__
-        assert params["oversize"].default == SAFE.oversize, fn.__name__
-
-
-def test_default_guard_is_output_identical(spark):
-    """The flipped default must not change any result: default call ==
-    explicit PARITY call on a corpus with planted near-dups."""
-    from kgforge.textops.dedup import minhash_lsh_candidates
-
-    rows = [(i, f"alpha beta gamma delta epsilon zeta {i % 7}") for i in range(80)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    default_pairs = {(r.a, r.b) for r in minhash_lsh_candidates(df).collect()}
-    parity_pairs = {
-        (r.a, r.b) for r in minhash_lsh_candidates(df, profile=PARITY).collect()
-    }
-    assert default_pairs == parity_pairs and default_pairs
+        assert params["profile"].default is SAFE, fn.__name__
+        assert not {"max_bucket", "oversize", "drop_zero", "max_df_frac"} & set(params), fn.__name__

@@ -9,6 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from kgforge.profile import SAFE, ScaleProfile
 from kgforge.textops.analysis import fingerprint, lang_id, quality_score, token_count
 from kgforge.textops.dedup import (
     dedup_exact,
@@ -68,7 +69,7 @@ def test_minhash_max_bucket_drop_planted_mega_bucket(spark):
     df = _docs(spark).unionByName(
         spark.createDataFrame(mega, "doc_id long, text string")
     )
-    out = minhash_lsh_candidates(df, max_bucket=64, oversize="drop")
+    out = minhash_lsh_candidates(df, profile=ScaleProfile(max_bucket=64, oversize="drop"))
     pairs = {(r.a, r.b) for r in out.collect()}
     # the mega bucket contributed nothing
     assert not any(a >= 100000 or b >= 100000 for a, b in pairs)
@@ -100,7 +101,7 @@ def test_ngram_jaccard_skew_guard(spark):
     rows.append((5000, rows[0][1]))  # planted exact dup
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    out = ngram_jaccard_pairs(df, threshold=0.8, max_df_frac=0.2)
+    out = ngram_jaccard_pairs(df, threshold=0.8, profile=ScaleProfile(ngram_max_df_frac=0.2))
     pairs = {(r.a, r.b) for r in out.collect()}
     assert (0, 5000) in pairs  # found via its rare shingles
 
@@ -153,22 +154,22 @@ def test_simhash_properties(spark):
 def test_simhash_guard_drop_and_drop_zero(spark):
     """Planted empty-doc shard: every empty doc hashes to simhash 0 and
     shares all four (chunk, 0) keys. Both guards neutralize it —
-    max_bucket+'drop' censuses the hot buckets away, drop_zero removes
-    the docs before banding — while real near-dups survive."""
+    max_bucket+'drop' censuses the hot buckets away, simhash_drop_zero
+    removes the docs before banding — while real near-dups survive."""
     empties = [(50000 + i, "   ") for i in range(3000)]
     df = _docs(spark).unionByName(
         spark.createDataFrame(empties, "doc_id long, text string")
     )
-    for kwargs in (
-        {"max_bucket": 64, "oversize": "drop"},
-        {"drop_zero": True},
+    for profile in (
+        ScaleProfile(max_bucket=64, oversize="drop"),
+        ScaleProfile(simhash_drop_zero=True),
     ):
         pairs = {
             (r.a, r.b)
-            for r in simhash_near_dups(df, max_hamming=8, **kwargs).collect()
+            for r in simhash_near_dups(df, max_hamming=8, profile=profile).collect()
         }
-        assert not any(a >= 50000 or b >= 50000 for a, b in pairs), kwargs
-        assert (0, 1000) in pairs and (1000, 1001) in pairs, kwargs
+        assert not any(a >= 50000 or b >= 50000 for a, b in pairs), profile
+        assert (0, 1000) in pairs and (1000, 1001) in pairs, profile
 
 
 def _embeddings(spark, n=200, dim=16, seed=7):
@@ -214,7 +215,9 @@ def test_embedding_guard_drop_planted_pile(spark):
     big = df.unionByName(
         spark.createDataFrame(pile, "vec_id long, embedding array<double>")
     )
-    out = embedding_near_dups(big, threshold=0.95, max_bucket=64, oversize="drop")
+    out = embedding_near_dups(
+        big, threshold=0.95, profile=ScaleProfile(max_bucket=64, oversize="drop")
+    )
     pairs = {(r.a, r.b) for r in out.collect()}
     assert not any(a >= 70000 or b >= 70000 for a, b in pairs)
     assert (3, 9000) in pairs and (5, 9001) in pairs
@@ -230,9 +233,9 @@ _GUARD_CASES = {
 }
 
 
-def _guard_pairs(df, op, **guard):
+def _guard_pairs(df, op, profile=SAFE):
     _, fn, kwargs, cols = _GUARD_CASES[op]
-    return {tuple(r[c] for c in cols) for r in fn(df, **kwargs, **guard).collect()}
+    return {tuple(r[c] for c in cols) for r in fn(df, **kwargs, profile=profile).collect()}
 
 
 @pytest.mark.parametrize("op", list(_GUARD_CASES))
@@ -241,15 +244,55 @@ def test_guard_join_parity(spark, op):
     self-join — the pair set is identical to the default even when
     max_bucket is small enough to divert nearly every bucket."""
     df = _GUARD_CASES[op][0](spark)
-    assert _guard_pairs(df, op, max_bucket=2, oversize="join") == _guard_pairs(df, op)
+    assert _guard_pairs(df, op, ScaleProfile(max_bucket=2)) == _guard_pairs(df, op)
 
 
-def test_unguarded_matches_guarded(spark):
-    """max_bucket=None (one in-array formulation for all three
-    operators) emits the same pair set as the SAFE default."""
-    for op, case in _GUARD_CASES.items():
-        df = case[0](spark)
-        assert _guard_pairs(df, op, max_bucket=None) == _guard_pairs(df, op), op
+def test_bucket_pairs_brute_force(spark):
+    """`_bucket_pairs` equals a Python enumeration of the rep pairs that
+    share a bucket key, on a planted banded table with one hot key and
+    multi-member groups: under SAFE, under a cap of 2 with "join" (every
+    multi-doc bucket streams through the self-join) and under "drop"
+    (oversized buckets are excluded, and a group keeps its intra pairs
+    only while it still has a surviving bucket)."""
+    from collections import defaultdict
+
+    from kgforge.textops.dedup import _bucket_pairs
+
+    rng = random.Random(17)
+    gsize = {g: rng.choice([1, 1, 2, 3]) for g in range(40)}
+    gsize[40] = 9  # larger than the "drop" cap: every bucket it is in drops
+    rows = [(g, band, f"k{rng.randrange(20)}") for g in gsize for band in range(3)]
+    rows += [(g, 3, "hot") for g in range(0, 40, 2)]  # Σ gsize ≫ the caps
+    banded = spark.createDataFrame(
+        [(g, gsize[g], band, key) for g, band, key in rows],
+        "gid long, gsize long, band int, key string",
+    )
+    groups = spark.createDataFrame(sorted(gsize.items()), "gid long, gsize long")
+    members = defaultdict(set)
+    for g, band, key in rows:
+        members[(band, key)].add(g)
+
+    want = {}
+    for name, profile in (
+        ("safe", SAFE),
+        ("join", ScaleProfile(max_bucket=2)),
+        ("drop", ScaleProfile(max_bucket=8, oversize="drop")),
+    ):
+        kept = [
+            m for m in members.values()
+            if profile.oversize == "join" or sum(gsize[g] for g in m) <= profile.max_bucket
+        ]
+        want[name] = (
+            sorted({(a, b) for m in kept for a in m for b in m if a < b}),
+            sorted(g for g, n in gsize.items() if n >= 2 and any(g in m for m in kept)),
+        )
+        rep, intra = _bucket_pairs(banded, ["band", "key"], groups, profile)
+        got = (sorted(tuple(r) for r in rep.collect()), sorted(r.gid for r in intra.collect()))
+        assert got == want[name], name
+    # non-vacuous: "drop" loses the hot bucket's pairs and group 40's intra pairs
+    assert want["safe"] == want["join"]
+    assert want["drop"][0] and set(want["drop"][0]) < set(want["safe"][0])
+    assert 40 in want["safe"][1] and 40 not in want["drop"][1]
 
 
 # Planted hot buckets that complete in a memory-capped JVM with the
@@ -266,7 +309,7 @@ rows = [(i, "spam boilerplate footer navigation copyright notice") for i in rang
 rows += [(20000, "unique alpha beta gamma delta epsilon zeta eta theta"),
          (20001, "unique alpha beta gamma delta epsilon zeta eta theta")]
 df = spark.createDataFrame(rows, "doc_id long, text string")
-out = minhash_lsh_candidates(df, max_bucket=64, oversize="drop").collect()
+out = minhash_lsh_candidates(df, profile=ScaleProfile(max_bucket=64, oversize="drop")).collect()
 pairs = {(r.a, r.b) for r in out}
 assert pairs == {(20000, 20001)}, pairs
 """,
@@ -278,7 +321,7 @@ rows = [(i, "") for i in range(100000)]
 rows += [(200000, "unique alpha beta gamma delta epsilon zeta eta theta"),
          (200001, "unique alpha beta gamma delta epsilon zeta eta theta")]
 df = spark.createDataFrame(rows, "doc_id long, text string")
-out = simhash_near_dups(df, max_bucket=64, oversize="drop").collect()
+out = simhash_near_dups(df, profile=ScaleProfile(max_bucket=64, oversize="drop")).collect()
 pairs = {(r.a, r.b) for r in out}
 assert pairs == {(200000, 200001)}, sorted(pairs)[:10]
 """,
@@ -289,7 +332,7 @@ pile = [(i, [1.0, 0.5, -0.25, 0.125] * 4) for i in range(20000)]
 pile += [(50000, [float(j) for j in range(16)]),
          (50001, [float(j) + 0.001 for j in range(16)])]
 df = spark.createDataFrame(pile, "vec_id long, embedding array<double>")
-out = embedding_near_dups(df, threshold=0.999, max_bucket=64, oversize="drop").collect()
+out = embedding_near_dups(df, threshold=0.999, profile=ScaleProfile(max_bucket=64, oversize="drop")).collect()
 pairs = {(r.a, r.b) for r in out}
 assert pairs == {(50000, 50001)}, sorted(pairs)[:10]
 """,
@@ -304,6 +347,7 @@ def test_guard_capped_memory(op):
 
     script = (
         """
+from kgforge.profile import ScaleProfile
 from kgforge.session import get_spark
 spark = get_spark(app_name="capped", master="local[2]", shuffle_partitions=4,
                   extra_conf={"spark.driver.memory": "700m"})
@@ -795,7 +839,6 @@ def test_spread_skips_only_single_partition_input(spark, monkeypatch):
     SAFE minhash operator plans exactly the round-robin exchanges of an
     unconditional repartition, over a coalesce(1) input too, so the
     dedup operators keep their spreads."""
-    from kgforge.profile import SAFE
     from kgforge.textops import dedup
 
     def round_robins(df):

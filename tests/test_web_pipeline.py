@@ -65,6 +65,34 @@ def test_one_web_pages_schema(spark, tmp_path, corpus):
     assert typed(spark.readStream.schema(streaming.WEB_PAGES_SCHEMA).parquet(path).schema) == want
 
 
+def test_contract_corpus_follows_the_generator(monkeypatch):
+    """The contract corpus file is keyed on the generated table: a
+    generator that changes one page gets a new path with new bytes, so
+    a file written by another generator is never reused."""
+    import os
+
+    make = C.make_corpus
+
+    def changed(*args, **kwargs):
+        corpus = make(*args, **kwargs)
+        url, ts, html, text, lang = corpus.pages[0]
+        return dataclasses.replace(
+            corpus, pages=[(url, ts, html, text + " changed", lang), *corpus.pages[1:]]
+        )
+
+    path = C.contract_corpus_parquet(40, seed=9)
+    monkeypatch.setattr(C, "make_corpus", changed)
+    new = C.contract_corpus_parquet(40, seed=9)
+    try:
+        assert new != path
+        with open(path, "rb") as f, open(new, "rb") as g:
+            assert f.read() != g.read()
+        assert C.contract_corpus_parquet(40, seed=9) == new
+    finally:
+        os.remove(path)
+        os.remove(new)
+
+
 # ------------------------------------------------------------- extraction
 def test_extract_byte_identity_single_node(corpus):
     """The pinned extractor reproduces ground-truth text byte-for-byte
@@ -216,15 +244,12 @@ def test_linking_cluster_quality(spark, pages, corpus):
     assert f1 >= 0.95, f"pairwise P={p:.4f} R={r:.4f} F1={f1:.4f}"
 
 
-def test_tfidf_scorer_equivalent_quality(spark, pages, corpus):
-    out = run_pipeline(pages, text_from_html=False, scorer="tfidf", link_threshold=0.5)
-    got = {
-        (r.subj, r.pred, r.obj)
-        for r in out["canonical_triples"].filter(F.col("obj_dt").isNull()).collect()
-    }
-    want = C.true_canonical_triples(corpus)
-    tp = len(got & want)
-    assert tp / len(got) >= 0.9 and tp / len(want) >= 0.9
+def test_link_surfaces_has_one_scorer(spark):
+    from kgforge.web.linking import link_surfaces
+
+    surfaces = spark.createDataFrame([("Alpha Corp",)], "surface string")
+    with pytest.raises(ValueError, match="scorer"):
+        link_surfaces(surfaces, scorer="tfidf")
 
 
 def test_rewrite_triples_prov_modes(spark):
@@ -273,65 +298,6 @@ def test_corpus_hub_frac_plants_mega_hub(spark):
     assert 0.2 * 400 <= hub_subj_pages  # ~30% of pages lead with the hub
 
 
-def test_tfidf_score_preserves_empty_gram_pairs(spark):
-    """Round-4 advice: a pair whose gram stream is empty on BOTH sides
-    (NULL or empty arrays) must come back scored 0.0, not vanish —
-    score_tfidf_cosine promises to preserve `pairs` cardinality."""
-    from kgforge.web.linking import compute_idf_df, score_tfidf_cosine
-
-    idf = compute_idf_df(
-        spark.createDataFrame([("alpha",), ("beta",)], "surface string")
-    )
-    pairs = spark.createDataFrame(
-        [
-            ("alpha", "beta", ["alp", "lph", "pha"], ["bet", "eta"]),
-            ("x", "y", [], []),
-            ("p", "q", None, None),
-        ],
-        "a string, b string, grams_a array<string>, grams_b array<string>",
-    )
-    rows = {r.a: r.score for r in score_tfidf_cosine(pairs, idf).collect()}
-    assert set(rows) == {"alpha", "x", "p"}  # no row dropped
-    assert rows["x"] == 0.0 and rows["p"] == 0.0
-
-
-def test_tfidf_large_vocabulary_no_driver_state(spark):
-    """Planted very-large-vocabulary surfaces (unicode noise): the
-    TF-IDF path must stay fully columnar — no vocabulary-sized driver
-    state, no forced broadcast of the weight table (round-4 verdict
-    item 5: AQE decides). 20k random-unicode surfaces yield a gram
-    vocabulary in the hundreds of thousands; the scorer must complete
-    and score an exact duplicate pair 1.0."""
-    import random
-
-    from kgforge.web.linking import char_ngrams, compute_idf_df, score_tfidf_cosine
-
-    rng = random.Random(7)
-    # unicode noise spanning several scripts — maximizes distinct grams
-    alphabet = (
-        [chr(c) for c in range(0x0391, 0x03C9)]      # greek
-        + [chr(c) for c in range(0x0410, 0x044F)]    # cyrillic
-        + [chr(c) for c in range(0x4E00, 0x4F00)]    # cjk slice
-        + list("abcdefghijklmnopqrstuvwxyz")
-    )
-    surfaces = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randint(8, 24)))
-        for _ in range(20_000)
-    ]
-    sdf = spark.createDataFrame([(s,) for s in surfaces], "surface string").repartition(8)
-    idf = compute_idf_df(sdf)
-    # the weight table is genuinely large-vocabulary
-    assert idf.count() > 100_000
-    dup = surfaces[0]
-    pairs = spark.createDataFrame(
-        [(dup, dup + " ", None, None), (surfaces[1], surfaces[2], None, None)],
-        "a string, b string, grams_a array<string>, grams_b array<string>",
-    ).selectExpr("a", "b", f"{char_ngrams('a')} AS grams_a", f"{char_ngrams('b')} AS grams_b")
-    got = {r.a: r.score for r in score_tfidf_cosine(pairs, idf).collect()}
-    assert got[dup] > 0.9  # near-duplicate scores high
-    assert 0.0 <= got[surfaces[1]] < 0.5  # unrelated noise scores low
-
-
 # ------------------------------------------------------------- no Python
 def test_pipeline_plan_runs_no_python(spark, pages):
     """The executed plan of the canonical triples holds the extraction
@@ -371,16 +337,18 @@ def test_pipeline_null_html_page(spark, corpus):
 
 
 # ------------------------------------------------------------- LSH pairs
-@pytest.mark.parametrize("prune", [None, 0.78])
+@pytest.mark.parametrize("prune", [0.0, 0.78])
 def test_candidate_pairs_minhash_brute_force(spark, prune):
     """candidate_pairs_minhash equals a Python enumeration: pairs of
     surfaces sharing a band key (the band's tuple of minima) in a bucket
-    of 2..max_bucket members that pass the prune bounds. Only the hash
-    primitive xxhash64(i, gram) comes from Spark."""
+    of 2..max_bucket members that pass the prune bounds (every pair
+    passes at 0.0). Only the hash primitive xxhash64(i, gram) comes from
+    Spark."""
     import math
     import random
 
-    from kgforge.web.linking import candidate_pairs_minhash
+    from kgforge.profile import ScaleProfile
+    from kgforge.web.linking import _NUM_HASHES, _ROWS_PER_BAND, candidate_pairs_minhash
 
     rng = random.Random(11)
     words = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 7))) for _ in range(30)]
@@ -391,7 +359,7 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
         surfaces |= {f"{w} corp", f"{w} corp.", f"{w}s corp", f"The {w} Corp"}
     surfaces |= {f"kelvin station {i}" for i in range(9)}
     surfaces = sorted(surfaces)
-    num_hashes, rows, max_bucket = 24, 3, 6
+    num_hashes, rows, max_bucket = _NUM_HASHES, _ROWS_PER_BAND, 6
 
     def grams(s):
         s = s.lower()
@@ -410,8 +378,6 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
             buckets.setdefault((b, tuple(sig[b * rows:(b + 1) * rows])), []).append(s)
 
     def passes(a, b):
-        if prune is None:
-            return True
         na, nb = len(grams(a)), len(grams(b))
         la, lb = len(a), len(b)
         return (
@@ -430,7 +396,7 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
     assert any(len(m) > max_bucket for m in buckets.values())  # the guard fires
     df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
     got = candidate_pairs_minhash(
-        df, num_hashes=num_hashes, rows_per_band=rows, max_bucket=max_bucket, prune_threshold=prune
+        df, prune_threshold=prune, profile=ScaleProfile(linking_max_bucket=max_bucket)
     ).select("a", "b").collect()
     assert len(got) == len({tuple(r) for r in got})  # distinct
     assert {tuple(r) for r in got} == want
@@ -470,14 +436,16 @@ def test_pipeline_routes_give_identical_rows(spark, family_pages, monkeypatch):
     the distributed route (bound forced to 0) give the same sameAs
     edges, canonical map and canonical triples, with the LSH bucket
     guard dropping the oversized family buckets on both."""
-    from kgforge.profile import SCALE
+    from kgforge.profile import SCALE, ScaleProfile
     from kgforge.web import pipeline
     from kgforge.web.linking import candidate_pairs_minhash
 
     surfaces = surfaces_of(extract_mention_triples(family_pages))
     reps = surfaces.groupBy(F.lower("surface")).agg(F.min("surface").alias("surface"))
     capped = candidate_pairs_minhash(reps, prune_threshold=0.78, profile=SCALE).count()
-    uncapped = candidate_pairs_minhash(reps, prune_threshold=0.78, max_bucket=10**6).count()
+    uncapped = candidate_pairs_minhash(
+        reps, prune_threshold=0.78, profile=ScaleProfile(linking_max_bucket=10**6)
+    ).count()
     assert uncapped > capped  # the guard fires on this fixture
 
     local = _pipeline_sets(family_pages)
