@@ -160,3 +160,16 @@ def test_safe_is_the_default_for_guarded_operators():
         params = inspect.signature(fn).parameters
         assert params["profile"].default is SAFE, fn.__name__
         assert not {"max_bucket", "oversize", "drop_zero", "max_df_frac"} & set(params), fn.__name__
+
+
+def test_default_guard_is_output_identical(spark):
+    """The SAFE default does not change any result: on a planted banded
+    table with a group larger than SAFE's cap, the hot buckets stream
+    through the self-join, and `_bucket_pairs` still emits exactly the
+    pairs of a Python enumeration of the rep pairs that share a key."""
+    from tests.test_textops import _bucket_output, _bucket_reference, _planted_buckets
+
+    banded, groups, rows, gsize = _planted_buckets(spark, hot_gsize=SAFE.max_bucket + 1)
+    want = _bucket_reference(rows, gsize, SAFE)
+    assert _bucket_output(banded, groups, SAFE) == want
+    assert 40 in want[1]  # the oversized group keeps its intra pairs

@@ -247,52 +247,77 @@ def test_guard_join_parity(spark, op):
     assert _guard_pairs(df, op, ScaleProfile(max_bucket=2)) == _guard_pairs(df, op)
 
 
-def test_bucket_pairs_brute_force(spark):
-    """`_bucket_pairs` equals a Python enumeration of the rep pairs that
-    share a bucket key, on a planted banded table with one hot key and
-    multi-member groups: under SAFE, under a cap of 2 with "join" (every
-    multi-doc bucket streams through the self-join) and under "drop"
-    (oversized buckets are excluded, and a group keeps its intra pairs
-    only while it still has a surviving bucket)."""
-    from collections import defaultdict
-
-    from kgforge.textops.dedup import _bucket_pairs
-
+def _planted_buckets(spark, hot_gsize=9):
+    """A planted banded table for `_bucket_pairs`: 41 groups with
+    gsize ≥ 1 in three bands of 20 keys each, one hot key shared by
+    every other group, and group 40 of `hot_gsize` docs, so every
+    bucket it is in holds more than `hot_gsize` docs. Returns
+    (banded, groups, rows, gsize)."""
     rng = random.Random(17)
     gsize = {g: rng.choice([1, 1, 2, 3]) for g in range(40)}
-    gsize[40] = 9  # larger than the "drop" cap: every bucket it is in drops
+    gsize[40] = hot_gsize
     rows = [(g, band, f"k{rng.randrange(20)}") for g in gsize for band in range(3)]
-    rows += [(g, 3, "hot") for g in range(0, 40, 2)]  # Σ gsize ≫ the caps
+    rows += [(g, 3, "hot") for g in range(0, 40, 2)]  # Σ gsize ≫ the small caps
     banded = spark.createDataFrame(
         [(g, gsize[g], band, key) for g, band, key in rows],
         "gid long, gsize long, band int, key string",
     )
     groups = spark.createDataFrame(sorted(gsize.items()), "gid long, gsize long")
+    return banded, groups, rows, gsize
+
+
+def _bucket_reference(rows, gsize, profile):
+    """Python enumeration of `_bucket_pairs`' (rep, intra) output: the
+    rep pairs that share a bucket key, and the multi-member groups.
+    Under "drop", buckets of more than `max_bucket` docs are excluded
+    and a group keeps its intra pairs only while it still has a
+    surviving bucket."""
+    from collections import defaultdict
+
     members = defaultdict(set)
     for g, band, key in rows:
         members[(band, key)].add(g)
+    kept = [
+        m for m in members.values()
+        if profile.oversize == "join" or sum(gsize[g] for g in m) <= profile.max_bucket
+    ]
+    return (
+        sorted({(a, b) for m in kept for a in m for b in m if a < b}),
+        sorted(g for g, n in gsize.items() if n >= 2 and any(g in m for m in kept)),
+    )
 
-    want = {}
-    for name, profile in (
-        ("safe", SAFE),
-        ("join", ScaleProfile(max_bucket=2)),
-        ("drop", ScaleProfile(max_bucket=8, oversize="drop")),
-    ):
-        kept = [
-            m for m in members.values()
-            if profile.oversize == "join" or sum(gsize[g] for g in m) <= profile.max_bucket
-        ]
-        want[name] = (
-            sorted({(a, b) for m in kept for a in m for b in m if a < b}),
-            sorted(g for g, n in gsize.items() if n >= 2 and any(g in m for m in kept)),
-        )
-        rep, intra = _bucket_pairs(banded, ["band", "key"], groups, profile)
-        got = (sorted(tuple(r) for r in rep.collect()), sorted(r.gid for r in intra.collect()))
-        assert got == want[name], name
+
+def _bucket_output(banded, groups, profile):
+    from kgforge.textops.dedup import _bucket_pairs
+
+    rep, intra = _bucket_pairs(banded, ["band", "key"], groups, profile)
+    return sorted(tuple(r) for r in rep.collect()), sorted(r.gid for r in intra.collect())
+
+
+def test_unguarded_matches_guarded(spark):
+    """The guarded pair generation under "join" emits the unguarded
+    pair set — a Python enumeration of the rep pairs that share a
+    bucket key — under SAFE and under a cap of 2, where every
+    multi-doc bucket streams through the self-join."""
+    banded, groups, rows, gsize = _planted_buckets(spark)
+    for profile in (SAFE, ScaleProfile(max_bucket=2)):
+        assert _bucket_output(banded, groups, profile) == _bucket_reference(
+            rows, gsize, profile
+        ), profile
+
+
+def test_bucket_pairs_brute_force(spark):
+    """`_bucket_pairs` under "drop" equals a Python enumeration in which
+    oversized buckets are excluded and a group keeps its intra pairs
+    only while it still has a surviving bucket."""
+    banded, groups, rows, gsize = _planted_buckets(spark)
+    drop = ScaleProfile(max_bucket=8, oversize="drop")
+    want = _bucket_reference(rows, gsize, drop)
+    assert _bucket_output(banded, groups, drop) == want
     # non-vacuous: "drop" loses the hot bucket's pairs and group 40's intra pairs
-    assert want["safe"] == want["join"]
-    assert want["drop"][0] and set(want["drop"][0]) < set(want["safe"][0])
-    assert 40 in want["safe"][1] and 40 not in want["drop"][1]
+    full = _bucket_reference(rows, gsize, SAFE)
+    assert want[0] and set(want[0]) < set(full[0])
+    assert 40 in full[1] and 40 not in want[1]
 
 
 # Planted hot buckets that complete in a memory-capped JVM with the
