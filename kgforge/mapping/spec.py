@@ -40,6 +40,10 @@ RDFS_SUBPROPERTYOF = RDFS_NS + "subPropertyOf"
 RDFS_RESOURCE = RDFS_NS + "Resource"
 RDFS_LITERAL = RDFS_NS + "Literal"
 
+#: the schema predicates: triples with these predicates form the
+#: grammar-sized schema that RDFS closure reads and SPARQL broadcasts
+SCHEMA_PREDS = (RDFS_SUBCLASSOF, RDFS_SUBPROPERTYOF, RDFS_DOMAIN, RDFS_RANGE)
+
 XSD_TYPES = {
     "string": XSD_NS + "string",
     "integer": XSD_NS + "integer",

@@ -22,7 +22,8 @@ Two presets:
   result semantics: `max_bucket` with `oversize="join"` bounds
   per-task memory (no collect_list hub row can form) while producing
   the pair set of a plain "every pair that shares a bucket key"
-  enumeration. It is the default `profile` of every guarded operator
+  enumeration, entity linking's candidate pairs included. It is the
+  default `profile` of every guarded operator
   (asserted by test_profile.test_safe_is_the_default_for_guarded_
   operators), and the contract oracles check it.
 * `SCALE` — every guard on, including the semantics-changing ones
@@ -39,7 +40,8 @@ from dataclasses import dataclass, fields
 @dataclass(frozen=True)
 class ScaleProfile:
     #: cap on banded-LSH bucket membership, in documents, before pair
-    #: generation (minhash / simhash / embedding near-dup self-joins)
+    #: generation (minhash / simhash / embedding near-dup self-joins and
+    #: the entity-linking candidate buckets)
     max_bucket: int = 1024
     #: policy for buckets over `max_bucket`: "join" streams their pairs
     #: row-at-a-time (same pairs, bounded memory, still quadratic
@@ -54,9 +56,6 @@ class ScaleProfile:
     #: whitespace-only text — ALL of them share every (chunk, 0) band
     #: key; their duplication is exact-dedup's job anyway).
     simhash_drop_zero: bool = False
-    #: entity-linking banded-bucket cap (candidate_pairs_minhash);
-    #: linking always guards — this only tunes the cap.
-    linking_max_bucket: int = 64
     #: ignored: the bucketed triple write splits a hot subj_bucket by
     #: its bytes through Spark's REBALANCE (kgforge.io.catalog). Kept so
     #: `materialize_triples(salt_partitions=...)` callers still run.
@@ -73,16 +72,16 @@ class ScaleProfile:
 SAFE = ScaleProfile()
 
 #: every guard on — the 100-TB posture. max_bucket=1024 caps any
-#: collect_list array at ~1k members; dropped buckets (oversize="drop")
-#: are boilerplate by construction at this cap; shingles shared by
-#: >0.1% of the corpus carry no near-dup signal; empty docs leave the
-#: simhash path entirely; salt_partitions selects nothing.
+#: collect_list array at ~1k members, entity linking's band buckets
+#: included; dropped buckets (oversize="drop") are boilerplate by
+#: construction at this cap; shingles shared by >0.1% of the corpus
+#: carry no near-dup signal; empty docs leave the simhash path
+#: entirely; salt_partitions selects nothing.
 SCALE = ScaleProfile(
     max_bucket=1024,
     oversize="drop",
     ngram_max_df_frac=0.001,
     simhash_drop_zero=True,
-    linking_max_bucket=64,
     salt_partitions=32,
 )
 

@@ -38,16 +38,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from kgforge.mapping.spec import (
+    RDF_TYPE,
+    RDFS_DOMAIN,
+    RDFS_RANGE,
+    RDFS_SUBCLASSOF,
+    RDFS_SUBPROPERTYOF,
+    SCHEMA_PREDS,
+)
 from kgforge.session import arrow_rows, bounded_arrow, local_df
 from kgforge.triples.emit import TRIPLE_FIELDS
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDFS_SUBCLASSOF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-RDFS_SUBPROPERTYOF = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
-RDFS_DOMAIN = "http://www.w3.org/2000/01/rdf-schema#domain"
-RDFS_RANGE = "http://www.w3.org/2000/01/rdf-schema#range"
-
-SCHEMA_PREDS = (RDFS_SUBCLASSOF, RDFS_SUBPROPERTYOF, RDFS_DOMAIN, RDFS_RANGE)
 
 
 def closure_pairs(edges: list[tuple], reflexive_on_cycle: bool = False) -> list[tuple]:

@@ -191,17 +191,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from kgforge.mapping.spec import RDF_TYPE, SCHEMA_PREDS, XSD_NS
 from kgforge.triples.emit import TRIPLE_FIELDS
-
-RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
-RDF_TYPE = RDF_NS + "type"
-
-#: patterns with these constant predicates match grammar-sized schema
-#: triple sets -> safe to broadcast (see kgforge/rdfs.py docstring)
-SCHEMA_PREDS = frozenset(
-    RDFS_NS + local for local in ("subClassOf", "subPropertyOf", "domain", "range")
-)
 
 
 # --------------------------------------------------------------------
@@ -1429,7 +1420,7 @@ def _num_lit(v: str) -> Lit:
     """A bare number as a VALUES / value-expression term: xsd:integer
     or xsd:decimal, the spec's numeric-literal mapping."""
     dt = "integer" if re.fullmatch(r"[+-]?\d+", v) else "decimal"
-    return Lit(v, _XSD_NS + dt)
+    return Lit(v, XSD_NS + dt)
 
 
 def parse(query: str) -> Query:
@@ -1826,7 +1817,7 @@ def _schema_pattern(p) -> bool:
     — is a schema predicate matches a grammar-sized triple set, safe to
     broadcast where it meets a join."""
     preds = set() if isinstance(p, Var) else _path_preds(p)
-    return bool(preds) and preds <= SCHEMA_PREDS
+    return bool(preds) and preds.issubset(SCHEMA_PREDS)
 
 
 def _compat_cond(
@@ -2213,13 +2204,12 @@ def broadcast_if_schema_only(g: Group, mdf: DataFrame) -> DataFrame:
     return mdf
 
 
-_XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 #: datatypes whose literals compare numerically — the grammar's G11
 #: numeric types (xsd:integer / xsd:float, csv2rdf-v5/csv2rdf-v5.py:
 #: 47-53) plus the rest of the standard XSD numeric family a consumer
 #: may add by hand
 _NUMERIC_DTS = frozenset(
-    _XSD_NS + t
+    XSD_NS + t
     for t in ("integer", "float", "decimal", "double", "long", "int",
               "short", "byte", "nonNegativeInteger", "positiveInteger")
 )
@@ -2348,7 +2338,7 @@ def _compile_expr(e: Expr, cols: set[str]) -> F.Column:
 #: datatypes whose arithmetic stays in 64-bit integers (xsd:integer
 #: and its derived types the engine carries)
 _INT_DTS = frozenset(
-    _XSD_NS + t
+    XSD_NS + t
     for t in ("integer", "long", "int", "short", "byte",
               "nonNegativeInteger", "positiveInteger")
 )
@@ -2421,8 +2411,8 @@ def _compile_valexpr(e, cols: set[str]) -> tuple[F.Column, F.Column]:
         )
         dt = (
             F.when(value.isNull(), null_s)
-            .when(both_int, F.lit(_XSD_NS + "integer"))
-            .otherwise(F.lit(_XSD_NS + "double"))
+            .when(both_int, F.lit(XSD_NS + "integer"))
+            .otherwise(F.lit(XSD_NS + "double"))
         )
         return value, dt
     if isinstance(e, FnCall):
@@ -2451,7 +2441,7 @@ def _compile_valexpr(e, cols: set[str]) -> tuple[F.Column, F.Column]:
             val, dt = _compile_valexpr(e.args[0], cols)
             out = (
                 F.when(val.isNull() | dt.isNull(), F.lit(None).cast("string"))
-                .when(dt == "", F.lit(_XSD_NS + "string"))
+                .when(dt == "", F.lit(XSD_NS + "string"))
                 .otherwise(dt)
             )
             return out, F.lit(None).cast("string")  # result is an IRI
@@ -2478,7 +2468,7 @@ def _compile_valexpr(e, cols: set[str]) -> tuple[F.Column, F.Column]:
         if e.fn == "str":
             return vals[0], plain  # lexical form of any term
         if e.fn == "strlen":
-            return F.length(vals[0]).cast("string"), F.lit(_XSD_NS + "integer")
+            return F.length(vals[0]).cast("string"), F.lit(XSD_NS + "integer")
         if e.fn == "ucase":
             return F.upper(vals[0]), plain
         if e.fn == "lcase":
@@ -2637,9 +2627,9 @@ def _select_aggregate(
         # unpack term-agg structs and stamp each alias's result
         # datatype shadow; values become string lexical forms
         _AGG_DT = {
-            "count": _XSD_NS + "integer",
-            "sum": _XSD_NS + "double",
-            "avg": _XSD_NS + "double",
+            "count": XSD_NS + "integer",
+            "sum": XSD_NS + "double",
+            "avg": XSD_NS + "double",
             "group_concat": "",
         }
         for a in q.aggs:

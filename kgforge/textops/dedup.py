@@ -72,7 +72,7 @@ def tokenized(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     otherwise runs on 1-2 tasks. The shuffle is one narrow linear pass
     of the tokenized text (same O(corpus) class as the dedup shuffle
     itself)."""
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     carry = [c for c in df.columns if c not in (id_col, text_col)]
     return df.repartition(n_part).select(
         F.col(id_col).alias("id"),
@@ -274,7 +274,7 @@ def _in_array_pairs(
     (Catalyst does no CSE across lambda bodies; same hazard as the
     tokenizer split, see _shingles_of_tokens). Buckets that are one
     partition by construction stay unspread (see `_spread`)."""
-    n_part = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(buckets.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     buckets = _spread(buckets.select(F.array_sort(F.col(ids_col)).alias("__ids")), n_part)
     # one server-side-parsed expression: the Column-API spelling of
     # this nested lambda costs dozens of py4j round trips per plan
@@ -446,7 +446,7 @@ def ngram_jaccard_pairs(
     if profile.ngram_max_df_frac is not None:
         n_docs = df.count()  # one cheap aggregate, driver-side knob
         max_df = max(2, int(n_docs * profile.ngram_max_df_frac))
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     # -- 1. collapse exact-duplicate texts ------------------------------
     groups, mem = _collapse_exact(df, id_col, text_col)

@@ -362,7 +362,7 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
     if sized is None:
         return df
     total, split = sized
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if total >= n_part * split:
         return df
     return df.repartition(n_part)

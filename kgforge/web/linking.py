@@ -6,10 +6,12 @@ orders of magnitude smaller than the mention stream, and the expensive
 pairwise work happens only inside LSH buckets.
 
 Pipeline:
-  distinct surfaces → exact case-fold tier → char-3-gram shingles (JVM
+  distinct surfaces → exact case-fold tier (one window tags each
+  surface with its representative) → char-3-gram shingles (JVM
   expression) → banded MinHash blocking over the case-fold
-  representatives (`candidate_pairs_minhash`, oversized buckets
-  dropped) → hybrid scoring, the max of the Otsuka–Ochiai set cosine
+  representatives (`candidate_pairs_minhash`, buckets paired under the
+  shared hot-bucket guard `kgforge.textops.dedup._bucket_pairs`) →
+  hybrid scoring, the max of the Otsuka–Ochiai set cosine
   |A∩B|/sqrt(|A||B|) and normalized Levenshtein similarity, fully
   JVM-columnar (`score_set_cosine`)
   → sameAs edges (a, b, score) with a < b above `threshold`.
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.profile import SAFE, ScaleProfile
-from kgforge.textops.dedup import _in_array_pairs, _spread
+from kgforge.textops.dedup import _bucket_pairs, _spread
 
 #: MinHash functions of the linking LSH and rows per band key: 8 bands
 #: of 3 (see candidate_pairs_minhash)
@@ -70,7 +72,7 @@ def candidate_pairs_minhash(
     prune_threshold: float,
     profile: ScaleProfile = SAFE,
 ) -> DataFrame:
-    """Candidate pairs via md5-banded MinHash over char-3-grams — the
+    """Candidate pairs via xxhash64-banded MinHash over char-3-grams — the
     engine's own LSH (same primitive as kgforge.textops.dedup), pure
     column expressions end to end, no ml vectors.
 
@@ -85,21 +87,18 @@ def candidate_pairs_minhash(
     bucket guard then drops wholesale; r=3's buckets stay under the
     guard, so fewer true pairs are sacrificed to skew.
 
-    `profile.linking_max_bucket` drops oversized buckets outright
-    (standard LSH skew guard; linking always guards, the profile only
-    tunes the cap): a bucket with thousands of members carries no
-    linkage signal and only produces quadratic garbage pairs.
-
-    Pairs come from groupBy(band, key) + bounded collect_list +
-    the dedup family's in-array pair explosion
-    (`kgforge.textops.dedup._in_array_pairs`, members
-    `struct(surface, ng)`) — ONE shuffle of the banded rows. The
-    collected member array is bounded by the cap, so no hub row can
-    form.
+    Buckets pair through `kgforge.textops.dedup._bucket_pairs`, the
+    hot-bucket guard of the dedup family, under `profile`: every
+    surface is its own group (gsize 1) carrying its gram count `ng`.
+    Buckets of up to `profile.max_bucket` surfaces pair in-array; larger
+    ones stream through a self-join under SAFE and are dropped under
+    `oversize="drop"` (a bucket with thousands of members carries no
+    linkage signal, only quadratic garbage pairs).
 
     `prune_threshold` t: the caller scores with max(set-cosine,
     normalized Levenshtein) ≥ t, so pairs that CANNOT reach t are
-    dropped before the distinct shuffle using two sound upper bounds —
+    dropped (`_bucket_pairs`' verify, before its distinct shuffle)
+    using two sound upper bounds —
     set_cos ≤ sqrt(min(ng)/max(ng)) (intersection ≤ smaller gram set)
     and lev_sim ≤ 1 − |len_a−len_b| / max(len) (lev ≥ length delta).
     """
@@ -133,19 +132,16 @@ def candidate_pairs_minhash(
         F.expr("count(1) AS ng"),  # distinct-gram count (free here)
         F.expr(f"array({bands}) AS bks"),
     )
-    grouped = (
-        sig.selectExpr("struct(surface AS gid, ng) AS m", "inline(bks)")
-        .groupBy("band", "key")
-        .agg(F.expr("collect_list(m) AS ids"))
-        .filter(f"size(ids) BETWEEN 2 AND {int(profile.linking_max_bucket)}")
-    )
+    banded = sig.selectExpr("surface AS gid", "1 AS gsize", "ng", "inline(bks)")
     t = f"CAST({float(prune_threshold)!r} AS DOUBLE)"
     la, lb = "CAST(length(a) AS DOUBLE)", "CAST(length(b) AS DOUBLE)"
-    pairs = _in_array_pairs(grouped, carry=("ng",)).filter(
+    prune = F.expr(
         f"sqrt(CAST(least(ng_a, ng_b) AS DOUBLE) / CAST(greatest(ng_a, ng_b) AS DOUBLE)) >= {t}"
         f" OR 1.0D - abs({la} - {lb}) / greatest({la}, {lb}) >= {t}"
     )
-    return pairs.select("a", "b").distinct().selectExpr(
+    # every group is one surface, so no group has intra pairs to keep
+    pairs, _ = _bucket_pairs(banded, ["band", "key"], banded, profile, carry=("ng",), verify=prune)
+    return pairs.selectExpr(
         "a", "b", f"{char_ngrams('a')} AS grams_a", f"{char_ngrams('b')} AS grams_b"
     )
 
@@ -160,26 +156,21 @@ def link_surfaces(
     """→ sameAs edges (a, b, score), a < b, score ≥ threshold.
 
     Two-tier design (scale lever): case-fold duplicates — by far the
-    most common variant — are linked EXACTLY via a lower() groupBy
-    (one cheap shuffle, no pairwise work), and the quadratic LSH stage
-    runs only on the case-normalized representatives, scored by
+    most common variant — are linked EXACTLY to their representative,
+    the min surface of their lower() class, which one window tags on
+    every surface (one cheap shuffle, no pairwise work); the quadratic
+    LSH stage runs only on the representatives, scored by
     `score_set_cosine`. "set" is the only `scorer`."""
     if scorer != "set":
         raise ValueError(f"unknown scorer {scorer!r}")
-    base = surfaces.selectExpr(f"`{surface_col}` AS surface").distinct()
-    norm = base.selectExpr("surface", "lower(surface) AS norm")
-    rep = norm.groupBy("norm").agg(F.expr("min(surface) AS rep"))
-    with_rep = norm.join(rep, "norm")
-
-    # exact tier: every surface ↔ its case-fold representative
-    exact = (
-        with_rep.filter("surface != rep")
-        .selectExpr("least(surface, rep) AS a", "greatest(surface, rep) AS b", "1.0D AS score")
-        .distinct()
+    tagged = surfaces.selectExpr(f"`{surface_col}` AS surface").distinct().selectExpr(
+        "surface", "min(surface) OVER (PARTITION BY lower(surface)) AS rep"
     )
+    # exact tier: every surface ↔ its case-fold representative (rep < surface)
+    exact = tagged.filter("surface != rep").selectExpr("rep AS a", "surface AS b", "1.0D AS score")
 
     # similarity tier on representatives only
-    reps = rep.selectExpr("rep AS surface")
+    reps = tagged.filter("surface = rep").select("surface")
     pairs = candidate_pairs_minhash(reps, "surface", prune_threshold=threshold, profile=profile)
     scored = score_set_cosine(pairs)
     fuzzy = scored.filter(f"score >= CAST({float(threshold)!r} AS DOUBLE)").select("a", "b", "score")

@@ -12,22 +12,22 @@ Stage boundaries are materialization points (lineage + resume, see
 kgforge.lineage). Shuffle inventory at scale:
   1. mention-triple dedup (groupBy full triple, partial-agg first)
   2. linking on distinct surfaces (small input by construction): the
-     case-fold groupBy, the surface spread, the signature and band
-     groupBys, the pair spread and distinct, the surface → IRI
-     join-back
+     case-fold window, the surface spread, the signature groupBy, the
+     bucket window and collect, the pair spread and distinct
   3. CC iterations (edge list is cluster-sized, tiny vs corpus)
   4. canonical-map joins + final dedup
 Everything else is narrow. html never crosses a shuffle.
 
 A driver-sized surface table runs 2 and 3 with no shuffle at all. A
 persisted run probes its surfaces once (`bounded_arrow`); at most
-`LOCAL_SURFACES_MAX` rows are linked, joined back and canonicalized
-from a one-partition local copy. Every aggregate, distinct and shuffled
-join over a `SinglePartition` child plans with no exchange, and the two
-spreads skip such an input (`kgforge.textops.dedup._spread`), so
-canonical_map's probe runs the region in 3 jobs instead of 15 on a
-warm 10,000-page op (853 surfaces). Above the bound, and in an
-unpersisted run, the plan is the distributed one.
+`LOCAL_SURFACES_MAX` rows are linked and canonicalized from a
+one-partition local copy. Every aggregate, window, distinct and
+shuffled join over a `SinglePartition` child plans with no exchange,
+and the two spreads skip such an input (`kgforge.textops.dedup._spread`),
+so canonical_map's probe runs the region in 1 job instead of 15 on a
+warm 10,000-page op (853 surfaces) under SCALE, and in 2 under SAFE,
+whose plan also holds the oversized-bucket self-join. Above the bound,
+and in an unpersisted run, the plan is the distributed one.
 
 No stage runs Python per row: extraction is a Catalyst regex chain
 (kgforge.web.extract) that fuses into the mention stage's generated
@@ -46,7 +46,7 @@ from kgforge.session import arrow_rows, bounded_arrow, local_df, sql_str
 from kgforge.web.canon import canonical_map, rewrite_triples
 from kgforge.web.extract import extract_text
 from kgforge.web.linking import link_surfaces
-from kgforge.web.mentions import extract_mention_triples
+from kgforge.web.mentions import _mention_iri_sql, extract_mention_triples
 
 #: a persisted surface table of at most this many rows is linked and
 #: canonicalized from a one-partition local copy (see run_pipeline).
@@ -112,10 +112,11 @@ def run_pipeline(
             rows = arrow_rows(probe, *surfaces.columns)
             linked = local_df(surfaces.sparkSession, rows, surfaces.schema).coalesce(1)
     same_as = link_surfaces(linked.select("surface"), threshold=link_threshold, profile=profile)
-    # sameAs edges between surface IRIs (join back surface → iri)
-    s1 = linked.selectExpr("surface AS a", "iri AS iri_a")
-    s2 = linked.selectExpr("surface AS b", "iri AS iri_b")
-    edges = same_as.join(s1, "a").join(s2, "b").selectExpr("iri_a AS a", "iri_b AS b", "score")
+    # sameAs edges between surface IRIs, minted as extract_mention_triples
+    # minted them: every surface's IRI is a function of the surface
+    edges = same_as.selectExpr(
+        f"{_mention_iri_sql('a')} AS a", f"{_mention_iri_sql('b')} AS b", "score"
+    )
 
     all_nodes = linked.selectExpr("iri AS node")
     cmap = canonical_map(edges, all_nodes)

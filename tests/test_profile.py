@@ -40,7 +40,6 @@ def test_scale_preset_arms_every_knob():
         "oversize": lambda v: v == "drop",
         "ngram_max_df_frac": lambda v: v is not None,
         "simhash_drop_zero": lambda v: v is True,
-        "linking_max_bucket": lambda v: isinstance(v, int) and v > 0,
         "salt_partitions": lambda v: v is not None and v > 1,
     }
     assert set(armed) == set(knob_names()), (
@@ -127,19 +126,23 @@ def test_profile_overrides_embedding(spark):
 
 
 def test_profile_tunes_linking_bucket_cap(spark):
-    """linking_max_bucket reaches candidate_pairs_minhash through
-    link_surfaces: a cap of 1 admits no bucket (buckets need ≥2
-    members to pair), so only the exact case-fold tier links."""
+    """link_surfaces pairs its band buckets under the profile's
+    max_bucket and oversize: with a cap of 1 every bucket is oversized,
+    so "drop" links only the exact case-fold tier, and "join" streams
+    every bucket through the self-join and gives SAFE's edges."""
     surfaces = spark.createDataFrame(
         [("Alpha Corp",), ("alpha corp",), ("Alpha Corpn",), ("Beta LLC",)],
         "surface string",
     )
-    normal = link_surfaces(surfaces, threshold=0.5).collect()
-    assert any(r.score < 1.0 for r in normal)  # fuzzy tier active
-    capped = link_surfaces(
-        surfaces, threshold=0.5, profile=ScaleProfile(linking_max_bucket=1)
-    ).collect()
-    assert capped and all(r.score == 1.0 for r in capped)  # exact tier only
+
+    def edges(profile):
+        return {tuple(r) for r in link_surfaces(surfaces, threshold=0.5, profile=profile).collect()}
+
+    safe = edges(SAFE)
+    assert any(score < 1.0 for _a, _b, score in safe)  # fuzzy tier active
+    dropped = edges(ScaleProfile(max_bucket=1, oversize="drop"))
+    assert dropped and dropped == {e for e in safe if e[2] == 1.0}  # exact tier only
+    assert edges(ScaleProfile(max_bucket=1, oversize="join")) == safe
 
 
 def test_safe_is_the_default_for_guarded_operators():

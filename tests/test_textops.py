@@ -16,6 +16,7 @@ from kgforge.textops.dedup import (
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash_near_dups,
+    tokenized,
 )
 from kgforge.textops.multimodal import (
     attach_binary_payload,
@@ -853,6 +854,22 @@ def test_spread_small_scan(spark, tmp_path, monkeypatch):
         # byte-string parser) instead of crashing the guard
         spark.conf.set(key, "128MB")
         assert _spread_small_scan(df).rdd.getNumPartitions() == n_part
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_tokenized_spreads_to_session_shuffle_width(spark):
+    """`tokenized` spreads to the shuffle width the session really
+    uses, also on a session that never set the key: Spark's own
+    default then, not a fallback of kgforge's."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        width = int(spark.conf.get(key))
+        assert width != int(old)  # the session default, not the fixture's
+        plan = tokenized(_docs(spark))._jdf.queryExecution().sparkPlan()
+        assert plan.outputPartitioning().numPartitions() == width
     finally:
         spark.conf.set(key, old)
 

@@ -9,6 +9,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from kgforge.profile import ScaleProfile
 from kgforge.web import corpus as C
 from kgforge.web.canon import canonical_map, connected_components, rewrite_triples
 from kgforge.web.extract import extract_text, extract_text_py
@@ -340,14 +341,14 @@ def test_pipeline_null_html_page(spark, corpus):
 @pytest.mark.parametrize("prune", [0.0, 0.78])
 def test_candidate_pairs_minhash_brute_force(spark, prune):
     """candidate_pairs_minhash equals a Python enumeration: pairs of
-    surfaces sharing a band key (the band's tuple of minima) in a bucket
-    of 2..max_bucket members that pass the prune bounds (every pair
-    passes at 0.0). Only the hash primitive xxhash64(i, gram) comes from
-    Spark."""
+    surfaces sharing a band key (the band's tuple of minima) that pass
+    the prune bounds (every pair passes at 0.0), under both oversize
+    policies of a cap of 6: "drop" pairs members of buckets with 2..6
+    members, "join" pairs every bucket, the 9-member family included.
+    Only the hash primitive xxhash64(i, gram) comes from Spark."""
     import math
     import random
 
-    from kgforge.profile import ScaleProfile
     from kgforge.web.linking import _NUM_HASHES, _ROWS_PER_BAND, candidate_pairs_minhash
 
     rng = random.Random(11)
@@ -385,22 +386,26 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
             or 1.0 - abs(la - lb) / max(la, lb) >= prune
         )
 
-    want = {
-        (a, b)
-        for mem in buckets.values()
-        if 2 <= len(mem) <= max_bucket
-        for i, a in enumerate(sorted(mem))
-        for b in sorted(mem)[i + 1:]
-        if passes(a, b)
-    }
+    def want(cap):
+        return {
+            (a, b)
+            for mem in buckets.values()
+            if 2 <= len(mem) <= cap
+            for i, a in enumerate(sorted(mem))
+            for b in sorted(mem)[i + 1:]
+            if passes(a, b)
+        }
+
     assert any(len(m) > max_bucket for m in buckets.values())  # the guard fires
     df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    got = candidate_pairs_minhash(
-        df, prune_threshold=prune, profile=ScaleProfile(linking_max_bucket=max_bucket)
-    ).select("a", "b").collect()
-    assert len(got) == len({tuple(r) for r in got})  # distinct
-    assert {tuple(r) for r in got} == want
-    assert want  # non-vacuous
+    for profile, cap in (
+        (ScaleProfile(max_bucket=max_bucket, oversize="drop"), max_bucket),
+        (ScaleProfile(max_bucket=max_bucket), len(surfaces)),  # "join"
+    ):
+        got = candidate_pairs_minhash(df, prune_threshold=prune, profile=profile).select("a", "b").collect()
+        assert len(got) == len({tuple(r) for r in got}), profile  # distinct
+        assert {tuple(r) for r in got} == want(cap), profile
+    assert want(max_bucket) and want(len(surfaces)) > want(max_bucket)  # non-vacuous
 
 
 # ------------------------------------------------------------- linking route
@@ -408,7 +413,7 @@ def test_candidate_pairs_minhash_brute_force(spark, prune):
 def family_pages(spark, corpus):
     """The fixture corpus (case-fold, typo and `Inc` variants) plus 80
     near-identical surfaces whose shared grams put them in LSH band
-    buckets larger than SCALE.linking_max_bucket."""
+    buckets larger than GUARD.max_bucket."""
     ts = corpus.pages[0][1]
     extra = [
         (f"https://family.example.org/{i}", ts, b"",
@@ -418,12 +423,15 @@ def family_pages(spark, corpus):
     return C.pages_dataframe(spark, dataclasses.replace(corpus, pages=corpus.pages + extra))
 
 
+#: a dropping guard whose cap the 80-surface family's buckets exceed
+GUARD = ScaleProfile(max_bucket=64, oversize="drop")
+
+
 def _pipeline_sets(pages) -> dict:
-    """Row sets of the linking outputs of one persisted SCALE run."""
-    from kgforge.profile import SCALE
+    """Row sets of the linking outputs of one persisted run under GUARD."""
     from kgforge.web.pipeline import unpersist_intermediates
 
-    out = run_pipeline(pages, text_from_html=False, persist_intermediate=True, profile=SCALE)
+    out = run_pipeline(pages, text_from_html=False, persist_intermediate=True, profile=GUARD)
     got = {k: {tuple(r) for r in out[k].collect()}
            for k in ("same_as", "canonical_map", "canonical_triples")}
     got["local"] = "Coalesce 1" in out["same_as"]._jdf.queryExecution().sparkPlan().toString()
@@ -436,16 +444,14 @@ def test_pipeline_routes_give_identical_rows(spark, family_pages, monkeypatch):
     the distributed route (bound forced to 0) give the same sameAs
     edges, canonical map and canonical triples, with the LSH bucket
     guard dropping the oversized family buckets on both."""
-    from kgforge.profile import SCALE, ScaleProfile
+    from kgforge.profile import SAFE
     from kgforge.web import pipeline
     from kgforge.web.linking import candidate_pairs_minhash
 
     surfaces = surfaces_of(extract_mention_triples(family_pages))
     reps = surfaces.groupBy(F.lower("surface")).agg(F.min("surface").alias("surface"))
-    capped = candidate_pairs_minhash(reps, prune_threshold=0.78, profile=SCALE).count()
-    uncapped = candidate_pairs_minhash(
-        reps, prune_threshold=0.78, profile=ScaleProfile(linking_max_bucket=10**6)
-    ).count()
+    capped = candidate_pairs_minhash(reps, prune_threshold=0.78, profile=GUARD).count()
+    uncapped = candidate_pairs_minhash(reps, prune_threshold=0.78, profile=SAFE).count()
     assert uncapped > capped  # the guard fires on this fixture
 
     local = _pipeline_sets(family_pages)
@@ -458,8 +464,8 @@ def test_pipeline_routes_give_identical_rows(spark, family_pages, monkeypatch):
 
 def test_canonical_map_probe_jobs(spark, family_pages, count_jobs, monkeypatch):
     """Once the surfaces are probed, canonical_map's bounded probe runs
-    linking, the join-back and the CC fetch over the one-partition copy
-    in at most 3 Spark jobs; the distributed route runs one per exchange."""
+    linking, the IRI mapping and the CC fetch over the one-partition
+    copy in 1 Spark job; the distributed route runs one per exchange."""
     from kgforge.web import canon
 
     counted = []
@@ -472,7 +478,7 @@ def test_canonical_map_probe_jobs(spark, family_pages, count_jobs, monkeypatch):
 
     monkeypatch.setattr(canon, "connected_components", counting)
     _pipeline_sets(family_pages)
-    assert len(counted) == 1 and counted[0] <= 3, counted
+    assert counted == [1], counted
 
 
 def test_pipeline_leaves_no_cached_relation(spark, corpus):
